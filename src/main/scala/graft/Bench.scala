@@ -59,37 +59,44 @@ object Bench {
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a failed warmup step is RECORDED, never swallowed: its one-time
+    // build would otherwise move silently into the first timed query, so
+    // the artifact lists it in `warmup_failed` (and stderr names the cause)
+    val warmupFailed = scala.collection.mutable.ArrayBuffer[String]()
+    def warm(step: String)(body: => Any): Unit =
+      try body
+      catch { case scala.util.control.NonFatal(e) =>
+        warmupFailed += step
+        System.err.println(s"[bench] warmup $step failed: $e")
+      }
     // steady-state measurement: pay JVM/classloader/parquet-footer warmup
     // once before the timing loop instead of inside the first query
-    graft.Tables.all.foreach { t =>
-      try graft.Tables.read(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    graft.Tables.all.foreach(t =>
+      warm(s"table:$t")(graft.Tables.read(spark, sfDir, t).count()))
     // view registration is one-time session state (same class as the table
     // warmup above): pay the 10 schema resolutions here, not inside the
     // first ad-hoc SQL query's measurement
-    try graft.Tables.registerViews(spark, sfDir)
-    catch { case _: Throwable => () }
+    warm("views")(graft.Tables.registerViews(spark, sfDir))
     // the two session-cached INPUT projections (shingle table, prepared
     // vectors) are the "loaded index" a serving system builds once — warm
     // them like the table reads above. Query RESULTS (LSH pair table, IVF
     // centroids) are deliberately NOT warmed: their first computation is
     // part of the measured work.
-    try graft.operators.Dedup.warmInputProjections(spark, sfDir)
-    catch { case _: Throwable => () }
+    warm("input_projections")(
+      graft.operators.Dedup.warmInputProjections(spark, sfDir))
     // the persisted serving indexes (d13/d15/d17 gate indexes, d16 base
     // labels, d19b base canonical) are one-time ingest-side state a
     // serving deployment loads at startup — build + load them here so the
     // timing loop measures the per-shard delta work, not index
     // construction. d18's lifecycle indexes and all query-result caches
     // stay cold: their first computation IS the measured work.
-    try graft.operators.Dedup.warmServingIndexes(spark, sfDir)
-    catch { case _: Throwable => () }
+    warm("dedup_serving_indexes")(
+      graft.operators.Dedup.warmServingIndexes(spark, sfDir))
     // the ANN serving + incremental indexes are the same class of one-time
     // ingest-side state: build + load them outside the timing loop so the
     // s2b/s6b/s7b/s9/s10 measurements are the SEARCH, not the build
-    try graft.operators.Similarity.warmServingIndexes(spark, sfDir)
-    catch { case _: Throwable => () }
+    warm("ann_serving_indexes")(
+      graft.operators.Similarity.warmServingIndexes(spark, sfDir))
     // (name -> (seconds, ok)): a crashing query must not masquerade as a
     // fast one, so failures carry an explicit flag in the detail file and
     // an n_failed count in the summary line.
@@ -190,6 +197,9 @@ object Bench {
     val heapJson = heapGbPerPass.map(fmt).mkString("[", ",", "]")
     val heapMaxGb = Runtime.getRuntime.maxMemory() / (1 << 30)
     val nCpu = Runtime.getRuntime.availableProcessors()
+    // what the session actually runs with, next to the host's core count
+    val parallelism = s""""default_parallelism":${spark.sparkContext.defaultParallelism},"master":"${spark.sparkContext.master}""""
+    val warmupJson = warmupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val steady: Map[String, (Double, Boolean)] = selected.keysIterator.map { k =>
       val vs = steadyPasses.map(_(k))
       k -> (vs.map(_._1).sorted.apply(1), vs.forall(_._2))
@@ -211,7 +221,7 @@ object Bench {
     val detailPath = java.nio.file.Paths.get("target", "bench_full.json")
     java.nio.file.Files.createDirectories(detailPath.getParent)
     java.nio.file.Files.write(detailPath,
-      s"""{"metric":"total","value":${fmt(total)},"steady":${fmt(steadyTotal)},"steady_mean":${fmt(steadyMean)},"unit":"sec","loadavg_per_pass":$loadJson,"gc_sec_per_pass":$gcJson,"tables_per_pass":$tablesJson,"rdds_per_pass":$rddsJson,"rdd_mb_per_pass":$rddMbJson,"heap_used_gb_per_pass":$heapJson,"heap_max_gb":$heapMaxGb,"ncpu":$nCpu,"queries":$detail,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"steady":${fmt(steadyTotal)},"steady_mean":${fmt(steadyMean)},"unit":"sec","loadavg_per_pass":$loadJson,"gc_sec_per_pass":$gcJson,"tables_per_pass":$tablesJson,"rdds_per_pass":$rddsJson,"rdd_mb_per_pass":$rddMbJson,"heap_used_gb_per_pass":$heapJson,"heap_max_gb":$heapMaxGb,"ncpu":$nCpu,$parallelism,"warmup_failed":$warmupJson,"queries":$detail,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
         .getBytes("UTF-8"))
     // the printed per-query numbers are the STEADY MEDIANS, not the cold
     // pass (round-11 verdict ask #6): a load spike landing inside any
@@ -225,6 +235,6 @@ object Bench {
     // LAST line, compact: fits entirely inside the driver's tail window;
     // "steady" is the median-of-3 total (robust), "steady_mean" the plain
     // mean of the three steady pass totals
-    println(s"""{"metric":"total","value":${fmt(total)},"steady":${fmt(steadyTotal)},"steady_mean":${fmt(steadyMean)},"unit":"sec","queries_kind":"steady_median","loadavg_per_pass":$loadJson,"gc_sec_per_pass":$gcJson,"tables_per_pass":$tablesJson,"rdds_per_pass":$rddsJson,"rdd_mb_per_pass":$rddMbJson,"heap_used_gb_per_pass":$heapJson,"heap_max_gb":$heapMaxGb,"ncpu":$nCpu,"queries":$qs,"n_queries":${results.size},"n_failed":${failed.size},"detail":"target/bench_full.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"steady":${fmt(steadyTotal)},"steady_mean":${fmt(steadyMean)},"unit":"sec","queries_kind":"steady_median","loadavg_per_pass":$loadJson,"gc_sec_per_pass":$gcJson,"tables_per_pass":$tablesJson,"rdds_per_pass":$rddsJson,"rdd_mb_per_pass":$rddMbJson,"heap_used_gb_per_pass":$heapJson,"heap_max_gb":$heapMaxGb,"ncpu":$nCpu,$parallelism,"queries":$qs,"n_queries":${results.size},"n_failed":${failed.size},"n_warmup_failed":${warmupFailed.size},"detail":"target/bench_full.json","sf":"$sfDir"}""")
   }
 }

@@ -97,7 +97,11 @@ object CorpusWriter {
         .withColumn("__rm", lit(true))), Seq("doc_id"), "left")
       .localCheckpoint()
     val removedCount = tagged.filter(col("__rm").isNotNull).count()
-    val retained = tagged.filter(col("__rm").isNull).drop("__rm")
+    // re-select the corpus order: the using-column join moves doc_id to
+    // the front, and rewritten files must keep the untouched files'
+    // physical column order
+    val retained = tagged.filter(col("__rm").isNull)
+      .select(corpus.columns.toIndexedSeq.map(col): _*)
     val nonEmpty = retained.select(col("split"), col("lang")).distinct().collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     if (nonEmpty.nonEmpty) {

@@ -3230,17 +3230,21 @@ object Dedup {
       k: Int = 4, minDocs: Int = 3): DataFrame =
     boilerplateChunksOf(Tables.documents(spark, dir), k, minDocs)
 
+  /** The boilerplate tier's chunks of the token-array column `toks`:
+    * chunk i = tokens [i*k+1, i*k+k] re-joined — (n + k - 1) div k
+    * chunks, the last one short; integer arithmetic only.
+    */
+  private[graft] def tokenChunks(toks: String, k: Int): Column = expr(
+    s"transform(sequence(0, CAST((size($toks) + ${k - 1}) div $k AS INT) - 1), " +
+      s"i -> array_join(slice($toks, i * $k + 1, $k), ' '))")
+
   /** [[boilerplateChunks]] over an explicit (doc_id, text) frame — lets
     * tests plant documents with KNOWN shared segments.
     */
   def boilerplateChunksOf(documents: DataFrame, k: Int = 4, minDocs: Int = 3): DataFrame = {
     val base = documents.filter(col("text").isNotNull)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-      // chunk i = tokens [i*k+1, i*k+k] re-joined — (n + k - 1) div k
-      // chunks, the last one short; integer arithmetic only
-      .select(col("doc_id"), expr(
-        s"transform(sequence(0, CAST((size(toks) + ${k - 1}) div $k AS INT) - 1), " +
-          s"i -> array_join(slice(toks, i * $k + 1, $k), ' '))").as("chunks"))
+      .select(col("doc_id"), tokenChunks("toks", k).as("chunks"))
     // (doc_id, pos, digest): fixed-width digests in every shuffle.
     // posexplode_OUTER + a null filter above the Generate: the plain
     // form's InferFiltersFromGenerate pushes a size/isnotnull filter
@@ -5988,8 +5992,8 @@ object Dedup {
   }
 
   /** Initialize the STREAMING reband loop's state (the prior-state
-    * contract of [[graft.streaming.EventsStream.runIngestRebandLoop]],
-    * the runIngestCuration convention): the base corpus's shingle sets
+    * contract of [[graft.streaming.EventsStream.runMonitorLoop]] under
+    * `MonitorFamily.minhashReband`, the runIngestCuration convention): the base corpus's shingle sets
     * persist next to the banded generation — the reband ACTION rebuilds
     * the whole generation from retained shingles, so the loop owns a
     * `_shingles` companion exactly like the near-dup index does.

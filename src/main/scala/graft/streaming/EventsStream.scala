@@ -252,6 +252,29 @@ object EventsStream {
       .parquet(dir)
       .withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
 
+  /** A parquet shard directory as a file stream that delivers ONE file
+    * per micro-batch — the replay unit every ingest, monitor, takedown
+    * and sync loop below is written against (a crash refires exactly
+    * one shard's batch; a replayed shard is one no-op batch).
+    */
+  private def shardStream(spark: SparkSession, schema: StructType,
+      dir: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(dir)
+
+  /** Run `step` over every micro-batch of `src` under foreachBatch until
+    * the arrived input is drained (AvailableNow), resuming from
+    * `checkpointLocation` when one is given.
+    */
+  private def drain(src: DataFrame, checkpointLocation: Option[String] = None)(
+      step: (DataFrame, Long) => Unit): Unit =
+    checkpointLocation.foldLeft(src.writeStream)(
+        (w, dir) => w.option("checkpointLocation", dir))
+      .foreachBatch(step)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
   /** STREAMING delta near-dup — [[graft.operators.Dedup.deltaNearDups]]
     * (d13) restated as the continuous-ingest topology: each arriving
     * document derives its shingles + minhash band keys MAP-SIDE, then
@@ -322,47 +345,39 @@ object EventsStream {
     */
   def runIngestNearDup(spark: SparkSession, shardDir: String,
       indexName: String, threshold: Double = 0.8,
-      name: String = "ingest_neardup", maxFilesPerTrigger: Int = 1,
+      name: String = "ingest_neardup",
       takedownLog: String = "takedown_log"): DataFrame = {
     import graft.operators.Dedup
     Dedup.dropTableAndLocation(spark, s"${name}_pairs")
-    val src = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the previous batch APPENDED to these tables — drop any cached
-        // relation/file listing so this batch reads the grown index (the
-        // session catalog caches resolved data-source relations; without
-        // the refresh every batch can see the index as of stream start)
-        spark.catalog.refreshTable(s"${indexName}_shingles")
-        spark.catalog.refreshTable(s"${indexName}_banded")
-        // localCheckpoint freezes the filtered batch BEFORE the index
-        // tables mutate under it: the anti-join reads _shingles, and
-        // appending to a table that appears in the write's own lineage
-        // is both racy and rejected by the writer
-        val fresh = batch
-          .join(spark.table(s"${indexName}_shingles").select("doc_id"),
-            Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        if (!fresh.isEmpty) {
-          Dedup.deltaNearDups(fresh, Dedup.loadNearDupIndex(spark, indexName),
-              threshold)
-            .write.mode("append").saveAsTable(s"${name}_pairs")
-          Dedup.appendNearDupIndex(spark, indexName, fresh)
-          // a RE-INGESTED doc must also drop out of the cumulative
-          // takedown log, or every later sketch-cell rebuild of its lang
-          // permanently excludes it (the per-index tombstones clear on
-          // re-append; only the log-reading rebuild needs this hook) —
-          // no-op when no takedown estate is deployed
-          graft.operators.Takedown.clearTakedownLog(spark,
-            fresh.select(col("doc_id")), takedownLog)
-        }
+    drain(shardStream(spark, documentSchema, shardDir)) { (batch, _) =>
+      // the previous batch APPENDED to these tables — drop any cached
+      // relation/file listing so this batch reads the grown index (the
+      // session catalog caches resolved data-source relations; without
+      // the refresh every batch can see the index as of stream start)
+      spark.catalog.refreshTable(s"${indexName}_shingles")
+      spark.catalog.refreshTable(s"${indexName}_banded")
+      // localCheckpoint freezes the filtered batch BEFORE the index
+      // tables mutate under it: the anti-join reads _shingles, and
+      // appending to a table that appears in the write's own lineage
+      // is both racy and rejected by the writer
+      val fresh = batch
+        .join(spark.table(s"${indexName}_shingles").select("doc_id"),
+          Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      if (!fresh.isEmpty) {
+        Dedup.deltaNearDups(fresh, Dedup.loadNearDupIndex(spark, indexName),
+            threshold)
+          .write.mode("append").saveAsTable(s"${name}_pairs")
+        Dedup.appendNearDupIndex(spark, indexName, fresh)
+        // a RE-INGESTED doc must also drop out of the cumulative
+        // takedown log, or every later sketch-cell rebuild of its lang
+        // permanently excludes it (the per-index tombstones clear on
+        // re-append; only the log-reading rebuild needs this hook) —
+        // no-op when no takedown estate is deployed
+        graft.operators.Takedown.clearTakedownLog(spark,
+          fresh.select(col("doc_id")), takedownLog)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.table(s"${name}_pairs")
   }
 
@@ -406,192 +421,288 @@ object EventsStream {
     */
   def runIngestCuration(spark: SparkSession, shardDir: String,
       indexName: String, threshold: Double = 0.8,
-      name: String = "ingest_curation", maxFilesPerTrigger: Int = 1,
+      name: String = "ingest_curation",
       screen: Option[graft.operators.Dedup.EvalGramState] = None,
       takedownLog: String = "takedown_log"): DataFrame = {
     import graft.operators.Dedup
     Dedup.dropTableAndLocation(spark, s"${name}_label_updates")
     Dedup.dropTableAndLocation(spark, s"${name}_quarantine")
-    val src = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spark.catalog.refreshTable(s"${indexName}_shingles")
-        spark.catalog.refreshTable(s"${indexName}_banded")
-        spark.catalog.refreshTable(s"${name}_labels")
-        // idempotence is keyed on BOTH persisted stores: the shingles
-        // index (clean docs) and the quarantine log (screened-out docs
-        // never reach the index, so without this leg a replayed shard
-        // would re-screen and re-log them)
-        val quarantineTable = s"${name}_quarantine"
-        val alreadyIn = if (spark.catalog.tableExists(quarantineTable))
-          spark.table(s"${indexName}_shingles").select("doc_id")
-            .unionByName(spark.table(quarantineTable).select("doc_id"))
-        else spark.table(s"${indexName}_shingles").select("doc_id")
-        val arrived = batch
-          .join(alreadyIn, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        // DECONTAMINATION AT INGEST (the d10b screen as a curation
-        // stage): gram-hash the arriving docs map-side against the
-        // frozen eval bloom, verify suspects exactly, quarantine
-        // contaminated docs — they never enter the pair search, the
-        // label state, or the index
-        val fresh = screen match {
-          case None => arrived
-          case Some(st) =>
-            val contaminated = Dedup.screenContamination(arrived,
-              st.bloom, st.grams).localCheckpoint()
-            if (!contaminated.isEmpty) {
-              contaminated.withColumn("batch_id", lit(batchId))
-                .write.mode("append").saveAsTable(quarantineTable)
-              arrived.join(contaminated.select("doc_id"),
-                Seq("doc_id"), "left_anti").localCheckpoint()
-            } else arrived
-        }
-        if (!fresh.isEmpty) {
-          // freeze the prior state: the generation swap below drops the
-          // table this batch's merge reads
-          val labels = spark.table(s"${name}_labels").localCheckpoint()
-          val delta = Dedup.deltaNearDups(fresh,
-            Dedup.loadNearDupIndex(spark, indexName), threshold)
-          val newDocs = fresh.select(col("doc_id"),
-            length(coalesce(col("text"), lit(""))).as("qlen"))
-          val changed = Dedup.mergeLabelState(spark, labels, delta, newDocs)
-            .localCheckpoint()
-          // the log is appended BEFORE the table swap / index append (a
-          // crash after the swap but before a log write would lose the
-          // slice forever — replay would skip the batch via the shingles
-          // anti-join). The cost is at-least-once LOG semantics: a crash
-          // after this append refires the batch under the SAME batch_id,
-          // so skip the re-append when that id is already logged — the
-          // recomputed slice converges to the same rows and the log stays
-          // delta-sized instead of accumulating duplicates.
-          val logTable = s"${name}_label_updates"
-          val alreadyLogged = spark.catalog.tableExists(logTable) &&
-            !spark.table(logTable).filter(col("batch_id") === batchId).isEmpty
-          if (!alreadyLogged)
-            changed.withColumn("batch_id", lit(batchId))
-              .write.mode("append").saveAsTable(logTable)
-          Dedup.applyLabelUpdates(spark, s"${name}_labels", changed)
-          Dedup.appendNearDupIndex(spark, indexName, fresh)
-          // re-ingested docs drop out of the cumulative takedown log
-          // (see runIngestNearDup — the log-reading sketch rebuild is
-          // the one consumer the per-index tombstone lift doesn't cover)
-          graft.operators.Takedown.clearTakedownLog(spark,
-            fresh.select(col("doc_id")), takedownLog)
-        }
+    drain(shardStream(spark, documentSchema, shardDir)) { (batch, batchId) =>
+      spark.catalog.refreshTable(s"${indexName}_shingles")
+      spark.catalog.refreshTable(s"${indexName}_banded")
+      spark.catalog.refreshTable(s"${name}_labels")
+      // idempotence is keyed on BOTH persisted stores: the shingles
+      // index (clean docs) and the quarantine log (screened-out docs
+      // never reach the index, so without this leg a replayed shard
+      // would re-screen and re-log them)
+      val quarantineTable = s"${name}_quarantine"
+      val alreadyIn = if (spark.catalog.tableExists(quarantineTable))
+        spark.table(s"${indexName}_shingles").select("doc_id")
+          .unionByName(spark.table(quarantineTable).select("doc_id"))
+      else spark.table(s"${indexName}_shingles").select("doc_id")
+      val arrived = batch
+        .join(alreadyIn, Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      // DECONTAMINATION AT INGEST (the d10b screen as a curation
+      // stage): gram-hash the arriving docs map-side against the
+      // frozen eval bloom, verify suspects exactly, quarantine
+      // contaminated docs — they never enter the pair search, the
+      // label state, or the index
+      val fresh = screen match {
+        case None => arrived
+        case Some(st) =>
+          val contaminated = Dedup.screenContamination(arrived,
+            st.bloom, st.grams).localCheckpoint()
+          if (!contaminated.isEmpty) {
+            contaminated.withColumn("batch_id", lit(batchId))
+              .write.mode("append").saveAsTable(quarantineTable)
+            arrived.join(contaminated.select("doc_id"),
+              Seq("doc_id"), "left_anti").localCheckpoint()
+          } else arrived
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      if (!fresh.isEmpty) {
+        // freeze the prior state: the generation swap below drops the
+        // table this batch's merge reads
+        val labels = spark.table(s"${name}_labels").localCheckpoint()
+        val delta = Dedup.deltaNearDups(fresh,
+          Dedup.loadNearDupIndex(spark, indexName), threshold)
+        val newDocs = fresh.select(col("doc_id"),
+          length(coalesce(col("text"), lit(""))).as("qlen"))
+        val changed = Dedup.mergeLabelState(spark, labels, delta, newDocs)
+          .localCheckpoint()
+        // the log is appended BEFORE the table swap / index append (a
+        // crash after the swap but before a log write would lose the
+        // slice forever — replay would skip the batch via the shingles
+        // anti-join). The cost is at-least-once LOG semantics: a crash
+        // after this append refires the batch under the SAME batch_id,
+        // so skip the re-append when that id is already logged — the
+        // recomputed slice converges to the same rows and the log stays
+        // delta-sized instead of accumulating duplicates.
+        val logTable = s"${name}_label_updates"
+        val alreadyLogged = spark.catalog.tableExists(logTable) &&
+          !spark.table(logTable).filter(col("batch_id") === batchId).isEmpty
+        if (!alreadyLogged)
+          changed.withColumn("batch_id", lit(batchId))
+            .write.mode("append").saveAsTable(logTable)
+        Dedup.applyLabelUpdates(spark, s"${name}_labels", changed)
+        Dedup.appendNearDupIndex(spark, indexName, fresh)
+        // re-ingested docs drop out of the cumulative takedown log
+        // (see runIngestNearDup — the log-reading sketch rebuild is
+        // the one consumer the per-index tombstone lift doesn't cover)
+        graft.operators.Takedown.clearTakedownLog(spark,
+          fresh.select(col("doc_id")), takedownLog)
+      }
+    }
     spark.table(s"${name}_labels")
   }
 
-  /** CONTINUOUS MONITOR→ACTION — the d43/d57 reband loop's STREAMING
-    * member (round-17 verdict ask #3: a monitor→action loop that fires
-    * from ingest instead of a one-shot gate). A stream of document
-    * shards maintains a persisted minhash banded generation; per
-    * micro-batch:
+  /** CONTINUOUS MONITOR→ACTION — the batch monitor→action lifecycles
+    * (d43/d57 minhash reband, d55b/d61 winnow retune, d32/d62 simhash
+    * reband, s23 ANN re-bucket, d41/d64 SRP reband, d42/d65 SemDeDup)
+    * driven from ingest by ONE loop: a stream of shards (one file per
+    * micro-batch) maintains `family`'s persisted generation(s) in
+    * `scope`, and per micro-batch every state the batch reaches runs
+    * the family's ONE batch step:
     *
-    *   1. drop already-indexed ids (anti-join on the `_shingles`
-    *      companion — idempotence under at-least-once delivery: a
-    *      replayed shard appends nothing and touches nothing);
-    *   2. append the batch's shingles + banded keys UNDER THE BANDING
-    *      THE META RECORDS ([[graft.operators.Dedup
-    *      .appendMinhashRebandState]] — the round-17 contract: an
-    *      append can never band under drifted parameters);
-    *   3. MONITOR: measure the persisted generation's recall over the
-    *      bounded audit set ([[graft.operators.Dedup
-    *      .minhashServingRecall]] — the audit is the retained corpus
-    *      restricted by `auditFilter` AND capped at `auditCap` non-probe
-    *      docs by [[boundedAudit]]: the default filter is a md5-bucket
-    *      FRACTION of the corpus, which alone would let the quadratic
-    *      exact side grow with ingest — the cap makes the audit a true
-    *      fixed-size set at any corpus size, and negative probe ids
-    *      always ride);
-    *   4. ACTION on a miss: re-band the WHOLE retained corpus 3×3 →
-    *      9×1 as a complete `__gen` generation and swap meta-last —
-    *      the crash-tested [[graft.operators.Dedup
-    *      .swapInBandedGeneration]] verbatim; entry recovery runs at
-    *      stream start (the lifecycle-ENTRY rule).
+    *   1. drop already-retained ids (anti-join on the state's own id
+    *      store — idempotence under at-least-once delivery: a replayed
+    *      shard appends nothing and touches nothing);
+    *   2. append under the setting THE META RECORDS (the round-17
+    *      contract: an append can never band under drifted parameters);
+    *   3. MONITOR: measure the persisted generation over the bounded
+    *      audit set — the retained state restricted by `auditFilter`
+    *      (default: a md5-bucket slice of the ids plus every negative
+    *      probe id) AND capped by [[boundedAudit]];
+    *   4. ACTION on a miss: rebuild the WHOLE retained state at the
+    *      family's repair setting as a complete `__gen` generation and
+    *      swap meta-last, skipped once the meta already serves that
+    *      setting (without the guard a corpus whose repaired recall
+    *      still misses would rebuild on every later batch).
     *
-    * Because the reband rebuilds from ALL retained shingles, the final
-    * generation equals [[graft.operators.Dedup.minhashRebandLifecycle]]
-    * run one-shot over (base ∪ all shards) — StreamingSpec asserts that
-    * identity (the shared-oracle d18 pattern: d43's oracle already
-    * gates the lifecycle, so the stream needs no oracle of its own) and
-    * that replaying a delivered shard is a state no-op. Caller
-    * initializes via [[graft.operators.Dedup.initMinhashRebandState]]
-    * over the base corpus — the same prior-state contract as
-    * [[runIngestCuration]].
+    * Entry recovery ([[graft.operators.Dedup.recoverBandedGenerationSwap]])
+    * runs for every state at stream start (the lifecycle-ENTRY rule).
+    * A [[Tenants]] scope fans each batch to the tenants it carries rows
+    * for (pmod over the id — the estate-sync tenancy) and each tenant
+    * evaluates INDEPENDENTLY: a shard full of one tenant's misses
+    * repairs that tenant alone, the others' tables never move. A
+    * [[Fleet]] is the one-state case. Because every action rebuilds
+    * from ALL retained state, a state's final generation equals its
+    * batch lifecycle run one-shot over (base ∪ shards) — StreamingSpec
+    * asserts that identity per (family, scope) (the shared-oracle d18
+    * pattern: the lifecycle's oracle already gates it) and that
+    * replaying a delivered shard is a state no-op. The caller
+    * initializes each state with the family's `init*State` over its
+    * base slice — the same prior-state contract as [[runIngestCuration]].
     */
-  def runIngestRebandLoop(spark: SparkSession, shardDir: String,
-      name: String, threshold: Double = 0.8, target: Double = 0.95,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("doc_id")) < 64 || col("doc_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): DataFrame = {
-    import graft.operators.Dedup
-    // crash hygiene at lifecycle ENTRY (the simhashRebandLifecycle rule):
-    // finish or discard a swap a prior process died inside before any
-    // batch reads the serving generation
-    Dedup.recoverBandedGenerationSwap(spark, name)
-    val src = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        rebandBatchStep(spark, name, batch, threshold, target,
-          auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(s"${name}_banded")
-    spark.table(s"${name}_banded")
+  def runMonitorLoop(spark: SparkSession, shardDir: String,
+      family: MonitorFamily, scope: MonitorScope,
+      auditFilter: Option[Column] = None): Unit = {
+    val id = col(family.idCol)
+    val audit = auditFilter.getOrElse(
+      graft.operators.TextAnalysis.splitBucket(id) < 64 || id < 0)
+    scope.states.foreach(
+      graft.operators.Dedup.recoverBandedGenerationSwap(spark, _))
+    drain(shardStream(spark, family.schema, shardDir)) { (batch, _) =>
+      for ((state, slice) <- scope.route(family.prepare(batch), family.idCol))
+        family.step(spark, state, slice, audit)
+    }
   }
 
-  /** Bound a monitor's audit frame to at most `cap` non-probe docs:
-    * planted probes (negative ids) always ride; the rest rank by
-    * md5(doc_id) (deterministic, engine-portable — never rand) and keep
-    * the lowest `cap` via sort+limit, which Spark plans as
+  /** Where a [[runMonitorLoop]]'s state lives. */
+  sealed trait MonitorScope {
+    private[streaming] def states: Seq[String]
+    /** The (state, slice) pairs one prepared micro-batch feeds. */
+    private[streaming] def route(batch: DataFrame,
+        idCol: String): Seq[(String, DataFrame)]
+  }
+
+  /** ONE fleet state `name`: every batch row feeds it. */
+  final case class Fleet(name: String) extends MonitorScope {
+    private[streaming] def states: Seq[String] = Seq(name)
+    private[streaming] def route(batch: DataFrame,
+        idCol: String): Seq[(String, DataFrame)] = Seq(name -> batch)
+  }
+
+  /** `n` tenant states `${prefix}_t<i>` (the d57/d61/d62/d64/d65/s23
+    * table-pair layout): a row feeds tenant pmod(id, n), and only the
+    * tenants the batch carries rows for are opened.
+    */
+  final case class Tenants(prefix: String, n: Int = 2) extends MonitorScope {
+    private[streaming] def states: Seq[String] =
+      (0 until n).map(tn => s"${prefix}_t$tn")
+    private[streaming] def route(batch: DataFrame,
+        idCol: String): Seq[(String, DataFrame)] = {
+      val b = batch.localCheckpoint()
+      touchedTenants(b, n, idCol).map(tn =>
+        states(tn) -> b.filter(pmod(col(idCol), lit(n)) === tn))
+    }
+  }
+
+  /** A [[runMonitorLoop]] state family: the shard stream's schema, the
+    * id column its states key on, the map-side preparation of an
+    * arriving batch (applied once, before the tenant fan-out), and the
+    * family's ONE batch step (state name, slice, audit filter) with its
+    * dials bound — every scope runs exactly that step per state, so a
+    * dial change can never drift between fleet and tenant. A new family
+    * is one more value here; every scope follows from it.
+    */
+  final case class MonitorFamily private (schema: StructType, idCol: String,
+      prepare: DataFrame => DataFrame,
+      step: (SparkSession, String, DataFrame, Column) => Unit)
+
+  object MonitorFamily {
+    /** Minhash reband (d43/d57): recall at Jaccard 0.8 below 0.95
+      * re-bands 3×3 → 9×1; init via [[graft.operators.Dedup
+      * .initMinhashRebandState]].
+      */
+    val minhashReband: MonitorFamily = MonitorFamily(documentSchema,
+      "doc_id", identity,
+      rebandBatchStep(_, _, _, _, threshold = 0.8, target = 0.95))
+
+    /** Winnow retune (d55b/d61): detection at 0.9 below 0.95 re-winnows
+      * at 2 from the retained `_docs` texts (fingerprints are not
+      * invertible); init via [[graft.operators.Dedup.initWinnowRetuneState]].
+      */
+    val winnowRetune: MonitorFamily = MonitorFamily(documentSchema,
+      "doc_id", identity,
+      winnowBatchStep(_, _, _, _, target = 0.95, threshold = 0.9))
+
+    /** Simhash reband (d32/d62): signatures compute map-side; recall at
+      * radius 5 below 0.95 re-bands to the radius-exact 8×8-bit tier;
+      * init via [[graft.operators.Dedup.initSimhashRebandState]].
+      */
+    val simhashReband: MonitorFamily = MonitorFamily(documentSchema,
+      "doc_id", graft.operators.Dedup.simhash64Of,
+      simhashRebandBatchStep(_, _, _, _, radius = 5, target = 0.95))
+
+    /** ANN re-bucket (s23): bucket recall@5 over 5 probes below `target`
+      * re-buckets at 1 plane; init via [[graft.operators.Similarity
+      * .initAnnRebucketState]].
+      */
+    def annRebucket(target: Double = 0.3): MonitorFamily =
+      MonitorFamily(embeddingSchema, "vec_id", preparedVecsOf,
+        annRebucketBatchStep(_, _, _, _, target = target, planes1 = 1,
+          nProbes = 5, k = 5))
+
+    /** Global SRP reband (d41/d64): every vector under label 0. */
+    val srpReband: MonitorFamily = srp(lit(0))
+
+    /** SemDeDup reband (d42/d65): the SRP family under the FROZEN fleet
+      * k-means labels. The model is corpus state (the d42/d63 rule:
+      * slicing or ingest must not move centroids), so arriving vectors
+      * are labeled by the caller's frozen model and within-cluster
+      * banding falls out of label riding the candidate block keys.
+      */
+    def semDedupReband(model: Array[(Int, Array[Double])]): MonitorFamily =
+      srp(graft.operators.Similarity.assignExpr(model))
+
+    /** SRP banding under `label`: recall at cosine 0.3 below 0.9
+      * re-bands at 8 (OR amplification is monotone — candidates only
+      * grow); init via [[graft.operators.Dedup.initSrpRebandState]].
+      */
+    private def srp(label: Column): MonitorFamily =
+      MonitorFamily(embeddingSchema, "vec_id",
+        b => preparedVecsOf(b).withColumn("label", label),
+        srpRebandBatchStep(_, _, _, _, threshold = 0.3, target = 0.9))
+  }
+
+  /** Non-probe docs a monitor audits per micro-batch. Derived from a
+    * PAIR budget, not a row count (the r19 right-sizing): the exact side
+    * audits ≤ cap²/2 candidate pairs, so 2^17 ids ⇒ ≤ 2^33 ≈ 8.6B pairs
+    * per micro-batch — bounded at a price a deployment could actually
+    * pay per batch. Test corpora sit far below it.
+    */
+  private val auditCap = 1 << 17
+
+  /** Bound a monitor's audit frame to at most [[auditCap]] non-probe
+    * docs: planted probes (negative ids) always ride; the rest rank by
+    * md5(id) (deterministic, engine-portable — never rand) and keep the
+    * lowest `auditCap` via sort+limit, which Spark plans as
     * TakeOrderedAndProject (per-partition bounded top-k, then a
     * cap-row merge — no full shuffle). The ADVICE-18 fix: the default
     * `auditFilter` is a md5-bucket FRACTION of the retained corpus, and
     * a fraction is not a bound — the monitor's quadratic exact side
     * would grow with ingest. With the cap it is O(cap²) forever.
-    *
-    * The DEFAULT cap (2^17 ≈ 131k ids) is derived from a PAIR budget,
-    * not a row count (the r19 right-sizing): the exact side audits
-    * ≤ cap²/2 candidate pairs, so 2^17 ids ⇒ ≤ 2^33 ≈ 8.6B pairs per
-    * micro-batch — generous for a distributed audit but bounded at a
-    * price a deployment could actually pay per batch, where the old
-    * 1M-id default encoded "never reached at test SF" (5×10¹¹ pairs —
-    * a number nobody would knowingly schedule). Test corpora sit far
-    * below either value, so behavior is unchanged; at 100 TB the cap
-    * is the dial and its default is now a defensible price.
     */
-  private def boundedAudit(df: DataFrame, cap: Int,
+  private def boundedAudit(df: DataFrame,
       idCol: String = "doc_id"): DataFrame =
-    if (cap <= 0) df
-    else df.filter(col(idCol) < 0).unionByName(
+    df.filter(col(idCol) < 0).unionByName(
       df.filter(col(idCol) >= 0)
         .orderBy(md5(col(idCol).cast("string")), col(idCol))
-        .limit(cap))
+        .limit(auditCap))
 
-  /** One micro-batch's monitor→action step for a minhash reband state
-    * (ONE definition — the fleet loop and the tenant loop both run
-    * exactly this body per state, so the two can never drift on a dial
-    * change; the fleet loop is the one-state case): anti-join the
-    * slice's fresh ids, append under the meta's banding, measure the
-    * persisted generation's recall over the bounded audit set, and
-    * re-band 9×1 on a miss unless the generation already serves 9×1.
+  /** The tenants a micro-batch actually carries rows for (distinct pmod
+    * over the batch — a batch-sized aggregation collecting ≤ nTenants
+    * ints): the tenant fan-out iterates THIS set, not 0 until nTenants
+    * (the round-18 verdict nit — at hundreds of tenants, a sequential
+    * anti-join + isEmpty per untouched tenant is 2N catalog reads per
+    * batch for nothing).
+    */
+  private def touchedTenants(batch: DataFrame, nTenants: Int,
+      idCol: String): Seq[Int] =
+    batch.select(pmod(col(idCol), lit(nTenants)).cast("int").as("tn"))
+      .distinct().collect().map(_.getInt(0)).sorted.toSeq
+
+  /** An arriving embedding batch prepared to the state layout's
+    * (vec_id, v, n) — the d17 map-side preparation.
+    */
+  private def preparedVecsOf(batch: DataFrame): DataFrame = {
+    import graft.functions.Exprs.{doubleVector, l2Norm}
+    batch.select(col("vec_id"), doubleVector(col("embedding")).as("v"))
+      .withColumn("n", l2Norm(col("v")))
+  }
+
+  /** [[MonitorFamily.minhashReband]]'s batch step: anti-join the
+    * slice's fresh ids against `_shingles`, append under the meta's
+    * banding ([[graft.operators.Dedup.appendMinhashRebandState]]),
+    * measure the persisted generation's recall over the bounded audit
+    * set ([[graft.operators.Dedup.minhashServingRecall]]), and re-band
+    * 9×1 through the crash-tested meta-last swap on a miss unless the
+    * generation already serves 9×1.
     */
   private def rebandBatchStep(spark: SparkSession, name: String,
-      slice: DataFrame, threshold: Double, target: Double,
-      auditFilter: Column, auditCap: Int): Unit = {
+      slice: DataFrame, auditFilter: Column, threshold: Double,
+      target: Double): Unit = {
     import graft.operators.Dedup
     spark.catalog.refreshTable(s"${name}_shingles")
     val fresh = slice
@@ -603,13 +714,9 @@ object EventsStream {
         Dedup.shingleTableOf(fresh).localCheckpoint())
       spark.catalog.refreshTable(s"${name}_shingles")
       val audit = boundedAudit(
-        spark.table(s"${name}_shingles").filter(auditFilter), auditCap)
+        spark.table(s"${name}_shingles").filter(auditFilter))
       val row = Dedup.minhashServingRecall(spark, name, audit,
         threshold).head()
-      // the action is a no-op once the generation already serves the
-      // re-banding (9x1 is this loop's whole dial) — without the
-      // guard, a corpus whose 9x1 recall still misses the target
-      // would rebuild the FULL retained corpus on every later batch
       val m = spark.table(s"${name}_meta").head()
       val already9x1 = m.getAs[Int]("bands") == 9 &&
         m.getAs[Int]("rows_per_band") == 1
@@ -619,115 +726,17 @@ object EventsStream {
     }
   }
 
-  /** The tenants a micro-batch actually carries rows for (distinct pmod
-    * over the batch — a batch-sized aggregation collecting ≤ nTenants
-    * ints): the per-tenant loops iterate THIS set, not 0 until nTenants
-    * (the round-18 verdict nit — at hundreds of tenants, a sequential
-    * anti-join + isEmpty per untouched tenant is 2N catalog reads per
-    * batch for nothing).
-    */
-  private def touchedTenants(batch: DataFrame, nTenants: Int,
-      idCol: String = "doc_id"): Seq[Int] =
-    batch.select(pmod(col(idCol), lit(nTenants)).cast("int").as("tn"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-
-  /** [[runIngestRebandLoop]]'s TENANT-SCOPED member — the d57/d62
-    * table-pair layout driven from ingest (the tenant composition of
-    * round 18's three monitor asks): each tenant's banded generation is
-    * its own `${namePrefix}_t$tn` table pair, a micro-batch fans its
-    * rows to their tenants' states (pmod — the estate-sync tenancy), and
-    * each tenant's monitor→action evaluates INDEPENDENTLY per batch: a
-    * shard full of one tenant's misses rebands that tenant's generation
-    * alone, the other tenants' tables never move (their batch slice
-    * anti-joins empty, their monitor never re-fires — the structural
-    * isolation the table-pair layout buys). Entry recovery runs per
-    * tenant at stream start. Caller initializes each tenant's state via
-    * [[graft.operators.Dedup.initMinhashRebandState]] over the tenant's
-    * base slice. StreamingSpec proves: the streamed tenant's final
-    * generation == its per-tenant batch lifecycle, the untouched
-    * tenant's generation content-identical to init, replay a no-op.
-    */
-  def runTenantIngestRebandLoop(spark: SparkSession, shardDir: String,
-      namePrefix: String, nTenants: Int = 2, threshold: Double = 0.8,
-      target: Double = 0.95,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("doc_id")) < 64 || col("doc_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): Unit = {
-    import graft.operators.Dedup
-    (0 until nTenants).foreach(tn =>
-      Dedup.recoverBandedGenerationSwap(spark, s"${namePrefix}_t$tn"))
-    val src = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        // only the tenants this batch carries rows for — an untouched
-        // tenant's state is never opened (its slice would anti-join to
-        // empty anyway; deriving the set first skips the catalog reads)
-        for (tn <- touchedTenants(b, nTenants))
-          rebandBatchStep(spark, s"${namePrefix}_t$tn",
-            b.filter(pmod(col("doc_id"), lit(nTenants)) === tn),
-            threshold, target, auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** [[runIngestRebandLoop]]'s WINNOWING-family member — the d55b
-    * monitor→action loop driven from ingest: a stream of document
-    * shards maintains a persisted winnowed-fingerprint generation (plus
-    * its `_docs` companion — fingerprints are not invertible, so the
-    * retune action re-fingerprints from retained texts). Per
-    * micro-batch: per-table idempotent appends UNDER THE META'S
-    * (w, winnow), then the detection monitor over the bounded audit set
-    * ([[graft.operators.Dedup.winnowServingDetection]] — exact side
-    * from the audit texts' full digest sets, candidate side
-    * audit-restricted BEFORE the df census), and on a miss the
-    * re-winnow at 2 through the crash-tested meta-last swap (skipped
-    * once the generation already serves winnow 2 — the reband loop's
-    * guard). Entry recovery at stream start. StreamingSpec proves the
-    * final generation equals [[graft.operators.Dedup
-    * .winnowRetuneLifecycle]] one-shot over (base ∪ shards) and that a
-    * replayed shard is a state no-op — the shared-oracle d18 pattern
-    * (d55b's oracle already gates the lifecycle).
-    */
-  def runIngestWinnowRetuneLoop(spark: SparkSession, shardDir: String,
-      name: String, target: Double = 0.95, threshold: Double = 0.9,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("doc_id")) < 64 || col("doc_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): DataFrame = {
-    import graft.operators.Dedup
-    Dedup.recoverBandedGenerationSwap(spark, name)
-    val src = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        winnowBatchStep(spark, name, batch, target, threshold,
-          auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(s"${name}_banded")
-    spark.table(s"${name}_banded")
-  }
-
-  /** One micro-batch's monitor→action step for a winnow-retune state —
-    * the [[rebandBatchStep]] shape for the winnowing dial (one
-    * definition, fleet and tenant members): anti-join the slice's fresh
-    * ids, append texts + fingerprints under the meta's (w, winnow),
-    * measure the persisted generation's detection over the bounded
-    * audit set, and re-winnow at 2 on a miss unless the generation
-    * already serves winnow 2.
+  /** [[MonitorFamily.winnowRetune]]'s batch step: anti-join the slice's
+    * fresh ids against `_docs`, append texts + fingerprints under the
+    * meta's (w, winnow), measure the persisted generation's detection
+    * over the bounded audit set ([[graft.operators.Dedup
+    * .winnowServingDetection]] — exact side from the audit texts' full
+    * digest sets, candidate side audit-restricted BEFORE the df
+    * census), and re-winnow at 2 on a miss unless already at 2.
     */
   private def winnowBatchStep(spark: SparkSession, name: String,
-      slice: DataFrame, target: Double, threshold: Double,
-      auditFilter: Column, auditCap: Int): Unit = {
+      slice: DataFrame, auditFilter: Column, target: Double,
+      threshold: Double): Unit = {
     import graft.operators.Dedup
     spark.catalog.refreshTable(s"${name}_docs")
     val fresh = slice
@@ -738,7 +747,7 @@ object EventsStream {
       Dedup.appendWinnowRetuneState(spark, name, fresh)
       spark.catalog.refreshTable(s"${name}_docs")
       val audit = boundedAudit(
-        spark.table(s"${name}_docs").filter(auditFilter), auditCap)
+        spark.table(s"${name}_docs").filter(auditFilter))
       val row = Dedup.winnowServingDetection(spark, name, audit,
         threshold).head()
       val winnow = spark.table(s"${name}_meta").head()
@@ -748,143 +757,16 @@ object EventsStream {
     }
   }
 
-  /** [[runIngestWinnowRetuneLoop]]'s TENANT-SCOPED member (round-18
-    * verdict ask #2 — the winnow family's batch action was already
-    * tenant-scoped in d61, but a tenant whose short-doc skew arrives
-    * via ingest could not retune from the stream): each tenant's
-    * winnowed fingerprint generation + `_docs` companion is its own
-    * `${namePrefix}_t$tn` table pair (the d61 layout), a micro-batch
-    * fans its rows to their tenants' states (pmod — the estate-sync
-    * tenancy, restricted to the batch's touched-tenant set first), and
-    * each touched tenant runs [[winnowBatchStep]] independently: a
-    * shard full of one tenant's short-doc misses retunes that tenant's
-    * winnow alone, every other tenant's tables (and their meta's
-    * winnow) never move. Entry recovery runs per tenant at stream
-    * start. Caller initializes each tenant's state via
-    * [[graft.operators.Dedup.initWinnowRetuneState]] over the tenant's
-    * base slice. StreamingSpec proves: the streamed tenant's final
-    * generation == its per-tenant batch lifecycle
-    * ([[graft.operators.Dedup.winnowRetuneLifecycle]] over
-    * base ∪ shard — the shared-oracle d18 pattern, d61's oracle already
-    * gates the lifecycle), the untouched tenant's generation
-    * content-identical to init, replay a no-op.
-    */
-  def runTenantIngestWinnowRetuneLoop(spark: SparkSession, shardDir: String,
-      namePrefix: String, nTenants: Int = 2, target: Double = 0.95,
-      threshold: Double = 0.9,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("doc_id")) < 64 || col("doc_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): Unit = {
-    import graft.operators.Dedup
-    (0 until nTenants).foreach(tn =>
-      Dedup.recoverBandedGenerationSwap(spark, s"${namePrefix}_t$tn"))
-    val src = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.localCheckpoint()
-        for (tn <- touchedTenants(b, nTenants))
-          winnowBatchStep(spark, s"${namePrefix}_t$tn",
-            b.filter(pmod(col("doc_id"), lit(nTenants)) === tn),
-            target, threshold, auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** [[runIngestRebandLoop]]'s SIMHASH-family member, completing the
-    * monitor→action matrix: every looped family (minhash reband,
-    * winnow retune, ANN re-bucket, simhash reband) now has batch fleet
-    * + batch tenant + STREAMING fleet + streaming tenant members. A
-    * stream of document shards maintains a persisted 4×16-bit simhash
-    * banded generation — ONE table, no companion (the banded rows
-    * carry the signature, so the re-band action rebuilds from retained
-    * rows' distinct (doc_id, simhash) and idempotence is one
-    * anti-join). Per micro-batch: signatures compute MAP-SIDE
-    * ([[graft.operators.Dedup.simhash64Of]]), band under the meta's
-    * bands, then the d28 recall monitor over the bounded audit set
-    * ([[graft.operators.Dedup.simhashServingRecall]] — serving rows
-    * audit-restricted BEFORE pair generation), and on a miss the
-    * re-band at the radius-exact 8×8-bit tier through the crash-tested
-    * meta-last swap (skipped once already 8-band). Entry recovery at
-    * stream start. StreamingSpec proves the final generation equals
-    * [[graft.operators.Dedup.simhashRebandLifecycle]] one-shot over
-    * (base ∪ shards) — the d18 shared-oracle pattern (d32/d62's
-    * oracles gate the lifecycle) — and replay is a state no-op. The
-    * sf0.001 trigger is NATURAL: the fleet corpus measures 0.9048 at 4
-    * bands / radius 5 (38 of 42 exact pairs caught), below the 0.95
-    * target.
-    */
-  def runIngestSimhashRebandLoop(spark: SparkSession, shardDir: String,
-      name: String, radius: Int = 5, target: Double = 0.95,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("doc_id")) < 64 || col("doc_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): DataFrame = {
-    import graft.operators.Dedup
-    Dedup.recoverBandedGenerationSwap(spark, name)
-    val src = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        simhashRebandBatchStep(spark, name,
-          graft.operators.Dedup.simhash64Of(batch), radius, target,
-          auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(s"${name}_banded")
-    spark.table(s"${name}_banded")
-  }
-
-  /** [[runIngestSimhashRebandLoop]]'s TENANT-SCOPED member — d62's
-    * table-pair layout driven from ingest: micro-batches fan to their
-    * tenants' (banded, meta) pairs (pmod tenancy, restricted to the
-    * batch's touched-tenant set first), each touched tenant runs the
-    * shared batch step independently — the tripped tenant re-bands to
-    * the radius-exact 8×8 tier alone, every other tenant's generation
-    * (and its meta's bands) never moves. Entry recovery per tenant at
-    * stream start; caller initializes each tenant's state over its
-    * base signature slice via [[graft.operators.Dedup
-    * .initSimhashRebandState]].
-    */
-  def runTenantIngestSimhashRebandLoop(spark: SparkSession,
-      shardDir: String, namePrefix: String, nTenants: Int = 2,
-      radius: Int = 5, target: Double = 0.95,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("doc_id")) < 64 || col("doc_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): Unit = {
-    import graft.operators.Dedup
-    (0 until nTenants).foreach(tn =>
-      Dedup.recoverBandedGenerationSwap(spark, s"${namePrefix}_t$tn"))
-    val src = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = graft.operators.Dedup.simhash64Of(batch).localCheckpoint()
-        for (tn <- touchedTenants(b, nTenants))
-          simhashRebandBatchStep(spark, s"${namePrefix}_t$tn",
-            b.filter(pmod(col("doc_id"), lit(nTenants)) === tn),
-            radius, target, auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** One micro-batch's monitor→action step for a simhash reband state
-    * (ONE definition — fleet and tenant loops).
+  /** [[MonitorFamily.simhashReband]]'s batch step. The state is ONE
+    * table, no companion: the banded rows carry the signature, so
+    * idempotence is one anti-join against `_banded` and the re-band
+    * rebuilds from retained rows' distinct (doc_id, simhash). The d28
+    * recall monitor ([[graft.operators.Dedup.simhashServingRecall]])
+    * restricts serving rows to the audit BEFORE pair generation.
     */
   private def simhashRebandBatchStep(spark: SparkSession, name: String,
-      slice: DataFrame, radius: Int, target: Double, auditFilter: Column,
-      auditCap: Int): Unit = {
+      slice: DataFrame, auditFilter: Column, radius: Int,
+      target: Double): Unit = {
     import graft.operators.Dedup
     spark.catalog.refreshTable(s"${name}_banded")
     val fresh = slice
@@ -894,113 +776,25 @@ object EventsStream {
     if (!fresh.isEmpty) {
       Dedup.appendSimhashRebandState(spark, name, fresh)
       val audit = boundedAudit(
-        Dedup.retainedSimhashSigs(spark, name).filter(auditFilter),
-        auditCap)
+        Dedup.retainedSimhashSigs(spark, name).filter(auditFilter))
       val row = Dedup.simhashServingRecall(spark, name, audit, radius)
         .head()
-      // skip the action once the generation already serves the
-      // radius-exact 8-band tier (the reband loop's guard)
       val bands = spark.table(s"${name}_meta").head().getAs[Int]("bands")
       if (row.getAs[Double]("recall") < target && bands != 8)
         Dedup.rebandSimhashGenerationFromState(spark, name, bands = 8)
     }
   }
 
-  /** [[runIngestRebandLoop]]'s ANN-family member — the s23 re-bucket
-    * loop driven from ingest (completing the batch + streaming + tenant
-    * symmetry for the vector store's repair action): a stream of
-    * embedding shards maintains a persisted LSH bucket generation plus
-    * its `_vecs` companion (the re-bucket re-hashes retained vectors).
-    * Per micro-batch: per-table idempotent appends UNDER THE META'S
-    * planes, then the recall monitor over the bounded audit set
-    * ([[graft.operators.Similarity.annServingBucketRecall]] — the ONE
-    * monitor definition the s23 lifecycle also reads; serving buckets
-    * audit-restricted BEFORE the bucket join, probes sort+limit), and
-    * on a miss the re-bucket at `planes1` through the crash-tested
-    * meta-last swap (skipped once the generation already serves
-    * `planes1` — the reband loop's guard). Entry recovery at stream
-    * start. StreamingSpec proves the final generation equals
-    * [[graft.operators.Similarity.annRebucketLifecycle]] one-shot over
-    * (base ∪ shards) and that a replayed shard is a state no-op — the
-    * shared-oracle d18 pattern (s23's oracle already gates the
-    * lifecycle). Caller initializes via [[graft.operators.Similarity
-    * .initAnnRebucketState]].
-    */
-  def runIngestAnnRebucketLoop(spark: SparkSession, shardDir: String,
-      name: String, target: Double = 0.3, planes1: Int = 1,
-      nProbes: Int = 5, k: Int = 5,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("vec_id")) < 64 || col("vec_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): DataFrame = {
-    graft.operators.Dedup.recoverBandedGenerationSwap(spark, name)
-    val src = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        annRebucketBatchStep(spark, name, preparedVecsOf(batch), target,
-          planes1, nProbes, k, auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(s"${name}_banded")
-    spark.table(s"${name}_banded")
-  }
-
-  /** [[runIngestAnnRebucketLoop]]'s TENANT-SCOPED member — s23's table-
-    * pair layout driven from ingest: micro-batches fan to their
-    * tenants' (banded, vecs, meta) pairs (pmod over vec_id — the s20
-    * tenancy), restricted to the batch's touched-tenant set first, and
-    * each touched tenant runs the shared batch step independently: a
-    * shard full of one tenant's vectors re-buckets that tenant's
-    * generation alone, every other tenant's tables (and their meta's
-    * planes) never move. Entry recovery per tenant at stream start;
-    * caller initializes each tenant's state over its base slice.
-    */
-  def runTenantIngestAnnRebucketLoop(spark: SparkSession, shardDir: String,
-      namePrefix: String, nTenants: Int = 2, target: Double = 0.3,
-      planes1: Int = 1, nProbes: Int = 5, k: Int = 5,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("vec_id")) < 64 || col("vec_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): Unit = {
-    (0 until nTenants).foreach(tn =>
-      graft.operators.Dedup.recoverBandedGenerationSwap(spark,
-        s"${namePrefix}_t$tn"))
-    val src = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = preparedVecsOf(batch).localCheckpoint()
-        for (tn <- touchedTenants(b, nTenants, idCol = "vec_id"))
-          annRebucketBatchStep(spark, s"${namePrefix}_t$tn",
-            b.filter(pmod(col("vec_id"), lit(nTenants)) === tn),
-            target, planes1, nProbes, k, auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** An arriving embedding batch prepared to the state layout's
-    * (vec_id, v, n) — the d17 map-side preparation.
-    */
-  private def preparedVecsOf(batch: DataFrame): DataFrame = {
-    import graft.functions.Exprs.{doubleVector, l2Norm}
-    batch.select(col("vec_id"), doubleVector(col("embedding")).as("v"))
-      .withColumn("n", l2Norm(col("v")))
-  }
-
-  /** One micro-batch's monitor→action step for an ANN re-bucket state
-    * (ONE definition — fleet and tenant loops; the rebandBatchStep
-    * shape for the vector store).
+  /** [[MonitorFamily.annRebucket]]'s batch step: the LSH bucket
+    * generation plus its `_vecs` companion (the re-bucket re-hashes
+    * retained vectors); the monitor is
+    * [[graft.operators.Similarity.annServingBucketRecall]] — the ONE
+    * definition the s23 lifecycle also reads (serving buckets
+    * audit-restricted BEFORE the bucket join, probes sort+limit).
     */
   private def annRebucketBatchStep(spark: SparkSession, name: String,
-      slice: DataFrame, target: Double, planes1: Int, nProbes: Int,
-      k: Int, auditFilter: Column, auditCap: Int): Unit = {
+      slice: DataFrame, auditFilter: Column, target: Double, planes1: Int,
+      nProbes: Int, k: Int): Unit = {
     import graft.operators.Similarity
     spark.catalog.refreshTable(s"${name}_vecs")
     val fresh = slice
@@ -1011,149 +805,25 @@ object EventsStream {
       Similarity.appendAnnRebucketState(spark, name, fresh)
       spark.catalog.refreshTable(s"${name}_vecs")
       val audit = boundedAudit(
-        spark.table(s"${name}_vecs").filter(auditFilter), auditCap,
-        idCol = "vec_id")
+        spark.table(s"${name}_vecs").filter(auditFilter), idCol = "vec_id")
       val row = Similarity.annServingBucketRecall(spark, name, audit,
         nProbes, k).head()
-      // skip the action once the generation already serves planes1
-      // (the reband loop's guard — without it a corpus whose coarse
-      // recall still misses would re-hash the full corpus every batch)
       val planes = spark.table(s"${name}_meta").head().getAs[Int]("planes")
       if (row.getAs[Double]("recall") < target && planes != planes1)
         Similarity.rebucketGenerationFromVecs(spark, name, planes1)
     }
   }
 
-  /** [[runIngestRebandLoop]]'s SRP-BANDED-family member — the d41/d64
-    * monitor→action loop driven from ingest (the FIFTH looped family;
-    * CLAUDE.md's own invariant: keep the matrix square): a stream of
-    * embedding shards maintains a persisted SRP banded generation
-    * (label, vec_id, band, bucket) plus its `_vecs` companion (the
-    * re-band re-hashes retained labeled vectors). Per micro-batch:
-    * per-table idempotent appends UNDER THE META'S bands, then the
-    * recall monitor over the bounded audit set ([[graft.operators
-    * .Dedup.srpServingRecall]] — the ONE monitor definition the
-    * d41/d64 lifecycles also measure with; serving rows
-    * audit-restricted BEFORE candidate generation), and on a miss the
-    * re-band at 8 (OR amplification is monotone — candidates only
-    * grow) through the crash-tested meta-last swap, skipped once the
-    * generation already serves 8 bands (the reband loop's guard).
-    * Entry recovery at stream start; caller initializes via
-    * [[graft.operators.Dedup.initSrpRebandState]]. `labelOf` attaches
-    * the family's label to arriving vectors: the global-SRP member
-    * uses the default lit(0); the SemDeDup members pass the FROZEN
-    * fleet k-means assignment (see [[runIngestSemDedupRebandLoop]]).
-    * StreamingSpec proves the final generation equals
-    * [[graft.operators.Dedup.srpRebandLifecycle]] one-shot over
-    * (base ∪ shards) and replay is a state no-op — the d18
-    * shared-oracle pattern (d41/d64's oracles gate the lifecycle).
-    */
-  def runIngestSrpRebandLoop(spark: SparkSession, shardDir: String,
-      name: String, threshold: Double = 0.3, target: Double = 0.9,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("vec_id")) < 64 || col("vec_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17,
-      labelOf: DataFrame => DataFrame =
-        _.withColumn("label", lit(0))): DataFrame = {
-    graft.operators.Dedup.recoverBandedGenerationSwap(spark, name)
-    val src = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        srpRebandBatchStep(spark, name, labelOf(preparedVecsOf(batch)),
-          threshold, target, auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.catalog.refreshTable(s"${name}_banded")
-    spark.table(s"${name}_banded")
-  }
-
-  /** [[runIngestSrpRebandLoop]]'s TENANT-SCOPED member — d64's
-    * table-pair layout driven from ingest: micro-batches fan to their
-    * tenants' (banded, vecs, meta) tables (pmod over vec_id),
-    * restricted to the batch's touched-tenant set first; each touched
-    * tenant runs the shared batch step independently — a tripped
-    * tenant re-bands alone, every other tenant's generation (and its
-    * meta's bands) never moves. Entry recovery per tenant at stream
-    * start; caller initializes each tenant's state over its base
-    * slice via [[graft.operators.Dedup.initSrpRebandState]].
-    */
-  def runTenantIngestSrpRebandLoop(spark: SparkSession, shardDir: String,
-      namePrefix: String, nTenants: Int = 2, threshold: Double = 0.3,
-      target: Double = 0.9,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("vec_id")) < 64 || col("vec_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17,
-      labelOf: DataFrame => DataFrame =
-        _.withColumn("label", lit(0))): Unit = {
-    (0 until nTenants).foreach(tn =>
-      graft.operators.Dedup.recoverBandedGenerationSwap(spark,
-        s"${namePrefix}_t$tn"))
-    val src = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = labelOf(preparedVecsOf(batch)).localCheckpoint()
-        for (tn <- touchedTenants(b, nTenants, idCol = "vec_id"))
-          srpRebandBatchStep(spark, s"${namePrefix}_t$tn",
-            b.filter(pmod(col("vec_id"), lit(nTenants)) === tn),
-            threshold, target, auditFilter, auditCap)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** The SEMDEDUP members (the SIXTH looped family): the SRP reband
-    * loop under the FROZEN fleet k-means labels — the d42/d65 action
-    * driven from ingest. The model is corpus state (the d42/d63 rule:
-    * slicing or ingest must not move centroids), so arriving vectors
-    * are labeled by the CALLER-PROVIDED frozen model and the loop
-    * machinery — ONE batch-step body — is [[runIngestSrpRebandLoop]]'s
-    * verbatim; within-cluster banding falls out of label riding the
-    * candidate block keys.
-    */
-  def runIngestSemDedupRebandLoop(spark: SparkSession, shardDir: String,
-      name: String, model: Array[(Int, Array[Double])],
-      threshold: Double = 0.3, target: Double = 0.9,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("vec_id")) < 64 || col("vec_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): DataFrame =
-    runIngestSrpRebandLoop(spark, shardDir, name, threshold, target,
-      auditFilter, maxFilesPerTrigger, auditCap,
-      labelOf = _.withColumn("label",
-        graft.operators.Similarity.assignExpr(model)))
-
-  /** [[runIngestSemDedupRebandLoop]]'s TENANT-SCOPED member — d65's
-    * table-pair layout driven from ingest, same frozen-model labeling,
-    * same shared batch-step body.
-    */
-  def runTenantIngestSemDedupRebandLoop(spark: SparkSession,
-      shardDir: String, namePrefix: String,
-      model: Array[(Int, Array[Double])], nTenants: Int = 2,
-      threshold: Double = 0.3, target: Double = 0.9,
-      auditFilter: Column = graft.operators.TextAnalysis.splitBucket(
-        col("vec_id")) < 64 || col("vec_id") < 0,
-      maxFilesPerTrigger: Int = 1, auditCap: Int = 1 << 17): Unit =
-    runTenantIngestSrpRebandLoop(spark, shardDir, namePrefix, nTenants,
-      threshold, target, auditFilter, maxFilesPerTrigger, auditCap,
-      labelOf = _.withColumn("label",
-        graft.operators.Similarity.assignExpr(model)))
-
-  /** One micro-batch's monitor→action step for an SRP/SemDeDup reband
-    * state (ONE definition — fleet, tenant, global-SRP, and
-    * frozen-label SemDeDup members all run exactly this body; the
-    * rebandBatchStep shape for the vector banding families).
+  /** The SRP and SemDeDup families' batch step: the SRP banded
+    * generation (label, vec_id, band, bucket) plus its `_vecs`
+    * companion (the re-band re-hashes retained labeled vectors); the
+    * monitor is [[graft.operators.Dedup.srpServingRecall]] — the ONE
+    * definition the d41/d64 lifecycles also measure with (serving rows
+    * audit-restricted BEFORE candidate generation).
     */
   private def srpRebandBatchStep(spark: SparkSession, name: String,
-      slice: DataFrame, threshold: Double, target: Double,
-      auditFilter: Column, auditCap: Int): Unit = {
+      slice: DataFrame, auditFilter: Column, threshold: Double,
+      target: Double): Unit = {
     import graft.operators.Dedup
     spark.catalog.refreshTable(s"${name}_vecs")
     val fresh = slice
@@ -1164,13 +834,9 @@ object EventsStream {
       Dedup.appendSrpRebandState(spark, name, fresh)
       spark.catalog.refreshTable(s"${name}_vecs")
       val audit = boundedAudit(
-        spark.table(s"${name}_vecs").filter(auditFilter), auditCap,
-        idCol = "vec_id")
+        spark.table(s"${name}_vecs").filter(auditFilter), idCol = "vec_id")
       val row = Dedup.srpServingRecall(spark, name, audit, threshold)
         .head()
-      // skip the action once the generation already serves 8 bands
-      // (the reband loop's guard — without it a corpus whose 8-band
-      // recall still misses would rebuild every later batch)
       val bands = spark.table(s"${name}_meta").head().getAs[Int]("bands")
       if (row.getAs[Double]("recall") < target && bands != 8)
         Dedup.rebandSrpGenerationFromVecs(spark, name, bands = 8)
@@ -1211,15 +877,14 @@ object EventsStream {
     */
   def runTakedownStream(spark: SparkSession, takedownDir: String,
       indexName: String, labelTable: String, documents: DataFrame,
-      threshold: Double = 0.8, name: String = "takedown",
-      maxFilesPerTrigger: Int = 1): DataFrame = {
+      threshold: Double = 0.8, name: String = "takedown"): DataFrame = {
     runTakedownStreamTargets(spark, takedownDir,
       graft.operators.Takedown.Targets(
         nearDupIndex = Some(indexName),
         labelTable = Some(labelTable),
         labelThreshold = threshold,
         documents = Some(documents.localCheckpoint())),
-      name, maxFilesPerTrigger)
+      name)
     spark.table(labelTable)
   }
 
@@ -1231,33 +896,14 @@ object EventsStream {
     * query. Returns the takedown log table name.
     */
   def runTakedownStreamTargets(spark: SparkSession, takedownDir: String,
-      targets: graft.operators.Takedown.Targets, name: String = "takedown",
-      maxFilesPerTrigger: Int = 1): String = {
-    import graft.operators.Dedup
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(takedownDir)
-    val logTable = s"${name}_log"
-    // stale warehouse dir without a catalog entry (prior JVM) would fail
-    // the first log append — the appendTombstones gotcha
-    if (!spark.catalog.tableExists(logTable))
-      Dedup.dropTableAndLocation(spark, logTable)
+      targets: graft.operators.Takedown.Targets,
+      name: String = "takedown"): String =
     // the per-batch core IS the unified facade (graft.operators.Takedown):
     // batch-identity-scoped replay dedup, per-class retraction fan-out,
     // apply-then-log — streaming and batch takedowns share one code path
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Takedown(spark, batch, targets, logTable, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    logTable
-  }
+    takedownStream(spark, takedownDir, name) { (batch, logTable, batchId) =>
+      graft.operators.Takedown(spark, batch, targets, logTable, batchId)
+    }
 
   /** The td2 facade under TRUE streaming ingest: a stream of takedown
     * requests fans per micro-batch through
@@ -1273,26 +919,27 @@ object EventsStream {
   def runTenantTakedownStream(spark: SparkSession, takedownDir: String,
       tenant: Int, nTenants: Int,
       targets: graft.operators.Takedown.TenantTargets,
-      name: String = "tenant_takedown", maxFilesPerTrigger: Int = 1): String = {
-    import graft.operators.Dedup
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(takedownDir)
+      name: String = "tenant_takedown"): String =
+    takedownStream(spark, takedownDir, name) { (batch, logTable, batchId) =>
+      graft.operators.Takedown.applyTenant(spark, batch, tenant,
+        nTenants, targets, logTable, batchId)
+    }
+
+  /** Drain a stream of takedown requests (doc_id rows) through `apply`
+    * (batch, log table, batch id) per micro-batch; returns the
+    * `${name}_log` table name.
+    */
+  private def takedownStream(spark: SparkSession, takedownDir: String,
+      name: String)(apply: (DataFrame, String, Long) => Unit): String = {
     val logTable = s"${name}_log"
+    // stale warehouse dir without a catalog entry (prior JVM) would fail
+    // the first log append — the appendTombstones gotcha
     if (!spark.catalog.tableExists(logTable))
-      Dedup.dropTableAndLocation(spark, logTable)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Takedown.applyTenant(spark, batch, tenant,
-          nTenants, targets, logTable, batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      graft.operators.Dedup.dropTableAndLocation(spark, logTable)
+    drain(shardStream(spark,
+        StructType(Seq(StructField("doc_id", LongType))), takedownDir)) {
+      (batch, batchId) => apply(batch, logTable, batchId)
+    }
     logTable
   }
 
@@ -1325,11 +972,10 @@ object EventsStream {
     * down), but the listing/scan SETUP repeats per trigger, and the
     * convergence argument above requires `corpusPath` to BE the latest
     * published tree whenever a batch (first-run or replayed) fires. At
-    * one-file-per-trigger that setup cost is the price of the no-log
-    * replay contract; a deployment syncing many generations per run
-    * should raise `maxFilesPerTrigger` (diffs telescope — one batch
-    * carrying N diff files converges identically) before reaching for
-    * anything stateful.
+    * one file per trigger that setup cost is the price of the no-log
+    * replay contract (diffs telescope, so one batch carrying N diff
+    * files would converge identically — batching several per trigger
+    * is the lever before anything stateful).
     *
     * `checkpointLocation`: None (default, the spec's mode) replays the
     * ENTIRE diff history on every restart — convergent by the contract
@@ -1341,31 +987,11 @@ object EventsStream {
   def runEstateSyncStream(spark: SparkSession, diffDir: String,
       corpusPath: String,
       targetsOf: DataFrame => graft.operators.Dedup.EstateSyncTargets,
-      maxFilesPerTrigger: Int = 1,
-      checkpointLocation: Option[String] = None): Unit = {
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("status", StringType),
-        StructField("lang", StringType),
-        StructField("prev_lang", StringType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(diffDir)
-    val q = checkpointLocation.foldLeft(src.writeStream)(
-        (w, dir) => w.option("checkpointLocation", dir))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val diff = batch
-          .withColumn("status", when(col("status") === "added",
-            lit("changed")).otherwise(col("status")))
-          .localCheckpoint()
-        graft.operators.Dedup.syncEstateWithDiff(spark, diff,
-          targetsOf(spark.read.parquet(corpusPath)))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointLocation: Option[String] = None): Unit =
+    diffStream(spark, diffDir, checkpointLocation) { diff =>
+      graft.operators.Dedup.syncEstateWithDiff(spark, diff,
+        targetsOf(spark.read.parquet(corpusPath)))
+    }
 
   /** [[runEstateSyncStream]]'s TENANT-SCOPED member — the takedown
     * stream's applyTenant twin for the generation-swap half: each
@@ -1383,30 +1009,30 @@ object EventsStream {
   def runTenantEstateSyncStream(spark: SparkSession, diffDir: String,
       corpusPath: String, tenant: Int, nTenants: Int,
       targetsOf: DataFrame => graft.operators.Dedup.TenantEstateSyncTargets,
-      maxFilesPerTrigger: Int = 1,
-      checkpointLocation: Option[String] = None): Unit = {
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("status", StringType),
-        StructField("lang", StringType),
-        StructField("prev_lang", StringType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(diffDir)
-    val q = checkpointLocation.foldLeft(src.writeStream)(
-        (w, dir) => w.option("checkpointLocation", dir))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val diff = batch
+      checkpointLocation: Option[String] = None): Unit =
+    diffStream(spark, diffDir, checkpointLocation) { diff =>
+      graft.operators.Dedup.syncTenantEstateWithDiff(spark, diff,
+        tenant, nTenants, targetsOf(spark.read.parquet(corpusPath)))
+    }
+
+  /** Drain a stream of corpus-diff files through `sync`, each
+    * micro-batch's 'added' rows rewritten to 'changed' (the
+    * delete-then-insert replay-safety rule of [[runEstateSyncStream]]).
+    */
+  private def diffStream(spark: SparkSession, diffDir: String,
+      checkpointLocation: Option[String])(sync: DataFrame => Unit): Unit = {
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("status", StringType),
+      StructField("lang", StringType),
+      StructField("prev_lang", StringType)))
+    drain(shardStream(spark, schema, diffDir), checkpointLocation) {
+      (batch, _) =>
+        sync(batch
           .withColumn("status", when(col("status") === "added",
             lit("changed")).otherwise(col("status")))
-          .localCheckpoint()
-        graft.operators.Dedup.syncTenantEstateWithDiff(spark, diff,
-          tenant, nTenants, targetsOf(spark.read.parquet(corpusPath)))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          .localCheckpoint())
+    }
   }
 
   /** STREAMING sequence packing — the ingest loop's member of the t23
@@ -1442,7 +1068,6 @@ object EventsStream {
     */
   def runPackingStream(spark: SparkSession, shardDir: String,
       name: String = "packing", seqLen: Int = 2048,
-      maxFilesPerTrigger: Int = 1,
       epochWeightsPct: Option[Map[String, Int]] = None): DataFrame = {
     import graft.operators.Dedup
     val stateT = s"${name}_state"
@@ -1453,71 +1078,68 @@ object EventsStream {
       import spark.implicits._
       Seq((-1L, 0L)).toDF("batch_id", "total").write.saveAsTable(stateT)
     }
-    val q = documentSource(spark, shardDir).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spark.catalog.refreshTable(stateT)
-        val st = spark.table(stateT).head()
-        if (st.getAs[Long]("batch_id") < batchId) {
-          val total = st.getAs[Long]("total")
-          val toks0 = batch.select(col("doc_id"), col("lang"),
-            size(graft.functions.Exprs.tokens(col("text"))).cast("long").as("n_tokens"))
-          // mixture mode: expand each doc to its replica set map-side;
-          // the unit of placement becomes the replica id
-          val toks = epochWeightsPct.fold(
-              toks0.select(col("doc_id"), col("n_tokens"))) { wp =>
-            // the packUpsampledOf guard — a weight >= 800 would alias one
-            // doc's epoch 8 onto the next doc's epoch 0 in the replica id
-            require(wp.values.forall(_ < 800), "replica id packs 8 epochs/doc")
-            graft.operators.TextAnalysis.epochUpsampleOf(toks0, wp)
-              .filter(col("n_epochs") > 0)
-              .withColumn("epoch",
-                explode(sequence(lit(0L), col("n_epochs") - 1)))
-              .select((col("doc_id") * 8 + col("epoch")).as("doc_id"),
-                col("n_tokens"))
-          }.localCheckpoint()
-          val w = Window.orderBy(col("doc_id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val idCols: Seq[org.apache.spark.sql.Column] =
-            if (epochWeightsPct.isEmpty) Seq(col("doc_id"))
-            else Seq(expr("doc_id div 8").as("doc_id"),
-              pmod(col("doc_id"), lit(8L)).as("epoch"))
-          val placed = toks
-            .withColumn("cum", sum(col("n_tokens")).over(w) + total)
-            .select(idCols ++ Seq(col("n_tokens"),
-              expr(s"(cum - n_tokens) div ${seqLen}L").as("seq_first"),
-              expr(s"(cum - 1) div ${seqLen}L").as("seq_last"),
-              pmod(col("cum") - col("n_tokens"), lit(seqLen.toLong)).as("seq_offset"),
-              lit(batchId).as("batch_id")): _*)
-            .localCheckpoint()
-          val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try {
-            if (!spark.catalog.tableExists(outT))
-              placed.write.partitionBy("batch_id").saveAsTable(outT)
-            else {
-              spark.catalog.refreshTable(outT)
-              placed.write.mode("overwrite").insertInto(outT)
-            }
-          } finally prior match {
-            case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    // uncapped source: a trigger takes every shard that has arrived
+    drain(documentSource(spark, shardDir)) { (batch, batchId) =>
+      spark.catalog.refreshTable(stateT)
+      val st = spark.table(stateT).head()
+      if (st.getAs[Long]("batch_id") < batchId) {
+        val total = st.getAs[Long]("total")
+        val toks0 = batch.select(col("doc_id"), col("lang"),
+          size(graft.functions.Exprs.tokens(col("text"))).cast("long").as("n_tokens"))
+        // mixture mode: expand each doc to its replica set map-side;
+        // the unit of placement becomes the replica id
+        val toks = epochWeightsPct.fold(
+            toks0.select(col("doc_id"), col("n_tokens"))) { wp =>
+          // the packUpsampledOf guard — a weight >= 800 would alias one
+          // doc's epoch 8 onto the next doc's epoch 0 in the replica id
+          require(wp.values.forall(_ < 800), "replica id packs 8 epochs/doc")
+          graft.operators.TextAnalysis.epochUpsampleOf(toks0, wp)
+            .filter(col("n_epochs") > 0)
+            .withColumn("epoch",
+              explode(sequence(lit(0L), col("n_epochs") - 1)))
+            .select((col("doc_id") * 8 + col("epoch")).as("doc_id"),
+              col("n_tokens"))
+        }.localCheckpoint()
+        val w = Window.orderBy(col("doc_id"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val idCols: Seq[org.apache.spark.sql.Column] =
+          if (epochWeightsPct.isEmpty) Seq(col("doc_id"))
+          else Seq(expr("doc_id div 8").as("doc_id"),
+            pmod(col("doc_id"), lit(8L)).as("epoch"))
+        val placed = toks
+          .withColumn("cum", sum(col("n_tokens")).over(w) + total)
+          .select(idCols ++ Seq(col("n_tokens"),
+            expr(s"(cum - n_tokens) div ${seqLen}L").as("seq_first"),
+            expr(s"(cum - 1) div ${seqLen}L").as("seq_last"),
+            pmod(col("cum") - col("n_tokens"), lit(seqLen.toLong)).as("seq_offset"),
+            lit(batchId).as("batch_id")): _*)
+          .localCheckpoint()
+        val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try {
+          if (!spark.catalog.tableExists(outT))
+            placed.write.partitionBy("batch_id").saveAsTable(outT)
+          else {
+            spark.catalog.refreshTable(outT)
+            placed.write.mode("overwrite").insertInto(outT)
           }
-          val newTotal = total +
-            toks.agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
-          val tmp = s"${stateT}__gen"
-          Dedup.recoverGenerationSwap(spark, stateT, tmp)
-          Dedup.dropTableAndLocation(spark, tmp)
-          import spark.implicits._
-          Seq((batchId, newTotal)).toDF("batch_id", "total")
-            .write.saveAsTable(tmp)
-          Dedup.dropTableAndLocation(spark, stateT)
-          spark.sql(s"ALTER TABLE $tmp RENAME TO $stateT")
-          spark.catalog.refreshTable(stateT)
+        } finally prior match {
+          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         }
+        val newTotal = total +
+          toks.agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
+        val tmp = s"${stateT}__gen"
+        Dedup.recoverGenerationSwap(spark, stateT, tmp)
+        Dedup.dropTableAndLocation(spark, tmp)
+        import spark.implicits._
+        Seq((batchId, newTotal)).toDF("batch_id", "total")
+          .write.saveAsTable(tmp)
+        Dedup.dropTableAndLocation(spark, stateT)
+        spark.sql(s"ALTER TABLE $tmp RENAME TO $stateT")
+        spark.catalog.refreshTable(stateT)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.catalog.refreshTable(outT)
     spark.table(outT)
   }
@@ -1660,37 +1282,25 @@ object EventsStream {
     * .annIndexDrift]] is the re-train (generation-rebuild) trigger.
     */
   def runIngestAnnIndex(spark: SparkSession, shardDir: String,
-      indexName: String, maxFilesPerTrigger: Int = 1,
+      indexName: String,
       takedownLog: String = "takedown_log"): DataFrame = {
-    import graft.functions.Exprs.{doubleVector, l2Norm}
     import graft.operators.Similarity
-    val src = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the previous batch appended — read the grown table, not a
-        // cached relation
-        spark.catalog.refreshTable(s"${indexName}_vectors")
-        val prepared = batch
-          .select(col("vec_id"), doubleVector(col("embedding")).as("v"))
-          .withColumn("n", l2Norm(col("v")))
-        val fresh = prepared
-          .join(spark.table(s"${indexName}_vectors").select("vec_id"),
-            Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-        if (!fresh.isEmpty) {
-          Similarity.appendAnnIndex(spark, indexName, fresh)
-          // the re-ingest hook for the vector estate (doc_id == vec_id
-          // in the takedown log's id space)
-          graft.operators.Takedown.clearTakedownLog(spark,
-            fresh.select(col("vec_id").as("doc_id")), takedownLog)
-        }
+    drain(shardStream(spark, embeddingSchema, shardDir)) { (batch, _) =>
+      // the previous batch appended — read the grown table, not a
+      // cached relation
+      spark.catalog.refreshTable(s"${indexName}_vectors")
+      val fresh = preparedVecsOf(batch)
+        .join(spark.table(s"${indexName}_vectors").select("vec_id"),
+          Seq("vec_id"), "left_anti")
+        .localCheckpoint()
+      if (!fresh.isEmpty) {
+        Similarity.appendAnnIndex(spark, indexName, fresh)
+        // the re-ingest hook for the vector estate (doc_id == vec_id
+        // in the takedown log's id space)
+        graft.operators.Takedown.clearTakedownLog(spark,
+          fresh.select(col("vec_id").as("doc_id")), takedownLog)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.table(s"${indexName}_vectors")
   }
 
@@ -1718,58 +1328,45 @@ object EventsStream {
     */
   def runIngestSemDedup(spark: SparkSession, shardDir: String,
       indexName: String, curTable: String, threshold: Double = 0.45,
-      maxFilesPerTrigger: Int = 1,
       takedownLog: String = "takedown_log"): DataFrame = {
-    import graft.functions.Exprs.{doubleVector, l2Norm}
     import graft.operators.{Dedup, Similarity}
-    val src = spark.readStream
-      .schema(embeddingSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drain(shardStream(spark, embeddingSchema, shardDir)) { (batch, _) =>
+      spark.catalog.refreshTable(s"${indexName}_vectors")
+      val fresh = preparedVecsOf(batch)
+        .join(spark.table(s"${indexName}_vectors").select("vec_id"),
+          Seq("vec_id"), "left_anti")
+        .localCheckpoint()
+      if (!fresh.isEmpty) {
+        Similarity.appendAnnIndex(spark, indexName, fresh)
         spark.catalog.refreshTable(s"${indexName}_vectors")
-        val prepared = batch
-          .select(col("vec_id"), doubleVector(col("embedding")).as("v"))
-          .withColumn("n", l2Norm(col("v")))
-        val fresh = prepared
-          .join(spark.table(s"${indexName}_vectors").select("vec_id"),
-            Seq("vec_id"), "left_anti")
+        val index = Similarity.loadAnnIndex(spark, indexName)
+        val touched = index.vectors
+          .join(fresh.select(col("vec_id")), Seq("vec_id"), "left_semi")
+          .select(col("cl")).distinct().localCheckpoint()
+        val recurated = Dedup.semDedupOf(
+          index.vectors.select(col("vec_id"), col("v"), col("n"), col("cl"))
+            .join(broadcast(touched), Seq("cl"), "left_semi"),
+          index.centroids, threshold)
           .localCheckpoint()
-        if (!fresh.isEmpty) {
-          Similarity.appendAnnIndex(spark, indexName, fresh)
-          spark.catalog.refreshTable(s"${indexName}_vectors")
-          val index = Similarity.loadAnnIndex(spark, indexName)
-          val touched = index.vectors
-            .join(fresh.select(col("vec_id")), Seq("vec_id"), "left_semi")
-            .select(col("cl")).distinct().localCheckpoint()
-          val recurated = Dedup.semDedupOf(
-            index.vectors.select(col("vec_id"), col("v"), col("n"), col("cl"))
-              .join(broadcast(touched), Seq("cl"), "left_semi"),
-            index.centroids, threshold)
-            .localCheckpoint()
-          // generation swap of the changed cluster slice (crash-safe:
-          // a committed __gen from a dead prior call is completed first)
-          val tmp = s"${curTable}__gen"
-          Dedup.recoverGenerationSwap(spark, curTable, tmp)
-          Dedup.dropTableAndLocation(spark, tmp)
-          spark.table(curTable)
-            .join(broadcast(touched), Seq("cl"), "left_anti")
-            .unionByName(recurated.select(spark.table(curTable).columns.map(col).toIndexedSeq: _*))
-            .repartition(8, col("cl"))
-            .write.bucketBy(8, "cl").sortBy("cl")
-            .saveAsTable(tmp)
-          Dedup.dropTableAndLocation(spark, curTable)
-          spark.sql(s"ALTER TABLE $tmp RENAME TO $curTable")
-          spark.catalog.refreshTable(curTable)
-          // the re-ingest hook (see runIngestNearDup)
-          graft.operators.Takedown.clearTakedownLog(spark,
-            fresh.select(col("vec_id").as("doc_id")), takedownLog)
-        }
+        // generation swap of the changed cluster slice (crash-safe:
+        // a committed __gen from a dead prior call is completed first)
+        val tmp = s"${curTable}__gen"
+        Dedup.recoverGenerationSwap(spark, curTable, tmp)
+        Dedup.dropTableAndLocation(spark, tmp)
+        spark.table(curTable)
+          .join(broadcast(touched), Seq("cl"), "left_anti")
+          .unionByName(recurated.select(spark.table(curTable).columns.map(col).toIndexedSeq: _*))
+          .repartition(8, col("cl"))
+          .write.bucketBy(8, "cl").sortBy("cl")
+          .saveAsTable(tmp)
+        Dedup.dropTableAndLocation(spark, curTable)
+        spark.sql(s"ALTER TABLE $tmp RENAME TO $curTable")
+        spark.catalog.refreshTable(curTable)
+        // the re-ingest hook (see runIngestNearDup)
+        graft.operators.Takedown.clearTakedownLog(spark,
+          fresh.select(col("vec_id").as("doc_id")), takedownLog)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     spark.table(curTable)
   }
 
@@ -1817,27 +1414,20 @@ object EventsStream {
     * the one-shot batch sketch.
     */
   def runIngestSketches(spark: SparkSession, shardDir: String,
-      table: String, maxFilesPerTrigger: Int = 1): DataFrame = {
+      table: String): DataFrame = {
     val dayUs = 86400L * 1000 * 1000
     // schema from the ARRIVED footer, never hardcoded — the events `ts`
     // encoding lesson (Tables.normalizeTs) applies to shard streams too
     val arrivedSchema = spark.read.parquet(shardDir).schema
-    val src = spark.readStream
-      .schema(arrivedSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(shardDir)
-    val q = graft.Tables.normalizeTs(src).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .select(col("event_type"), unix_micros(col("ts")).as("us"), col("user_id"))
-          .select(col("event_type"), expr(s"us div ${dayUs}L").as("day"), col("user_id"))
-          .groupBy(col("event_type"), col("day"))
-          .agg(graft.plans.HllAgg.hllSketch(col("user_id")).as("sk"))
-          .write.mode("append").saveAsTable(table)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(graft.Tables.normalizeTs(
+        shardStream(spark, arrivedSchema, shardDir))) { (batch, _) =>
+      batch
+        .select(col("event_type"), unix_micros(col("ts")).as("us"), col("user_id"))
+        .select(col("event_type"), expr(s"us div ${dayUs}L").as("day"), col("user_id"))
+        .groupBy(col("event_type"), col("day"))
+        .agg(graft.plans.HllAgg.hllSketch(col("user_id")).as("sk"))
+        .write.mode("append").saveAsTable(table)
+    }
     // the serving rollup: merge whatever cells exist per group
     spark.table(table)
       .groupBy(col("event_type"), col("day"))

@@ -75,7 +75,10 @@ class EmitSinksSpec extends SparkSuite {
     val dir = sf("sf0.001")
     val out = java.nio.file.Files.createTempDirectory("corpus_rm").toString
     try {
-      val docs = Tables.documents(spark, dir)
+      // doc_id NOT leading: the retract's using-column join moves it to
+      // the front, which the footer-order check below must see through
+      val docs = Tables.documents(spark, dir).select("text", "lang",
+        "source", "n_chars", "doc_id")
       graft.emit.CorpusWriter.write(docs, out, nShards = 4)
       val before = spark.read.parquet(out)
         .select("doc_id", "split", "lang").collect()
@@ -106,6 +109,27 @@ class EmitSinksSpec extends SparkSuite {
       // untouched partitions: same files, same mtimes — never rewritten
       untouchedParts.foreach(p =>
         assert(fileState(p) == snapBefore(p), s"partition $p was rewritten"))
+      // rewritten files keep the untouched files' physical column order
+      // (parquet footer schema, not the reader's merged schema)
+      def footerColumns(p: (String, String)): Set[Seq[String]] = {
+        import scala.jdk.CollectionConverters._
+        fileState(p).keySet.map { f =>
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(s"$out/split=${p._1}/lang=${p._2}/$f"),
+              spark.sparkContext.hadoopConfiguration))
+          try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+            .map(_.getName).toSeq
+          finally reader.close()
+        }
+      }
+      val untouchedOrder = untouchedParts.flatMap(footerColumns).toSet
+      assert(untouchedOrder.size == 1, s"untouched footers disagree: $untouchedOrder")
+      val rewritten = parts.take(2).filter(p =>
+        new java.io.File(s"$out/split=${p._1}/lang=${p._2}").exists)
+      assert(rewritten.nonEmpty, "fixture needs a rewritten, non-empty partition")
+      rewritten.foreach(p => assert(footerColumns(p) == untouchedOrder,
+        s"rewritten partition $p changed column order"))
       // retract EVERY doc of one partition: its directory must vanish
       val wipe = byPart(parts(1)).map(_._1).toSeq
       graft.emit.CorpusWriter.retract(docs, out, wipe.toDF("doc_id"))

@@ -31,6 +31,29 @@ class PropertiesSpec extends SparkSuite {
     got.foreach { case (n, sh) => assert(sh == math.max(1, n - 2), s"n=$n sh=$sh") }
   }
 
+  test("property: tokens, word shingles and chunk arrays never hold a null element") {
+    // the explode_outer + isNotNull rewrites (TextAnalysis.vocabulary and
+    // the d10/d12/d14/d15 generators) equal a plain explode row for row
+    // ONLY while no generated array holds a null element
+    val word = Gen.oneOf(Gen.alphaLowerStr.map(_.take(6)), Gen.numStr.map(_.take(3)),
+      Gen.oneOf("é", "日本語", "--", "'", ".", "null", ""))
+    val sep = Gen.oneOf(" ", "  ", "\t", "\n", " \r\n ", "")
+    val texts = Gen.listOfN(200, Gen.option(Gen.choose(0, 20).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(sep, word)).map(_.map { case (s, w) => s + w }.mkString))))
+      .sample.get
+    val df = texts.toDF("t").select($"t", Exprs.tokens($"t").as("toks"))
+    val arrays = Seq("tokens" -> $"toks") ++
+      Seq(1, 3, 8).map(k => s"word_shingles k=$k" ->
+        graft.plans.ShinglesExpr.wordShingles($"t", k)) ++
+      Seq(1, 4).map(k => s"chunks k=$k" -> graft.operators.Dedup.tokenChunks("toks", k))
+    arrays.foreach { case (name, a) =>
+      assert(df.filter(exists(a, _.isNull)).count() == 0, s"$name holds a null element")
+      assert(df.select(explode(a).as("x")).count() ==
+        df.select(explode_outer(a).as("x")).filter($"x".isNotNull).count(),
+        s"$name: explode_outer + isNotNull != explode")
+    }
+  }
+
   test("property: quality is 0 or within [1,5], gate respected") {
     val buckets = Gen.listOfN(150, Gen.listOfN(6, Gen.choose(0L, 50L))).sample.get
     val got = buckets.map { case List(s0, s1, s2, s3, s4, s5) =>

@@ -1159,7 +1159,9 @@ class StreamingSpec extends SparkSuite {
       Dedup.initMinhashRebandState(spark, "rbl_stream", base)
       // sanity: the serving generation starts at the 3×3 default
       assert(spark.table("rbl_stream_meta").head().getAs[Int]("bands") == 3)
-      EventsStream.runIngestRebandLoop(spark, shardDir, "rbl_stream")
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.minhashReband,
+        EventsStream.Fleet("rbl_stream"))
       // the batch reference: the d43 lifecycle one-shot over base ∪ shard
       Dedup.minhashRebandLifecycle(spark, "rbl_ref",
         base.unionByName(probes), threshold = 0.8, target = 0.95)
@@ -1179,7 +1181,9 @@ class StreamingSpec extends SparkSuite {
       assert(afterFirst.nonEmpty)
       // replay: the same shard content re-delivered (fresh stream over
       // the same dir) anti-joins to empty — a state no-op
-      EventsStream.runIngestRebandLoop(spark, shardDir, "rbl_stream")
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.minhashReband,
+        EventsStream.Fleet("rbl_stream"))
       assert(banded("rbl_stream_banded") == afterFirst)
       assert(metaRow("rbl_stream_meta") == ((9, 1)))
     } finally {
@@ -1211,7 +1215,9 @@ class StreamingSpec extends SparkSuite {
     try {
       Dedup.initWinnowRetuneState(spark, "wrl_stream", base)
       assert(spark.table("wrl_stream_meta").head().getAs[Int]("winnow") == 4)
-      EventsStream.runIngestWinnowRetuneLoop(spark, shardDir, "wrl_stream")
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.winnowRetune,
+        EventsStream.Fleet("wrl_stream"))
       // the batch reference: the d55b lifecycle one-shot over base ∪ shard
       Dedup.winnowRetuneLifecycle(spark, "wrl_ref",
         base.unionByName(probes), target = 0.95)
@@ -1224,7 +1230,9 @@ class StreamingSpec extends SparkSuite {
       assert(afterFirst == fps("wrl_ref_banded"))
       assert(afterFirst.nonEmpty)
       // replay: re-delivered shard anti-joins to empty — a state no-op
-      EventsStream.runIngestWinnowRetuneLoop(spark, shardDir, "wrl_stream")
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.winnowRetune,
+        EventsStream.Fleet("wrl_stream"))
       assert(fps("wrl_stream_banded") == afterFirst)
       assert(metaWinnow("wrl_stream_meta") == 2)
     } finally {
@@ -1261,7 +1269,9 @@ class StreamingSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getString(1))).toSet
       def metaWinnow(t: String) = spark.table(t).head().getAs[Int]("winnow")
       val t0Init = fps("twrl_t0_banded")
-      EventsStream.runTenantIngestWinnowRetuneLoop(spark, shardDir, "twrl")
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.winnowRetune,
+        EventsStream.Tenants("twrl"))
       // tenant 1 tripped on its planted short-doc misses and retuned to
       // winnow 2, equal to its own per-tenant batch lifecycle (the d18
       // shared-oracle pattern — d61's oracle already gates the lifecycle)
@@ -1275,7 +1285,9 @@ class StreamingSpec extends SparkSuite {
       assert(fps("twrl_t0_banded") == t0Init)
       // replay: a re-delivered shard is a state no-op for BOTH tenants
       val t1After = fps("twrl_t1_banded")
-      EventsStream.runTenantIngestWinnowRetuneLoop(spark, shardDir, "twrl")
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.winnowRetune,
+        EventsStream.Tenants("twrl"))
       assert(fps("twrl_t1_banded") == t1After)
       assert(fps("twrl_t0_banded") == t0Init)
       assert(metaWinnow("twrl_t1_meta") == 2)
@@ -1307,8 +1319,9 @@ class StreamingSpec extends SparkSuite {
       Dedup.initSimhashRebandState(spark, "shrb_stream",
         allSigs.filter(col("doc_id") < 400))
       assert(spark.table("shrb_stream_meta").head().getAs[Int]("bands") == 4)
-      EventsStream.runIngestSimhashRebandLoop(spark, shardDir,
-        "shrb_stream", auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.simhashReband,
+        EventsStream.Fleet("shrb_stream"), auditFilter = Some(lit(true)))
       // the batch reference: the d32 lifecycle one-shot over all sigs
       Dedup.simhashRebandLifecycle(spark, "shrb_ref", allSigs,
         radius = 5, target = 0.95)
@@ -1323,8 +1336,9 @@ class StreamingSpec extends SparkSuite {
       assert(afterFirst == banded("shrb_ref_banded"))
       assert(afterFirst.nonEmpty)
       // replay: re-delivered shard anti-joins to empty — a state no-op
-      EventsStream.runIngestSimhashRebandLoop(spark, shardDir,
-        "shrb_stream", auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.simhashReband,
+        EventsStream.Fleet("shrb_stream"), auditFilter = Some(lit(true)))
       assert(banded("shrb_stream_banded") == afterFirst)
       assert(metaBands("shrb_stream_meta") == 8)
     } finally {
@@ -1363,8 +1377,9 @@ class StreamingSpec extends SparkSuite {
         .toSet
       def metaBands(t: String) = spark.table(t).head().getAs[Int]("bands")
       val t0Init = banded("tshrb_t0_banded")
-      EventsStream.runTenantIngestSimhashRebandLoop(spark, shardDir,
-        "tshrb", auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.simhashReband,
+        EventsStream.Tenants("tshrb"), auditFilter = Some(lit(true)))
       // tenant 1 tripped naturally and rebanded to the radius-exact
       // 8x8 tier, equal to its own per-tenant batch lifecycle
       Dedup.simhashRebandLifecycle(spark, "tshrb_ref1", tenantSigs(1),
@@ -1377,8 +1392,9 @@ class StreamingSpec extends SparkSuite {
       assert(banded("tshrb_t0_banded") == t0Init)
       // replay: a re-delivered shard is a state no-op for BOTH tenants
       val t1After = banded("tshrb_t1_banded")
-      EventsStream.runTenantIngestSimhashRebandLoop(spark, shardDir,
-        "tshrb", auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.simhashReband,
+        EventsStream.Tenants("tshrb"), auditFilter = Some(lit(true)))
       assert(banded("tshrb_t1_banded") == t1After)
       assert(banded("tshrb_t0_banded") == t0Init)
       assert(metaBands("tshrb_t1_meta") == 8)
@@ -1418,8 +1434,9 @@ class StreamingSpec extends SparkSuite {
       // planes 3 (trips) and 0.76 at planes 1 (clears) — the per-
       // tenant slices sit lower (0.16/0.20), which is what the tenant
       // twin exercises at the default 0.3
-      EventsStream.runIngestAnnRebucketLoop(spark, shardDir, "arb_stream",
-        target = 0.5, auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.annRebucket(target = 0.5),
+        EventsStream.Fleet("arb_stream"), auditFilter = Some(lit(true)))
       Similarity.annRebucketLifecycle(spark, "arb_ref", all,
         nProbes = 5, k = 5, planes0 = 3, planes1 = 1, target = 0.5)
       def buckets(t: String) = spark.table(t)
@@ -1432,8 +1449,9 @@ class StreamingSpec extends SparkSuite {
       assert(afterFirst == buckets("arb_ref_banded"))
       assert(afterFirst.nonEmpty)
       // replay: re-delivered shard anti-joins to empty — a state no-op
-      EventsStream.runIngestAnnRebucketLoop(spark, shardDir, "arb_stream",
-        target = 0.5, auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.annRebucket(target = 0.5),
+        EventsStream.Fleet("arb_stream"), auditFilter = Some(lit(true)))
       assert(buckets("arb_stream_banded") == afterFirst)
       assert(metaPlanes("arb_stream_meta") == 1)
     } finally {
@@ -1469,8 +1487,9 @@ class StreamingSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       def metaPlanes(t: String) = spark.table(t).head().getAs[Int]("planes")
       val t0Init = buckets("tarb_t0_banded")
-      EventsStream.runTenantIngestAnnRebucketLoop(spark, shardDir, "tarb",
-        auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.annRebucket(),
+        EventsStream.Tenants("tarb"), auditFilter = Some(lit(true)))
       // tenant 1 tripped naturally and re-bucketed to planes 1, equal
       // to its own per-tenant batch lifecycle (the d18 shared-oracle
       // pattern — s23's oracle gates the lifecycle)
@@ -1484,8 +1503,9 @@ class StreamingSpec extends SparkSuite {
       assert(buckets("tarb_t0_banded") == t0Init)
       // replay: a re-delivered shard is a state no-op for BOTH tenants
       val t1After = buckets("tarb_t1_banded")
-      EventsStream.runTenantIngestAnnRebucketLoop(spark, shardDir, "tarb",
-        auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.annRebucket(),
+        EventsStream.Tenants("tarb"), auditFilter = Some(lit(true)))
       assert(buckets("tarb_t1_banded") == t1After)
       assert(buckets("tarb_t0_banded") == t0Init)
       assert(metaPlanes("tarb_t1_meta") == 1)
@@ -1519,8 +1539,9 @@ class StreamingSpec extends SparkSuite {
       Dedup.initSrpRebandState(spark, "srb_stream",
         all.filter(col("vec_id") < 400))
       assert(spark.table("srb_stream_meta").head().getAs[Int]("bands") == 4)
-      EventsStream.runIngestSrpRebandLoop(spark, shardDir, "srb_stream",
-        auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.srpReband,
+        EventsStream.Fleet("srb_stream"), auditFilter = Some(lit(true)))
       // the batch reference: the d41 lifecycle one-shot over all vecs
       Dedup.srpRebandLifecycle(spark, "srb_ref", all, df => df,
         threshold = 0.3, target = 0.9)
@@ -1536,8 +1557,9 @@ class StreamingSpec extends SparkSuite {
       assert(afterFirst == banded("srb_ref_banded"))
       assert(afterFirst.nonEmpty)
       // replay: re-delivered shard anti-joins to empty — a state no-op
-      EventsStream.runIngestSrpRebandLoop(spark, shardDir, "srb_stream",
-        auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.srpReband,
+        EventsStream.Fleet("srb_stream"), auditFilter = Some(lit(true)))
       assert(banded("srb_stream_banded") == afterFirst)
       assert(metaBands("srb_stream_meta") == 8)
     } finally {
@@ -1590,8 +1612,9 @@ class StreamingSpec extends SparkSuite {
       val untouchedInit =
         (0 until 8).filterNot(touched.contains)
           .map(tn => tn -> banded(s"tsrb8_t${tn}_banded")).toMap
-      EventsStream.runTenantIngestSrpRebandLoop(spark, shardDir, "tsrb8",
-        nTenants = 8, auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.srpReband,
+        EventsStream.Tenants("tsrb8", n = 8), auditFilter = Some(lit(true)))
       // every touched tenant's final state == its own batch lifecycle
       // (whether or not its slice tripped — equality, not a fixed
       // banding, is the contract)
@@ -1613,8 +1636,9 @@ class StreamingSpec extends SparkSuite {
       }
       // replay: both shards re-deliver, state a no-op for ALL tenants
       val after = touched.map(tn => tn -> banded(s"tsrb8_t${tn}_banded"))
-      EventsStream.runTenantIngestSrpRebandLoop(spark, shardDir, "tsrb8",
-        nTenants = 8, auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.srpReband,
+        EventsStream.Tenants("tsrb8", n = 8), auditFilter = Some(lit(true)))
       after.foreach { case (tn, rows) =>
         assert(banded(s"tsrb8_t${tn}_banded") == rows) }
       untouchedInit.foreach { case (tn, rows) =>
@@ -1647,8 +1671,9 @@ class StreamingSpec extends SparkSuite {
     try {
       Dedup.initSrpRebandState(spark, "sdrb_stream",
         all.filter(col("vec_id") < 400))
-      EventsStream.runIngestSemDedupRebandLoop(spark, shardDir,
-        "sdrb_stream", model, auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.semDedupReband(model),
+        EventsStream.Fleet("sdrb_stream"), auditFilter = Some(lit(true)))
       // the batch reference: the d42 lifecycle one-shot over all vecs
       // under the SAME frozen labels — ingest must not move centroids
       Dedup.srpRebandLifecycle(spark, "sdrb_ref", all, df => df,
@@ -1666,8 +1691,9 @@ class StreamingSpec extends SparkSuite {
       // the labels in the persisted state are the MODEL'S, not lit(0):
       // the within-cluster blocking is real, not vacuous
       assert(afterFirst.map(_._1).toSet.size > 1)
-      EventsStream.runIngestSemDedupRebandLoop(spark, shardDir,
-        "sdrb_stream", model, auditFilter = lit(true))
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.semDedupReband(model),
+        EventsStream.Fleet("sdrb_stream"), auditFilter = Some(lit(true)))
       assert(banded("sdrb_stream_banded") == afterFirst)
     } finally {
       Seq("sdrb_stream", "sdrb_ref").foreach(dropAll)
@@ -1745,7 +1771,9 @@ class StreamingSpec extends SparkSuite {
         (m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"))
       }
       val t0Init = banded("trbl_t0_banded")
-      EventsStream.runTenantIngestRebandLoop(spark, shardDir, "trbl")
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.minhashReband,
+        EventsStream.Tenants("trbl"))
       // tenant 1 tripped on its planted misses and rebanded to 9x1,
       // equal to its own per-tenant batch lifecycle
       Dedup.minhashRebandLifecycle(spark, "trbl_ref1",
@@ -1757,7 +1785,9 @@ class StreamingSpec extends SparkSuite {
       assert(banded("trbl_t0_banded") == t0Init)
       // replay: a re-delivered shard is a state no-op for BOTH tenants
       val t1After = banded("trbl_t1_banded")
-      EventsStream.runTenantIngestRebandLoop(spark, shardDir, "trbl")
+      EventsStream.runMonitorLoop(spark, shardDir,
+        EventsStream.MonitorFamily.minhashReband,
+        EventsStream.Tenants("trbl"))
       assert(banded("trbl_t1_banded") == t1After)
       assert(banded("trbl_t0_banded") == t0Init)
       assert(metaRow("trbl_t1_meta") == ((9, 1)))
