@@ -5,13 +5,15 @@ import graft.ingest.PlistReader
 import graft.operators.ItdbOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** End-to-end lifecycle facade — the reference's three entry points
   * (SURVEY §3) composed from the operator library:
   *
-  *   1. load (itdbloader.py): plist → tracks/playlists/playlist_tracks +
-  *      the materialized playlist_stats aggregate, computed in ONE pass and
-  *      persisted (vs the reference's N+1 loop + REPLACE INTO);
+  *   1. load (itdbloader.py): plist → tracks/playlists/playlist_tracks,
+  *      read once and persisted, + the materialized playlist_stats
+  *      aggregate, computed in ONE pass and persisted (vs the reference's
+  *      N+1 loop + REPLACE INTO);
   *   2. stats (itdb2html.py WriteStats): the library/genre/histogram
   *      rollups each page renders;
   *   3. export (playlistlinks.py): playlist → ordered, numbered link rows →
@@ -25,9 +27,8 @@ object ItdbPipeline {
       playlistTracks: DataFrame,
       playlistStats: DataFrame)
 
-  /** §3.1: full-refresh load. playlist_stats is materialized (I5) exactly
-    * like the reference pre-fills it ("somewhat expensive so we pre fill it
-    * out", itdbloader.py:270-272) — persisted so every page query reuses it.
+  /** §3.1: full-refresh load from an XML string, parsed on the driver.
+    * The Library is a snapshot valid until the next load (see `assemble`).
     */
   def load(spark: SparkSession, xml: String, userId: Int = 1): Library = {
     val (tracks, playlists, bridge) = PlistReader.load(spark, xml, userId)
@@ -37,7 +38,8 @@ object ItdbPipeline {
   /** §3.1 via the distributed source: load library FILES through the
     * DataSourceV2 plist source — one task per file, no driver-side parse.
     * Same downstream assembly as `load` (proven row-identical for a single
-    * file in PipelineSpec).
+    * file in PipelineSpec). The Library is a snapshot valid until the next
+    * load (see `assemble`).
     */
   def loadFiles(spark: SparkSession, paths: Seq[String], userId: Int = 1): Library = {
     def rd(element: String) = spark.read.format("plist")
@@ -46,12 +48,46 @@ object ItdbPipeline {
     assemble(rd("tracks"), rd("playlists"), rd("playlist_tracks"))
   }
 
+  /** The Library loaded last; the next load releases it. The cache is
+    * shared by every session of the application, so the slot is too.
+    */
+  private var current: Option[Library] = None
+
+  /** A load is the only time the source is read: the three element frames
+    * are persisted and filled by one job here (one task per element and
+    * file), and the SQL views are registered over them, so stats, pages,
+    * exports and ad-hoc SQL read memory — and one snapshot of the file.
+    * playlist_stats is materialized (I5) exactly like the
+    * reference pre-fills it ("somewhat expensive so we pre fill it out",
+    * itdbloader.py:270-272), from the persisted frames, on first use.
+    *
+    * The snapshot lasts until the next load, by any session of the
+    * application: that load first unpersists the previous Library's frames,
+    * so a refresh leaks no cache, and the new frames — whose plans equal
+    * the old ones' when the same files are reloaded — are read afresh
+    * instead of matching the old cache entries. A Library held past a
+    * reload is no snapshot any more: its frames read the source again on
+    * use, and after a reload of the same files they match the new cache
+    * entries and return the new rows. Loads run one at a time.
+    */
   private def assemble(tracks: DataFrame, playlists: DataFrame,
-      bridge: DataFrame): Library = {
-    val stats = ItdbOps.playlistStats(tracks, bridge).persist()
-    ItdbOps.registerItdbViews(tracks, playlists, bridge)
+      bridge: DataFrame): Library = synchronized {
+    current.foreach { old =>
+      Seq(old.tracks, old.playlists, old.playlistTracks, old.playlistStats)
+        .foreach(_.unpersist())
+    }
+    current = None
+    val frames = Seq(tracks, playlists, bridge).map(_.persist())
+    // a failed read must not leave partly filled entries a reload would match
+    try frames.map(_.select(lit(1))).reduce(_ union _).count()
+    catch { case NonFatal(e) => frames.foreach(_.unpersist()); throw e }
+    val Seq(t, p, b) = frames
+    val stats = ItdbOps.playlistStats(t, b).persist()
+    ItdbOps.registerItdbViews(t, p, b)
     stats.createOrReplaceTempView("playlist_stats")
-    Library(tracks, playlists, bridge, stats)
+    val lib = Library(t, p, b, stats)
+    current = Some(lib)
+    lib
   }
 
   /** §3.2: the stats-index numbers (A1/A2/A3 in one pass each). */
@@ -103,7 +139,8 @@ object ItdbPipeline {
       playlistTracksFor(lib, userId, playlistName), scriptPath)
 
   /** Shared §3.3 selection: playlist members joined to tracks, numbered,
-    * ordered by link path (the export order every sink preserves).
+    * ordered by link path (the export order every sink preserves) — one
+    * pass that carries the columns the sinks print.
     */
   private def playlistTracksFor(lib: Library, userId: Int,
       playlistName: String, seed: String = "itdb"): DataFrame = {
@@ -113,9 +150,8 @@ object ItdbPipeline {
     val members = lib.playlistTracks.join(ids, Seq("Playlist_ID"))
       .select(col("User_ID"), col("Track_ID"))
     val tracks = lib.tracks.join(members, Seq("User_ID", "Track_ID"))
-    ItdbOps.numberedLinkPaths(tracks, seed)
-      .join(tracks.select(col("Track_ID"), col("Name"), col("Location"),
-        col("Rating"), col("Persistent_ID")), Seq("Track_ID"))
-      .orderBy(col("link_path"))
+      .select("Track_ID", "Genre", "Artist", "Name", "Location", "Rating",
+        "Persistent_ID")
+    ItdbOps.numberedLinkPaths(tracks, seed).orderBy(col("link_path"))
   }
 }

@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -29,7 +32,7 @@ object Verify {
     // flagship smoke (the driver's entry gate): rows must be > 0
     val entryRows =
       try SparkEntry.entry(spark).count()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] entry failed: ${e.getMessage}"); -1L
       }
     if (entryRows <= 0) System.err.println(s"[verify] entry rows=$entryRows (must be > 0)")
@@ -38,7 +41,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -1,5 +1,7 @@
 package graft.ingest
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -85,9 +87,9 @@ object JdbcSink {
     def escaped(t: String): String =
       t.flatMap(c => if (c == '_' || c == '%') s"$esc$c" else c.toString)
     val cat = try Option(conn.getCatalog).filter(_.nonEmpty)
-      catch { case _: Throwable => None }
+      catch { case NonFatal(_) => None }
     val sch = try Option(conn.getSchema).filter(_.nonEmpty)
-      catch { case _: Throwable => None }
+      catch { case NonFatal(_) => None }
     Seq(table, table.toUpperCase, table.toLowerCase).distinct.flatMap { t =>
       // schemaPattern is a LIKE pattern too (catalog is an exact match per
       // JDBC) — escape it, or '_' in the current schema name would match
@@ -151,7 +153,7 @@ object JdbcSink {
     try {
       spark.read.jdbc(url, staging, p).write.mode(SaveMode.Overwrite).jdbc(url, table, p)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         throw new RuntimeException(
           s"target rewrite of '$table' failed; merged rows preserved in staging table '$staging'", e)
     }

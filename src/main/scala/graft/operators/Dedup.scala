@@ -1745,10 +1745,15 @@ object Dedup {
     * left join against the (distinct, tiny) removed-id set, instead of
     * the historical two scans (distinct-count + semi-join count) crossed
     * by a nested-loop join. Equal by construction: the removed set is
-    * distinct so the left join preserves row multiplicity, ids are
-    * non-null in every census'd class, count(__rm) counts exactly the
-    * semi-join's matches. Halves the per-pass scan count of the census
-    * gates (td1 22, d50 28, d48 18 scans before).
+    * distinct so the left join preserves row multiplicity, and count(__rm)
+    * counts exactly the semi-join's matches. Halves the per-pass scan
+    * count of the census gates (td1 22, d50 28, d48 18 scans before).
+    *
+    * Precondition: `key` is non-null in every census'd class. n_live is a
+    * countDistinct, which drops a NULL key, where the historical
+    * `distinct().count()` counted it as one more id; on a frame with NULL
+    * keys n_live is the number of distinct NON-null keys (PropertiesSpec
+    * pins this).
     */
   private[graft] def idCensusRow(state: String, df: DataFrame, key: String,
       removed: DataFrame): DataFrame =

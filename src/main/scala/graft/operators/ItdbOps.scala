@@ -138,7 +138,8 @@ object ItdbOps {
 
   /** O5/O6/X19 (playlistlinks.py:186-221): export numbering — deterministic
     * shuffle (portable hash of the track key), 3-digit sequence prefix, and
-    * the %(Genre)s/%(Artist)s-%(Name)s link-path projection.
+    * the %(Genre)s/%(Artist)s-%(Name)s link-path projection. Output is
+    * (Track_ID, link_path) followed by the other columns of `tracks`.
     */
   def numberedLinkPaths(tracks: DataFrame, seed: String, startAt: Int = 1): DataFrame = {
     val shuffleKey = md5(concat(lit(seed), col("Track_ID").cast("string")))
@@ -148,12 +149,13 @@ object ItdbOps {
     val w = Window.orderBy(shuffleKey)
     tracks
       .withColumn("seq", row_number().over(w) + lit(startAt - 1))
-      .select(col("Track_ID"),
+      .select(col("Track_ID") +:
         format_string("%03d-%s/%s-%s",
           col("seq"),
           Exprs.sanitizeFilename(coalesce(col("Genre"), lit(""))),
           Exprs.sanitizeFilename(coalesce(col("Artist"), lit(""))),
-          Exprs.sanitizeFilename(col("Name"))).as("link_path"))
+          Exprs.sanitizeFilename(col("Name"))).as("link_path") +:
+        tracks.columns.toSeq.filter(_ != "Track_ID").map(tracks(_)): _*)
   }
 
   /** Register the itdb tables as temp views for the ad-hoc SQL surface

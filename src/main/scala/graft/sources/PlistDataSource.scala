@@ -25,8 +25,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - `userId`:  User_ID stamped on every row (default 1)
   *
   * Column pruning is real: the reader materializes ONLY the required
-  * fields (the pruned schema flows into PlistReader.elementRows), so
-  * `select(Name)` never coerces the other ~25 track attributes.
+  * fields (the pruned schema flows into PlistReader.rows, which streams
+  * the file and skips every other value unparsed), so `select(Name)`
+  * never coerces the other ~25 track attributes.
   */
 class PlistDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "plist"
@@ -264,10 +265,13 @@ class PlistPartitionReader(path: String, required: StructType,
     element: String, userId: Int, conf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
 
-  private lazy val rows: Iterator[InternalRow] = {
+  private val in = {
     val p = new Path(path)
-    val in = p.getFileSystem(conf.value).open(p)
-    val root = try PlistReader.parse(in: java.io.InputStream) finally in.close()
+    p.getFileSystem(conf.value).open(p)
+  }
+  // lazy: the parse starts in next(), so a malformed file fails on a
+  // reader Spark already holds and will close()
+  private lazy val rows: Iterator[InternalRow] = {
     val toInternal = Bridge.rowToInternal(required)
     // positions resolved ONCE per partition — the per-row path does only
     // array-indexed gets, no string-keyed lookups or fresh wrappers
@@ -275,7 +279,7 @@ class PlistPartitionReader(path: String, required: StructType,
     val projIdx: Array[Int] = required.fieldNames.map(idx)
     val boundFilters: Array[(Filter, Map[String, Int])] =
       pushed.map(f => (f, f.references.map(a => a -> idx(a)).toMap))
-    PlistReader.elementRows(root, element, readAll, userId).iterator
+    PlistReader.rows(in, element, readAll, userId)
       .filter(r => boundFilters.forall { case (f, at) =>
         PlistFilterEval.eval(f, a => r.get(at(a))).contains(true)
       })
@@ -292,5 +296,5 @@ class PlistPartitionReader(path: String, required: StructType,
   override def next(): Boolean =
     if (rows.hasNext) { current = rows.next(); true } else false
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = in.close()
 }

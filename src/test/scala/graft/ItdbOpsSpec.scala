@@ -163,6 +163,10 @@ class ItdbOpsSpec extends SparkSuite {
     assert(got1 == got2) // reproducible
     assert(got1.exists(_.matches("""\d{3}-Rock/artist\d+-\w+""")))
     assert(got1.map(_.take(4)).sorted == Seq("001-", "002-", "003-", "004-", "005-", "006-"))
+    // (Track_ID, link_path) first, then the input's other columns, which
+    // the export's sinks print
+    assert(ItdbOps.numberedLinkPaths(tracks, "seed1").columns.toSeq ==
+      Seq("Track_ID", "link_path") ++ tracks.columns.filter(_ != "Track_ID"))
   }
 
   test("as-of join: <= semantics, duplicate-ts tiebreak, NULL value/key handling") {

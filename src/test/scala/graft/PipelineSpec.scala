@@ -1,8 +1,17 @@
 package graft
 
 import graft.sqlsurface.MySqlDialect
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import java.nio.file.Files
+import scala.collection.mutable
 
 class PipelineSpec extends SparkSuite {
 
@@ -83,6 +92,85 @@ class PipelineSpec extends SparkSuite {
       a.tracks.orderBy("Track_ID").collect().toSeq)
     assert(b.playlistStats.orderBy("Playlist_ID", "Rating").collect().toSeq ==
       a.playlistStats.orderBy("Playlist_ID", "Rating").collect().toSeq)
+  }
+
+  /** Plist scans a plan runs itself — those inside a cached relation are
+    * served from memory once the cache is filled. */
+  private def plistScansOutsideCache(p: SparkPlan): Int = p match {
+    case _: InMemoryTableScanExec => 0
+    case a: AdaptiveSparkPlanExec => plistScansOutsideCache(a.executedPlan)
+    case q: QueryStageExec => plistScansOutsideCache(q.plan)
+    case s: BatchScanExec if s.scan.isInstanceOf[graft.sources.PlistScan] => 1
+    case other => (other.children ++ other.subqueries).map(plistScansOutsideCache).sum
+  }
+
+  test("loadFiles is the only XML read: pages, exports and SQL read the persisted frames") {
+    val f = Files.createTempFile("graft_lib", ".xml")
+    Files.writeString(f, xml)
+    val lib = ItdbPipeline.loadFiles(spark, Seq(f.toString))
+    // the load filled the element caches itself
+    val cm = spark.sharedState.cacheManager
+    Seq(lib.tracks, lib.playlists, lib.playlistTracks).foreach { df =>
+      assert(cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).exists(
+        _.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded))
+    }
+    lib.playlistStats.collect()
+
+    val plans = mutable.Buffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ItdbPipeline.playlistPage(lib, 1, "Mix").collect()
+      val out = Files.createTempDirectory("graft_exports")
+      ItdbPipeline.exportPlaylist(lib, 1, "Mix", out.resolve("mix.m3u").toString)
+      ItdbPipeline.exportPlaylistPage(lib, 1, "Mix", out.resolve("mix.html").toString)
+      ItdbPipeline.exportPlaylistScript(lib, 1, "Mix", out.resolve("mix.scpt").toString)
+      MySqlDialect.sql(spark, "SELECT p.Name, t.Name FROM playlists p " +
+        "JOIN playlist_tracks pt ON p.Playlist_ID = pt.Playlist_ID " +
+        "JOIN tracks t ON t.Track_ID = pt.Track_ID WHERE t.Genre REGEXP 'rock'").collect()
+      // listener events arrive in order: once this marker is seen, every
+      // plan above has been
+      spark.range(1).toDF("end_marker").collect()
+      eventually(timeout(Span(30, Seconds))) {
+        assert(plans.synchronized(plans.exists(_.output.map(_.name) == Seq("end_marker"))))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size >= 6)
+    plans.foreach(p => assert(plistScansOutsideCache(p) == 0, p.toString))
+    // and the check sees a scan that does read the file
+    assert(plistScansOutsideCache(spark.read.format("plist").load(f.toString)
+      .queryExecution.executedPlan) == 1)
+  }
+
+  test("a reload returns the rewritten file's rows and releases the first load's caches") {
+    val f = Files.createTempFile("graft_lib", ".xml")
+    Files.writeString(f, xml)
+    def names(df: DataFrame) = df.select("Name").collect().map(_.getString(0)).toSet
+    def stats(lib: ItdbPipeline.Library) = lib.playlistStats.collect()
+      .map(r => (r.getAs[Int]("Rating"), r.getAs[Long]("Count"))).toSet
+    val persisted0 = spark.sparkContext.getPersistentRDDs.keySet
+    val first = ItdbPipeline.loadFiles(spark, Seq(f.toString))
+    assert(stats(first) == Set((0, 1L), (60, 1L), (100, 1L)))
+    val firstRdds = spark.sparkContext.getPersistentRDDs.keySet -- persisted0
+    assert(firstRdds.size == 4) // tracks, playlists, playlist_tracks, playlist_stats
+
+    Files.writeString(f, xml.replace("Alpha", "Alef")
+      .replace("<integer>60</integer>", "<integer>80</integer>"))
+    // the first Library is a snapshot of the file as it was loaded
+    assert(names(first.tracks) == Set("Alpha", "Beta", "Gamma"))
+
+    val second = ItdbPipeline.loadFiles(spark, Seq(f.toString))
+    assert(names(second.tracks) == Set("Alef", "Beta", "Gamma"))
+    assert(stats(second) == Set((0, 1L), (80, 1L), (100, 1L)))
+    assert(names(spark.sql("SELECT Name FROM tracks")) == Set("Alef", "Beta", "Gamma"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(firstRdds).isEmpty)
+    // the snapshot lasts until the next load: the first Library now reads
+    // the new rows
+    assert(names(first.tracks) == Set("Alef", "Beta", "Gamma"))
   }
 
   test("MySQL dialect translation: REGEXP BINARY, bare REGEXP, LIKE collation") {

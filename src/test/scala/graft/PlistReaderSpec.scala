@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.ingest.PlistReader
 
 class PlistReaderSpec extends SparkSuite {
@@ -90,5 +92,71 @@ class PlistReaderSpec extends SparkSuite {
     val hist = graft.operators.ItdbOps.starsHistogram(tracks, 1)
       .orderBy("Stars").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(hist == Seq((0L, 1L), (5L, 1L)))
+  }
+
+  private def oneTrack(doctype: String, name: String): String =
+    s"""<?xml version="1.0"?>
+       |$doctype
+       |<plist version="1.0"><dict>
+       | <key>Tracks</key><dict>
+       |  <key>1</key><dict><key>Track ID</key><integer>1</integer>
+       |   <key>Name</key><string>$name</string></dict>
+       | </dict>
+       |</dict></plist>""".stripMargin
+
+  /** Track names of one document, through the driver loader and through
+    * the plist data source. */
+  private def namesBothWays(xml: String): Seq[Seq[String]] = {
+    val f = Files.createTempFile("graft_hardening", ".xml")
+    Files.writeString(f, xml)
+    Seq(PlistReader.load(spark, xml)._1,
+        spark.read.format("plist").load(f.toString))
+      .map(_.select("Name").collect().map(_.getString(0)).toSeq)
+  }
+
+  test("hardening: an external general entity naming a local file is not expanded") {
+    val secret = Files.createTempFile("graft_xxe", ".txt")
+    Files.writeString(secret, "TOPSECRET-xxe")
+    val xml = oneTrack(
+      s"""<!DOCTYPE plist [<!ENTITY xxe SYSTEM "${secret.toUri}">]>""", "a&xxe;b")
+    // the reference is dropped, not resolved: the file's text never arrives
+    assert(namesBothWays(xml) == Seq(Seq("ab"), Seq("ab")))
+  }
+
+  test("hardening: the DOCTYPE's external DTD is never read (Apple's URL parses offline)") {
+    // a DTD that fails the parse if it is read at all
+    val dtd = Files.createTempFile("graft_plist", ".dtd")
+    Files.writeString(dtd, "<!ELEMENT oops")
+    for (systemId <- Seq(dtd.toUri.toString,
+        "http://www.apple.com/DTDs/PropertyList-1.0.dtd")) {
+      val xml = oneTrack(
+        s"""<!DOCTYPE plist PUBLIC "-//Apple//DTD PLIST 1.0//EN" "$systemId">""", "Søng")
+      assert(namesBothWays(xml) == Seq(Seq("Søng"), Seq("Søng")), systemId)
+    }
+  }
+
+  test("a malformed file fails the data-source read and leaves no open handle") {
+    val fds = java.nio.file.Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fds), "needs /proc/self/fd to list open files")
+    def openOn(f: java.nio.file.Path): Int = {
+      val ls = Files.list(fds)
+      try ls.toArray.count { fd =>
+        try Files.readSymbolicLink(fd.asInstanceOf[java.nio.file.Path]) == f
+        catch { case _: java.io.IOException => false } // closed while listed
+      } finally ls.close()
+    }
+    // padded so the parse fails long before the end of the input (at its
+    // end the XML parser closes the stream itself)
+    val xml = oneTrack("", "Cut").replace("</plist>", s"<!--${"x" * (1 << 20)}-->\n</plist>")
+    // a bad end tag in the root dict's first key (fails while the
+    // container is sought) and inside the track (fails mid-stream)
+    for (key <- Seq("<key>Tracks</key>", "<key>Name</key>")) {
+      val f = Files.createTempFile("graft_malformed", ".xml").toRealPath()
+      Files.writeString(f, xml.replace(key, key.replace("</key>", "</kex>")))
+      val ctl = Files.newInputStream(f) // the check sees an open handle
+      try assert(openOn(f) == 1) finally ctl.close()
+      intercept[Exception](spark.read.format("plist").load(f.toString).collect())
+      assert(openOn(f) == 0, key)
+    }
   }
 }

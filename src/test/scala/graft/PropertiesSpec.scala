@@ -307,6 +307,21 @@ class PropertiesSpec extends SparkSuite {
     assert(exp.exists(_._3 == 2) && exp.exists(_._3 == 0))
   }
 
+  test("property: id census n_live counts distinct NON-null keys; n_refs counts rows on removed ids") {
+    // countDistinct drops a NULL key that distinct().count() would count:
+    // the census's non-null-key precondition, stated on random frames
+    // that break it
+    val rows = Gen.listOfN(80, Gen.option(Gen.choose(1L, 25L))).sample.get :+ None
+    val removedIds = Gen.listOfN(6, Gen.choose(1L, 30L)).sample.get
+    val df = rows.toDF("doc_id")
+    val got = graft.operators.Dedup.idCensusRow("s", df, "doc_id", removedIds.toDF("doc_id"))
+      .collect().head
+    val live = rows.flatten.distinct.size.toLong
+    assert(got.getAs[Long]("n_live") == live)
+    assert(df.distinct().count() == live + 1, "the frame must carry a NULL key")
+    assert(got.getAs[Long]("n_refs") == rows.flatten.count(removedIds.toSet).toLong)
+  }
+
   test("property: label retraction == full recompute over corpus minus removed") {
     // random near-dup corpora (clusters of edited copies + noise docs),
     // random takedown sets — removeFromLabelState must equal
