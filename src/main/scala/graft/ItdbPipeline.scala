@@ -38,8 +38,9 @@ object ItdbPipeline {
   /** §3.1 via the distributed source: load library FILES through the
     * DataSourceV2 plist source — one task per file, no driver-side parse.
     * Same downstream assembly as `load` (proven row-identical for a single
-    * file in PipelineSpec). The Library is a snapshot valid until the next
-    * load (see `assemble`).
+    * file in PipelineSpec). Each file is one user's library: the i-th path
+    * gets User_ID `userId + i`, so two users' Track_IDs never collide. The
+    * Library is a snapshot valid until the next load (see `assemble`).
     */
   def loadFiles(spark: SparkSession, paths: Seq[String], userId: Int = 1): Library = {
     def rd(element: String) = spark.read.format("plist")

@@ -21,6 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
+  // the tenant-scoped index gates' two tenants (tenancy = id mod 2)
+  private val tenant0 = IndexFamily.Tenant(0, nTenants = 2)
+  private val tenant1 = IndexFamily.Tenant(1, nTenants = 2)
+
   /** Flagship query on sf=0.001 — the reference's signature playlist-stats
     * computation (itdbloader.py:269-293): join + star-bucketed histogram,
     * the N+1 loop collapsed to one aggregation. Driver smoke-checks rows>0.
@@ -185,19 +189,19 @@ object SparkEntry {
     // shard's so it equals the corpus-wide cap (oracle = d20 restricted
     // to shard-touching pairs)
     "d20b_delta_containment" -> ((s, d) =>
-      Dedup.deltaContainmentGate(s, d).orderBy("id_a", "id_b")),
+      Dedup.servedGate(s, d, IndexFamily.Contain).orderBy("id_a", "id_b")),
     // d13's incremental ingest for the SIMHASH family: signature index on
     // bucket < 200, shard >= 200; oracle = d11's pair set restricted to
     // shard-touching pairs
     "d15_delta_simhash" -> ((s, d) =>
-      Dedup.deltaSimhashGate(s, d).orderBy("id_a", "id_b")),
+      Dedup.servedGate(s, d, IndexFamily.SimHash).orderBy("id_a", "id_b")),
     "d6_embedding_neardup" -> ((s, d) => Dedup.embeddingNearDupsBounded(s, d, 0.35).orderBy("id_a", "id_b")),
     // incremental embedding ingest — the d13/d15 pattern for the third
     // dedup family: banded LSH index over bucket < 200 vectors, shard
     // band-joins it map-side, exact cosine verifies after the candidate
     // distinct; oracle = d6's pair set restricted to shard-touching pairs
     "d17_delta_embedding" -> ((s, d) =>
-      Dedup.deltaEmbeddingGate(s, d).orderBy("id_a", "id_b")),
+      Dedup.servedGate(s, d, IndexFamily.Emb).orderBy("id_a", "id_b")),
     "d7_tail_fingerprint" -> ((s, d) => Dedup.tailFingerprint(s, d).orderBy("doc_id")),
     "d8_embedding_neardup_lsh" -> ((s, d) => Dedup.embeddingNearDupsLsh(s, d, 0.3).orderBy("id_a", "id_b")),
     "d9_neardup_clusters" -> ((s, d) => Dedup.nearDupClusters(s, d).orderBy("doc_id")),
@@ -243,7 +247,7 @@ object SparkEntry {
     // recompute restricted to shard-touching pairs, which is exactly what
     // the oracle computes
     "d13_delta_neardup" -> ((s, d) =>
-      Dedup.deltaNearDupsGate(s, d).orderBy("id_a", "id_b")),
+      Dedup.servedGate(s, d, IndexFamily.NearDup).orderBy("id_a", "id_b")),
     // diff-driven index sync: gen-N index + the e3 corpus diff = the
     // gen-N+1 index without a rebuild (remove∪changed tombstone out,
     // compact physical, added∪changed append with gen-B text); the
@@ -251,23 +255,23 @@ object SparkEntry {
     // (leftover doc, stale unamended shingles, missed addition)
     // hash-mismatches
     "d36_diff_synced_delta" -> ((s, d) =>
-      Dedup.diffSyncedDeltaNearDups(s, d).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.NearDup).orderBy("id_a", "id_b")),
     // the d36 discipline for the SIMHASH family: the banded signature
     // index synced with the SAME e3 diff (changed docs re-sign from the
     // amended gen-B text); oracle = d15's delta over gen B alone
     "d37_diff_synced_simhash" -> ((s, d) =>
-      Dedup.diffSyncedDeltaSimhash(s, d).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.SimHash).orderBy("id_a", "id_b")),
     // the d36 discipline for the EMBEDDING family: membership classes
     // (added/removed) change the served pairs, the changed class
     // exercises remove/re-append (vectors aren't text-derived); oracle =
     // d17's delta over gen-B membership alone
     "d38_diff_synced_embedding" -> ((s, d) =>
-      Dedup.diffSyncedDeltaEmbedding(s, d).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.Emb).orderBy("id_a", "id_b")),
     // the d36 discipline for the CONTAINMENT family — the df-capped one:
     // the synced per-digest counts must equal a from-scratch gen-B
     // build's; oracle = the whole d20b chain over gen B alone
     "d39_diff_synced_containment" -> ((s, d) =>
-      Dedup.diffSyncedDeltaContainment(s, d).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.Contain).orderBy("id_a", "id_b")),
     // the d36 discipline for the VECTOR STORE: the corpus diff reaches
     // the ANN estate the way a takedown does (td1/td2); oracle = brute
     // force k-NN over gen-B membership alone
@@ -301,11 +305,11 @@ object SparkEntry {
     // alone, the gate serves tenant 0's delta; oracle = d36's gen-B
     // delta with both endpoints in the tenant
     "d49_tenant_diff_synced" -> ((s, d) =>
-      Dedup.tenantDiffSyncedNearDups(s, d).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.NearDup, tenant0).orderBy("id_a", "id_b")),
     // ... and the isolation contract as an ORACLE: the SAME synced
     // table must keep serving GEN A exactly for the un-synced tenant 1
     "d49b_tenant_sync_isolated" -> ((s, d) =>
-      Dedup.tenantDiffSyncedNearDups(s, d, tenant = 1).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.NearDup, tenant1).orderBy("id_a", "id_b")),
     // the tenant-estate ORCHESTRATION gate: all SEVEN tenant-partitioned
     // state classes (four index families, s20 store, labels, sketch
     // cells — td2 parity) over gen A, ONE syncTenantEstateWithDiff call
@@ -317,23 +321,23 @@ object SparkEntry {
     // the d49 discipline on the SIMHASH family: synced tenant serves
     // gen B (re-signed amended text), the other still serves gen A
     "d51_tenant_diff_synced_simhash" -> ((s, d) =>
-      Dedup.tenantDiffSyncedSimhash(s, d).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.SimHash, tenant0).orderBy("id_a", "id_b")),
     "d51b_tenant_sh_isolated" -> ((s, d) =>
-      Dedup.tenantDiffSyncedSimhash(s, d, tenant = 1).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.SimHash, tenant1).orderBy("id_a", "id_b")),
     // ... and on the EMBEDDING family: membership classes change the
     // served pairs (vectors aren't text-derived — the d38 rule)
     "d52_tenant_diff_synced_emb" -> ((s, d) =>
-      Dedup.tenantDiffSyncedEmbedding(s, d).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.Emb, tenant0).orderBy("id_a", "id_b")),
     "d52b_tenant_emb_isolated" -> ((s, d) =>
-      Dedup.tenantDiffSyncedEmbedding(s, d, tenant = 1).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.Emb, tenant1).orderBy("id_a", "id_b")),
     // ... and on the CONTAINMENT family — the last cell of the 4-family
     // x 2-side isolation matrix, served from the SHARED synced estate
     // (the d50 build): df cap re-forms within the tenant, so a count the
     // sync corrupted flips the cap and hash-mismatches
     "d53_tenant_diff_synced_contain" -> ((s, d) =>
-      Dedup.tenantDiffSyncedContainment(s, d).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.Contain, tenant0).orderBy("id_a", "id_b")),
     "d53b_tenant_ct_isolated" -> ((s, d) =>
-      Dedup.tenantDiffSyncedContainment(s, d, tenant = 1).orderBy("id_a", "id_b")),
+      Dedup.diffSyncedGate(s, d, IndexFamily.Contain, tenant1).orderBy("id_a", "id_b")),
     // the d40 serving contract tenant-scoped: exact k-NN from the synced
     // estate's s20 store — tenant 0 must serve gen-B membership, tenant
     // 1 gen-A, from the SAME table (the fleet d40 gate's stake, both
@@ -348,27 +352,27 @@ object SparkEntry {
     // 200 shard against the loaded result — pair set == d13's (appending
     // only adds indexed docs), so the oracle is shared
     "d18_index_append" -> ((s, d) =>
-      Dedup.deltaNearDupsGateAppended(s, d).orderBy("id_a", "id_b")),
+      Dedup.appendedGate(s, d, IndexFamily.NearDup).orderBy("id_a", "id_b")),
     // the RETRACTION lifecycle: base index saved, doc_id%14==3 removed +
     // compacted (physical delete), doc_id%14==10 removed uncompacted
     // (tombstone-served), shard delta-joined against the loaded result —
     // pair set == full recompute over corpus minus the removed docs
     "d22_index_remove" -> ((s, d) =>
-      Dedup.deltaNearDupsGateRemoved(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.NearDup).orderBy("id_a", "id_b")),
     // the d22 retraction lifecycle stamped onto the SIMHASH index:
     // doc_id%14==3 removed+compacted, %14==10 tombstone-served — pair
     // set == full recompute over corpus minus the removed class
     "d25_simhash_remove" -> ((s, d) =>
-      Dedup.deltaSimhashGateRemoved(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.SimHash).orderBy("id_a", "id_b")),
     // ... and onto the EMBEDDING index (banded rows AND verification
     // vectors both tombstone-filtered / physically deleted)
     "d26_embedding_remove" -> ((s, d) =>
-      Dedup.deltaEmbeddingGateRemoved(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.Emb).orderBy("id_a", "id_b")),
     // ... and onto the CONTAINMENT index, where the df cap must also
     // re-evaluate over index-minus-removed: count subtraction while
     // tombstoned, rebuild at compaction
     "d27_containment_remove" -> ((s, d) =>
-      Dedup.deltaContainmentGateRemoved(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.Contain).orderBy("id_a", "id_b")),
     // the UNIFIED takedown: one Takedown.apply fans the doc_id%9==4
     // deletion list out to all nine registered state classes (indexes,
     // ANN store, labels, subtractive aggregate, rebuilt sketch cells,
@@ -390,42 +394,42 @@ object SparkEntry {
     // state) — one tenant's delta join never opens another tenant's
     // files (PlanSpec asserts PartitionFilters on both index scans)
     "d31_tenant_index" -> ((s, d) =>
-      Dedup.tenantDeltaNearDups(s, d).orderBy("id_a", "id_b")),
+      Dedup.servedGate(s, d, IndexFamily.NearDup, tenant0).orderBy("id_a", "id_b")),
     // the takedown composed with tenant isolation: tombstones filter the
     // tenant's slice (the partition pruning survives — the tombstone
     // anti-join broadcasts), removed docs pair with nothing
     "d31b_tenant_remove" -> ((s, d) =>
-      Dedup.tenantDeltaNearDupsRemoved(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.NearDup, tenant0).orderBy("id_a", "id_b")),
     // the d31 contract on the SECOND dedup family: tenant-partitioned
     // simhash index, planning-time pruning + takedown isolation
     "d33_tenant_simhash" -> ((s, d) =>
-      Dedup.tenantDeltaSimhash(s, d).orderBy("id_a", "id_b")),
+      Dedup.servedGate(s, d, IndexFamily.SimHash, tenant0).orderBy("id_a", "id_b")),
     "d33b_tenant_simhash_remove" -> ((s, d) =>
-      Dedup.tenantDeltaSimhashRemoved(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.SimHash, tenant0).orderBy("id_a", "id_b")),
     // the takedown turned PHYSICAL by a tenant-scoped compaction (only
     // the tenant's partition directory rewrites) — served output
     // identical, so d33b's oracle gates the compacted lifecycle
     "d33c_tenant_simhash_compacted" -> ((s, d) =>
-      Dedup.tenantDeltaSimhashCompacted(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.SimHash, tenant0, compacted = true).orderBy("id_a", "id_b")),
     // the THIRD tenant-partitioned family (embedding): both persisted
     // halves — banded LSH rows AND verification vectors — partition by
     // tenant, and the tenant's delta + verify joins prune both scans
     "d34_tenant_embedding" -> ((s, d) =>
-      Dedup.tenantDeltaEmbedding(s, d).orderBy("id_a", "id_b")),
+      Dedup.servedGate(s, d, IndexFamily.Emb, tenant0).orderBy("id_a", "id_b")),
     "d34b_tenant_embedding_remove" -> ((s, d) =>
-      Dedup.tenantDeltaEmbeddingRemoved(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.Emb, tenant0).orderBy("id_a", "id_b")),
     "d34c_tenant_embedding_compacted" -> ((s, d) =>
-      Dedup.tenantDeltaEmbeddingCompacted(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.Emb, tenant0, compacted = true).orderBy("id_a", "id_b")),
     // the FOURTH tenant-partitioned family (containment) — all three
     // persisted halves (fingerprints, the per-digest df AGGREGATE, span
     // sets) partition by tenant; the df cap counts WITHIN the tenant
     // (isolated corpora — the only correct semantics)
     "d35_tenant_containment" -> ((s, d) =>
-      Dedup.tenantDeltaContainment(s, d).orderBy("id_a", "id_b")),
+      Dedup.servedGate(s, d, IndexFamily.Contain, tenant0).orderBy("id_a", "id_b")),
     "d35b_tenant_containment_remove" -> ((s, d) =>
-      Dedup.tenantDeltaContainmentRemoved(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.Contain, tenant0).orderBy("id_a", "id_b")),
     "d35c_tenant_containment_compacted" -> ((s, d) =>
-      Dedup.tenantDeltaContainmentCompacted(s, d).orderBy("id_a", "id_b")),
+      Dedup.removedGate(s, d, IndexFamily.Contain, tenant0, compacted = true).orderBy("id_a", "id_b")),
     // retraction through the LABEL store: removal deletes vertices, so
     // touched components re-label (splits included) while untouched
     // clusters serve from the persisted state; oracle = d19's canonical

@@ -104,23 +104,13 @@ object Dedup {
     * query-result cache (pair tables, centroids, delta merges).
     */
   def warmServingIndexes(spark: SparkSession, dir: String): Unit = {
-    val nd = nearDupGateIndex(spark, dir)
-    nd.banded.count(); nd.shingles.count()
-    simhash64Cached(spark, dir).count()
-    simhashGateIndex(spark, dir).banded.count()
-    val emb = embGateIndex(spark, dir)
-    emb.banded.count(); emb.vectors.count()
+    def warm[I](fam: IndexFamily[I]): Unit = {
+      fam.cachedInput(spark, dir).count()
+      fam.parts(servedIndex(spark, dir, fam, IndexFamily.Fleet)).foreach(_.count())
+    }
+    IndexFamily.all.foreach(warm(_))
     baseLabelTable(spark, dir, 200, 0.8).count()
     baseCanonicalTable(spark, dir, 200, 0.8).count()
-    val ci = graft.SessionCache.getOrElseUpdate(spark, ("containIndexDisk", dir, 200)) {
-      val name = f"contain_gate_200_${dir.hashCode & 0xffffffffL}%x"
-      saveContainIndex(containIndexFromSelection(
-        graft.SessionCache.getOrElseUpdate(spark, ("containmentSel", dir, 8, 4)) {
-          containmentSelection(Tables.documents(spark, dir), 8, 4).persist()
-        }.filter(TextAnalysis.splitBucket(col("doc_id")) < 200)), name)
-      loadContainIndex(spark, name)
-    }
-    ci.fp.count(); ci.dfTab.count(); ci.sets.count()
     // d21b's persisted base curation state (depends on the ANN delta
     // index, which Similarity.warmServingIndexes also builds — the memo
     // makes ordering irrelevant)
@@ -552,17 +542,17 @@ object Dedup {
     * members/labels/ranks — so the oracle is SHARED with d19 (the d18
     * pattern: same output, different measured path).
     */
-  def deltaClusterCanonical(spark: SparkSession, dir: String, splitAt: Int = 200,
-      threshold: Double = 0.8): DataFrame = {
+  def deltaClusterCanonical(spark: SparkSession, dir: String,
+      splitAt: Int = 200): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val baseCanonical = baseCanonicalTable(spark, dir, splitAt, threshold)
+    val baseCanonical = baseCanonicalTable(spark, dir, splitAt, 0.8)
     // d16's merged labels — the delta input state, memoized per
-    // (session, dir, split, threshold) like the delta pair table one
-    // stage earlier (a production ingest computes the merge once per
-    // shard and feeds both the label table upsert and this step)
+    // (session, dir, split) like the delta pair table one stage earlier
+    // (a production ingest computes the merge once per shard and feeds
+    // both the label table upsert and this step)
     val delta = graft.SessionCache.getOrElseUpdate(spark,
-        ("deltaClustersResult", dir, splitAt, threshold)) {
-      deltaClusters(spark, dir, splitAt, threshold)
+        ("deltaClustersResult", dir, splitAt)) {
+      deltaClusters(spark, dir, splitAt)
     }.asInstanceOf[DataFrame]
     val touchedSlice = canonicalFromLabels(
       delta.select(col("doc_id"), col("cluster")), docs)
@@ -844,29 +834,38 @@ object Dedup {
     * argument applied to the dedup index); `shingles` bucketed on doc_id
     * for the verification joins. Band parameters land in a one-row
     * `<name>_meta` table so a delta query can't silently run with a
-    * different banding than the index was built with. Ingests append
-    * (`upsertNearDupIndex` rows via INSERT INTO); tables live in the
-    * session warehouse.
+    * different banding than the index was built with. The lifecycle
+    * after the save is [[IndexFamily]]'s engine.
     */
-  /** Write `df` as a bucketed+sorted session-catalog table. The
-    * repartition on the bucket keys BEFORE the write is load-bearing:
-    * repartition and bucketing share the same murmur3 HashPartitioning,
-    * so every bucket lands in exactly one task = exactly ONE file per
-    * bucket — the condition under which the scan reports its sortBy
-    * order and a key-joined read needs neither Exchange NOR Sort
-    * (multi-file buckets forfeit the ordering and re-sort per query).
-    * Clears stale state first: mode("overwrite") replaces a CATALOG
-    * table, but a stale warehouse DIRECTORY without a catalog entry
-    * (prior JVM, fresh metastore) fails CREATE with
+  /** Write `df` as a bucketed+sorted session-catalog table — the ONE
+    * writer of every bucketed layout: `byTenant` partitions it by its
+    * `tenant` column (each tenant's rows under their own partition
+    * directories, bucketed within, so a tenant-scoped read prunes at
+    * PLANNING time — the a6b fact-table isolation extended to persisted
+    * state), and `append` INSERTs INTO the existing table instead of
+    * replacing it. The repartition on the bucket keys BEFORE the write
+    * is load-bearing: repartition and bucketing share the same murmur3
+    * HashPartitioning, so every bucket lands in exactly one task =
+    * exactly ONE file per bucket — the condition under which the scan
+    * reports its sortBy order and a key-joined read needs neither
+    * Exchange NOR Sort (multi-file buckets forfeit the ordering and
+    * re-sort per query). An append with a MATCHING bucket spec (Spark
+    * validates it) keeps key-joined reads Exchange-free but adds one file
+    * per bucket, forfeiting the reported order until a compaction. A
+    * (non-append) save clears stale state first: mode("overwrite")
+    * replaces a CATALOG table, but a stale warehouse DIRECTORY without a
+    * catalog entry (prior JVM, fresh metastore) fails CREATE with
     * LOCATION_ALREADY_EXISTS.
     */
   private[graft] def saveBucketedTable(df: DataFrame, table: String, buckets: Int,
-      keys: Seq[String]): Unit = {
-    dropTableAndLocation(df.sparkSession, table)
-    df.repartition(buckets, keys.map(col): _*)
-      .write.bucketBy(buckets, keys.head, keys.tail: _*)
+      keys: Seq[String], append: Boolean = false,
+      byTenant: Boolean = false): Unit = {
+    if (!append) dropTableAndLocation(df.sparkSession, table)
+    val w = df.repartition(buckets, keys.map(col): _*).write
+    (if (byTenant) w.partitionBy("tenant") else w)
+      .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
-      .mode("overwrite").saveAsTable(table)
+      .mode(if (append) "append" else "overwrite").saveAsTable(table)
   }
 
   private[graft] def dropTableAndLocation(spark: SparkSession, table: String): Unit = {
@@ -939,33 +938,6 @@ object Dedup {
       key: String): DataFrame =
     minus.fold(df)(t => df.join(broadcast(t.select(col(key))), Seq(key), "left_anti"))
 
-  /** Append rows into an existing bucketed table — the INSERT INTO half
-    * of the ingest contract the index scaladocs promise. `mode("append")`
-    * with a MATCHING bucket spec (Spark validates it) writes the new rows
-    * bucketed by the same murmur3 partitioning, so key-joined reads stay
-    * Exchange-free after any number of appends. What each append DOES
-    * cost: one more file per bucket, and a multi-file bucket no longer
-    * reports its sortBy order — delta joins re-sort (SortExec, no
-    * shuffle) until [[compactBucketedTable]] restores the one-file
-    * invariant. The LSM shape: appends are cheap and sorted-ness degrades
-    * until a compaction rewrites the generation.
-    */
-  private[graft] def appendBucketedTable(df: DataFrame, table: String, buckets: Int,
-      keys: Seq[String]): Unit =
-    df.repartition(buckets, keys.map(col): _*)
-      .write.bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .mode("append").saveAsTable(table)
-
-  /** Rewrite a bucketed table to exactly ONE file per bucket, restoring
-    * the reported sort order appends forfeit ([[saveBucketedTable]]'s
-    * condition). The rewrite is a GENERATION SWAP — write `<table>__compact`
-    * fully, then drop + rename — never a read-modify-write of the live
-    * location (a compaction that read the table it is overwriting would
-    * race its own scan; the swap is the same sentinel pattern as
-    * Freshness.publish). At 100 TB the rename is a metastore pointer move,
-    * not a data copy.
-    */
   /** Complete a generation swap a prior process died inside. `tmp` only
     * reaches the catalog AFTER its data is fully written (saveAsTable
     * registers last), so a registered `tmp` always holds the complete new
@@ -982,233 +954,267 @@ object Dedup {
       spark.catalog.refreshTable(table)
     }
 
-  /** `minus`: tombstoned ids to PHYSICALLY drop during the rewrite — the
-    * compaction is the one moment a takedown becomes a real delete (the
-    * generation being written simply never contains the rows), after
-    * which the caller clears the tombstone table.
+  /** Replace a bucketed table by a new generation of `rows` as a
+    * GENERATION SWAP — write `<table>__compact` fully, then drop + rename
+    * — never a read-modify-write of the live location (a rewrite that
+    * read the table it is overwriting would race its own scan; the swap
+    * is the same sentinel pattern as Freshness.publish). A prior crashed
+    * swap is recovered first; `rows` is evaluated after that. At 100 TB
+    * the rename is a metastore pointer move, not a data copy.
     */
-  private[graft] def compactBucketedTable(spark: SparkSession, table: String,
-      buckets: Int, keys: Seq[String],
-      minus: Option[(DataFrame, String)] = None): Unit = {
+  private[graft] def swapGeneration(spark: SparkSession, table: String,
+      buckets: Int, keys: Seq[String], rows: => DataFrame): Unit = {
     val tmp = s"${table}__compact"
     recoverGenerationSwap(spark, table, tmp)
-    dropTableAndLocation(spark, tmp)
-    // read the RAW parquet files, not the catalog table: a bucketed scan
-    // already reports HashPartitioning on the keys, so the planner elides
-    // the repartition as redundant — and the write's tasks then no longer
-    // align one-to-one with bucket ids, silently producing the multi-file
-    // buckets this compaction exists to remove. A plain file scan has no
-    // partitioning to satisfy, so the repartition genuinely aligns rows
-    // to their bucket before the write.
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val raw = spark.read.schema(spark.table(table).schema).parquet(loc.toString)
-    minus.fold(raw) { case (t, k) => minusTombstones(raw, Some(t), k) }
-      .repartition(buckets, keys.map(col): _*)
-      .write.bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .saveAsTable(tmp)
+    saveBucketedTable(rows, tmp, buckets, keys)
     dropTableAndLocation(spark, table)
     spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
     spark.catalog.refreshTable(table)
   }
 
-  /** Every table suffix this family can leave on disk (serving tables
-    * + runtime tombstones). Fresh-state gates UNION the per-family
-    * constants (this, [[simHashTableSuffixes]], [[embIndexTableSuffixes]],
-    * [[containTableSuffixes]], [[Similarity.annTableSuffixes]] — see
-    * [[estateTableSuffixes]]) instead of inlining copies, so a suffix
-    * added next to its save* function reaches every gate's reset list
-    * (round-15 advice: stale warehouse tables must not leak across
+  /** Rewrite a bucketed table to exactly ONE file per bucket, restoring
+    * the reported sort order appends forfeit ([[saveBucketedTable]]'s
+    * condition), as a [[swapGeneration]]. `minus`: tombstoned ids to
+    * PHYSICALLY drop during the rewrite — the compaction is the one
+    * moment a takedown becomes a real delete (the generation being
+    * written simply never contains the rows), after which the caller
+    * clears the tombstone table.
+    */
+  private[graft] def compactBucketedTable(spark: SparkSession, table: String,
+      buckets: Int, keys: Seq[String],
+      minus: Option[(DataFrame, String)] = None): Unit =
+    swapGeneration(spark, table, buckets, keys, {
+      // read the RAW parquet files, not the catalog table: a bucketed
+      // scan already reports HashPartitioning on the keys, so the planner
+      // elides the repartition as redundant — and the write's tasks then
+      // no longer align one-to-one with bucket ids, silently producing
+      // the multi-file buckets this compaction exists to remove. A plain
+      // file scan has no partitioning to satisfy, so the repartition
+      // genuinely aligns rows to their bucket before the write.
+      val loc = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+      val raw = spark.read.schema(spark.table(table).schema).parquet(loc.toString)
+      minus.fold(raw) { case (t, k) => minusTombstones(raw, Some(t), k) }
+    })
+
+  /** The union of every index family's on-disk suffix set
+    * ([[IndexFamily.tableSuffixes]], [[Similarity.annTableSuffixes]]),
+    * plus the bare table name (aggregate/label state) and the `__gen`
+    * generation-swap temp — the whole-estate fresh-state reset surface
+    * the census gates drop, so a suffix added to a family reaches every
+    * gate's reset list (stale warehouse tables must not leak across
     * crashed sessions because one gate's list went stale).
     */
-  private[graft] val nearDupTableSuffixes =
-    Seq("_banded", "_shingles", "_meta", "_tombstones")
-
-  /** The union of every family's on-disk suffix set, plus the bare
-    * table name (aggregate/label state) and the `__gen` generation-swap
-    * temp — the whole-estate fresh-state reset surface the census gates
-    * drop per suffix constant instead of per inlined literal.
-    */
   private[graft] lazy val estateTableSuffixes: Seq[String] =
-    (Seq("", "__gen") ++ nearDupTableSuffixes ++ simHashTableSuffixes ++
-      embIndexTableSuffixes ++ containTableSuffixes ++
+    (Seq("", "__gen") ++ IndexFamily.all.flatMap(_.tableSuffixes) ++
       Similarity.annTableSuffixes).distinct
 
-  def saveNearDupIndex(index: NearDupIndex, name: String, buckets: Int = 8): Unit = {
-    saveBucketedTable(index.banded, s"${name}_banded", buckets, Seq("band", "bkey"))
-    saveBucketedTable(index.shingles, s"${name}_shingles", buckets, Seq("doc_id"))
-    val spark = index.banded.sparkSession
-    import spark.implicits._
-    dropTableAndLocation(spark, s"${name}_meta")
-    // bucket count rides the meta table so appends/compactions can't
-    // silently write a different layout than the index was created with
-    Seq((index.bands, index.rowsPerBand, buckets))
-      .toDF("bands", "rows_per_band", "buckets")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
-  }
+  def saveNearDupIndex(index: NearDupIndex, name: String, buckets: Int = 8): Unit =
+    IndexFamily.saveParts(index.banded.sparkSession, IndexFamily.NearDup,
+      name, IndexFamily.Fleet, Seq(index.banded, index.shingles),
+      Seq("bands" -> index.bands, "rows_per_band" -> index.rowsPerBand), buckets)
 
-  /** Load a [[saveNearDupIndex]]-persisted index; band parameters come
-    * from the meta table, never the caller. Tombstoned documents (a
-    * [[removeFromNearDupIndex]] takedown not yet compacted away) are
-    * filtered out of BOTH member tables by a broadcast anti-join — which
-    * preserves the bucketed scans' partitioning and ordering, so the
-    * Exchange-free delta-join property survives a pending takedown.
+  // ---- the lifecycle gates: ONE function per lifecycle over the family ----
+  //
+  // Every gate indexes the already-ingested slice of the family's
+  // session-cached corpus input (md5 bucket < 200), builds that index ONCE
+  // per session through the real save → (lifecycle) → load disk path (the
+  // measured path IS the persisted path a production ingest reads — the
+  // round-7 finding: an in-memory stand-in never exercised the layout),
+  // and delta-joins the rest as the incoming shard. At tenant scope,
+  // tenancy is id mod nTenants (the a6b convention; tenants are isolated
+  // corpora), the index is saved partitioned by tenant, the shard and the
+  // served slice are the tenant's, and the tenant filter lands in the
+  // index scans' PartitionFilters (PlanSpec) — per-tenant delta cost is
+  // the tenant's own index size. Each gate's oracle is its family's batch
+  // SQL restricted the same way; the query keys map as
+  //
+  //   lifecycle   | near-dup | simhash | embedding | containment
+  //   served      | d13 d31  | d15 d33 | d17 d34   | d20b d35
+  //   appended    | d18      | (BucketingSpec: the twins equal d15, d17) |
+  //   removed     | d22 d31b | d25 d33b| d26 d34b  | d27 d35b
+  //   compacted   |          | d33c    | d34c      | d35c
+  //   diff-synced | d36 d49  | d37 d51 | d38 d52   | d39 d53
+  //
+  // (first key fleet, second tenant; a `b` twin of d49–d53 serves the
+  // un-synced tenant).
+
+  private val gateSplit = 200
+
+  private def gateTable(prefix: String, dir: String,
+      splitAt: Int = gateSplit): String =
+    f"${prefix}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
+
+  /** The incoming shard: bucket ≥ 200, inside the scope's tenant. */
+  private def gateShard(fam: IndexFamily[_], input: DataFrame,
+      scope: IndexFamily.Scope, splitAt: Int = gateSplit): DataFrame =
+    input.filter(TextAnalysis.splitBucket(col(fam.idCol)) >= splitAt &&
+      IndexFamily.inScope(fam, scope))
+
+  /** The indexed slice (every tenant's rows — a tenant-scope save writes
+    * them all).
     */
-  def loadNearDupIndex(spark: SparkSession, name: String): NearDupIndex = {
-    val meta = spark.table(s"${name}_meta").head()
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-    NearDupIndex(
-      minusTombstones(spark.table(s"${name}_banded"), ts, "doc_id"),
-      minusTombstones(spark.table(s"${name}_shingles"), ts, "doc_id"),
-      meta.getAs[Int]("bands"), meta.getAs[Int]("rows_per_band"))
+  private def gateBase(fam: IndexFamily[_], input: DataFrame,
+      splitAt: Int = gateSplit): DataFrame =
+    input.filter(TextAnalysis.splitBucket(col(fam.idCol)) < splitAt)
+
+  /** A gate's index: `build` runs ONCE per session for `table`, the
+    * loaded index is cached per scope (so a warm gate reads no meta).
+    */
+  private def gateIndex[I](spark: SparkSession, fam: IndexFamily[I],
+      scope: IndexFamily.Scope, table: String)(build: => Unit): I = {
+    graft.SessionCache.getOrElseUpdate(spark, ("gateBuild", table)) {
+      build; table
+    }
+    graft.SessionCache.getOrElseUpdate(spark, ("gateIndex", table, scope)) {
+      IndexFamily.load(spark, fam, table, scope)
+    }
   }
 
-  /** RETRACTION — the reference's dedup flow exists to DELETE files
-    * (dupes/dedup.py:133-171 emits the `rm` commands); at pipeline scale
-    * the analogue is a takedown list that must stop appearing in every
-    * pair/cluster/canonical result. Removal is a TOMBSTONE: the ids land
-    * in `<name>_tombstones`, [[loadNearDupIndex]] serves the index minus
-    * the tombstoned documents immediately, and the next
-    * [[compactNearDupIndex]] turns the tombstones into a physical delete
-    * (the rewritten generation never contains the rows) and clears the
-    * list. Re-appending a removed id ([[appendNearDupIndex]]) lifts its
-    * tombstone — delete-then-append means the re-added rows win.
+  /** SERVED (d13/d15/d17/d20b; tenant d31/d33/d34/d35): save the indexed
+    * slice, delta-join the shard against the loaded index. `splitAt`
+    * moves the ingested/incoming boundary (d16's merge slices it).
+    */
+  def servedGate[I](spark: SparkSession, dir: String, fam: IndexFamily[I],
+      scope: IndexFamily.Scope = IndexFamily.Fleet,
+      splitAt: Int = gateSplit): DataFrame =
+    fam.delta(gateShard(fam, fam.cachedInput(spark, dir), scope, splitAt),
+      servedIndex(spark, dir, fam, scope, splitAt))
+
+  /** The served gates' persisted index — exposed so
+    * [[warmServingIndexes]] can build/load it ahead of the timing loop
+    * (serving state, not query work).
+    */
+  private[graft] def servedIndex[I](spark: SparkSession, dir: String,
+      fam: IndexFamily[I], scope: IndexFamily.Scope,
+      splitAt: Int = gateSplit): I = {
+    val table = scope match {
+      case IndexFamily.Fleet => gateTable(s"${fam.tag}_gate", dir, splitAt)
+      case IndexFamily.Tenant(_, n) =>
+        gateTable(s"tenant_${fam.short}_$n", dir, splitAt)
+    }
+    gateIndex(spark, fam, scope, table) {
+      IndexFamily.save(spark, fam, table, scope,
+        gateBase(fam, fam.cachedInput(spark, dir), splitAt))
+    }
+  }
+
+  /** APPENDED (d18 and its simhash/embedding twins) — the full index
+    * lifecycle on disk: save a base index (bucket < 150), APPEND the next
+    * ingested slice (150 ≤ bucket < 200) into the bucketed tables,
+    * COMPACT back to one file per bucket, then delta-join the shard.
+    * Because an append only adds indexed rows, the pairs are exactly the
+    * served gate's — same oracle — while the measured path exercises
+    * append + compact end-to-end (BucketingSpec asserts the compacted
+    * gate plan still reads the index with no Exchange and no Sort).
+    */
+  def appendedGate[I](spark: SparkSession, dir: String,
+      fam: IndexFamily[I]): DataFrame = {
+    val input = fam.cachedInput(spark, dir)
+    def b = TextAnalysis.splitBucket(col(fam.idCol))
+    val table = gateTable(s"${fam.tag}_app_150", dir)
+    val index = gateIndex(spark, fam, IndexFamily.Fleet, table) {
+      IndexFamily.save(spark, fam, table, IndexFamily.Fleet, input.filter(b < 150))
+      IndexFamily.append(spark, fam, table, IndexFamily.Fleet,
+        input.filter(b >= 150 && b < gateSplit))
+      IndexFamily.compact(spark, fam, table, IndexFamily.Fleet)
+    }
+    fam.delta(gateShard(fam, input, IndexFamily.Fleet), index)
+  }
+
+  /** REMOVED (d22/d25/d26/d27) — the retraction lifecycle on disk, both
+    * serving paths in one trajectory: save the base index, take down the
+    * id ≡ 3 (mod 14) slice and COMPACT (physical delete — the rewritten
+    * generation never holds those rows; the containment df REBUILDS from
+    * the surviving fingerprints), then take down the id ≡ 10 (mod 14)
+    * slice WITHOUT compacting (served through the load-time broadcast
+    * anti-join; the df count-SUBTRACTED), and delta-join the shard.
+    * Together the two slices are exactly id ≡ 3 (mod 7), so the oracle is
+    * the served SQL with indexed-side members of that class excluded — a
+    * full recompute over corpus ∖ removed (a removed document appears in
+    * NO pair, via either serving path; for containment the df cap
+    * evaluates over (index ∖ removed) ∪ shard).
     *
-    * Sketch state is OUT OF SCOPE by design: HLL registers and GK/
-    * SpaceSaving summaries are additive-only (a register max cannot be
-    * un-raised), so the a2c/a16c cell tables document REBUILD-ONLY
-    * deletion — drop the affected (group, day) cells and re-aggregate
-    * them from the retained rows; never tombstone inside a sketch.
+    * Tenant scope (d31b/d33b/d34b/d35b, and with `compacted` the
+    * d33c/d34c/d35c tenant-scoped compaction — served output identical,
+    * while only the tenant's directories rewrite; IndexRemoveSpec pins
+    * the other tenant's file mtimes): the tenant's id ≡ 8 (mod 14) slice
+    * is tombstoned — tombstones are id-keyed, so removal is
+    * layout-agnostic. Oracle = the tenant SQL minus the removed class.
     */
-  def removeFromNearDupIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit =
-    appendTombstones(spark, s"${name}_tombstones", docIds, "doc_id")
-
-  /** Append a shard's rows into a SAVED index — [[upsertNearDupIndex]]'s
-    * disk half, the production ingest step after a shard's delta pairs
-    * are reported: band keys and shingles land in the bucketed tables via
-    * bucket-spec-matched INSERT INTO (no rewrite of existing data; same
-    * id-disjointness contract). Band parameters and bucket count come
-    * from the meta table, so an append can never use a different banding
-    * or layout than the index holds.
-    */
-  def appendNearDupIndex(spark: SparkSession, name: String,
-      newDocs: DataFrame): Unit =
-    appendNearDupIndexFromShingles(spark, name, shingleTableOf(newDocs))
-
-  private def appendNearDupIndexFromShingles(spark: SparkSession, name: String,
-      newSh: DataFrame): Unit = {
-    val meta = spark.table(s"${name}_meta").head()
-    val buckets = meta.getAs[Int]("buckets")
-    appendBucketedTable(
-      bandedKeys(newSh, meta.getAs[Int]("bands"), meta.getAs[Int]("rows_per_band")),
-      s"${name}_banded", buckets, Seq("band", "bkey"))
-    appendBucketedTable(newSh, s"${name}_shingles", buckets, Seq("doc_id"))
-    // a re-added id lifts its tombstone (delete-then-append idempotence)
-    clearTombstones(spark, s"${name}_tombstones", newSh.select(col("doc_id")), "doc_id")
+  def removedGate[I](spark: SparkSession, dir: String, fam: IndexFamily[I],
+      scope: IndexFamily.Scope = IndexFamily.Fleet,
+      compacted: Boolean = false): DataFrame = {
+    val input = fam.cachedInput(spark, dir)
+    val id = col(fam.idCol)
+    val ids = gateBase(fam, input).select(id)
+    val table = scope match {
+      case IndexFamily.Fleet => gateTable(s"${fam.tag}_rm", dir)
+      case IndexFamily.Tenant(t, n) => gateTable(
+        s"tenant_${fam.short}${if (compacted) "c" else "rm"}_${t}_$n", dir)
+    }
+    val index = gateIndex(spark, fam, scope, table) {
+      IndexFamily.save(spark, fam, table, scope, gateBase(fam, input))
+      scope match {
+        case IndexFamily.Fleet =>
+          IndexFamily.remove(spark, fam, table, ids.filter(id % 14 === 3))
+          IndexFamily.compact(spark, fam, table, scope)
+          IndexFamily.remove(spark, fam, table, ids.filter(id % 14 === 10))
+        case _: IndexFamily.Tenant =>
+          IndexFamily.remove(spark, fam, table,
+            ids.filter(IndexFamily.inScope(fam, scope) && id % 14 === 8))
+          if (compacted) IndexFamily.compact(spark, fam, table, scope)
+      }
+    }
+    fam.delta(gateShard(fam, input, scope), index)
   }
 
-  /** Compact a SAVED index back to one file per bucket (appends add a
-    * file per bucket per shard and forfeit the reported sort order — see
-    * [[appendBucketedTable]]); after compaction delta joins read the
-    * index with no Exchange AND no Sort again.
+  /** DIFF-SYNCED (d36–d39; tenant d49/d51/d52/d53 and their `b` twins) —
+    * generation-N index + the e3 corpus diff = the generation-N+1 index,
+    * WITHOUT a rebuild. The index builds over gen A of
+    * [[corpusGenFixture]], and [[syncEstateWithDiff]] (tenant scope:
+    * [[syncTenantEstateWithDiff]] for tenant 0 alone) drives the sync:
+    * `removed ∪ changed` tombstone out, a COMPACTION makes them physical
+    * (re-appending a changed id must not resurrect its OLD rows), and
+    * `added ∪ changed` append from the gen-B payload (changed docs'
+    * shingles, signatures and spans recompute from the amended text; the
+    * embedding family's vectors are not text-derived, so its changed
+    * class re-appends value-identically and the membership classes change
+    * the served output; the containment df must equal a from-scratch
+    * gen-B build, which the compaction's rebuild plus the append's
+    * increment rows deliver). The gate serves the shard's delta against
+    * the synced index; the oracle recomputes the SAME delta over gen B
+    * alone — gen A never appears in it, so a leftover dropped doc, a
+    * stale unamended row or a missed addition hash-mismatches. Text
+    * families serve text-bearing shard documents only (the tree
+    * fixture's domain). At tenant scope the family's index is the one in
+    * the shared [[tenantSyncedEstate]] (one cold build for d49–d54), whose
+    * other tenant's partitions never move: served for tenant 1, the SAME
+    * table must serve gen A exactly — the isolation contract as an
+    * oracle, not just an mtime pin.
     */
-  def compactNearDupIndex(spark: SparkSession, name: String): Unit = {
-    val buckets = spark.table(s"${name}_meta").head().getAs[Int]("buckets")
-    // pending takedowns become PHYSICAL deletes in the rewritten
-    // generation; localCheckpoint first so neither table rewrite re-reads
-    // catalog state mid-swap
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-      .map(_.select(col("doc_id")).localCheckpoint())
-    compactBucketedTable(spark, s"${name}_banded", buckets, Seq("band", "bkey"),
-      ts.map((_, "doc_id")))
-    compactBucketedTable(spark, s"${name}_shingles", buckets, Seq("doc_id"),
-      ts.map((_, "doc_id")))
-    if (ts.isDefined) dropTableAndLocation(spark, s"${name}_tombstones")
+  def diffSyncedGate[I](spark: SparkSession, dir: String, fam: IndexFamily[I],
+      scope: IndexFamily.Scope = IndexFamily.Fleet): DataFrame = {
+    val input = fam.cachedInput(spark, dir)
+    val index = scope match {
+      case IndexFamily.Fleet =>
+        val table = gateTable(s"diffsync_${fam.short}", dir)
+        gateIndex(spark, fam, scope, table) {
+          IndexFamily.save(spark, fam, table, scope, genAInput(spark, dir, fam))
+          syncEstateWithDiff(spark, corpusGenFixture(spark, dir, gateSplit)._1,
+            EstateSyncTargets(indexes =
+              Seq((fam, table, syncPayload(spark, dir, fam)))))
+        }
+      case IndexFamily.Tenant(_, n) =>
+        gateIndex(spark, fam, scope,
+          tenantSyncedEstate(spark, dir, n)._1(fam.short))(())
+    }
+    val shard = gateShard(fam, input, scope)
+    fam.delta(if (fam.idCol == "vec_id") shard else shard.join(
+      Tables.documents(spark, dir).filter(col("text").isNotNull).select("doc_id"),
+      Seq("doc_id"), "left_semi"), index)
   }
 
-  /** The d13 gate pipeline: index the already-ingested corpus slice (md5
-    * bucket < splitAt), delta-join the rest as the incoming shard. The
-    * index is built once per (session, dir, splitAt), SAVED as the
-    * bucketed+sorted warehouse tables, and the gate joins against the
-    * LOADED tables — the measured path IS the persisted disk path a
-    * production ingest reads (round-7 finding: an in-memory stand-in
-    * here never exercised the layout [[saveNearDupIndex]] advertises).
-    */
-  def deltaNearDupsGate(spark: SparkSession, dir: String,
-      splitAt: Int = 200, threshold: Double = 0.8): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    // the shard side slices the SESSION-SHARED corpus shingle table (the
-    // d3/d4/d9 cache) instead of re-tokenizing; the index side comes from
-    // disk via save→load
-    val sh = persistedShingleTable(spark, dir)
-    deltaNearDupsFromShingles(sh.filter(bucket >= splitAt),
-      nearDupGateIndex(spark, dir, splitAt), threshold)
-  }
-
-  /** The d13 gate's persisted serving index (bucket < splitAt), built
-    * once per (session, dir, splitAt) through the real save→load disk
-    * path. Exposed so [[warmServingIndexes]] can build/load it ahead of
-    * the timing loop — serving state, not query work.
-    */
-  private[graft] def nearDupGateIndex(spark: SparkSession, dir: String,
-      splitAt: Int = 200): NearDupIndex = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    graft.SessionCache.getOrElseUpdate(spark, ("neardupIndexDisk", dir, splitAt)) {
-      val baseSh = persistedShingleTable(spark, dir).filter(bucket < splitAt)
-      // table name disambiguated per (dir, splitAt): one session catalog
-      // may serve gates over several test dirs
-      val name = f"neardup_gate_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      saveNearDupIndex(NearDupIndex(bandedKeys(baseSh, 3, 3), baseSh, 3, 3), name)
-      loadNearDupIndex(spark, name)
-    }.asInstanceOf[NearDupIndex]
-  }
-
-  /** The d18 gate — the FULL index lifecycle on disk: save a base index
-    * (bucket < split1), APPEND the next ingested slice (split1 ≤ bucket <
-    * split2) into the bucketed tables, COMPACT back to one file per
-    * bucket, then delta-join the remaining shard (bucket ≥ split2)
-    * against the loaded result. Because an append only adds indexed
-    * documents, the emitted pairs are exactly [[deltaNearDupsGate]]'s at
-    * splitAt = split2 — same oracle — while the measured path exercises
-    * [[appendNearDupIndex]] + [[compactNearDupIndex]] end-to-end
-    * (BucketingSpec asserts the compacted gate plan still reads the index
-    * with no Exchange and no Sort).
-    */
-  def deltaNearDupsGateAppended(spark: SparkSession, dir: String,
-      split1: Int = 150, split2: Int = 200, threshold: Double = 0.8): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sh = persistedShingleTable(spark, dir)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("neardupIndexAppended", dir, split1, split2)) {
-      val baseSh = sh.filter(bucket < split1)
-      val name = f"neardup_app_${split1}_${split2}_${dir.hashCode & 0xffffffffL}%x"
-      saveNearDupIndex(NearDupIndex(bandedKeys(baseSh, 3, 3), baseSh, 3, 3), name)
-      appendNearDupIndexFromShingles(spark, name,
-        sh.filter(bucket >= split1 && bucket < split2))
-      compactNearDupIndex(spark, name)
-      loadNearDupIndex(spark, name)
-    }.asInstanceOf[NearDupIndex]
-    deltaNearDupsFromShingles(sh.filter(bucket >= split2), index, threshold)
-  }
-
-  /** D36 — DIFF-DRIVEN INDEX SYNC: generation-N index + the e3 corpus
-    * diff = the generation-N+1 index, WITHOUT a rebuild. Two corpus
-    * generations write as real trees (gen A drops the ≡5 mod 13 class;
-    * gen B drops ≡4 mod 9 and amends the ≡3 mod 11 class's text), the
-    * index is built over gen A, and [[graft.emit.CorpusWriter.corpusDiff]]
-    * drives the sync: `removed ∪ changed` tombstone out, a COMPACTION
-    * makes them physical (the payload contract — re-appending a
-    * tombstoned id must not resurrect its OLD shingle rows), and
-    * `added ∪ changed` append with gen-B text. The gate then serves the
-    * d13 delta of the bucket ≥ splitAt shard against the synced index;
-    * the oracle recomputes the SAME delta over gen B alone — gen A never
-    * appears in it, so any sync failure (a leftover dropped doc, a stale
-    * unamended shingle, a missed addition) hash-mismatches. Per-shard
-    * cost at 100 TB is diff-sized: remove/append touch only the changed
-    * rows, the compaction only affected buckets.
-    */
   /** The shared two-generation corpus fixture + e3 diff, built ONCE per
     * (session, dir, splitAt) as REAL trees on disk (JVM-exit cleaned):
     * gen A drops the ≡5 (mod 13) class, gen B drops ≡4 (mod 9) and
@@ -1256,48 +1262,38 @@ object Dedup {
       (diff, genA, genB)
     }.asInstanceOf[(DataFrame, DataFrame, DataFrame)]
 
-  /** Derived gen-A payload frames shared by the census gates (d48
-    * fleet, d50 tenant): both otherwise recompute shingles, signatures,
-    * the winnowed selection, and the embedding membership join over the
-    * SAME fixture — one localCheckpoint per frame per session instead
-    * (round-16 ask #6, the cold-build consolidation). Returns
-    * (shingles A, simhash A, containment selection A, embeddings A).
+  /** A family's gen-A input over [[corpusGenFixture]], built ONCE per
+    * (session, dir) and shared by the diff-synced gates and the census
+    * gates (d48 fleet, d50 tenant): all of them otherwise recompute the
+    * same shingles, signatures, winnowed selection or embedding membership
+    * join — one localCheckpoint per family per session instead.
     */
-  /** The estate builds' shared containment parameters — ONE definition,
-    * so the (w, winnow) a census/takedown build fingerprints its
-    * selection with and the meta its save records can never drift
-    * (round-17 review: two saves recorded the DEFAULT meta while their
-    * selections came from independently hardcoded literals — consistent
-    * only by coincidence of constants).
+  private[graft] def genAInput(spark: SparkSession, dir: String,
+      fam: IndexFamily[_]): DataFrame =
+    graft.SessionCache.getOrElseUpdate(spark, ("genAInput", dir, fam.tag)) {
+      val (_, genA, _) = corpusGenFixture(spark, dir, gateSplit)
+      val payload = if (fam.idCol == "vec_id")
+        IndexFamily.restrict(fam, syncPayload(spark, dir, fam), genA) else genA
+      fam.input(payload, fam.params.toMap).localCheckpoint()
+    }
+
+  /** A family's gen-B sync payload: the gen-B documents for the text
+    * families, the prepared vectors (vec_id key) for the embedding family.
     */
-  private[graft] val estateContainW = 8
-  private[graft] val estateContainWinnow = 4
+  private def syncPayload(spark: SparkSession, dir: String,
+      fam: IndexFamily[_]): DataFrame =
+    if (fam.idCol == "vec_id")
+      Similarity.preparedEmbeddings(spark, dir).select("vec_id", "label", "v", "n")
+    else corpusGenFixture(spark, dir, gateSplit)._3
 
-  private[graft] def corpusGenDerived(spark: SparkSession, dir: String,
-      splitAt: Int): (DataFrame, DataFrame, DataFrame, DataFrame) =
-    graft.SessionCache.getOrElseUpdate(spark,
-        ("corpusGenDerived", dir, splitAt)) {
-      val (_, genA, _) = corpusGenFixture(spark, dir, splitAt)
-      val e = Similarity.preparedEmbeddings(spark, dir)
-        .select("vec_id", "label", "v", "n")
-      (shingleTableOf(genA).localCheckpoint(),
-        simhash64Of(genA).localCheckpoint(),
-        containmentSelection(genA, estateContainW, estateContainWinnow)
-          .localCheckpoint(),
-        e.join(genA.select(col("doc_id").as("vec_id")),
-          Seq("vec_id"), "left_semi").localCheckpoint())
-    }.asInstanceOf[(DataFrame, DataFrame, DataFrame, DataFrame)]
-
-  /** The per-family payloads one diff-driven estate sync fans to: each
-    * slot is (index table name, gen-B payload source) — documents for
-    * the text families, prepared vectors (vec_id key) for the embedding
-    * family. Absent ⇒ the family is not deployed.
+  /** The payloads one diff-driven estate sync fans to: `indexes` holds
+    * one (family, index table name, gen-B payload source) per deployed
+    * index family — documents for the text families, prepared vectors
+    * (vec_id key) for the embedding family; every other slot is
+    * (table, payload) or absent ⇒ that state class is not deployed.
     */
   final case class EstateSyncTargets(
-      nearDup: Option[(String, DataFrame)] = None,
-      simHash: Option[(String, DataFrame)] = None,
-      emb: Option[(String, DataFrame)] = None,
-      contain: Option[(String, DataFrame)] = None,
+      indexes: Seq[(IndexFamily[_], String, DataFrame)] = Nil,
       annStore: Option[(String, DataFrame)] = None,
       annPart: Option[(String, DataFrame)] = None,
       // the AGGREGATE state classes (round 15): labels requires the
@@ -1308,6 +1304,10 @@ object Dedup {
       labelThreshold: Double = 0.8,
       docStats: Option[(String, DataFrame)] = None,
       sketchCells: Option[(String, DataFrame)] = None)
+
+  private def nearDupTarget(
+      indexes: Seq[(IndexFamily[_], String, DataFrame)]): Option[(String, DataFrame)] =
+    indexes.collectFirst { case (f, t, p) if f eq IndexFamily.NearDup => (t, p) }
 
   /** DIFF-DRIVEN ESTATE SYNC — apply ONE e3 corpus diff to every
     * registered index family: `removed ∪ changed` tombstone out, a
@@ -1329,30 +1329,12 @@ object Dedup {
       .select(col("doc_id")).localCheckpoint()
     val came = diff.filter(col("status").isin("added", "changed"))
       .select(col("doc_id")).localCheckpoint()
-    targets.nearDup.foreach { case (t, docs) =>
-      removeFromNearDupIndex(spark, t, gone)
-      compactNearDupIndex(spark, t)
-      appendNearDupIndex(spark, t,
-        docs.join(came, Seq("doc_id"), "left_semi"))
-    }
-    targets.simHash.foreach { case (t, docs) =>
-      removeFromSimHashIndex(spark, t, gone)
-      compactSimHashIndex(spark, t)
-      appendSimHashIndex(spark, t,
-        simhash64Of(docs.join(came, Seq("doc_id"), "left_semi")))
-    }
-    targets.emb.foreach { case (t, vecs) =>
-      removeFromEmbIndex(spark, t, gone.select(col("doc_id").as("vec_id")))
-      compactEmbIndex(spark, t)
-      appendEmbIndex(spark, t,
-        vecs.join(came.select(col("doc_id").as("vec_id")),
-          Seq("vec_id"), "left_semi"))
-    }
-    targets.contain.foreach { case (t, docs) =>
-      removeFromContainIndex(spark, t, gone)
-      compactContainIndex(spark, t)
-      appendContainIndex(spark, t,
-        docs.join(came, Seq("doc_id"), "left_semi"))
+    targets.indexes.foreach { case (fam, t, payload) =>
+      IndexFamily.remove(spark, fam, t, gone)
+      val m = IndexFamily.meta(spark, t)
+      IndexFamily.compact(spark, fam, t, IndexFamily.Fleet, Some(m))
+      IndexFamily.appendPayload(spark, fam, t, IndexFamily.Fleet,
+        IndexFamily.restrict(fam, payload, came), Some(m))
     }
     // the vector STORE follows the same diff the text/vector indexes do
     // — takedown already reached it (td1/td2); now a corpus generation
@@ -1438,16 +1420,17 @@ object Dedup {
     // equals labelStateOf(gen B), which is exactly what the d44 oracle
     // recomputes.
     targets.labels.foreach { lt =>
-      val (idx, genB) = targets.nearDup.getOrElse(throw new
+      val (idx, genB) = nearDupTarget(targets.indexes).getOrElse(throw new
         IllegalArgumentException("EstateSyncTargets.labels requires the " +
-          "nearDup slot — the merge's delta pairs come from the synced index"))
+          "near-dup index — the merge's delta pairs come from the synced index"))
       spark.catalog.refreshTable(lt)
       val relabeled = removeFromLabelState(spark.table(lt), genB, gone,
         targets.labelThreshold)
       applyLabelRetraction(spark, lt, gone, relabeled)
       val cameDocs = genB.join(came, Seq("doc_id"), "left_semi")
         .localCheckpoint()
-      val pairs = deltaNearDups(cameDocs, loadNearDupIndex(spark, idx),
+      val pairs = deltaNearDups(cameDocs,
+          IndexFamily.load(spark, IndexFamily.NearDup, idx, IndexFamily.Fleet),
           targets.labelThreshold)
         .select(col("id_a"), col("id_b")).distinct()
       val changed = mergeLabelState(spark, spark.table(lt), pairs,
@@ -1455,131 +1438,6 @@ object Dedup {
           length(coalesce(col("text"), lit(""))).as("qlen")))
       applyLabelUpdates(spark, lt, changed)
     }
-  }
-
-  def diffSyncedDeltaNearDups(spark: SparkSession, dir: String,
-      splitAt: Int = 200, threshold: Double = 0.8): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val docs = Tables.documents(spark, dir).filter(col("text").isNotNull)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("diffSyncedIndex", dir, splitAt)) {
-      val (diff, genA, genB) = corpusGenFixture(spark, dir, splitAt)
-      val name = f"diffsync_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      // a crashed prior session's pending tombstones would hide rows
-      // from the rebuilt gen-A index (the diffSyncedAnnSearch rule)
-      dropTableAndLocation(spark, s"${name}_tombstones")
-      saveNearDupIndex(buildNearDupIndex(genA), name)
-      syncEstateWithDiff(spark, diff,
-        EstateSyncTargets(nearDup = Some((name, genB))))
-      loadNearDupIndex(spark, name)
-    }.asInstanceOf[NearDupIndex]
-    // slice the session-cached shingle table instead of re-tokenizing the
-    // shard every pass (the d13 convention — round 21; the semi-join
-    // keeps d36's text-bearing-docs-only universe, and shingles are
-    // per-doc functions, so the rows are identical)
-    deltaNearDupsFromShingles(
-      persistedShingleTable(spark, dir)
-        .join(docs.filter(bucket >= splitAt).select(col("doc_id")),
-          Seq("doc_id"), "left_semi"),
-      index, threshold)
-  }
-
-  /** D37 — the d36 discipline for the SIMHASH family: build the banded
-    * signature index over gen A, sync it with the SAME e3 diff through
-    * [[syncEstateWithDiff]] (changed docs' signatures recompute from the
-    * amended gen-B text), serve the d15 delta of the bucket ≥ splitAt
-    * shard. The oracle recomputes the delta over gen B ALONE — a
-    * leftover dropped doc, a stale unamended signature, or a missed
-    * addition hash-mismatches. Both sides text-bearing docs only (the
-    * tree fixture's domain).
-    */
-  def diffSyncedDeltaSimhash(spark: SparkSession, dir: String,
-      splitAt: Int = 200, maxHamming: Int = 3): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val docs = Tables.documents(spark, dir).filter(col("text").isNotNull)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("diffSyncedSimhash", dir, splitAt)) {
-      val (diff, genA, genB) = corpusGenFixture(spark, dir, splitAt)
-      val name = f"diffsync_sh_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      // a crashed prior session's pending tombstones would hide rows
-      // from the rebuilt gen-A index (the diffSyncedAnnSearch rule)
-      dropTableAndLocation(spark, s"${name}_tombstones")
-      saveSimHashIndex(buildSimHashIndex(simhash64Of(genA)), name)
-      syncEstateWithDiff(spark, diff,
-        EstateSyncTargets(simHash = Some((name, genB))))
-      loadSimHashIndex(spark, name)
-    }.asInstanceOf[SimHashIndex]
-    // slice the session-cached signature table instead of re-signing the
-    // shard every pass (the d15 convention — round 21; the semi-join
-    // keeps d37's text-bearing-docs-only universe, and signatures are
-    // per-doc functions, so the rows are identical)
-    deltaSimhashPairs(
-      simhash64Cached(spark, dir)
-        .join(docs.filter(bucket >= splitAt).select(col("doc_id")),
-          Seq("doc_id"), "left_semi"),
-      index, maxHamming)
-  }
-
-  /** D38 — the d36 discipline for the EMBEDDING family: the index holds
-    * gen A's vectors (vectors are keyed by the same id space as the
-    * corpus — verified subset), the diff drives tombstone + compaction +
-    * re-append from the prepared-vector payload. A `changed` doc's
-    * vector re-appends VALUE-IDENTICAL here (the synthetic embedding
-    * table is not text-derived), so the changed class exercises the
-    * remove/re-append machinery while the membership classes
-    * (added/removed) change the served output — the oracle recomputes
-    * the d17 delta over gen-B MEMBERSHIP alone.
-    */
-  def diffSyncedDeltaEmbedding(spark: SparkSession, dir: String,
-      splitAt: Int = 200, threshold: Double = 0.35): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    val e = Similarity.preparedEmbeddings(spark, dir)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("diffSyncedEmb", dir, splitAt)) {
-      val (diff, genA, _) = corpusGenFixture(spark, dir, splitAt)
-      val name = f"diffsync_em_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      // a crashed prior session's pending tombstones would hide rows
-      // from the rebuilt gen-A index (the diffSyncedAnnSearch rule)
-      dropTableAndLocation(spark, s"${name}_tombstones")
-      saveEmbIndex(buildEmbIndex(
-        e.join(genA.select(col("doc_id").as("vec_id")),
-          Seq("vec_id"), "left_semi")), name)
-      syncEstateWithDiff(spark, diff,
-        EstateSyncTargets(emb = Some((name, e))))
-      loadEmbIndex(spark, name)
-    }.asInstanceOf[EmbIndex]
-    deltaEmbeddingPairs(e.filter(bucket >= splitAt), index, threshold)
-  }
-
-  /** D39 — the d36 discipline for the CONTAINMENT family, the one whose
-    * df CAP makes sync hardest: removing gen A's dropped docs and
-    * re-fingerprinting the amended ones must leave the persisted
-    * per-digest counts equal to a from-scratch gen-B build (the
-    * compaction's df rebuild + the append's increment rows deliver it).
-    * The oracle recomputes the WHOLE d20b chain over gen B alone — df
-    * census included, so a digest whose count the sync corrupted flips
-    * the cap and hash-mismatches.
-    */
-  def diffSyncedDeltaContainment(spark: SparkSession, dir: String,
-      splitAt: Int = 200, w: Int = 8, winnow: Int = 4, minShared: Int = 2,
-      dfCap: Int = 64, threshold: Double = 0.9): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sel = containmentSelCached(spark, dir, w, winnow)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("diffSyncedContain", dir, splitAt)) {
-      val (diff, genA, genB) = corpusGenFixture(spark, dir, splitAt)
-      val name = f"diffsync_ct_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      // a crashed prior session's pending tombstones would hide rows
-      // from the rebuilt gen-A index (the diffSyncedAnnSearch rule)
-      dropTableAndLocation(spark, s"${name}_tombstones")
-      saveContainIndex(buildContainIndex(genA, w, winnow), name,
-        w = w, winnow = winnow)
-      syncEstateWithDiff(spark, diff,
-        EstateSyncTargets(contain = Some((name, genB))))
-      loadContainIndex(spark, name)
-    }
-    deltaContainmentFromSelection(sel.filter(bucket >= splitAt), index,
-      minShared, dfCap, threshold)
   }
 
   /** D40 — the d36 discipline for the VECTOR STORE (the estate-sync slot
@@ -1634,15 +1492,13 @@ object Dedup {
       val h = f"${dir.hashCode & 0xffffffffL}%x"
       val idx = s"diffsync_lbidx_${splitAt}_$h"
       val lt = s"diffsync_lb_${splitAt}_$h"
-      // the index tombstones too: stale ones from a crashed session
-      // would hide rows from the rebuilt gen-A index and starve the
-      // merge of its delta pairs
-      Seq(lt, s"${lt}__gen", s"${idx}_tombstones")
-        .foreach(dropTableAndLocation(spark, _))
+      // (the index save drops stale tombstones, which would hide rows
+      // from the rebuilt gen-A index and starve the merge of its pairs)
+      Seq(lt, s"${lt}__gen").foreach(dropTableAndLocation(spark, _))
       saveNearDupIndex(buildNearDupIndex(genA), idx)
       saveLabelState(spark, lt, labelStateOf(genA, threshold))
       syncEstateWithDiff(spark, diff, EstateSyncTargets(
-        nearDup = Some((idx, genB)), labels = Some(lt),
+        indexes = Seq((IndexFamily.NearDup, idx, genB)), labels = Some(lt),
         labelThreshold = threshold))
       spark.table(lt).localCheckpoint()
     }.asInstanceOf[DataFrame]
@@ -1790,29 +1646,22 @@ object Dedup {
     * so a family the single fan-out call misses — or syncs wrong — fails
     * the gate. Per-family value identities are d36–d46.
     */
-  def estateSyncCensus(spark: SparkSession, dir: String,
-      splitAt: Int = 200): DataFrame = {
+  def estateSyncCensus(spark: SparkSession, dir: String): DataFrame = {
     val h = f"${dir.hashCode & 0xffffffffL}%x"
     val state = graft.SessionCache.getOrElseUpdate(spark,
-        ("estateSyncCensus", dir, splitAt)) {
-      val (diff, genA, genB) = corpusGenFixture(spark, dir, splitAt)
-      val e = Similarity.preparedEmbeddings(spark, dir)
-        .select("vec_id", "label", "v", "n")
-      val (shA, simA, selA, eA) = corpusGenDerived(spark, dir, splitAt)
-      val nm = Map("nd" -> s"esync_nd_$h", "sh" -> s"esync_sh_$h",
-        "emb" -> s"esync_em_$h", "ct" -> s"esync_ct_$h",
-        "ann" -> s"esync_an_$h", "annp" -> s"esync_ap_$h",
-        "lab" -> s"esync_lb_$h", "st" -> s"esync_st_$h",
-        "sk" -> s"esync_sk_$h")
+        ("estateSyncCensus", dir)) {
+      val (diff, genA, genB) = corpusGenFixture(spark, dir, gateSplit)
+      val e = syncPayload(spark, dir, IndexFamily.Emb)
+      val eA = genAInput(spark, dir, IndexFamily.Emb)
+      val nm = IndexFamily.all.map(f => f.short -> s"esync_${f.short}_$h").toMap ++
+        Map("ann" -> s"esync_an_$h", "annp" -> s"esync_ap_$h",
+          "lab" -> s"esync_lb_$h", "st" -> s"esync_st_$h",
+          "sk" -> s"esync_sk_$h")
       // fresh state every session: the gate measures one full lifecycle
       nm.values.toSeq.flatMap(n => estateTableSuffixes.map(s => s"$n$s"))
         .foreach(t => dropTableAndLocation(spark, t))
-      saveNearDupIndex(NearDupIndex(bandedKeys(shA, 3, 3), shA, 3, 3),
-        nm("nd"))
-      saveSimHashIndex(buildSimHashIndex(simA), nm("sh"))
-      saveEmbIndex(buildEmbIndex(eA), nm("emb"))
-      saveContainIndex(containIndexFromSelection(selA), nm("ct"),
-        w = estateContainW, winnow = estateContainWinnow)
+      IndexFamily.all.foreach(f => IndexFamily.save(spark, f, nm(f.short),
+        IndexFamily.Fleet, genAInput(spark, dir, f)))
       Similarity.saveAnnIndex(spark, nm("ann"), eA)
       Similarity.savePartitionedAnnStore(spark, nm("annp"), eA)
       saveLabelState(spark, nm("lab"), labelStateOf(genA))
@@ -1823,10 +1672,8 @@ object Dedup {
         .write.saveAsTable(nm("sk"))
       // ONE call fans the whole estate
       syncEstateWithDiff(spark, diff, EstateSyncTargets(
-        nearDup = Some((nm("nd"), genB)),
-        simHash = Some((nm("sh"), genB)),
-        emb = Some((nm("emb"), e)),
-        contain = Some((nm("ct"), genB)),
+        indexes = IndexFamily.all.map(f =>
+          (f, nm(f.short), syncPayload(spark, dir, f))),
         annStore = Some((nm("ann"), e)),
         annPart = Some((nm("annp"), e)),
         labels = Some(nm("lab")),
@@ -1846,21 +1693,16 @@ object Dedup {
         groupKeys: Seq[String]): DataFrame =
       groupCensusRow(state, df, liveAgg,
         genB.select(groupKeys.map(col): _*).distinct(), groupKeys)
-    census("ann_part_store",
-        Similarity.loadPartitionedAnnStore(spark, names("annp")), "vec_id")
+    IndexFamily.all.map(f => census(s"${f.tag}_index",
+        IndexFamily.served(spark, f, names(f.short), IndexFamily.Fleet), f.idCol))
+      .reduce(_ unionByName _)
+      .unionByName(census("ann_part_store",
+        Similarity.loadPartitionedAnnStore(spark, names("annp")), "vec_id"))
       .unionByName(census("ann_store",
         Similarity.loadAnnIndex(spark, names("ann")).vectors, "vec_id"))
-      .unionByName(census("contain_index",
-        loadContainIndex(spark, names("ct")).sets, "doc_id"))
       .unionByName(groupCensus("doc_stats", spark.table(names("st")),
         sum(col("n")), Seq("lang", "source")))
-      .unionByName(census("emb_index",
-        loadEmbIndex(spark, names("emb")).vectors, "vec_id"))
       .unionByName(census("labels", spark.table(names("lab")), "doc_id"))
-      .unionByName(census("neardup_index",
-        loadNearDupIndex(spark, names("nd")).shingles, "doc_id"))
-      .unionByName(census("simhash_index",
-        loadSimHashIndex(spark, names("sh")).banded, "doc_id"))
       .unionByName(groupCensus("sketch_cells", spark.table(names("sk")),
         count(lit(1)), Seq("lang")))
       .orderBy("state")
@@ -1870,17 +1712,14 @@ object Dedup {
     * to — [[EstateSyncTargets]]'s counterpart for the d31/d33/d34/d35
     * layouts plus the s20 two-level store ([[Takedown.TenantTargets]]
     * is the deletion-list analogue; this is the generation-swap one).
-    * Slots carry (table, gen-B payload): DOCUMENTS for nearDup/simHash
-    * AND contain (the sync re-fingerprints appended docs itself under
-    * the w/winnow the family's `_meta` table recorded at save time —
-    * the fleet contract), prepared vectors (vec_id key) for
-    * emb/annStore. Absent ⇒ the family is not deployed for this estate.
+    * `indexes` carries (family, table, gen-B payload) — DOCUMENTS for the
+    * text families (the sync re-derives appended rows itself under the
+    * parameters the family's `_meta` table recorded at save time — the
+    * fleet contract), prepared vectors (vec_id key) for the embedding
+    * family and annStore. Absent ⇒ not deployed for this estate.
     */
   final case class TenantEstateSyncTargets(
-      nearDup: Option[(String, DataFrame)] = None,
-      simHash: Option[(String, DataFrame)] = None,
-      emb: Option[(String, DataFrame)] = None,
-      contain: Option[(String, DataFrame)] = None,
+      indexes: Seq[(IndexFamily[_], String, DataFrame)] = Nil,
       annStore: Option[(String, DataFrame)] = None,
       // the tenant-partitioned AGGREGATE state classes (td2's other two
       // — the sync now reaches every class a tenant takedown does):
@@ -1897,8 +1736,8 @@ object Dedup {
     * of a corpus diff fans across that tenant's d31/d33/d34/d35 index
     * partitions and its s20 store subtree, while every other tenant's
     * files never move and their pending tombstones survive (the
-    * per-family compactTenant* contracts, TenantEstateSyncSpec pins the
-    * mtimes). Diff rows OUTSIDE the tenant are dropped, not fanned —
+    * tenant-scope [[IndexFamily.compact]] contract, TenantEstateSyncSpec
+    * pins the mtimes). Diff rows OUTSIDE the tenant are dropped, not fanned —
     * a per-tenant corpus generation swap must not reach into another
     * tenant's estate (isolation is the layout's point), so after
     * syncing tenant A alone, tenant B still serves its OLD generation
@@ -1928,12 +1767,9 @@ object Dedup {
     // under the wrong tenant assignment; the rows are cached so each
     // append arm reads the 1-row table once, not twice (and a streaming
     // micro-batch doesn't re-pay the catalog round-trips)
-    val metas: Map[String, org.apache.spark.sql.Row] =
-      (Seq(targets.nearDup, targets.simHash, targets.emb, targets.contain)
-        .flatten ++ targets.annStore)
-        .map { case (t, _) =>
-          t -> requireTenantMeta(spark, t, nTenants)
-        }.toMap
+    val metas: Map[String, IndexFamily.Meta] =
+      (targets.indexes.map(_._2) ++ targets.annStore.map(_._1))
+        .map(t => t -> requireTenantMeta(spark, t, nTenants)).toMap
     // skip the remove+compact (resp. append) phase outright when the
     // tenant's diff slice has nothing for it: an empty tombstone batch
     // would still trigger a full tenant-partition rewrite
@@ -1942,95 +1778,15 @@ object Dedup {
     if (!hasGone && !hasCame) return
     val goneVec = gone.select(col("doc_id").as("vec_id"))
     val cameVec = came.select(col("doc_id").as("vec_id"))
-    // .toLong: the saved tables derive tenant via pmod over a Long key
-    // (LongType); an Int literal rides Spark's implicit upcast today but
-    // would throw under a stricter store-assignment policy (r16 advice)
-    def withTenant(df: DataFrame) = df.withColumn("tenant", lit(tenant.toLong))
-    targets.nearDup.foreach { case (t, docs) =>
+    val scope = IndexFamily.Tenant(tenant, nTenants)
+    targets.indexes.foreach { case (fam, t, payload) =>
       if (hasGone) {
-        removeFromNearDupIndex(spark, t, gone)
-        compactTenantNearDupIndex(spark, t, tenant, nTenants)
+        IndexFamily.remove(spark, fam, t, gone)
+        IndexFamily.compact(spark, fam, t, scope, Some(metas(t)))
       }
-      if (hasCame) {
-        val sh = shingleTableOf(docs.join(came, Seq("doc_id"), "left_semi"))
-          .localCheckpoint() // feeds both appends
-        // banding/bucket parameters come from the meta the save wrote —
-        // never re-hardcoded here (round-16 ask #3)
-        val m = metas(t)
-        val bk = m.getAs[Int]("buckets")
-        appendTenantBucketedTable(withTenant(bandedKeys(sh,
-            m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"))),
-          s"${t}_banded", bk, Seq("band", "bkey"))
-        appendTenantBucketedTable(withTenant(sh), s"${t}_shingles",
-          bk, Seq("doc_id"))
-        clearTombstones(spark, s"${t}_tombstones", came, "doc_id")
-      }
-    }
-    targets.simHash.foreach { case (t, docs) =>
-      if (hasGone) {
-        removeFromSimHashIndex(spark, t, gone)
-        compactTenantSimHashIndex(spark, t, tenant, nTenants)
-      }
-      if (hasCame) {
-        appendTenantBucketedTable(
-          withTenant(simhashBanded(simhash64Of(
-            docs.join(came, Seq("doc_id"), "left_semi")))),
-          s"${t}_banded", metas(t).getAs[Int]("buckets"),
-          Seq("b", "chunk"))
-        clearTombstones(spark, s"${t}_tombstones", came, "doc_id")
-      }
-    }
-    targets.emb.foreach { case (t, vecs) =>
-      if (hasGone) {
-        removeFromEmbIndex(spark, t, goneVec)
-        compactTenantEmbIndex(spark, t, tenant, nTenants)
-      }
-      if (hasCame) {
-        val nv = vecs.join(cameVec, Seq("vec_id"), "left_semi")
-          .localCheckpoint() // feeds both appends
-        val m = metas(t)
-        val bk = m.getAs[Int]("buckets")
-        appendTenantBucketedTable(withTenant(embBandedOf(nv,
-            m.getAs[Int]("bands"), m.getAs[Int]("planes_per_band"))),
-          s"${t}_banded", bk, Seq("label", "band", "bucket"))
-        appendTenantBucketedTable(
-          withTenant(nv.select("label", "vec_id", "v", "n")),
-          s"${t}_vectors", bk, Seq("vec_id"))
-        clearTombstones(spark, s"${t}_tombstones", cameVec, "vec_id")
-      }
-    }
-    targets.contain.foreach { case (t, docs) =>
-      if (hasGone) {
-        removeFromContainIndex(spark, t, gone)
-        compactTenantContainIndex(spark, t, tenant, nTenants)
-      }
-      if (hasCame) {
-        // the slot carries gen-B DOCUMENTS (the fleet EstateSyncTargets
-        // contract): w/winnow come from the meta the save wrote, so the
-        // appended docs can never fingerprint under drifted parameters
-        // (containmentSelection is per-doc — restricting docs before
-        // selection equals restricting the selection)
-        val m = metas(t)
-        val bk = m.getAs[Int]("buckets")
-        val newSel = containmentSelection(
-          docs.join(came, Seq("doc_id"), "left_semi"),
-          m.getAs[Int]("w"), m.getAs[Int]("winnow")).localCheckpoint()
-        val fp = withTenant(
-          newSel.select(col("doc_id"), explode(col("fps")).as("d")))
-          .localCheckpoint() // feeds the fp append AND the df increment
-        appendTenantBucketedTable(fp, s"${t}_fp", bk, Seq("d"))
-        // df INCREMENT rows — loadTenantContainIndex sums per digest,
-        // and the next compaction collapses the tenant's rows back to
-        // one per digest
-        appendTenantBucketedTable(
-          fp.groupBy(col("tenant"), col("d")).agg(count(lit(1)).as("n"))
-            .select(col("d"), col("n"), col("tenant")),
-          s"${t}_df", bk, Seq("d"))
-        appendTenantBucketedTable(
-          withTenant(newSel.select(col("doc_id"), col("dall"))),
-          s"${t}_sets", bk, Seq("doc_id"))
-        clearTombstones(spark, s"${t}_tombstones", came, "doc_id")
-      }
+      if (hasCame)
+        IndexFamily.appendPayload(spark, fam, t, scope,
+          IndexFamily.restrict(fam, payload, came), Some(metas(t)))
     }
     targets.annStore.foreach { case (t, vecs) =>
       if (hasGone) {
@@ -2047,10 +1803,10 @@ object Dedup {
     // partition (the retractTenantLabelState / rebuildTenantSketchCells
     // mechanics, diff-driven instead of takedown-driven).
     targets.labels.foreach { lt =>
-      val (idx, genB) = targets.nearDup.getOrElse(throw new
+      val (idx, genB) = nearDupTarget(targets.indexes).getOrElse(throw new
         IllegalArgumentException("TenantEstateSyncTargets.labels requires " +
-          "the nearDup slot — the merge's delta pairs come from the synced " +
-          "tenant index"))
+          "the near-dup index — the merge's delta pairs come from the " +
+          "synced tenant index"))
       val genBT = genB.filter(inTenant).localCheckpoint()
       spark.catalog.refreshTable(lt)
       val slice = spark.table(lt).filter(col("tenant") === tenant)
@@ -2082,7 +1838,7 @@ object Dedup {
         val cameDocs = genBT.join(came, Seq("doc_id"), "left_semi")
           .localCheckpoint()
         val pairs = deltaNearDups(cameDocs,
-            loadTenantNearDupIndex(spark, idx, tenant),
+            IndexFamily.load(spark, IndexFamily.NearDup, idx, scope),
             targets.labelThreshold)
           .select(col("id_a"), col("id_b")).distinct()
         val changed = mergeLabelState(spark, retracted, pairs,
@@ -2124,165 +1880,6 @@ object Dedup {
     }
   }
 
-  /** Build-once state for d49/d49b: the tenant-partitioned near-dup
-    * index over GEN A (both tenants), then `syncTenant`'s partition
-    * alone synced to gen B through [[syncTenantEstateWithDiff]] — so
-    * one table serves gen B for the synced tenant and gen A for every
-    * other, which is exactly what the two gates' oracles pin.
-    */
-  private[graft] def tenantDiffSyncedIndex(spark: SparkSession, dir: String,
-      nTenants: Int, splitAt: Int, syncTenant: Int = 0): String =
-    graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantDiffSyncedIndex", dir, nTenants, splitAt, syncTenant)) {
-      val (diff, genA, genB) = corpusGenFixture(spark, dir, splitAt)
-      val t = f"tenant_ds_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      // a crashed prior session's pending tombstones would hide rows
-      // from the rebuilt gen-A index (the diffSyncedAnnSearch rule);
-      // ditto its mid-compaction temps
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      Seq("banded", "shingles").foreach(h =>
-        dropTenantCompactionTemps(spark, s"${t}_$h", nTenants))
-      saveTenantNearDupTables(shingleTableOf(genA), t, nTenants)
-      syncTenantEstateWithDiff(spark, diff, syncTenant, nTenants,
-        TenantEstateSyncTargets(nearDup = Some((t, genB))))
-      t
-    }.asInstanceOf[String]
-
-  /** D49 — the d36 diff-sync discipline composed with d31's tenant
-    * isolation: the tenant-partitioned near-dup index builds over GEN A
-    * (both tenants), ONE tenant's slice of the e3 diff syncs that
-    * tenant's partition alone, and the gate serves the synced tenant's
-    * delta. Oracle: the d36 gen-B delta SQL with both endpoints in the
-    * tenant — a leftover gen-A row, a stale unamended shingle, or a
-    * missed addition inside the tenant's partition hash-mismatches.
-    * Called with `tenant` ≠ the synced tenant (d49b), the SAME table
-    * must serve gen A exactly — the isolation contract as an oracle,
-    * not just an mtime pin.
-    */
-  def tenantDiffSyncedNearDups(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200,
-      threshold: Double = 0.8): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sh = persistedShingleTable(spark, dir)
-    val name = tenantDiffSyncedIndex(spark, dir, nTenants, splitAt)
-    deltaNearDupsFromShingles(
-      sh.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantNearDupIndex(spark, name, tenant), threshold)
-  }
-
-  /** d51/d51b's build-once state — [[tenantDiffSyncedIndex]]'s SIMHASH
-    * twin: the tenant-partitioned banded signature table over gen A,
-    * tenant `syncTenant` alone synced to gen B (changed docs re-SIGN
-    * from the amended gen-B text inside the tenant's partition).
-    */
-  private[graft] def tenantDiffSyncedShIndex(spark: SparkSession,
-      dir: String, nTenants: Int, splitAt: Int,
-      syncTenant: Int = 0): String =
-    graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantDiffSyncedSh", dir, nTenants, splitAt, syncTenant)) {
-      val (diff, genA, genB) = corpusGenFixture(spark, dir, splitAt)
-      val t = f"tenant_dsh_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      dropTenantCompactionTemps(spark, s"${t}_banded", nTenants)
-      saveTenantSimHashTables(simhash64Of(genA), t, nTenants)
-      syncTenantEstateWithDiff(spark, diff, syncTenant, nTenants,
-        TenantEstateSyncTargets(simHash = Some((t, genB))))
-      t
-    }.asInstanceOf[String]
-
-  /** D51 — the d49 discipline for the SIMHASH family (d37 composed with
-    * d33's tenant isolation): the tenant-partitioned banded index over
-    * gen A, ONE tenant synced, that tenant's d15 delta served. Oracle =
-    * d37's gen-B simhash delta tenant-restricted; with `tenant` ≠ the
-    * synced one (d51b) the SAME table must serve gen A exactly — a
-    * stale unamended signature, a leftover drop, or a cross-tenant leak
-    * hash-mismatches on one side or the other.
-    */
-  def tenantDiffSyncedSimhash(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200,
-      maxHamming: Int = 3): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sigs = simhash64Cached(spark, dir)
-    val name = tenantDiffSyncedShIndex(spark, dir, nTenants, splitAt)
-    deltaSimhashPairs(
-      sigs.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantSimHashIndex(spark, name, tenant), maxHamming)
-  }
-
-  /** d52/d52b's build-once state — the EMBEDDING twin: both tenant-
-    * partitioned halves (banded LSH rows + verification vectors) over
-    * gen A's membership, one tenant synced to gen B (vectors are not
-    * text-derived, so the changed class re-appends value-identically —
-    * membership classes change the served output, the d38 rule).
-    */
-  private[graft] def tenantDiffSyncedEmIndex(spark: SparkSession,
-      dir: String, nTenants: Int, splitAt: Int,
-      syncTenant: Int = 0): String =
-    graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantDiffSyncedEm", dir, nTenants, splitAt, syncTenant)) {
-      val e = Similarity.preparedEmbeddings(spark, dir)
-      val (diff, genA, _) = corpusGenFixture(spark, dir, splitAt)
-      val t = f"tenant_dse_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      Seq("banded", "vectors").foreach(h =>
-        dropTenantCompactionTemps(spark, s"${t}_$h", nTenants))
-      saveTenantEmbTables(
-        e.join(genA.select(col("doc_id").as("vec_id")),
-          Seq("vec_id"), "left_semi"), t, nTenants)
-      syncTenantEstateWithDiff(spark, diff, syncTenant, nTenants,
-        TenantEstateSyncTargets(emb = Some((t, e))))
-      t
-    }.asInstanceOf[String]
-
-  /** D52 — the d49 discipline for the EMBEDDING family (d38 composed
-    * with d34's tenant isolation); oracle = d38's gen-B-membership
-    * delta tenant-restricted, and d52b pins the un-synced tenant at
-    * gen-A membership over the SAME table.
-    */
-  def tenantDiffSyncedEmbedding(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200,
-      threshold: Double = 0.35): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    val e = Similarity.preparedEmbeddings(spark, dir)
-    val name = tenantDiffSyncedEmIndex(spark, dir, nTenants, splitAt)
-    deltaEmbeddingPairs(
-      e.filter(bucket >= splitAt &&
-        pmod(col("vec_id"), lit(nTenants)) === tenant),
-      loadTenantEmbIndex(spark, name, tenant), threshold)
-  }
-
-  /** D53 — the d49 discipline for the CONTAINMENT family, the last
-    * cell of the 4-family × 2-side tenant-sync isolation matrix: the
-    * SHARED synced estate's three containment tables hold gen B in
-    * tenant 0's partitions after the fan, and the gate serves the
-    * tenant's bucket ≥ splitAt delta against them — df cap included, so
-    * a per-digest count the sync corrupted flips the cap and
-    * hash-mismatches (the d39 stake, tenant-scoped; oracle = d39's
-    * gen-B containment chain tenant-restricted). With `tenant` = 1
-    * (d53b) the SAME tables must serve gen A exactly — isolation as a
-    * content-level serving oracle, not just the d50 census counts.
-    */
-  def tenantDiffSyncedContainment(spark: SparkSession, dir: String,
-      tenant: Int = 0, splitAt: Int = 200, nTenants: Int = 2,
-      minShared: Int = 2, dfCap: Int = 64,
-      threshold: Double = 0.9): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val (names, _, _, _) = tenantSyncedEstate(spark, dir, splitAt, nTenants)
-    // the delta side fingerprints under the INDEX's saved (w, winnow) —
-    // read from its meta, never a caller parameter (a drifted value
-    // would serve a silently near-empty pair set instead of refusing)
-    val m = requireTenantMeta(spark, names("ct"), nTenants)
-    val sel = containmentSelCached(spark, dir,
-      m.getAs[Int]("w"), m.getAs[Int]("winnow"))
-    deltaContainmentFromSelection(
-      sel.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantContainIndex(spark, names("ct"), tenant), minShared, dfCap,
-      threshold)
-  }
-
   /** D54 — the d40 serving contract tenant-scoped: exact brute-force
     * k-NN served from the SHARED synced estate's s20 two-level store,
     * one tenant's partition subtree — probes are the tenant's own first
@@ -2294,9 +1891,9 @@ object Dedup {
     * hash-mismatches on one side or the other.
     */
   def tenantSyncedAnnSearch(spark: SparkSession, dir: String,
-      tenant: Int = 0, splitAt: Int = 200, nTenants: Int = 2,
+      tenant: Int = 0, nTenants: Int = 2,
       nProbes: Int = 10, k: Int = 10): DataFrame = {
-    val (names, _, _, _) = tenantSyncedEstate(spark, dir, splitAt, nTenants)
+    val (names, _, _, _) = tenantSyncedEstate(spark, dir, nTenants)
     val store = Similarity.loadTenantAnnStore(spark, names("ann"), tenant)
     val probes = store
       .filter(col("vec_id") < lit(nProbes.toLong * nTenants))
@@ -2317,47 +1914,42 @@ object Dedup {
   /** Build-once SHARED synced tenant estate: all seven tenant-
     * partitioned state classes over gen A (both tenants), tenant 0
     * synced to gen B by ONE [[syncTenantEstateWithDiff]] fan. d50
-    * censuses it; d53/d53b serve the containment delta from its ct
-    * tables; d54/d54b serve exact k-NN from its s20 store — the serving
-    * oracles and the census amortize ONE cold build (round-16 asks #1,
-    * #2, #6). Returns (table names, removed ids, gen A, gen B).
+    * censuses it; the tenant diff-synced gates (d49/d51/d52/d53 and
+    * their `b` twins) serve its index families and d54/d54b exact k-NN
+    * from its s20 store — the serving oracles and the census amortize
+    * ONE cold build (round-16 asks #1, #2, #6). Returns (table names,
+    * removed ids, gen A, gen B).
     */
   private[graft] def tenantSyncedEstate(spark: SparkSession, dir: String,
-      splitAt: Int = 200, nTenants: Int = 2):
+      nTenants: Int = 2):
       (Map[String, String], DataFrame, DataFrame, DataFrame) = {
     val h = f"${dir.hashCode & 0xffffffffL}%x"
     graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantEstateSyncCensus", dir, splitAt, nTenants)) {
-      val (diff, genA, genB) = corpusGenFixture(spark, dir, splitAt)
-      val e = Similarity.preparedEmbeddings(spark, dir)
-        .select("vec_id", "label", "v", "n")
-      val (shA, simA, selA, eA) = corpusGenDerived(spark, dir, splitAt)
-      val nm = Map("nd" -> s"tesync_nd_$h", "sh" -> s"tesync_sh_$h",
-        "emb" -> s"tesync_em_$h", "ct" -> s"tesync_ct_$h",
-        "ann" -> s"tesync_an_$h", "lab" -> s"tesync_lb_$h",
-        "sk" -> s"tesync_sk_$h")
+        ("tenantEstateSyncCensus", dir, nTenants)) {
+      val (diff, genA, genB) = corpusGenFixture(spark, dir, gateSplit)
+      val e = syncPayload(spark, dir, IndexFamily.Emb)
+      val nm = IndexFamily.all.map(f => f.short -> s"tesync_${f.short}_$h").toMap ++
+        Map("ann" -> s"tesync_an_$h", "lab" -> s"tesync_lb_$h",
+          "sk" -> s"tesync_sk_$h")
       // fresh state every session: the gate measures one full lifecycle
       nm.values.toSeq.flatMap(n => estateTableSuffixes.map(s => s"$n$s"))
         .foreach { t =>
           dropTableAndLocation(spark, t)
           dropTenantCompactionTemps(spark, t, nTenants)
         }
-      saveTenantNearDupTables(shA, nm("nd"), nTenants)
-      saveTenantSimHashTables(simA, nm("sh"), nTenants)
-      saveTenantEmbTables(eA, nm("emb"), nTenants)
-      saveTenantContainTables(selA, nm("ct"), nTenants,
-        w = estateContainW, winnow = estateContainWinnow)
-      Similarity.saveTenantAnnStore(spark, nm("ann"), eA, nTenants)
+      val scope = IndexFamily.Tenant(0, nTenants)
+      IndexFamily.all.foreach(f => IndexFamily.save(spark, f, nm(f.short),
+        scope, genAInput(spark, dir, f)))
+      Similarity.saveTenantAnnStore(spark, nm("ann"),
+        genAInput(spark, dir, IndexFamily.Emb), nTenants)
       saveTenantLabelState(spark, nm("lab"), genA, nTenants)
       saveTenantSketchCells(spark, nm("sk"), genA, nTenants)
       // ONE call fans tenant 0's whole estate (all SEVEN td2 state
       // classes); tenant 1 never moves
       syncTenantEstateWithDiff(spark, diff, 0, nTenants,
         TenantEstateSyncTargets(
-          nearDup = Some((nm("nd"), genB)),
-          simHash = Some((nm("sh"), genB)),
-          emb = Some((nm("emb"), e)),
-          contain = Some((nm("ct"), genB)),
+          indexes = IndexFamily.all.map(f =>
+            (f, nm(f.short), syncPayload(spark, dir, f))),
           annStore = Some((nm("ann"), e)),
           labels = Some(nm("lab")),
           sketchCells = Some((nm("sk"), genB))))
@@ -2383,9 +1975,8 @@ object Dedup {
     * that leaked into tenant 1's partition shows up as a count drop).
     */
   def tenantEstateSyncCensus(spark: SparkSession, dir: String,
-      splitAt: Int = 200, nTenants: Int = 2): DataFrame = {
-    val (names, removed, genA, genB) =
-      tenantSyncedEstate(spark, dir, splitAt, nTenants)
+      nTenants: Int = 2): DataFrame = {
+    val (names, removed, genA, genB) = tenantSyncedEstate(spark, dir, nTenants)
     val rmVec = removed.select(col("doc_id").as("vec_id"))
     // one-scan census per class × tenant (round 21 — see idCensusRow)
     def census(st: String, tenant: Int, df: DataFrame,
@@ -2408,18 +1999,14 @@ object Dedup {
           col("n_live"), col("n_refs"))
     }
     (0 until nTenants).map { tn =>
-      census("ann_store", tn,
-          Similarity.loadTenantAnnStore(spark, names("ann"), tn), "vec_id")
-        .unionByName(census("contain_index", tn,
-          loadTenantContainIndex(spark, names("ct"), tn).sets, "doc_id"))
-        .unionByName(census("emb_index", tn,
-          loadTenantEmbIndex(spark, names("emb"), tn).vectors, "vec_id"))
+      IndexFamily.all.map(f => census(s"${f.tag}_index", tn,
+          IndexFamily.served(spark, f, names(f.short),
+            IndexFamily.Tenant(tn, nTenants)), f.idCol))
+        .reduce(_ unionByName _)
+        .unionByName(census("ann_store", tn,
+          Similarity.loadTenantAnnStore(spark, names("ann"), tn), "vec_id"))
         .unionByName(census("labels", tn,
           loadTenantLabelState(spark, names("lab"), tn), "doc_id"))
-        .unionByName(census("neardup_index", tn,
-          loadTenantNearDupIndex(spark, names("nd"), tn).shingles, "doc_id"))
-        .unionByName(census("simhash_index", tn,
-          loadTenantSimHashIndex(spark, names("sh"), tn).banded, "doc_id"))
         .unionByName(cellCensus(tn))
     }.reduce(_ unionByName _)
       .orderBy("state", "tenant")
@@ -2457,7 +2044,7 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("cluster"), col("doc_id")).as("cluster"), col("qlen"))
       .withColumn("tenant", pmod(col("doc_id"), lit(nTenants)))
-    saveTenantBucketedTable(labels, table, buckets, Seq("cluster"))
+    saveBucketedTable(labels, table, buckets, Seq("cluster"), byTenant = true)
   }
 
   /** One tenant's label slice — partition pruning at planning time. */
@@ -2497,11 +2084,11 @@ object Dedup {
     */
   private[graft] def saveTenantSketchCells(spark: SparkSession, table: String,
       docs: DataFrame, nTenants: Int, buckets: Int = 2): Unit =
-    saveTenantBucketedTable(
+    saveBucketedTable(
       docs.withColumn("tenant", pmod(col("doc_id"), lit(nTenants)))
         .groupBy(col("tenant"), col("lang"))
         .agg(graft.plans.HllAgg.hllSketch(col("doc_id")).as("sk")),
-      table, buckets, Seq("lang"))
+      table, buckets, Seq("lang"), byTenant = true)
 
   /** One tenant's cell slice — partition pruning at planning time. */
   private[graft] def loadTenantSketchCells(spark: SparkSession, name: String,
@@ -2543,49 +2130,12 @@ object Dedup {
     rewriteTenantPartition(spark, table, tenant, buckets, Seq("lang"), rows)
   }
 
-  /** Save a bucketed table PARTITIONED BY TENANT: each tenant's rows
-    * live under their own partition directories (within which the
-    * bucket layout is the usual one), so a tenant-scoped read prunes at
-    * PLANNING time — the a6b fact-table isolation extended to persisted
-    * index state. `df` must carry a `tenant` column.
+  /** Write a family's parameter meta table — one row of named Int
+    * fields (banding/bucket constants ride the index state, never the
+    * caller: [[IndexFamily]]'s "meta wins" contract).
     */
-  private[graft] def saveTenantBucketedTable(df: DataFrame, table: String,
-      buckets: Int, keys: Seq[String]): Unit = {
-    dropTableAndLocation(df.sparkSession, table)
-    df.repartition(buckets, keys.map(col): _*)
-      .write.partitionBy("tenant")
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .mode("overwrite").saveAsTable(table)
-  }
-
-  /** [[appendBucketedTable]]'s twin for the tenant-partitioned layout:
-    * the new rows (tenant column included) land as extra bucket files
-    * inside their tenant's partition directory — no existing file moves,
-    * scans keep bucket pruning, and (exactly like the fleet append) the
-    * reported one-file-per-bucket sort order is forfeited until the next
-    * tenant-scoped compaction restores it.
-    */
-  private[graft] def appendTenantBucketedTable(df: DataFrame, table: String,
-      buckets: Int, keys: Seq[String]): Unit =
-    df.repartition(buckets, keys.map(col): _*)
-      .write.partitionBy("tenant")
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .mode("append").saveAsTable(table)
-
-  /** Write a tenant family's parameter meta table — the fleet invariant
-    * (banding/bucket constants ride the index state, never the caller —
-    * [[saveNearDupIndex]], [[saveContainIndex]]) applied to the
-    * tenant-partitioned layouts: [[syncTenantEstateWithDiff]]'s append
-    * arms, the tenant loads, and the tenant compactions read THESE
-    * values, so no call site can append or rewrite under a different
-    * banding than the tables were saved with (round-16 verdict ask #3 —
-    * the constants previously lived duplicated-by-convention at the
-    * save AND sync sites).
-    */
-  private[operators] def saveTenantMeta(spark: SparkSession, name: String,
-      fields: (String, Int)*): Unit = {
+  private[operators] def saveMeta(spark: SparkSession, name: String,
+      fields: Seq[(String, Int)]): Unit = {
     dropTableAndLocation(spark, s"${name}_meta")
     val schema = org.apache.spark.sql.types.StructType(fields.map(f =>
       org.apache.spark.sql.types.StructField(f._1,
@@ -2596,226 +2146,24 @@ object Dedup {
       .write.mode("overwrite").saveAsTable(s"${name}_meta")
   }
 
-  /** A tenant family's saved meta row; None for a raw
-    * [[saveTenantBucketedTable]] fixture that never wrote one.
-    */
-  private[graft] def tenantMeta(spark: SparkSession,
-      name: String): Option[org.apache.spark.sql.Row] =
-    if (spark.catalog.tableExists(s"${name}_meta"))
-      Some(spark.table(s"${name}_meta").head())
-    else None
-
-  /** Meta-or-fallback bucket count for a tenant family's compaction —
-    * the saved layout is authoritative whenever a meta table exists;
-    * the parameter only serves raw test fixtures without one.
-    */
-  private def tenantBuckets(spark: SparkSession, name: String,
-      fallback: Int): Int =
-    tenantMeta(spark, name).map(_.getAs[Int]("buckets")).getOrElse(fallback)
-
-  /** A synced family's meta row — the sync REFUSES to guess banding
+  /** A synced tenant family's meta — the sync REFUSES to guess banding
     * (appending under drifted constants would produce a silently
     * under-recalling index only the recall monitors could catch), and
     * a tenant-count mismatch would reassign doc→tenant wholesale.
     */
   private def requireTenantMeta(spark: SparkSession, name: String,
-      nTenants: Int): org.apache.spark.sql.Row = {
-    val m = tenantMeta(spark, name).getOrElse(throw new IllegalStateException(
-      s"$name has no _meta table — tenant families record banding/bucket " +
-        "parameters at save time; rebuild via the saveTenant* entry point"))
-    require(m.getAs[Int]("n_tenants") == nTenants,
-      s"$name was saved with n_tenants=${m.getAs[Int]("n_tenants")} but " +
+      nTenants: Int): IndexFamily.Meta = {
+    if (!spark.catalog.tableExists(s"${name}_meta"))
+      throw new IllegalStateException(s"$name has no _meta table — tenant " +
+        "families record banding/bucket parameters at save time; rebuild " +
+        "via IndexFamily.save")
+    val m = IndexFamily.meta(spark, name)
+    require(m("n_tenants") == nTenants,
+      s"$name was saved with n_tenants=${m("n_tenants")} but " +
         s"the sync was invoked with $nTenants — tenant assignment would drift")
     m
   }
 
-  /** D31 — the MULTI-TENANT near-dup index (round-11 verdict ask #5):
-    * a6b proved planning-time tenant pruning for the fact table; this
-    * gate extends the tenant column into persisted INDEX state. The
-    * banded and shingle tables are saved partitioned by tenant (bucketed
-    * as usual within each partition), and a tenant's delta join reads
-    * the index through a tenant filter that lands in the scans'
-    * PartitionFilters (PlanSpec asserts it) — per-tenant delta cost is
-    * the tenant's own index size, independent of how many other tenants
-    * share the deployment, and a tenant's takedown/compaction rewrites
-    * only that tenant's directories. Tenancy is doc_id mod nTenants
-    * (the a6b convention); near-dup semantics are PER TENANT (tenants
-    * are isolated corpora — exactly why the layout is right). Oracle:
-    * the d13 delta SQL restricted to both endpoints in the tenant.
-    */
-  def tenantDeltaNearDups(spark: SparkSession, dir: String, tenant: Int = 0,
-      nTenants: Int = 2, splitAt: Int = 200,
-      threshold: Double = 0.8): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sh = persistedShingleTable(spark, dir)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantNearDupIndex", dir, nTenants, splitAt)) {
-      val t = f"tenant_nd_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      saveTenantNearDupTables(sh.filter(bucket < splitAt).localCheckpoint(),
-        t, nTenants)
-      t
-    }.asInstanceOf[String]
-    deltaNearDupsFromShingles(
-      sh.filter(bucket >= splitAt && pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantNearDupIndex(spark, name, tenant), threshold)
-  }
-
-  /** Both halves of a tenant-partitioned near-dup index, saved under
-    * the d31 layout (partitioned by tenant, bucketed within). `sh` is a
-    * (doc_id, sh, qlen…) shingle frame WITHOUT a tenant column.
-    */
-  private[graft] def saveTenantNearDupTables(sh: DataFrame, t: String,
-      nTenants: Int, bands: Int = 3, rowsPerBand: Int = 3,
-      buckets: Int = 8): Unit = {
-    def withTenant(df: DataFrame) =
-      df.withColumn("tenant", pmod(col("doc_id"), lit(nTenants)))
-    saveTenantBucketedTable(withTenant(bandedKeys(sh, bands, rowsPerBand)),
-      s"${t}_banded", buckets, Seq("band", "bkey"))
-    saveTenantBucketedTable(withTenant(sh), s"${t}_shingles", buckets,
-      Seq("doc_id"))
-    saveTenantMeta(sh.sparkSession, t, "bands" -> bands,
-      "rows_per_band" -> rowsPerBand, "buckets" -> buckets,
-      "n_tenants" -> nTenants)
-  }
-
-  /** [[compactTenantSimHashIndex]]'s near-dup twin, over both halves of
-    * the d31 layout: the tenant's pending tombstones turn physical in
-    * that tenant's banded and shingle partitions only, and only the
-    * tenant's tombstone rows clear.
-    */
-  def compactTenantNearDupIndex(spark: SparkSession, name: String,
-      tenant: Int, nTenants: Int, buckets: Int = 8): Unit = {
-    // saved layout wins over the parameter whenever a meta row exists
-    val bk = tenantBuckets(spark, name, buckets)
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-      .map(_.select(col("doc_id")).localCheckpoint())
-    ts.foreach { t =>
-      val tenantIds = t.filter(pmod(col("doc_id"), lit(nTenants)) === tenant)
-        .localCheckpoint()
-      compactTenantPartition(spark, s"${name}_banded", tenant, bk,
-        Seq("band", "bkey"), Some((tenantIds, "doc_id")))
-      compactTenantPartition(spark, s"${name}_shingles", tenant, bk,
-        Seq("doc_id"), Some((tenantIds, "doc_id")))
-      clearTombstones(spark, s"${name}_tombstones", tenantIds, "doc_id")
-    }
-  }
-
-  /** One tenant's slice of the partitioned index, tombstone-filtered
-    * like [[loadNearDupIndex]]: the tenant predicate prunes partitions
-    * at planning time AND pending takedowns serve anti-joined — the d22
-    * serving contract composed with d31's isolation.
-    */
-  private[graft] def loadTenantNearDupIndex(spark: SparkSession,
-      name: String, tenant: Int): NearDupIndex = {
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-    // banding from the saved meta (the fleet loadNearDupIndex contract);
-    // (3, 3) only serves raw fixtures without one
-    val m = tenantMeta(spark, name)
-    NearDupIndex(
-      minusTombstones(spark.table(s"${name}_banded")
-        .filter(col("tenant") === tenant).drop("tenant"), ts, "doc_id"),
-      minusTombstones(spark.table(s"${name}_shingles")
-        .filter(col("tenant") === tenant).drop("tenant"), ts, "doc_id"),
-      m.map(_.getAs[Int]("bands")).getOrElse(3),
-      m.map(_.getAs[Int]("rows_per_band")).getOrElse(3))
-  }
-
-  /** D31B — a TAKEDOWN against the tenant-partitioned index: tombstone
-    * the doc_id ≡ 8 (mod 14) slice of the tenant's indexed docs
-    * ([[removeFromNearDupIndex]] works unchanged — tombstones are
-    * id-keyed, layout-agnostic), then run the tenant's delta against the
-    * filtered slice. Oracle = d31's SQL with indexed-side members of the
-    * removed class excluded — the full recompute over corpus ∖ removed
-    * restricted to the tenant, composing the d22 takedown contract with
-    * d31's partition isolation.
-    */
-  def tenantDeltaNearDupsRemoved(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200,
-      threshold: Double = 0.8): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sh = persistedShingleTable(spark, dir)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantNearDupRemoved", dir, tenant, nTenants, splitAt)) {
-      // the d31 gate's table plus this gate's tombstones — build our own
-      // copy so the two gates can't race each other's tombstone list
-      val t = f"tenant_ndrm_${tenant}_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      saveTenantNearDupTables(sh.filter(bucket < splitAt).localCheckpoint(),
-        t, nTenants)
-      removeFromNearDupIndex(spark, t,
-        Tables.documents(spark, dir)
-          .filter(bucket < splitAt &&
-            pmod(col("doc_id"), lit(nTenants)) === tenant &&
-            col("doc_id") % 14 === 8)
-          .select(col("doc_id")))
-      t
-    }.asInstanceOf[String]
-    deltaNearDupsFromShingles(
-      sh.filter(bucket >= splitAt && pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantNearDupIndex(spark, name, tenant), threshold)
-  }
-
-  /** The d22 gate — the RETRACTION lifecycle on disk, both halves in one
-    * trajectory: save the base index (bucket < splitAt), take down the
-    * doc_id ≡ 3 (mod 14) slice and COMPACT (physical delete — the
-    * rewritten generation never holds those rows, tombstones cleared),
-    * then take down the doc_id ≡ 10 (mod 14) slice WITHOUT compacting
-    * (served through the load-time broadcast anti-join), and delta-join
-    * the bucket ≥ splitAt shard against the loaded result. Together the
-    * two slices are exactly doc_id ≡ 3 (mod 7), so the oracle is the d13
-    * delta SQL with indexed-side members of that class excluded — a full
-    * recompute over corpus ∖ removed, which is precisely the takedown
-    * contract (a removed document appears in NO pair, via either serving
-    * path).
-    */
-  def deltaNearDupsGateRemoved(spark: SparkSession, dir: String,
-      splitAt: Int = 200, threshold: Double = 0.8): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sh = persistedShingleTable(spark, dir)
-    // the full parameterization keys the cached state (the statsBase
-    // convention); the band shape is fixed so threshold only gates the
-    // verify stage, but tying the persisted table to every parameter
-    // keeps a differently-parameterized second call from aliasing it
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("neardupIndexRemoved", dir, splitAt, threshold)) {
-      val baseSh = sh.filter(bucket < splitAt)
-      val name = f"neardup_rm_${splitAt}_t${(threshold * 100).round}_${dir.hashCode & 0xffffffffL}%x"
-      saveNearDupIndex(NearDupIndex(bandedKeys(baseSh, 3, 3), baseSh, 3, 3), name)
-      val ids = Tables.documents(spark, dir).filter(bucket < splitAt)
-        .select(col("doc_id"))
-      removeFromNearDupIndex(spark, name, ids.filter(col("doc_id") % 14 === 3))
-      compactNearDupIndex(spark, name)
-      removeFromNearDupIndex(spark, name, ids.filter(col("doc_id") % 14 === 10))
-      loadNearDupIndex(spark, name)
-    }.asInstanceOf[NearDupIndex]
-    deltaNearDupsFromShingles(sh.filter(bucket >= splitAt), index, threshold)
-  }
-
-  /** INCREMENTAL cluster maintenance — the production ingest's final
-    * step, one stage past [[deltaNearDups]] (the reference's mtime-memo
-    * incrementality, dupes/dedup.py:115-131, applied to d9's clustering):
-    * instead of re-running connected components over the whole corpus
-    * pair graph per shard, merge the shard's verified delta pairs into
-    * PERSISTED base component labels.
-    *
-    *   - prior state: labels over the base pair graph (vertices only —
-    *     singletons are implicit), persisted as a bucketed warehouse
-    *     table keyed by cluster (the members lookup joins on cluster);
-    *   - every full-graph edge incident to a shard doc is a delta pair
-    *     (the d13 identity), so the components containing a shard doc
-    *     are exactly: connected components of (label edges of TOUCHED
-    *     base components ∪ delta pairs), plus isolated shard docs;
-    *   - the merge graph is DELTA-SIZED — label edges of touched
-    *     components + delta pairs, never the corpus. Each base
-    *     component's old label is its min doc id, so min-canonical
-    *     union-find over doc→label edges reconstructs base connectivity
-    *     and the merged labels agree with the full recompute exactly
-    *     (spec-proven).
-    *
-    * Output: (doc_id, cluster, is_rep, is_new) for every document of a
-    * shard-touching component — the changed-labels + new-assignments
-    * slice a production label table ingests back.
-    */
   /** D19B's persisted prior state: the base corpus's canonical decisions
     * (keep flags over the base clustering), bucketed by cluster. Base
     * labels cover only docs with >= 1 base pair; singletons re-enter with
@@ -2861,26 +2209,50 @@ object Dedup {
       spark.table(table)
     }.asInstanceOf[DataFrame]
 
+  /** INCREMENTAL cluster maintenance — the production ingest's final
+    * step, one stage past [[deltaNearDups]] (the reference's mtime-memo
+    * incrementality, dupes/dedup.py:115-131, applied to d9's clustering):
+    * instead of re-running connected components over the whole corpus
+    * pair graph per shard, merge the shard's verified delta pairs into
+    * PERSISTED base component labels.
+    *
+    *   - prior state: labels over the base pair graph (vertices only —
+    *     singletons are implicit), persisted as a bucketed warehouse
+    *     table keyed by cluster (the members lookup joins on cluster);
+    *   - every full-graph edge incident to a shard doc is a delta pair
+    *     (the d13 identity), so the components containing a shard doc
+    *     are exactly: connected components of (label edges of TOUCHED
+    *     base components ∪ delta pairs), plus isolated shard docs;
+    *   - the merge graph is DELTA-SIZED — label edges of touched
+    *     components + delta pairs, never the corpus. Each base
+    *     component's old label is its min doc id, so min-canonical
+    *     union-find over doc→label edges reconstructs base connectivity
+    *     and the merged labels agree with the full recompute exactly
+    *     (spec-proven).
+    *
+    * Output: (doc_id, cluster, is_rep, is_new) for every document of a
+    * shard-touching component — the changed-labels + new-assignments
+    * slice a production label table ingests back.
+    */
   def deltaClusters(spark: SparkSession, dir: String, splitAt: Int = 200,
-      threshold: Double = 0.8, smallGraphEdges: Long = 1000000L,
-      maxIters: Int = 20): DataFrame = {
+      smallGraphEdges: Long = 1000000L, maxIters: Int = 20): DataFrame = {
     def bucket = TextAnalysis.splitBucket(col("doc_id"))
     def componentLabels(pairs: DataFrame): DataFrame =
       if (pairs.count() <= smallGraphEdges) unionFindLabels(spark, pairs)
       else propagateLabels(spark, pairs, maxIters)
     // persisted prior state, built once per (session, dir, splitAt) and
     // read back from the bucketed table — the disk path an ingest reads
-    val baseLabels = baseLabelTable(spark, dir, splitAt, threshold,
+    val baseLabels = baseLabelTable(spark, dir, splitAt, 0.8,
       smallGraphEdges, maxIters)
     // the shard's verified pairs: every full-graph edge touching the
     // shard. The checkpointed pair set is the shared intermediate of the
     // pair-report stage (d13) and this merge — a production ingest
     // computes it once per shard and feeds both, so it memoizes per
-    // (session, dir, split, threshold) exactly like the d3/d9 lshPairs
-    // table one pipeline earlier
+    // (session, dir, split) exactly like the d3/d9 lshPairs table one
+    // pipeline earlier
     val dp = graft.SessionCache.getOrElseUpdate(spark,
-        ("deltaPairs", dir, splitAt, threshold)) {
-      deltaNearDupsGate(spark, dir, splitAt, threshold)
+        ("deltaPairs", dir, splitAt)) {
+      servedGate(spark, dir, IndexFamily.NearDup, IndexFamily.Fleet, splitAt)
         .select(col("id_a"), col("id_b")).localCheckpoint()
     }.asInstanceOf[DataFrame]
     val touchedDocs = dp.select(col("id_a").as("doc_id"))
@@ -2937,7 +2309,7 @@ object Dedup {
     * gate path feeds a filtered slice of the session-cached corpus
     * shingle table here instead of re-tokenizing the shard.
     */
-  private def deltaNearDupsFromShingles(deltaSh: DataFrame, index: NearDupIndex,
+  private[graft] def deltaNearDupsFromShingles(deltaSh: DataFrame, index: NearDupIndex,
       threshold: Double, hotBlockRows: Long = 1L << 17): DataFrame = {
     // materialized ONCE below the join boundary: the census + tag + join
     // machinery references the shard's banded keys from ~8 plan subtrees,
@@ -3499,133 +2871,12 @@ object Dedup {
 
   /** Build an in-memory containment index over a documents frame. */
   def buildContainIndex(documents: DataFrame, w: Int = 8,
-      winnow: Int = 4): ContainIndex =
-    containIndexFromSelection(
-      containmentSelection(documents, w, winnow).localCheckpoint())
-
-  private def containIndexFromSelection(sel: DataFrame): ContainIndex = {
+      winnow: Int = 4): ContainIndex = {
+    val sel = containmentSelection(documents, w, winnow).localCheckpoint()
     val fp = sel.select(col("doc_id"), explode(col("fps")).as("d"))
     ContainIndex(fp,
       fp.groupBy(col("d")).agg(count(lit(1)).as("n")),
       sel.select(col("doc_id"), col("dall")))
-  }
-
-  /** Persist a containment index as bucketed warehouse tables: `fp` and
-    * `dfTab` on the digest (the delta join keys), `sets` on doc_id (the
-    * verification join key) — the d13/d15/d17 layout for the fourth
-    * family.
-    */
-  /** The containment family's on-disk suffix set — see [[nearDupTableSuffixes]]. */
-  private[graft] val containTableSuffixes =
-    Seq("_fp", "_df", "_sets", "_meta", "_tombstones")
-
-  def saveContainIndex(index: ContainIndex, name: String, buckets: Int = 8,
-      w: Int = 8, winnow: Int = 4): Unit = {
-    saveBucketedTable(index.fp, s"${name}_fp", buckets, Seq("d"))
-    saveBucketedTable(index.dfTab, s"${name}_df", buckets, Seq("d"))
-    saveBucketedTable(index.sets, s"${name}_sets", buckets, Seq("doc_id"))
-    val spark = index.fp.sparkSession
-    import spark.implicits._
-    dropTableAndLocation(spark, s"${name}_meta")
-    // span/winnow parameters ride the meta table so appends can never
-    // fingerprint a shard differently than the index was built
-    Seq((w, winnow, buckets)).toDF("w", "winnow", "buckets")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
-  }
-
-  /** Load a saved containment index. Tombstoned documents (a
-    * [[removeFromContainIndex]] takedown not yet compacted away) are
-    * anti-joined out of the fingerprint and span-set tables; the
-    * per-digest document-frequency table — an AGGREGATE, so it cannot be
-    * anti-joined — is corrected by SUBTRACTION (the i7 rule: counts are
-    * abelian): the removed docs' fingerprint rows aggregate to a
-    * takedown-sized per-digest count that broadcasts back onto the
-    * bucketed df scan. The df cap therefore evaluates over
-    * index ∖ removed exactly, not just the candidate legs.
-    */
-  def loadContainIndex(spark: SparkSession, name: String): ContainIndex = {
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-    val rawFp = spark.table(s"${name}_fp")
-    // the df table is a LOG of per-digest counts: one row per digest per
-    // generation plus [[appendContainIndex]] increment rows — sum per
-    // digest (bucketed by d ⇒ Exchange-free) to serve the current total
-    val df0 = spark.table(s"${name}_df")
-      .groupBy(col("d")).agg(sum(col("n")).as("n"))
-    val dfTab = ts.fold(df0) { t =>
-      val rmCnt = rawFp
-        .join(broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-        .groupBy(col("d")).agg(count(lit(1)).as("n_rm"))
-      df0.join(broadcast(rmCnt), Seq("d"), "left_outer")
-        .select(col("d"),
-          (col("n") - coalesce(col("n_rm"), lit(0L))).as("n"))
-        .filter(col("n") > 0)
-    }
-    ContainIndex(minusTombstones(rawFp, ts, "doc_id"), dfTab,
-      minusTombstones(spark.table(s"${name}_sets"), ts, "doc_id"))
-  }
-
-  /** [[removeFromNearDupIndex]]'s containment twin: tombstone now (served
-    * filtered + df-subtracted by [[loadContainIndex]]), physical delete
-    * and df rebuild at the next [[compactContainIndex]]. Re-ingestion of
-    * a not-yet-compacted removal must compact first (the span-set table
-    * is a verification payload — same contract as [[removeFromEmbIndex]]).
-    */
-  def removeFromContainIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit =
-    appendTombstones(spark, s"${name}_tombstones", docIds, "doc_id")
-
-  /** Append a shard into a saved containment index: fingerprint and
-    * span-set rows INSERT INTO the bucketed tables, and the per-digest
-    * df table takes the shard's counts as APPENDED INCREMENT rows
-    * ([[loadContainIndex]] sums per digest — Exchange-free on the
-    * bucketed layout — and [[compactContainIndex]]'s rebuild collapses
-    * the log back to one row per digest), so the append rewrites
-    * nothing. Span/winnow parameters come from the meta table.
-    */
-  def appendContainIndex(spark: SparkSession, name: String,
-      newDocs: DataFrame): Unit = {
-    val meta = spark.table(s"${name}_meta").head()
-    val buckets = meta.getAs[Int]("buckets")
-    val sel = containmentSelection(newDocs, meta.getAs[Int]("w"),
-      meta.getAs[Int]("winnow")).localCheckpoint()
-    val fp = sel.select(col("doc_id"), explode(col("fps")).as("d"))
-    appendBucketedTable(fp, s"${name}_fp", buckets, Seq("d"))
-    appendBucketedTable(sel.select(col("doc_id"), col("dall")),
-      s"${name}_sets", buckets, Seq("doc_id"))
-    appendBucketedTable(fp.groupBy(col("d")).agg(count(lit(1)).as("n")),
-      s"${name}_df", buckets, Seq("d"))
-    clearTombstones(spark, s"${name}_tombstones",
-      sel.select(col("doc_id")), "doc_id")
-  }
-
-  /** Restore the one-file-per-bucket invariant and make pending
-    * takedowns physical: fp and sets rewrite minus the tombstones, and
-    * the df table REBUILDS from the compacted fingerprint generation (an
-    * aggregate under retraction rebuilds from retained rows — the a2d
-    * rule; rebuilding also collapses any [[appendContainIndex]] increment
-    * rows back to one row per digest). Crash recovery = re-run the
-    * compaction: each table's swap is idempotent and the df rebuild
-    * always reads the surviving fp generation.
-    */
-  def compactContainIndex(spark: SparkSession, name: String): Unit = {
-    val buckets = spark.table(s"${name}_meta").head().getAs[Int]("buckets")
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-      .map(_.select(col("doc_id")).localCheckpoint())
-    compactBucketedTable(spark, s"${name}_fp", buckets, Seq("d"),
-      ts.map((_, "doc_id")))
-    compactBucketedTable(spark, s"${name}_sets", buckets, Seq("doc_id"),
-      ts.map((_, "doc_id")))
-    val dfTable = s"${name}_df"
-    val tmp = s"${dfTable}__compact"
-    recoverGenerationSwap(spark, dfTable, tmp)
-    dropTableAndLocation(spark, tmp)
-    spark.table(s"${name}_fp").groupBy(col("d")).agg(count(lit(1)).as("n"))
-      .repartition(buckets, col("d"))
-      .write.bucketBy(buckets, "d").sortBy("d").saveAsTable(tmp)
-    dropTableAndLocation(spark, dfTable)
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $dfTable")
-    spark.catalog.refreshTable(dfTable)
-    if (ts.isDefined) dropTableAndLocation(spark, s"${name}_tombstones")
   }
 
   /** D20B — INCREMENTAL containment: a new shard's embedded-doc pairs
@@ -3650,7 +2901,7 @@ object Dedup {
       containmentSelection(newDocs, w, winnow).localCheckpoint(),
       index, minShared, dfCap, threshold)
 
-  private def deltaContainmentFromSelection(shardSel: DataFrame,
+  private[graft] def deltaContainmentFromSelection(shardSel: DataFrame,
       index: ContainIndex, minShared: Int, dfCap: Int,
       threshold: Double): DataFrame = {
     val sFp = shardSel.select(col("doc_id"), explode(col("fps")).as("d"))
@@ -3695,62 +2946,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"),
         col("shared_fp").cast("long").as("shared_fp"), col("containment"))
-  }
-
-  /** The d20b gate: index the bucket < splitAt corpus slice through the
-    * real save→load disk path (slicing the session-cached selection,
-    * like d13 slices the shingle table), delta-join the bucket >= splitAt
-    * shard against it.
-    */
-  def deltaContainmentGate(spark: SparkSession, dir: String, splitAt: Int = 200,
-      w: Int = 8, winnow: Int = 4, minShared: Int = 2, dfCap: Int = 64,
-      threshold: Double = 0.9): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sel = containmentSelCached(spark, dir, w, winnow)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("containIndexDisk", dir, splitAt)) {
-      val name = f"contain_gate_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      saveContainIndex(containIndexFromSelection(sel.filter(bucket < splitAt)), name)
-      loadContainIndex(spark, name)
-    }
-    deltaContainmentFromSelection(sel.filter(bucket >= splitAt), index,
-      minShared, dfCap, threshold)
-  }
-
-  /** The d27 gate — the retraction lifecycle for the containment family
-    * (see [[deltaSimhashGateRemoved]]): doc_id ≡ 3 (mod 14) removed +
-    * compacted (fp/sets physically rewritten, df REBUILT from the
-    * surviving fingerprints), doc_id ≡ 10 (mod 14) removed uncompacted
-    * (fp/sets anti-joined, df count-SUBTRACTED at load). The df cap is
-    * the family's extra stake: it must evaluate over
-    * (index ∖ removed) ∪ shard, which is exactly what the subtraction /
-    * rebuild deliver — the oracle recomputes d20b over documents minus
-    * the removed class (doc_id ≡ 3 mod 7 on the indexed side), df counts
-    * included.
-    */
-  def deltaContainmentGateRemoved(spark: SparkSession, dir: String,
-      splitAt: Int = 200, w: Int = 8, winnow: Int = 4, minShared: Int = 2,
-      dfCap: Int = 64, threshold: Double = 0.9): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sel = containmentSelCached(spark, dir, w, winnow)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("containIndexRemoved", dir, splitAt, threshold)) {
-      // threshold only gates the verify stage, but it is part of the
-      // cache key — so it must be part of the table name too, or a
-      // second same-session call with a different threshold rebuilds
-      // the SAME tables under the first cached index (the d22 rule)
-      val name = f"contain_rm_${splitAt}_t${(threshold * 100).round}_${dir.hashCode & 0xffffffffL}%x"
-      saveContainIndex(containIndexFromSelection(sel.filter(bucket < splitAt)),
-        name, w = w, winnow = winnow)
-      val ids = Tables.documents(spark, dir).filter(bucket < splitAt)
-        .select(col("doc_id"))
-      removeFromContainIndex(spark, name, ids.filter(col("doc_id") % 14 === 3))
-      compactContainIndex(spark, name)
-      removeFromContainIndex(spark, name, ids.filter(col("doc_id") % 14 === 10))
-      loadContainIndex(spark, name)
-    }
-    deltaContainmentFromSelection(sel.filter(bucket >= splitAt), index,
-      minShared, dfCap, threshold)
   }
 
   /** SimHash: 16-nibble signature. For hex position p (1..16), sum
@@ -3913,69 +3108,6 @@ object Dedup {
   def upsertSimHashIndex(index: SimHashIndex, newSigs: DataFrame): SimHashIndex =
     SimHashIndex(index.banded.unionByName(simhashBanded(newSigs)))
 
-  /** Persist / reload the simhash index as a REAL bucketed+sorted
-    * warehouse table on its join keys — [[saveNearDupIndex]]'s layout for
-    * the d15 family. One table: the signature is its own verification
-    * payload.
-    */
-  def saveSimHashIndex(index: SimHashIndex, name: String, buckets: Int = 8): Unit = {
-    saveBucketedTable(index.banded, s"${name}_banded", buckets, Seq("b", "chunk"))
-    val spark = index.banded.sparkSession
-    import spark.implicits._
-    dropTableAndLocation(spark, s"${name}_meta")
-    Seq(Tuple1(buckets)).toDF("buckets")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
-  }
-
-  /** Load a saved simhash index. Tombstoned documents (a
-    * [[removeFromSimHashIndex]] takedown not yet compacted away) are
-    * filtered by a broadcast anti-join, which preserves the bucketed
-    * scan's partitioning — the [[loadNearDupIndex]] contract for the
-    * simhash family.
-    */
-  /** The simhash family's on-disk suffix set — see [[nearDupTableSuffixes]]. */
-  private[graft] val simHashTableSuffixes = Seq("_banded", "_meta", "_tombstones")
-
-  def loadSimHashIndex(spark: SparkSession, name: String): SimHashIndex =
-    SimHashIndex(minusTombstones(spark.table(s"${name}_banded"),
-      tombstoneTable(spark, s"${name}_tombstones"), "doc_id"))
-
-  /** [[removeFromNearDupIndex]]'s simhash twin: takedowns tombstone,
-    * [[loadSimHashIndex]] serves the index minus them immediately, the
-    * next [[compactSimHashIndex]] makes the delete physical. Re-appending
-    * a removed id lifts its tombstone (delete-then-append).
-    */
-  def removeFromSimHashIndex(spark: SparkSession, name: String,
-      docIds: DataFrame): Unit =
-    appendTombstones(spark, s"${name}_tombstones", docIds, "doc_id")
-
-  /** [[upsertSimHashIndex]]'s disk half: append a shard's banded
-    * signature rows into the saved table (bucket-spec-matched INSERT
-    * INTO; layout from the meta table — see [[appendNearDupIndex]]).
-    */
-  def appendSimHashIndex(spark: SparkSession, name: String,
-      newSigs: DataFrame): Unit = {
-    val buckets = spark.table(s"${name}_meta").head().getAs[Int]("buckets")
-    appendBucketedTable(simhashBanded(newSigs), s"${name}_banded", buckets,
-      Seq("b", "chunk"))
-    // a re-added id lifts its tombstone (delete-then-append idempotence)
-    clearTombstones(spark, s"${name}_tombstones",
-      newSigs.select(col("doc_id")), "doc_id")
-  }
-
-  /** Restore the one-file-per-bucket invariant after appends (see
-    * [[compactNearDupIndex]]); pending takedowns become physical deletes
-    * in the rewritten generation and the tombstone list clears.
-    */
-  def compactSimHashIndex(spark: SparkSession, name: String): Unit = {
-    val buckets = spark.table(s"${name}_meta").head().getAs[Int]("buckets")
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-      .map(_.select(col("doc_id")).localCheckpoint())
-    compactBucketedTable(spark, s"${name}_banded", buckets, Seq("b", "chunk"),
-      ts.map((_, "doc_id")))
-    if (ts.isDefined) dropTableAndLocation(spark, s"${name}_tombstones")
-  }
-
   /** Incremental simhash near-dup: a new shard's signatures (map-side)
     * band-join the persisted index; exact Hamming verifies in the join
     * row itself. Same output contract as [[deltaNearDups]]: every pair
@@ -4009,19 +3141,6 @@ object Dedup {
     vsIndexed.filter(col("hamming") <= maxHamming).unionByName(vsSelf)
   }
 
-  /** The d15 gate: index the bucket < splitAt slice of the session-cached
-    * signature table, delta-join the rest (the d13 gate's shape for the
-    * simhash family). The index is SAVED as the bucketed warehouse table
-    * and the gate joins the LOADED one — the measured path is the
-    * persisted disk path, as for d13 (round-7 finding).
-    */
-  def deltaSimhashGate(spark: SparkSession, dir: String,
-      splitAt: Int = 200, maxHamming: Int = 3): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    deltaSimhashPairs(simhash64Cached(spark, dir).filter(bucket >= splitAt),
-      simhashGateIndex(spark, dir, splitAt), maxHamming)
-  }
-
   /** The session-shared full-corpus 64-bit signature projection — the
     * simhash family's input cache, same class as the shingle table.
     */
@@ -4029,127 +3148,6 @@ object Dedup {
     graft.SessionCache.getOrElseUpdate(spark, ("simhash64", dir)) {
       simhash64(spark, dir).persist()
     }
-
-  /** The d15 gate's persisted serving index — see [[nearDupGateIndex]]. */
-  private[graft] def simhashGateIndex(spark: SparkSession, dir: String,
-      splitAt: Int = 200): SimHashIndex = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    graft.SessionCache.getOrElseUpdate(spark, ("simhashIndexDisk", dir, splitAt)) {
-      val name = f"simhash_gate_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      saveSimHashIndex(SimHashIndex(simhashBanded(
-        simhash64Cached(spark, dir).filter(bucket < splitAt))), name)
-      loadSimHashIndex(spark, name)
-    }.asInstanceOf[SimHashIndex]
-  }
-
-  /** [[deltaNearDupsGateAppended]]'s lifecycle for the simhash family:
-    * save (bucket < split1) → append the split1..split2-1 slice →
-    * compact → delta-join the bucket ≥ split2 shard. Equals
-    * [[deltaSimhashGate]] at splitAt = split2 (spec-proven — appending
-    * only changes HOW the indexed half reached disk).
-    */
-  def deltaSimhashGateAppended(spark: SparkSession, dir: String,
-      split1: Int = 150, split2: Int = 200, maxHamming: Int = 3): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sigs = simhash64Cached(spark, dir)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("simhashIndexAppended", dir, split1, split2)) {
-      val name = f"simhash_app_${split1}_${split2}_${dir.hashCode & 0xffffffffL}%x"
-      saveSimHashIndex(buildSimHashIndex(sigs.filter(bucket < split1)), name)
-      appendSimHashIndex(spark, name,
-        sigs.filter(bucket >= split1 && bucket < split2))
-      compactSimHashIndex(spark, name)
-      loadSimHashIndex(spark, name)
-    }.asInstanceOf[SimHashIndex]
-    deltaSimhashPairs(sigs.filter(bucket >= split2), index, maxHamming)
-  }
-
-  /** The d25 gate — [[deltaNearDupsGateRemoved]]'s lifecycle for the
-    * simhash family: save the base index (bucket < splitAt), take down
-    * doc_id ≡ 3 (mod 14) and COMPACT (physical delete, tombstones
-    * cleared), take down doc_id ≡ 10 (mod 14) WITHOUT compacting
-    * (served via the load-time broadcast anti-join), delta-join the
-    * bucket ≥ splitAt shard against the loaded result. The two slices
-    * union to doc_id ≡ 3 (mod 7), so the oracle is d15's delta SQL with
-    * indexed-side members of that class excluded — the full recompute
-    * over corpus ∖ removed (a signature is a per-doc function; removing
-    * a doc removes exactly its incident pairs).
-    */
-  def deltaSimhashGateRemoved(spark: SparkSession, dir: String,
-      splitAt: Int = 200, maxHamming: Int = 3): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sigs = simhash64Cached(spark, dir)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("simhashIndexRemoved", dir, splitAt, maxHamming)) {
-      // maxHamming is verify-stage only but keys the cache — mirror it
-      // into the table name so differently-parameterized calls never
-      // alias the persisted state (the d22 rule)
-      val name = f"simhash_rm_${splitAt}_h${maxHamming}_${dir.hashCode & 0xffffffffL}%x"
-      saveSimHashIndex(buildSimHashIndex(sigs.filter(bucket < splitAt)), name)
-      val ids = Tables.documents(spark, dir).filter(bucket < splitAt)
-        .select(col("doc_id"))
-      removeFromSimHashIndex(spark, name, ids.filter(col("doc_id") % 14 === 3))
-      compactSimHashIndex(spark, name)
-      removeFromSimHashIndex(spark, name, ids.filter(col("doc_id") % 14 === 10))
-      loadSimHashIndex(spark, name)
-    }.asInstanceOf[SimHashIndex]
-    deltaSimhashPairs(sigs.filter(bucket >= splitAt), index, maxHamming)
-  }
-
-  /** D33 — the tenant-partitioned SIMHASH index: d31's planning-time
-    * tenant isolation applied to a second dedup family (round-12
-    * verdict stretch ask). The banded signature table saves partitioned
-    * by tenant (bucketed on (b, chunk) within each partition), and a
-    * tenant's delta reads it through a tenant filter that lands in the
-    * scan's PartitionFilters — per-tenant delta cost is the tenant's
-    * own index size, and a tenant's takedown/compaction touches only
-    * that tenant's directories. Tenancy = doc_id mod nTenants (the a6b
-    * convention); simhash semantics are per tenant (isolated corpora).
-    * Oracle: d15's delta SQL with both endpoints in the tenant.
-    */
-  def tenantDeltaSimhash(spark: SparkSession, dir: String, tenant: Int = 0,
-      nTenants: Int = 2, splitAt: Int = 200, maxHamming: Int = 3): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sigs = simhash64Cached(spark, dir)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantSimhashIndex", dir, nTenants, splitAt)) {
-      val t = f"tenant_sh_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      saveTenantSimHashTables(sigs.filter(bucket < splitAt), t, nTenants)
-      t
-    }.asInstanceOf[String]
-    deltaSimhashPairs(
-      sigs.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantSimHashIndex(spark, name, tenant), maxHamming)
-  }
-
-  /** The banded half of a tenant-partitioned simhash index, saved under
-    * the d31 layout. `sigs` is a (doc_id, simhash) frame WITHOUT a
-    * tenant column.
-    */
-  private[graft] def saveTenantSimHashTables(sigs: DataFrame, t: String,
-      nTenants: Int, buckets: Int = 8): Unit = {
-    saveTenantBucketedTable(
-      simhashBanded(sigs)
-        .withColumn("tenant", pmod(col("doc_id"), lit(nTenants))),
-      s"${t}_banded", buckets, Seq("b", "chunk"))
-    // the 4x16-bit banding is intrinsic to the 64-bit signature (no
-    // parameter) — only the physical layout rides the meta
-    saveTenantMeta(sigs.sparkSession, t, "buckets" -> buckets,
-      "n_tenants" -> nTenants)
-  }
-
-  /** One tenant's slice of the partitioned simhash index,
-    * tombstone-filtered like [[loadSimHashIndex]]: partition pruning at
-    * planning time, pending takedowns anti-joined — the d25 serving
-    * contract composed with d31's isolation.
-    */
-  private[graft] def loadTenantSimHashIndex(spark: SparkSession,
-      name: String, tenant: Int): SimHashIndex =
-    SimHashIndex(minusTombstones(
-      spark.table(s"${name}_banded")
-        .filter(col("tenant") === tenant).drop("tenant"),
-      tombstoneTable(spark, s"${name}_tombstones"), "doc_id"))
 
   /** TENANT-SCOPED compaction of one tenant's partition in a
     * tenant-partitioned bucketed table — the d33 layout's point made
@@ -4274,274 +3272,6 @@ object Dedup {
     spark.catalog.refreshTable(table)
   }
 
-  /** [[compactSimHashIndex]]'s tenant-scoped form for the d33 layout:
-    * the tenant's pending tombstones become physical in THAT tenant's
-    * partition only, and only that tenant's tombstone rows clear (a
-    * takedown against tenant A must not lose tenant B's pending
-    * tombstones).
-    */
-  def compactTenantSimHashIndex(spark: SparkSession, name: String,
-      tenant: Int, nTenants: Int, buckets: Int = 8): Unit = {
-    val bk = tenantBuckets(spark, name, buckets)
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-      .map(_.select(col("doc_id")).localCheckpoint())
-    ts.foreach { t =>
-      val tenantIds = t.filter(pmod(col("doc_id"), lit(nTenants)) === tenant)
-        .localCheckpoint()
-      compactTenantPartition(spark, s"${name}_banded", tenant, bk,
-        Seq("b", "chunk"), Some((tenantIds, "doc_id")))
-      clearTombstones(spark, s"${name}_tombstones", tenantIds, "doc_id")
-    }
-  }
-
-  /** D33C — the takedown + TENANT-SCOPED compaction lifecycle: same
-    * state and removal as [[tenantDeltaSimhashRemoved]], but the
-    * tombstones turn physical via [[compactTenantSimHashIndex]] before
-    * the delta runs — served output identical (d33b's oracle verbatim),
-    * while only the tenant's directory rewrote (IndexRemoveSpec pins
-    * the other tenant's file mtimes).
-    */
-  def tenantDeltaSimhashCompacted(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200,
-      maxHamming: Int = 3): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sigs = simhash64Cached(spark, dir)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantSimhashCompacted", dir, tenant, nTenants, splitAt)) {
-      val t = f"tenant_shc_${tenant}_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      dropTenantCompactionTemps(spark, s"${t}_banded", nTenants)
-      saveTenantSimHashTables(sigs.filter(bucket < splitAt), t, nTenants)
-      removeFromSimHashIndex(spark, t,
-        Tables.documents(spark, dir)
-          .filter(bucket < splitAt &&
-            pmod(col("doc_id"), lit(nTenants)) === tenant &&
-            col("doc_id") % 14 === 8)
-          .select(col("doc_id")))
-      compactTenantSimHashIndex(spark, t, tenant, nTenants)
-      t
-    }.asInstanceOf[String]
-    deltaSimhashPairs(
-      sigs.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantSimHashIndex(spark, name, tenant), maxHamming)
-  }
-
-  /** D33B — a takedown against the tenant-partitioned simhash index
-    * (the d31b contract for the second family): tombstone the doc_id ≡
-    * 8 (mod 14) slice of the tenant's indexed docs
-    * ([[removeFromSimHashIndex]] works unchanged — tombstones are
-    * id-keyed, layout-agnostic), then run the tenant's delta against
-    * the filtered slice. Oracle = d33's SQL minus the removed class.
-    */
-  def tenantDeltaSimhashRemoved(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200,
-      maxHamming: Int = 3): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sigs = simhash64Cached(spark, dir)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantSimhashRemoved", dir, tenant, nTenants, splitAt)) {
-      // a separate copy of the d33 table: the two gates must not race
-      // each other's tombstone list
-      val t = f"tenant_shrm_${tenant}_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      saveTenantSimHashTables(sigs.filter(bucket < splitAt), t, nTenants)
-      removeFromSimHashIndex(spark, t,
-        Tables.documents(spark, dir)
-          .filter(bucket < splitAt &&
-            pmod(col("doc_id"), lit(nTenants)) === tenant &&
-            col("doc_id") % 14 === 8)
-          .select(col("doc_id")))
-      t
-    }.asInstanceOf[String]
-    deltaSimhashPairs(
-      sigs.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantSimHashIndex(spark, name, tenant), maxHamming)
-  }
-
-  /** D34 — the tenant-partitioned EMBEDDING index: the d31/d33
-    * planning-time tenant isolation on the THIRD dedup family. Both
-    * persisted halves partition by tenant — the banded LSH rows
-    * (bucketed on (label, band, bucket) within each partition) AND the
-    * verification vectors (bucketed on vec_id) — so a tenant's delta
-    * join and its cosine-verify re-join each open only that tenant's
-    * directories (PlanSpec pins PartitionFilters on BOTH scans; the
-    * vectors table is the new structural case vs d31/d33, where the
-    * signature rides the banded row and no payload table exists).
-    * Tenancy = vec_id mod nTenants (the a6b convention); near-dup
-    * semantics are per tenant (isolated corpora). Oracle: d17's delta
-    * SQL with both endpoints in the tenant.
-    */
-  def tenantDeltaEmbedding(spark: SparkSession, dir: String, tenant: Int = 0,
-      nTenants: Int = 2, splitAt: Int = 200,
-      threshold: Double = 0.35): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    val e = Similarity.preparedEmbeddings(spark, dir)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantEmbIndex", dir, nTenants, splitAt)) {
-      val t = f"tenant_em_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      saveTenantEmbTables(e.filter(bucket < splitAt), t, nTenants)
-      t
-    }.asInstanceOf[String]
-    deltaEmbeddingPairs(
-      e.filter(bucket >= splitAt &&
-        pmod(col("vec_id"), lit(nTenants)) === tenant),
-      loadTenantEmbIndex(spark, name, tenant), threshold)
-  }
-
-  /** Both halves of a tenant-partitioned embedding index, saved under
-    * the d31 layout (partitioned by tenant, bucketed within).
-    */
-  private[graft] def saveTenantEmbTables(base: DataFrame, t: String,
-      nTenants: Int, bands: Int = 4, planesPerBand: Int = 2,
-      buckets: Int = 8): Unit = {
-    def withTenant(df: DataFrame) =
-      df.withColumn("tenant", pmod(col("vec_id"), lit(nTenants)))
-    saveTenantBucketedTable(withTenant(embBandedOf(base, bands, planesPerBand)),
-      s"${t}_banded", buckets, Seq("label", "band", "bucket"))
-    saveTenantBucketedTable(withTenant(base.select("label", "vec_id", "v", "n")),
-      s"${t}_vectors", buckets, Seq("vec_id"))
-    saveTenantMeta(base.sparkSession, t, "bands" -> bands,
-      "planes_per_band" -> planesPerBand, "buckets" -> buckets,
-      "n_tenants" -> nTenants)
-  }
-
-  /** One tenant's slice of the partitioned embedding index, tombstone-
-    * filtered like [[loadEmbIndex]]: the tenant predicate prunes BOTH
-    * scans at planning time; pending takedowns anti-join out of both
-    * tables (a removed vector can neither seed a candidate nor verify
-    * one — the d26 serving contract composed with d31's isolation).
-    */
-  private[graft] def loadTenantEmbIndex(spark: SparkSession, name: String,
-      tenant: Int): EmbIndex = {
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-    def slice(table: String) = minusTombstones(
-      spark.table(table).filter(col("tenant") === tenant).drop("tenant"),
-      ts, "vec_id")
-    EmbIndex(slice(s"${name}_banded"), slice(s"${name}_vectors"))
-  }
-
-  /** D34B — a takedown against the tenant-partitioned embedding index:
-    * tombstone the vec_id ≡ 8 (mod 14) slice of the tenant's indexed
-    * vectors ([[removeFromEmbIndex]] works unchanged — tombstones are
-    * id-keyed, layout-agnostic), then run the tenant's delta against the
-    * filtered slice. Oracle = d34's SQL minus the removed class.
-    */
-  def tenantDeltaEmbeddingRemoved(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200,
-      threshold: Double = 0.35): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    val e = Similarity.preparedEmbeddings(spark, dir)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantEmbRemoved", dir, tenant, nTenants, splitAt)) {
-      // a separate copy of the d34 tables: the two gates must not race
-      // each other's tombstone list
-      val t = f"tenant_emrm_${tenant}_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      saveTenantEmbTables(e.filter(bucket < splitAt), t, nTenants)
-      removeFromEmbIndex(spark, t,
-        e.filter(bucket < splitAt &&
-            pmod(col("vec_id"), lit(nTenants)) === tenant &&
-            col("vec_id") % 14 === 8)
-          .select(col("vec_id")))
-      t
-    }.asInstanceOf[String]
-    deltaEmbeddingPairs(
-      e.filter(bucket >= splitAt &&
-        pmod(col("vec_id"), lit(nTenants)) === tenant),
-      loadTenantEmbIndex(spark, name, tenant), threshold)
-  }
-
-  /** [[compactTenantSimHashIndex]]'s embedding twin, over BOTH halves:
-    * the tenant's pending tombstones turn physical in that tenant's
-    * banded AND vectors partitions (other tenants' files never move),
-    * and only the tenant's tombstone rows clear.
-    */
-  def compactTenantEmbIndex(spark: SparkSession, name: String,
-      tenant: Int, nTenants: Int, buckets: Int = 8): Unit = {
-    val bk = tenantBuckets(spark, name, buckets)
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-      .map(_.select(col("vec_id")).localCheckpoint())
-    ts.foreach { t =>
-      val tenantIds = t.filter(pmod(col("vec_id"), lit(nTenants)) === tenant)
-        .localCheckpoint()
-      compactTenantPartition(spark, s"${name}_banded", tenant, bk,
-        Seq("label", "band", "bucket"), Some((tenantIds, "vec_id")))
-      compactTenantPartition(spark, s"${name}_vectors", tenant, bk,
-        Seq("vec_id"), Some((tenantIds, "vec_id")))
-      clearTombstones(spark, s"${name}_tombstones", tenantIds, "vec_id")
-    }
-  }
-
-  /** D34C — the d34b takedown made PHYSICAL by a tenant-scoped
-    * compaction of both index halves ([[compactTenantEmbIndex]]) before
-    * the delta runs — served output identical (d34b's oracle verbatim)
-    * while only the tenant's two partition directories rewrote
-    * (IndexRemoveSpec pins the other tenant's file mtimes on BOTH
-    * tables).
-    */
-  def tenantDeltaEmbeddingCompacted(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200,
-      threshold: Double = 0.35): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    val e = Similarity.preparedEmbeddings(spark, dir)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantEmbCompacted", dir, tenant, nTenants, splitAt)) {
-      val t = f"tenant_emc_${tenant}_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      Seq("banded", "vectors").foreach(h =>
-        dropTenantCompactionTemps(spark, s"${t}_$h", nTenants))
-      saveTenantEmbTables(e.filter(bucket < splitAt), t, nTenants)
-      removeFromEmbIndex(spark, t,
-        e.filter(bucket < splitAt &&
-            pmod(col("vec_id"), lit(nTenants)) === tenant &&
-            col("vec_id") % 14 === 8)
-          .select(col("vec_id")))
-      compactTenantEmbIndex(spark, t, tenant, nTenants)
-      t
-    }.asInstanceOf[String]
-    deltaEmbeddingPairs(
-      e.filter(bucket >= splitAt &&
-        pmod(col("vec_id"), lit(nTenants)) === tenant),
-      loadTenantEmbIndex(spark, name, tenant), threshold)
-  }
-
-  /** D35 — the tenant-partitioned CONTAINMENT index: the d31/d33/d34
-    * planning-time tenant isolation on the FOURTH (and last) dedup
-    * family, and the structurally richest: THREE persisted halves —
-    * fingerprint rows (bucketed on the digest), the per-digest
-    * document-frequency AGGREGATE, and the span-set verification
-    * payload (bucketed on doc_id) — all partition by tenant. The df
-    * table is the new case vs d31/d33/d34: tenants are isolated
-    * corpora, so the df CAP must count within the tenant — per-tenant
-    * df rows are not a layout convenience but the only correct
-    * semantics (a digest frequent in tenant A must still pair in
-    * tenant B). Tenancy = doc_id mod nTenants (the a6b convention).
-    * Oracle: the d20b delta SQL over tenant-only docs — the df counts
-    * re-form within the tenant, exactly what the partitioned df table
-    * serves.
-    */
-  def tenantDeltaContainment(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200, w: Int = 8,
-      winnow: Int = 4, minShared: Int = 2, dfCap: Int = 64,
-      threshold: Double = 0.9): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sel = containmentSelCached(spark, dir, w, winnow)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantContainIndex", dir, nTenants, splitAt)) {
-      val t = f"tenant_cn_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      saveTenantContainTables(sel.filter(bucket < splitAt), t, nTenants,
-        w = w, winnow = winnow)
-      t
-    }.asInstanceOf[String]
-    deltaContainmentFromSelection(
-      sel.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantContainIndex(spark, name, tenant), minShared, dfCap,
-      threshold)
-  }
-
   /** The session-persisted winnowed selection [[containmentPairs]] and
     * the d20b/d27 gates share — factored so the d35 family reads the
     * same cache instead of re-winnowing the corpus.
@@ -4552,175 +3282,6 @@ object Dedup {
         ("containmentSel", dir, w, winnow)) {
       containmentSelection(Tables.documents(spark, dir), w, winnow).persist()
     }
-
-  /** All three halves of a tenant-partitioned containment index, saved
-    * under the d31 layout (partitioned by tenant, bucketed within).
-    * The df table's rows are PER (tenant, digest) — each tenant's cap
-    * evaluates over its own corpus only.
-    */
-  /** `sel` must be a [[containmentSelection]] built with the DECLARED
-    * (w, winnow) — the meta records them so [[syncTenantEstateWithDiff]]
-    * can re-fingerprint appended docs identically (the fleet
-    * [[appendContainIndex]] contract, tenant-layout edition).
-    */
-  private[graft] def saveTenantContainTables(sel: DataFrame, t: String,
-      nTenants: Int, w: Int = 8, winnow: Int = 4, buckets: Int = 8): Unit = {
-    def withTenant(df: DataFrame) =
-      df.withColumn("tenant", pmod(col("doc_id"), lit(nTenants)))
-    val fp = sel.select(col("doc_id"), explode(col("fps")).as("d"))
-    saveTenantBucketedTable(withTenant(fp), s"${t}_fp",
-      buckets, Seq("d"))
-    saveTenantBucketedTable(
-      withTenant(fp).groupBy(col("tenant"), col("d"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("d"), col("n"), col("tenant")),
-      s"${t}_df", buckets, Seq("d"))
-    saveTenantBucketedTable(withTenant(sel.select(col("doc_id"), col("dall"))),
-      s"${t}_sets", buckets, Seq("doc_id"))
-    saveTenantMeta(sel.sparkSession, t, "w" -> w, "winnow" -> winnow,
-      "buckets" -> buckets, "n_tenants" -> nTenants)
-  }
-
-  /** One tenant's slice of the partitioned containment index — the
-    * [[loadContainIndex]] serving contract composed with d31's
-    * isolation: the tenant predicate prunes all THREE scans at planning
-    * time; pending takedowns anti-join out of fp/sets and count-
-    * SUBTRACT from the tenant's df rows (the i7 rule — the subtraction
-    * reads only the tenant's fingerprint slice, so the corrected cap is
-    * the tenant's corpus minus its removed docs, never another
-    * tenant's). The global id-keyed tombstone list needs no tenant
-    * filter: other tenants' ids simply never match the slice.
-    */
-  private[graft] def loadTenantContainIndex(spark: SparkSession,
-      name: String, tenant: Int): ContainIndex = {
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-    val rawFp = spark.table(s"${name}_fp")
-      .filter(col("tenant") === tenant).drop("tenant")
-    val df0 = spark.table(s"${name}_df")
-      .filter(col("tenant") === tenant).drop("tenant")
-      .groupBy(col("d")).agg(sum(col("n")).as("n"))
-    val dfTab = ts.fold(df0) { t =>
-      val rmCnt = rawFp
-        .join(broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-        .groupBy(col("d")).agg(count(lit(1)).as("n_rm"))
-      df0.join(broadcast(rmCnt), Seq("d"), "left_outer")
-        .select(col("d"),
-          (col("n") - coalesce(col("n_rm"), lit(0L))).as("n"))
-        .filter(col("n") > 0)
-    }
-    ContainIndex(minusTombstones(rawFp, ts, "doc_id"), dfTab,
-      minusTombstones(spark.table(s"${name}_sets")
-        .filter(col("tenant") === tenant).drop("tenant"), ts, "doc_id"))
-  }
-
-  /** D35B — a takedown against the tenant-partitioned containment
-    * index: tombstone the doc_id ≡ 8 (mod 14) slice of the tenant's
-    * indexed docs ([[removeFromContainIndex]] works unchanged —
-    * tombstones are id-keyed, layout-agnostic), then run the tenant's
-    * delta against the filtered slice — fp/sets anti-joined, the
-    * tenant's df rows count-subtracted. Oracle = d35's SQL with the
-    * removed class dropped BEFORE the df counts form (the d27 rule:
-    * a removed doc must stop counting toward the cap).
-    */
-  def tenantDeltaContainmentRemoved(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200, w: Int = 8,
-      winnow: Int = 4, minShared: Int = 2, dfCap: Int = 64,
-      threshold: Double = 0.9): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sel = containmentSelCached(spark, dir, w, winnow)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantContainRemoved", dir, tenant, nTenants, splitAt)) {
-      // a separate copy of the d35 tables: the two gates must not race
-      // each other's tombstone list
-      val t = f"tenant_cnrm_${tenant}_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      saveTenantContainTables(sel.filter(bucket < splitAt), t, nTenants,
-        w = w, winnow = winnow)
-      removeFromContainIndex(spark, t,
-        Tables.documents(spark, dir)
-          .filter(bucket < splitAt &&
-            pmod(col("doc_id"), lit(nTenants)) === tenant &&
-            col("doc_id") % 14 === 8)
-          .select(col("doc_id")))
-      t
-    }.asInstanceOf[String]
-    deltaContainmentFromSelection(
-      sel.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantContainIndex(spark, name, tenant), minShared, dfCap,
-      threshold)
-  }
-
-  /** [[compactTenantSimHashIndex]]'s containment twin, over all THREE
-    * halves: the tenant's pending tombstones turn physical in that
-    * tenant's fp and sets partitions (filtered rewrites), and the
-    * tenant's df partition REBUILDS from its compacted fingerprints
-    * (the a2d rule, partition-scoped — registers under retraction
-    * rebuild from retained rows; the rebuild also collapses any append
-    * increment rows back to one row per digest for this tenant). Other
-    * tenants' files never move and only the tenant's tombstone rows
-    * clear. Crash recovery = re-run: each partition rewrite is
-    * idempotent and the df rebuild always reads the surviving fp
-    * generation.
-    */
-  def compactTenantContainIndex(spark: SparkSession, name: String,
-      tenant: Int, nTenants: Int, buckets: Int = 8): Unit = {
-    val bk = tenantBuckets(spark, name, buckets)
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-      .map(_.select(col("doc_id")).localCheckpoint())
-    ts.foreach { t =>
-      val tenantIds = t.filter(pmod(col("doc_id"), lit(nTenants)) === tenant)
-        .localCheckpoint()
-      compactTenantPartition(spark, s"${name}_fp", tenant, bk,
-        Seq("d"), Some((tenantIds, "doc_id")))
-      compactTenantPartition(spark, s"${name}_sets", tenant, bk,
-        Seq("doc_id"), Some((tenantIds, "doc_id")))
-      rewriteTenantPartition(spark, s"${name}_df", tenant, bk,
-        Seq("d"),
-        spark.table(s"${name}_fp").filter(col("tenant") === tenant)
-          .groupBy(col("d")).agg(count(lit(1)).as("n")))
-      clearTombstones(spark, s"${name}_tombstones", tenantIds, "doc_id")
-    }
-  }
-
-  /** D35C — the d35b takedown made PHYSICAL by a tenant-scoped
-    * compaction of all three index halves
-    * ([[compactTenantContainIndex]]) before the delta runs — served
-    * output identical (d35b's oracle verbatim) while only the tenant's
-    * three partition directories rewrote (IndexRemoveSpec pins the
-    * other tenant's file mtimes on all three tables and proves the
-    * rebuilt df partition equals a from-scratch count of the surviving
-    * fingerprints).
-    */
-  def tenantDeltaContainmentCompacted(spark: SparkSession, dir: String,
-      tenant: Int = 0, nTenants: Int = 2, splitAt: Int = 200, w: Int = 8,
-      winnow: Int = 4, minShared: Int = 2, dfCap: Int = 64,
-      threshold: Double = 0.9): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("doc_id"))
-    val sel = containmentSelCached(spark, dir, w, winnow)
-    val name = graft.SessionCache.getOrElseUpdate(spark,
-        ("tenantContainCompacted", dir, tenant, nTenants, splitAt)) {
-      val t = f"tenant_cnc_${tenant}_${nTenants}_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      dropTableAndLocation(spark, s"${t}_tombstones")
-      Seq("fp", "sets", "df").foreach(h =>
-        dropTenantCompactionTemps(spark, s"${t}_$h", nTenants))
-      saveTenantContainTables(sel.filter(bucket < splitAt), t, nTenants,
-        w = w, winnow = winnow)
-      removeFromContainIndex(spark, t,
-        Tables.documents(spark, dir)
-          .filter(bucket < splitAt &&
-            pmod(col("doc_id"), lit(nTenants)) === tenant &&
-            col("doc_id") % 14 === 8)
-          .select(col("doc_id")))
-      compactTenantContainIndex(spark, t, tenant, nTenants)
-      t
-    }.asInstanceOf[String]
-    deltaContainmentFromSelection(
-      sel.filter(bucket >= splitAt &&
-        pmod(col("doc_id"), lit(nTenants)) === tenant),
-      loadTenantContainIndex(spark, name, tenant), minShared, dfCap,
-      threshold)
-  }
 
   /** Embedding near-dup, scale path: block by the sign-random-projection
     * LSH bucket (Similarity.lshBuckets) instead of a given label — pairs
@@ -5512,15 +4073,15 @@ object Dedup {
     // array into fps's per-element lambda — every selected
     // fingerprint would recompute ALL span md5s (the PERF.md §1
     // trap, found on the batched d61 action in round 20)
-    appendBucketedTable(
+    saveBucketedTable(
       containmentSelection(freshDocs, meta.getAs[Int]("w"),
           meta.getAs[Int]("winnow")).localCheckpoint()
         .select(col("doc_id"), explode(col("fps")).as("d")),
-      s"${name}_banded", buckets, Seq("d"))
-    appendBucketedTable(
+      s"${name}_banded", buckets, Seq("d"), append = true)
+    saveBucketedTable(
       newDocs.join(spark.table(s"${name}_docs").select("doc_id"),
         Seq("doc_id"), "left_anti"),
-      s"${name}_docs", buckets, Seq("doc_id"))
+      s"${name}_docs", buckets, Seq("doc_id"), append = true)
   }
 
   /** The MONITOR half of the streaming winnow loop: the PERSISTED
@@ -6035,15 +4596,15 @@ object Dedup {
     // a single shared "fresh" check keyed on one table could not heal
     // a death between the appends)
     spark.catalog.refreshTable(s"${name}_banded")
-    appendBucketedTable(
+    saveBucketedTable(
       bandedKeys(newSh.join(spark.table(s"${name}_banded")
           .select("doc_id").distinct(), Seq("doc_id"), "left_anti"),
         meta.getAs[Int]("bands"), meta.getAs[Int]("rows_per_band")),
-      s"${name}_banded", buckets, Seq("band", "bkey"))
-    appendBucketedTable(
+      s"${name}_banded", buckets, Seq("band", "bkey"), append = true)
+    saveBucketedTable(
       newSh.join(spark.table(s"${name}_shingles").select("doc_id"),
         Seq("doc_id"), "left_anti"),
-      s"${name}_shingles", buckets, Seq("doc_id"))
+      s"${name}_shingles", buckets, Seq("doc_id"), append = true)
   }
 
   /** The MONITOR half of the streaming reband loop: the PERSISTED
@@ -6461,13 +5022,13 @@ object Dedup {
       name: String, newSigs: DataFrame): Unit = {
     val meta = spark.table(s"${name}_meta").head()
     spark.catalog.refreshTable(s"${name}_banded")
-    appendBucketedTable(
+    saveBucketedTable(
       simhashBanded(
         newSigs.select(col("doc_id"), col("simhash"))
           .join(spark.table(s"${name}_banded").select("doc_id").distinct(),
             Seq("doc_id"), "left_anti"),
         meta.getAs[Int]("bands")),
-      s"${name}_banded", meta.getAs[Int]("buckets"), Seq("b", "chunk"))
+      s"${name}_banded", meta.getAs[Int]("buckets"), Seq("b", "chunk"), append = true)
   }
 
   /** The retained corpus's signatures, recovered from the banded rows
@@ -6536,7 +5097,7 @@ object Dedup {
     val vecs = baseVecs.select(col("vec_id"), col("label"), col("v"),
       col("n")).localCheckpoint()
     saveBucketedTable(vecs, s"${name}_vecs", buckets, Seq("vec_id"))
-    saveEmbBandedGeneration(spark, name, vecs, bands, buckets = buckets)
+    saveSrpBandedGeneration(spark, name, vecs, bands, buckets = buckets)
   }
 
   /** One micro-batch's APPEND into the SRP-reband state: new vectors
@@ -6551,17 +5112,17 @@ object Dedup {
     val newVecs = newVecs0.select(col("vec_id"), col("label"), col("v"),
       col("n")).localCheckpoint()
     spark.catalog.refreshTable(s"${name}_banded")
-    appendBucketedTable(
+    saveBucketedTable(
       embBandedOf(
         newVecs.join(spark.table(s"${name}_banded").select("vec_id")
           .distinct(), Seq("vec_id"), "left_anti"),
         meta.getAs[Int]("bands"), planesPerBand = 2),
-      s"${name}_banded", buckets, Seq("band", "bucket"))
+      s"${name}_banded", buckets, Seq("band", "bucket"), append = true)
     spark.catalog.refreshTable(s"${name}_vecs")
-    appendBucketedTable(
+    saveBucketedTable(
       newVecs.join(spark.table(s"${name}_vecs").select("vec_id"),
         Seq("vec_id"), "left_anti"),
-      s"${name}_vecs", buckets, Seq("vec_id"))
+      s"${name}_vecs", buckets, Seq("vec_id"), append = true)
   }
 
   /** The MONITOR half of the streaming SRP loop, ONE definition with
@@ -6609,7 +5170,7 @@ object Dedup {
       name: String, bands: Int): Unit = {
     spark.catalog.refreshTable(s"${name}_vecs")
     val buckets = spark.table(s"${name}_meta").head().getAs[Int]("buckets")
-    saveEmbBandedGeneration(spark, s"${name}__gen",
+    saveSrpBandedGeneration(spark, s"${name}__gen",
       spark.table(s"${name}_vecs"), bands, buckets = buckets)
     swapInBandedGeneration(spark, name)
   }
@@ -6826,18 +5387,18 @@ object Dedup {
     * their candidate-join keys, plus the meta row LAST (its presence
     * proves the generation complete — the shared crash-safety ordering).
     */
-  private def saveEmbBandedGeneration(spark: SparkSession, name: String,
+  private def saveSrpBandedGeneration(spark: SparkSession, name: String,
       e: DataFrame, bands: Int, planesPerBand: Int = 2,
       buckets: Int = 8): Unit =
-    saveEmbBandedGenerationRows(spark, name,
+    saveSrpBandedGenerationRows(spark, name,
       embBandedOf(e, bands, planesPerBand), bands, buckets)
 
-  /** [[saveEmbBandedGeneration]] over PRE-BANDED rows (the
+  /** [[saveSrpBandedGeneration]] over PRE-BANDED rows (the
     * [[saveBandedGenerationRows]] twin for the vector family): the
     * batched tenant engine bands every tenant's vectors in one pass
     * and hands each tenant its slice. Same layout, meta LAST.
     */
-  private def saveEmbBandedGenerationRows(spark: SparkSession,
+  private def saveSrpBandedGenerationRows(spark: SparkSession,
       name: String, bandedRows: DataFrame, bands: Int,
       buckets: Int = 8): Unit = {
     saveBucketedTable(
@@ -6873,7 +5434,7 @@ object Dedup {
     // discard a prior process's half-swapped generation before the
     // gen-0 save writes anything
     recoverBandedGenerationSwap(spark, name)
-    saveEmbBandedGeneration(spark, name, e, bands = 4)
+    saveSrpBandedGeneration(spark, name, e, bands = 4)
     val audit = slice(e).localCheckpoint()
     val a = audit.select(col("label"), col("vec_id").as("id_a"),
       col("v").as("v_a"), col("n").as("n_a"))
@@ -6907,7 +5468,7 @@ object Dedup {
     }
     val before = measure(0)
     if (before.head().getAs[Boolean]("triggered")) {
-      saveEmbBandedGeneration(spark, s"${name}__gen", e, bands = 8)
+      saveSrpBandedGeneration(spark, s"${name}__gen", e, bands = 8)
       swapInBandedGeneration(spark, name)
     }
     before.unionByName(measure(1)).orderBy("phase")
@@ -6938,7 +5499,7 @@ object Dedup {
       .withColumn("tenant", pmod(col("vec_id"), nT))
       .localCheckpoint()
     parForeachTenant(names.zipWithIndex) { case (name, tn) =>
-      saveEmbBandedGenerationRows(spark, name,
+      saveSrpBandedGenerationRows(spark, name,
         banded0.filter(col("tenant") === tn.toLong), bands = 4) }
     // the audit slice and its exact side, once for every tenant: the
     // (tenant, label) join keys make the broadcast pass exactly the
@@ -6993,7 +5554,7 @@ object Dedup {
         .withColumn("tenant", pmod(col("vec_id"), nT))
         .localCheckpoint()
       parForeachTenant(tripped) { tn =>
-        saveEmbBandedGenerationRows(spark, s"${names(tn.toInt)}__gen",
+        saveSrpBandedGenerationRows(spark, s"${names(tn.toInt)}__gen",
           banded8.filter(col("tenant") === tn), bands = 8)
         swapInBandedGeneration(spark, names(tn.toInt))
       }
@@ -7259,85 +5820,6 @@ object Dedup {
     EmbIndex(index.banded.unionByName(embBandedOf(newVecs, bands, planesPerBand)),
       index.vectors.unionByName(newVecs.select("label", "vec_id", "v", "n")))
 
-  /** Persist / reload the embedding index as bucketed+sorted warehouse
-    * tables — banded rows on the block keys (the delta join reads them
-    * bucketed), vectors on vec_id (the verify join's key).
-    */
-  /** The embedding family's on-disk suffix set — see [[nearDupTableSuffixes]]. */
-  private[graft] val embIndexTableSuffixes =
-    Seq("_banded", "_vectors", "_meta", "_tombstones")
-
-  def saveEmbIndex(index: EmbIndex, name: String, buckets: Int = 8,
-      bands: Int = 4, planesPerBand: Int = 2): Unit = {
-    saveBucketedTable(index.banded, s"${name}_banded", buckets,
-      Seq("label", "band", "bucket"))
-    saveBucketedTable(index.vectors, s"${name}_vectors", buckets, Seq("vec_id"))
-    val spark = index.banded.sparkSession
-    import spark.implicits._
-    dropTableAndLocation(spark, s"${name}_meta")
-    Seq((bands, planesPerBand, buckets))
-      .toDF("bands", "planes_per_band", "buckets")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
-  }
-
-  /** Load a saved embedding index. Tombstoned vectors (a
-    * [[removeFromEmbIndex]] takedown not yet compacted away) are filtered
-    * out of BOTH tables by a broadcast anti-join — banded rows AND the
-    * verification vectors, so a removed vector can neither seed a
-    * candidate nor verify one.
-    */
-  def loadEmbIndex(spark: SparkSession, name: String): EmbIndex = {
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-    EmbIndex(minusTombstones(spark.table(s"${name}_banded"), ts, "vec_id"),
-      minusTombstones(spark.table(s"${name}_vectors"), ts, "vec_id"))
-  }
-
-  /** [[removeFromNearDupIndex]]'s embedding twin: tombstone now, serve
-    * filtered immediately, physical delete at the next
-    * [[compactEmbIndex]]. Re-ingesting a removed vec_id
-    * ([[appendEmbIndex]]) lifts its tombstone; because the vectors table
-    * is the verification payload, re-ingestion of a NOT-yet-compacted
-    * removal must compact first (duplicate vector rows would multiply
-    * verify joins) — the delete-then-insert contract the EmbIndex
-    * scaladoc states.
-    */
-  def removeFromEmbIndex(spark: SparkSession, name: String,
-      vecIds: DataFrame): Unit =
-    appendTombstones(spark, s"${name}_tombstones", vecIds, "vec_id")
-
-  /** [[upsertEmbIndex]]'s disk half: a shard's banded LSH rows and
-    * vectors append into the saved bucketed tables; banding and layout
-    * come from the meta table (see [[appendNearDupIndex]]).
-    */
-  def appendEmbIndex(spark: SparkSession, name: String,
-      newVecs: DataFrame): Unit = {
-    val meta = spark.table(s"${name}_meta").head()
-    val buckets = meta.getAs[Int]("buckets")
-    appendBucketedTable(
-      embBandedOf(newVecs, meta.getAs[Int]("bands"), meta.getAs[Int]("planes_per_band")),
-      s"${name}_banded", buckets, Seq("label", "band", "bucket"))
-    appendBucketedTable(newVecs.select("label", "vec_id", "v", "n"),
-      s"${name}_vectors", buckets, Seq("vec_id"))
-    // a re-added id lifts its tombstone (delete-then-append idempotence)
-    clearTombstones(spark, s"${name}_tombstones",
-      newVecs.select(col("vec_id")), "vec_id")
-  }
-
-  /** Restore the one-file-per-bucket invariant after appends (see
-    * [[compactNearDupIndex]]); pending takedowns become physical deletes
-    * in the rewritten generation and the tombstone list clears.
-    */
-  def compactEmbIndex(spark: SparkSession, name: String): Unit = {
-    val buckets = spark.table(s"${name}_meta").head().getAs[Int]("buckets")
-    val ts = tombstoneTable(spark, s"${name}_tombstones")
-      .map(_.select(col("vec_id")).localCheckpoint())
-    compactBucketedTable(spark, s"${name}_banded", buckets,
-      Seq("label", "band", "bucket"), ts.map((_, "vec_id")))
-    compactBucketedTable(spark, s"${name}_vectors", buckets, Seq("vec_id"),
-      ts.map((_, "vec_id")))
-    if (ts.isDefined) dropTableAndLocation(spark, s"${name}_tombstones")
-  }
-
   /** Incremental embedding near-dup: a new shard's banded LSH rows
     * (map-side — the hyperplanes are literals) join the persisted index on
     * (label, band, bucket) under the two-sided hot-block guard, candidates
@@ -7383,79 +5865,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         lit(true).as("new_a"), lit(true).as("new_b"), col("cos"))
     verifyCosine(vecs, cand, threshold).unionByName(vsSelf)
-  }
-
-  /** The d17 gate: index the bucket < splitAt slice of the prepared
-    * vectors, delta-join the rest — the d13/d15 gate shape for the
-    * embedding family, routed through the SAVED bucketed tables so the
-    * measured path is the persisted disk path (round-7 finding).
-    */
-  def deltaEmbeddingGate(spark: SparkSession, dir: String,
-      splitAt: Int = 200, threshold: Double = 0.35): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    val e = Similarity.preparedEmbeddings(spark, dir)
-    deltaEmbeddingPairs(e.filter(bucket >= splitAt),
-      embGateIndex(spark, dir, splitAt), threshold)
-  }
-
-  /** The d17 gate's persisted serving index — see [[nearDupGateIndex]]. */
-  private[graft] def embGateIndex(spark: SparkSession, dir: String,
-      splitAt: Int = 200): EmbIndex = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    graft.SessionCache.getOrElseUpdate(spark, ("embIndexDisk", dir, splitAt)) {
-      val name = f"emb_gate_${splitAt}_${dir.hashCode & 0xffffffffL}%x"
-      saveEmbIndex(buildEmbIndex(
-        Similarity.preparedEmbeddings(spark, dir).filter(bucket < splitAt)), name)
-      loadEmbIndex(spark, name)
-    }.asInstanceOf[EmbIndex]
-  }
-
-  /** [[deltaNearDupsGateAppended]]'s lifecycle for the embedding family:
-    * save (bucket < split1) → append the split1..split2-1 slice (banded
-    * rows AND vectors) → compact → delta-join the bucket ≥ split2 shard.
-    * Equals [[deltaEmbeddingGate]] at splitAt = split2 (spec-proven).
-    */
-  def deltaEmbeddingGateAppended(spark: SparkSession, dir: String,
-      split1: Int = 150, split2: Int = 200, threshold: Double = 0.35): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    val e = Similarity.preparedEmbeddings(spark, dir)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("embIndexAppended", dir, split1, split2)) {
-      val name = f"emb_app_${split1}_${split2}_${dir.hashCode & 0xffffffffL}%x"
-      saveEmbIndex(buildEmbIndex(e.filter(bucket < split1)), name)
-      appendEmbIndex(spark, name, e.filter(bucket >= split1 && bucket < split2))
-      compactEmbIndex(spark, name)
-      loadEmbIndex(spark, name)
-    }.asInstanceOf[EmbIndex]
-    deltaEmbeddingPairs(e.filter(bucket >= split2), index, threshold)
-  }
-
-  /** The d26 gate — the retraction lifecycle for the embedding family
-    * (see [[deltaSimhashGateRemoved]]): vec_id ≡ 3 (mod 14) removed +
-    * compacted (physical delete from banded AND vectors), vec_id ≡ 10
-    * (mod 14) removed uncompacted (anti-joined out of both tables at
-    * load), shard delta-joined against the loaded result. Union = vec_id
-    * ≡ 3 (mod 7); oracle = d17's delta SQL minus indexed-side members of
-    * that class.
-    */
-  def deltaEmbeddingGateRemoved(spark: SparkSession, dir: String,
-      splitAt: Int = 200, threshold: Double = 0.35): DataFrame = {
-    def bucket = TextAnalysis.splitBucket(col("vec_id"))
-    val e = Similarity.preparedEmbeddings(spark, dir)
-    val index = graft.SessionCache.getOrElseUpdate(spark,
-        ("embIndexRemoved", dir, splitAt, threshold)) {
-      // threshold is verify-stage only but keys the cache — mirror it
-      // into the table name so differently-parameterized calls never
-      // alias the persisted state (the d22 rule)
-      val name = f"emb_rm_${splitAt}_t${(threshold * 100).round}_${dir.hashCode & 0xffffffffL}%x"
-      saveEmbIndex(buildEmbIndex(e.filter(bucket < splitAt)), name)
-      val ids = e.filter(bucket < splitAt).select(col("vec_id"))
-      removeFromEmbIndex(spark, name, ids.filter(col("vec_id") % 14 === 3))
-      compactEmbIndex(spark, name)
-      removeFromEmbIndex(spark, name, ids.filter(col("vec_id") % 14 === 10))
-      loadEmbIndex(spark, name)
-    }.asInstanceOf[EmbIndex]
-    deltaEmbeddingPairs(e.filter(bucket >= splitAt), index, threshold)
   }
 
   /** Near-duplicate pairs by embedding cosine similarity: block by label

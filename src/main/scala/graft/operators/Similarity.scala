@@ -352,7 +352,7 @@ object Similarity {
     // the store has no banding, but the vec_id -> tenant assignment IS a
     // saved parameter: the meta pins n_tenants so a sync invoked with a
     // different count refuses instead of appending into wrong partitions
-    Dedup.saveTenantMeta(spark, table, "n_tenants" -> nTenants)
+    Dedup.saveMeta(spark, table, Seq("n_tenants" -> nTenants))
   }
 
   /** One tenant's slice of the two-level store minus pending takedowns —
@@ -1237,16 +1237,16 @@ object Similarity {
     val newVecs = newVecs0.select(col("vec_id"), col("v"), col("n"))
       .localCheckpoint()
     spark.catalog.refreshTable(s"${name}_banded")
-    Dedup.appendBucketedTable(
+    Dedup.saveBucketedTable(
       newVecs.join(spark.table(s"${name}_banded").select("vec_id"),
           Seq("vec_id"), "left_anti")
         .select(col("vec_id"),
           bucketExpr(col("v"), meta.getAs[Int]("planes")).as("bucket")),
-      s"${name}_banded", buckets, Seq("bucket"))
-    Dedup.appendBucketedTable(
+      s"${name}_banded", buckets, Seq("bucket"), append = true)
+    Dedup.saveBucketedTable(
       newVecs.join(spark.table(s"${name}_vecs").select("vec_id"),
         Seq("vec_id"), "left_anti"),
-      s"${name}_vecs", buckets, Seq("vec_id"))
+      s"${name}_vecs", buckets, Seq("vec_id"), append = true)
   }
 
   /** The MONITOR half, ONE definition for the s23 lifecycle and the
@@ -1683,7 +1683,7 @@ object Similarity {
   }
 
   /** RETRACTION for the vector store — the ANN twin of
-    * [[Dedup.removeFromNearDupIndex]]: tombstone now (every search tier
+    * [[IndexFamily.remove]]: tombstone now (every search tier
     * reads `index.vectors`, which [[loadAnnIndex]] serves minus the
     * takedown list), physical delete at the next [[compactAnnIndex]]
     * (the rewritten generation never contains the rows), resurrection on
@@ -1800,10 +1800,10 @@ object Similarity {
       newVecs: DataFrame): Unit = {
     val loaded = loadAnnIndex(spark, name)
     val buckets = spark.table(s"${name}_meta").head().getAs[Int]("buckets")
-    Dedup.appendBucketedTable(
+    Dedup.saveBucketedTable(
       annServingRows(newVecs, loaded.scaleM, loaded.centroids, loaded.nPlanes,
         loaded.pqBook),
-      s"${name}_vectors", buckets, Seq("vec_id"))
+      s"${name}_vectors", buckets, Seq("vec_id"), append = true)
     // a re-added id lifts its tombstone (delete-then-append idempotence)
     Dedup.clearTombstones(spark, s"${name}_tombstones",
       newVecs.select(col("vec_id")), "vec_id")

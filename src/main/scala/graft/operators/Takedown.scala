@@ -43,9 +43,11 @@ import org.apache.spark.sql.functions._
   */
 object Takedown {
 
-  /** The registered state classes one takedown propagates to. Absent ⇒
-    * the class is not deployed. `documents` is the document store the
-    * label re-pairing, aggregate subtraction, and sketch rebuild read.
+  /** The registered state classes one takedown propagates to: `indexes`
+    * holds one (family, index table) per deployed index family; any other
+    * absent slot ⇒ that class is not deployed. `documents` is the
+    * document store the label re-pairing, aggregate subtraction, and
+    * sketch rebuild read.
     * CONTRACT: at apply time it must STILL CONTAIN the removed ids' rows
     * (with their lang/source attributes) — the aggregate subtraction
     * semi-joins `documents` against the removal list to compute the
@@ -55,10 +57,7 @@ object Takedown {
     * tree) only AFTER [[Takedown.apply]] returns.
     */
   final case class Targets(
-      nearDupIndex: Option[String] = None,
-      simHashIndex: Option[String] = None,
-      embIndex: Option[String] = None,
-      containIndex: Option[String] = None,
+      indexes: Seq[(IndexFamily[_], String)] = Nil,
       annIndex: Option[String] = None,
       partitionedAnnTable: Option[String] = None,
       labelTable: Option[String] = None,
@@ -92,11 +91,9 @@ object Takedown {
     val n = ids.count()
     if (n == 0) return 0L
 
-    targets.nearDupIndex.foreach(Dedup.removeFromNearDupIndex(spark, _, ids))
-    targets.simHashIndex.foreach(Dedup.removeFromSimHashIndex(spark, _, ids))
-    targets.containIndex.foreach(Dedup.removeFromContainIndex(spark, _, ids))
+    targets.indexes.foreach { case (fam, t) =>
+      IndexFamily.remove(spark, fam, t, ids) }
     val vecIds = ids.select(col("doc_id").as("vec_id"))
-    targets.embIndex.foreach(Dedup.removeFromEmbIndex(spark, _, vecIds))
     targets.annIndex.foreach(Similarity.removeFromAnnIndex(spark, _, vecIds))
     targets.partitionedAnnTable.foreach(
       Similarity.removeFromPartitionedAnnStore(spark, _, vecIds))
@@ -119,17 +116,15 @@ object Takedown {
     n
   }
 
-  /** The tenant-partitioned index families one TENANT-SCOPED takedown
-    * propagates to (the d31/d33/d34/d35 layouts). Absent ⇒ the family
-    * is not deployed for this estate. `compact` turns the takedown
-    * PHYSICAL in the same call: each family's tenant-scoped compaction
-    * rewrites only the tenant's partition directories.
+  /** The tenant-partitioned state one TENANT-SCOPED takedown propagates
+    * to: `indexes` holds (family, table) per deployed index family (the
+    * d31/d33/d34/d35 layouts); an absent slot ⇒ not deployed for this
+    * estate. `compact` turns the takedown PHYSICAL in the same call: each
+    * family's tenant-scoped compaction rewrites only the tenant's
+    * partition directories.
     */
   final case class TenantTargets(
-      nearDupIndex: Option[String] = None,
-      simHashIndex: Option[String] = None,
-      embIndex: Option[String] = None,
-      containIndex: Option[String] = None,
+      indexes: Seq[(IndexFamily[_], String)] = Nil,
       tenantAnnStore: Option[String] = None,
       labelTable: Option[String] = None,
       labelThreshold: Double = 0.8,
@@ -142,11 +137,11 @@ object Takedown {
     * the d31/d33/d34/d35 index families and (with `compact`) turns
     * physical immediately, while the whole lifecycle touches ONLY the
     * tenant's partition directories — other tenants' files never move
-    * and their pending tombstones survive (the per-family
-    * compactTenant* contracts, IndexRemoveSpec-pinned). Ids outside the
-    * tenant are DROPPED, not fanned: a tenant's takedown request must
-    * not reach into another tenant's estate (isolation is the layout's
-    * point). Replay bookkeeping mirrors [[apply]] — batch-identity
+    * and their pending tombstones survive (the tenant-scope
+    * [[IndexFamily.compact]] contract, IndexRemoveSpec-pinned). Ids
+    * outside the tenant are DROPPED, not fanned: a tenant's takedown
+    * request must not reach into another tenant's estate (isolation is
+    * the layout's point). Replay bookkeeping mirrors [[apply]] — batch-identity
     * scoped, apply-then-log, the tenant recorded in the log row.
     */
   def applyTenant(spark: SparkSession, ids0: DataFrame, tenant: Int,
@@ -167,25 +162,10 @@ object Takedown {
     val n = ids.count()
     if (n == 0) return 0L
 
-    targets.nearDupIndex.foreach { t =>
-      Dedup.removeFromNearDupIndex(spark, t, ids)
+    targets.indexes.foreach { case (fam, t) =>
+      IndexFamily.remove(spark, fam, t, ids)
       if (targets.compact)
-        Dedup.compactTenantNearDupIndex(spark, t, tenant, nTenants)
-    }
-    targets.simHashIndex.foreach { t =>
-      Dedup.removeFromSimHashIndex(spark, t, ids)
-      if (targets.compact)
-        Dedup.compactTenantSimHashIndex(spark, t, tenant, nTenants)
-    }
-    targets.embIndex.foreach { t =>
-      Dedup.removeFromEmbIndex(spark, t, ids.select(col("doc_id").as("vec_id")))
-      if (targets.compact)
-        Dedup.compactTenantEmbIndex(spark, t, tenant, nTenants)
-    }
-    targets.containIndex.foreach { t =>
-      Dedup.removeFromContainIndex(spark, t, ids)
-      if (targets.compact)
-        Dedup.compactTenantContainIndex(spark, t, tenant, nTenants)
+        IndexFamily.compact(spark, fam, t, IndexFamily.Tenant(tenant, nTenants))
     }
     // the s20 two-level (tenant, label) vector store: tombstone, then
     // tenant-scoped label-subtree compaction — the serving surface the
@@ -347,24 +327,17 @@ object Takedown {
       val docs = Tables.documents(spark, dir)
       val e = Similarity.preparedEmbeddings(spark, dir)
         .select("vec_id", "label", "v", "n")
-      val nm = Map(
-        "nd" -> s"td_nd_$h", "sh" -> s"td_sh_$h", "emb" -> s"td_emb_$h",
-        "ct" -> s"td_ct_$h", "ann" -> s"td_ann_$h", "annp" -> s"td_annp_$h",
-        "lab" -> s"td_lab_$h", "st" -> s"td_st_$h", "sk" -> s"td_sk_$h")
+      val nm = IndexFamily.all.map(f => f.short -> s"td_${f.short}_$h").toMap ++
+        Map("ann" -> s"td_ann_$h", "annp" -> s"td_annp_$h",
+          "lab" -> s"td_lab_$h", "st" -> s"td_st_$h", "sk" -> s"td_sk_$h")
       val logT = s"td_log_$h"
       val corpusPath = new java.io.File(sys.props("java.io.tmpdir"),
         f"graft_td_corpus_${ProcessHandle.current().pid()}_$h").getAbsolutePath
       // fresh state every session: the gate measures one full lifecycle
-      (nm.values.toSeq.flatMap(n => Seq(n, s"${n}_banded", s"${n}_shingles",
-        s"${n}_meta", s"${n}_tombstones", s"${n}_fp", s"${n}_df",
-        s"${n}_sets", s"${n}_vectors", s"${n}_centroids", s"${n}_pqbook",
-        s"${n}__gen")) :+ logT)
+      (nm.values.toSeq.flatMap(n => Dedup.estateTableSuffixes.map(n + _)) :+ logT)
         .foreach(t => Dedup.dropTableAndLocation(spark, t))
-      Dedup.saveNearDupIndex(Dedup.buildNearDupIndex(docs), nm("nd"))
-      Dedup.saveSimHashIndex(
-        Dedup.buildSimHashIndex(Dedup.simhash64Cached(spark, dir)), nm("sh"))
-      Dedup.saveEmbIndex(Dedup.buildEmbIndex(e), nm("emb"))
-      Dedup.saveContainIndex(Dedup.buildContainIndex(docs), nm("ct"))
+      IndexFamily.all.foreach(f => IndexFamily.save(spark, f, nm(f.short),
+        IndexFamily.Fleet, f.cachedInput(spark, dir)))
       Similarity.saveAnnIndex(spark, nm("ann"), e)
       Similarity.savePartitionedAnnStore(spark, nm("annp"), e)
       Dedup.saveLabelState(spark, nm("lab"), Dedup.labelStateOf(docs))
@@ -377,8 +350,7 @@ object Takedown {
       Takedown(spark,
         docs.filter(col("doc_id") % 9 === 4).select(col("doc_id")),
         Targets(
-          nearDupIndex = Some(nm("nd")), simHashIndex = Some(nm("sh")),
-          embIndex = Some(nm("emb")), containIndex = Some(nm("ct")),
+          indexes = IndexFamily.all.map(f => (f, nm(f.short))),
           annIndex = Some(nm("ann")),
           partitionedAnnTable = Some(nm("annp")), labelTable = Some(nm("lab")),
           docStatsTable = Some(nm("st")), sketchCellsTable = Some(nm("sk")),
@@ -394,27 +366,22 @@ object Takedown {
     val liveGroups = docs.join(broadcast(logged), Seq("doc_id"), "left_anti")
     def census(state: String, df: DataFrame, key: String) =
       idRow(state, df, key, if (key == "vec_id") loggedVec else logged)
-    val nd = Dedup.loadNearDupIndex(spark, names("nd")).shingles
-    val sh = Dedup.loadSimHashIndex(spark, names("sh")).banded
-    val emb = Dedup.loadEmbIndex(spark, names("emb")).vectors
-    val ct = Dedup.loadContainIndex(spark, names("ct")).sets
     val ann = Similarity.loadAnnIndex(spark, names("ann")).vectors
     val annp = Similarity.loadPartitionedAnnStore(spark, names("annp"))
     val lab = spark.table(names("lab"))
     val st = spark.table(names("st"))
     val sk = spark.table(names("sk"))
     val corpus = spark.read.parquet(names("corpus"))
-    census("ann_part_store", annp, "vec_id")
+    IndexFamily.all.map(f => census(s"${f.tag}_index",
+        IndexFamily.served(spark, f, names(f.short), IndexFamily.Fleet), f.idCol))
+      .reduce(_ unionByName _)
+      .unionByName(census("ann_part_store", annp, "vec_id"))
       .unionByName(census("ann_store", ann, "vec_id"))
-      .unionByName(census("contain_index", ct, "doc_id"))
       .unionByName(census("corpus_tree", corpus, "doc_id"))
       .unionByName(Dedup.groupCensusRow("doc_stats", st, sum(col("n")),
         liveGroups.select(col("lang"), col("source")).distinct(),
         Seq("lang", "source")))
-      .unionByName(census("emb_index", emb, "vec_id"))
       .unionByName(census("labels", lab, "doc_id"))
-      .unionByName(census("neardup_index", nd, "doc_id"))
-      .unionByName(census("simhash_index", sh, "doc_id"))
       .unionByName(Dedup.groupCensusRow("sketch_cells", sk, count(lit(1)),
         liveGroups.select(col("lang")).distinct(), Seq("lang")))
       .unionByName(logRow(logged, col("doc_id") % 9 =!= 4))
@@ -450,9 +417,8 @@ object Takedown {
       val docs = Tables.documents(spark, dir)
       val e = Similarity.preparedEmbeddings(spark, dir)
         .select("vec_id", "label", "v", "n")
-      val nm = Map("nd" -> s"td2_nd_$h", "sh" -> s"td2_sh_$h",
-        "emb" -> s"td2_em_$h", "ct" -> s"td2_ct_$h", "ann" -> s"td2_an_$h",
-        "lab" -> s"td2_lab_$h", "sk" -> s"td2_sk_$h")
+      val nm = IndexFamily.all.map(f => f.short -> s"td2_${f.short}_$h").toMap ++
+        Map("ann" -> s"td2_an_$h", "lab" -> s"td2_lab_$h", "sk" -> s"td2_sk_$h")
       val logT = s"td2_log_$h"
       // the s20 store and the two aggregate state classes are their own
       // (partitioned, unsuffixed) tables
@@ -461,33 +427,18 @@ object Takedown {
         Dedup.dropTenantCompactionTemps(spark, nm(k), nTenants)
       }
       // fresh state every session: the gate measures one full lifecycle
-      (nm.values.toSeq.flatMap(n => Seq(s"${n}_banded", s"${n}_shingles",
-        s"${n}_fp", s"${n}_df", s"${n}_sets", s"${n}_vectors",
-        s"${n}_tombstones")) :+ logT)
-        .foreach { t =>
-          Dedup.dropTableAndLocation(spark, t)
-          // a crashed prior session's per-tenant compaction temps
-          Dedup.dropTenantCompactionTemps(spark, t, nTenants)
-        }
-      Dedup.saveTenantNearDupTables(
-        Dedup.persistedShingleTable(spark, dir), nm("nd"), nTenants)
-      Dedup.saveTenantSimHashTables(
-        Dedup.simhash64Cached(spark, dir), nm("sh"), nTenants)
-      Dedup.saveTenantEmbTables(e, nm("emb"), nTenants)
-      Dedup.saveTenantContainTables(
-        Dedup.containmentSelCached(spark, dir,
-          Dedup.estateContainW, Dedup.estateContainWinnow), nm("ct"),
-        nTenants, w = Dedup.estateContainW,
-        winnow = Dedup.estateContainWinnow)
+      Dedup.dropTableAndLocation(spark, logT)
+      // a fresh tenant save drops stale tombstones and compaction temps
+      IndexFamily.all.foreach(f => IndexFamily.save(spark, f, nm(f.short),
+        IndexFamily.Tenant(tenant, nTenants), f.cachedInput(spark, dir)))
       Similarity.saveTenantAnnStore(spark, nm("ann"), e, nTenants)
       Dedup.saveTenantLabelState(spark, nm("lab"), docs, nTenants)
       Dedup.saveTenantSketchCells(spark, nm("sk"), docs, nTenants)
       applyTenant(spark,
         docs.filter(col("doc_id") % 9 === 4).select(col("doc_id")),
         tenant, nTenants,
-        TenantTargets(nearDupIndex = Some(nm("nd")),
-          simHashIndex = Some(nm("sh")), embIndex = Some(nm("emb")),
-          containIndex = Some(nm("ct")), tenantAnnStore = Some(nm("ann")),
+        TenantTargets(indexes = IndexFamily.all.map(f => (f, nm(f.short))),
+          tenantAnnStore = Some(nm("ann")),
           labelTable = Some(nm("lab")), sketchCellsTable = Some(nm("sk")),
           documents = Some(docs)),
         logT)
@@ -511,18 +462,10 @@ object Takedown {
           .agg(countDistinct(col(key)).as("n_other")))
         .select(col("state"), col("n_live"), col("n_other"), col("n_refs"))
     }
-    census("neardup_index",
-        t => Dedup.loadTenantNearDupIndex(spark, names("nd"), t).shingles,
-        "doc_id")
-      .unionByName(census("simhash_index",
-        t => Dedup.loadTenantSimHashIndex(spark, names("sh"), t).banded,
-        "doc_id"))
-      .unionByName(census("emb_index",
-        t => Dedup.loadTenantEmbIndex(spark, names("emb"), t).vectors,
-        "vec_id"))
-      .unionByName(census("contain_index",
-        t => Dedup.loadTenantContainIndex(spark, names("ct"), t).sets,
-        "doc_id"))
+    IndexFamily.all.map(f => census(s"${f.tag}_index",
+        t => IndexFamily.served(spark, f, names(f.short),
+          IndexFamily.Tenant(t, nTenants)), f.idCol))
+      .reduce(_ unionByName _)
       .unionByName(census("ann_tenant_store",
         t => Similarity.loadTenantAnnStore(spark, names("ann"), t),
         "vec_id"))

@@ -22,7 +22,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Options:
   *   - `element`: tracks (default) | playlists | playlist_tracks
-  *   - `userId`:  User_ID stamped on every row (default 1)
+  *   - `userId`:  User_ID of the first file's rows (default 1); the i-th
+  *     path, in the order given, gets `userId + i`, so N users' libraries
+  *     read together never share a User_ID (their Track_IDs collide)
   *
   * Column pruning is real: the reader materializes ONLY the required
   * fields (the pruned schema flows into PlistReader.rows, which streams
@@ -242,22 +244,25 @@ case class PlistScan(required: StructType, readAll: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    files.map(PlistFilePartition.apply).toArray
+    files.zipWithIndex.map { case (f, i) => PlistFilePartition(f, userId + i) }
+      .toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    PlistReaderFactory(required, readAll, pushed, element, userId, conf)
+    PlistReaderFactory(required, readAll, pushed, element, conf)
   override def description(): String =
     s"plist element=$element PushedFilters=[${pushed.mkString(", ")}]"
 }
 
-case class PlistFilePartition(path: String) extends InputPartition
+/** One library file and the User_ID its rows carry. */
+case class PlistFilePartition(path: String, userId: Int) extends InputPartition
 
 case class PlistReaderFactory(required: StructType, readAll: StructType,
     pushed: Array[Filter], element: String,
-    userId: Int, conf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PlistPartitionReader(
-      partition.asInstanceOf[PlistFilePartition].path, required, readAll,
-      pushed, element, userId, conf)
+    conf: SerializableHadoopConf) extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val file = partition.asInstanceOf[PlistFilePartition]
+    new PlistPartitionReader(file.path, required, readAll, pushed, element,
+      file.userId, conf)
+  }
 }
 
 class PlistPartitionReader(path: String, required: StructType,

@@ -330,7 +330,7 @@ object EventsStream {
     *      ([[graft.operators.Dedup.deltaNearDups]]), so intra-batch pairs
     *      are visible, unlike the stream-static topology;
     *   3. append the batch into the persisted bucketed index tables
-    *      ([[graft.operators.Dedup.appendNearDupIndex]]).
+    *      ([[graft.operators.IndexFamily.append]]).
     *
     * Batches run sequentially (Structured Streaming's contract), so a
     * pair (a, b) with a arriving in batch i and b in batch j > i is
@@ -339,7 +339,7 @@ object EventsStream {
     * order/replay therefore equals the one-shot batch delta of all new
     * documents against the starting index (StreamingSpec asserts both
     * the identity and zero duplicate emissions). Periodic
-    * [[graft.operators.Dedup.compactNearDupIndex]] keeps the append-only
+    * [[graft.operators.IndexFamily.compact]] keeps the append-only
     * index's buckets single-file (sorted reads); the pairs land in an
     * append-only `<name>_pairs` table.
     */
@@ -347,7 +347,7 @@ object EventsStream {
       indexName: String, threshold: Double = 0.8,
       name: String = "ingest_neardup",
       takedownLog: String = "takedown_log"): DataFrame = {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, IndexFamily}
     Dedup.dropTableAndLocation(spark, s"${name}_pairs")
     drain(shardStream(spark, documentSchema, shardDir)) { (batch, _) =>
       // the previous batch APPENDED to these tables — drop any cached
@@ -365,10 +365,12 @@ object EventsStream {
           Seq("doc_id"), "left_anti")
         .localCheckpoint()
       if (!fresh.isEmpty) {
-        Dedup.deltaNearDups(fresh, Dedup.loadNearDupIndex(spark, indexName),
+        Dedup.deltaNearDups(fresh,
+            IndexFamily.load(spark, IndexFamily.NearDup, indexName, IndexFamily.Fleet),
             threshold)
           .write.mode("append").saveAsTable(s"${name}_pairs")
-        Dedup.appendNearDupIndex(spark, indexName, fresh)
+        IndexFamily.appendPayload(spark, IndexFamily.NearDup, indexName,
+          IndexFamily.Fleet, fresh)
         // a RE-INGESTED doc must also drop out of the cumulative
         // takedown log, or every later sketch-cell rebuild of its lang
         // permanently excludes it (the per-index tombstones clear on
@@ -424,7 +426,7 @@ object EventsStream {
       name: String = "ingest_curation",
       screen: Option[graft.operators.Dedup.EvalGramState] = None,
       takedownLog: String = "takedown_log"): DataFrame = {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, IndexFamily}
     Dedup.dropTableAndLocation(spark, s"${name}_label_updates")
     Dedup.dropTableAndLocation(spark, s"${name}_quarantine")
     drain(shardStream(spark, documentSchema, shardDir)) { (batch, batchId) =>
@@ -465,7 +467,8 @@ object EventsStream {
         // table this batch's merge reads
         val labels = spark.table(s"${name}_labels").localCheckpoint()
         val delta = Dedup.deltaNearDups(fresh,
-          Dedup.loadNearDupIndex(spark, indexName), threshold)
+          IndexFamily.load(spark, IndexFamily.NearDup, indexName, IndexFamily.Fleet),
+          threshold)
         val newDocs = fresh.select(col("doc_id"),
           length(coalesce(col("text"), lit(""))).as("qlen"))
         val changed = Dedup.mergeLabelState(spark, labels, delta, newDocs)
@@ -485,7 +488,8 @@ object EventsStream {
           changed.withColumn("batch_id", lit(batchId))
             .write.mode("append").saveAsTable(logTable)
         Dedup.applyLabelUpdates(spark, s"${name}_labels", changed)
-        Dedup.appendNearDupIndex(spark, indexName, fresh)
+        IndexFamily.appendPayload(spark, IndexFamily.NearDup, indexName,
+          IndexFamily.Fleet, fresh)
         // re-ingested docs drop out of the cumulative takedown log
         // (see runIngestNearDup — the log-reading sketch rebuild is
         // the one consumer the per-index tombstone lift doesn't cover)
@@ -855,7 +859,7 @@ object EventsStream {
     *      already-removed id anyway: its tombstone row is inert, and a
     *      gone id touches no cluster);
     *   2. TOMBSTONE the near-dup index
-    *      ([[graft.operators.Dedup.removeFromNearDupIndex]] — served
+    *      ([[graft.operators.IndexFamily.remove]] — served
     *      filtered immediately, physical at the next compaction);
     *   3. RETRACT the label state
     *      ([[graft.operators.Dedup.removeFromLabelState]] — touched
@@ -880,7 +884,7 @@ object EventsStream {
       threshold: Double = 0.8, name: String = "takedown"): DataFrame = {
     runTakedownStreamTargets(spark, takedownDir,
       graft.operators.Takedown.Targets(
-        nearDupIndex = Some(indexName),
+        indexes = Seq((graft.operators.IndexFamily.NearDup, indexName)),
         labelTable = Some(labelTable),
         labelThreshold = threshold,
         documents = Some(documents.localCheckpoint())),

@@ -29,10 +29,12 @@ object ProfileDelta {
 
     time("warm inputs")(graft.operators.Dedup.warmInputProjections(spark, dir))
     time("gate cold (index build+save+load)")(
-      graft.operators.Dedup.deltaNearDupsGate(spark, dir).count())
+      graft.operators.Dedup.servedGate(spark, dir,
+          graft.operators.IndexFamily.NearDup).count())
     for (i <- 1 to 3)
       time(s"gate steady $i")(
-        graft.operators.Dedup.deltaNearDupsGate(spark, dir).count())
+        graft.operators.Dedup.servedGate(spark, dir,
+          graft.operators.IndexFamily.NearDup).count())
 
     // stage splits on the steady path
     val name = f"neardup_gate_200_${dir.hashCode & 0xffffffffL}%x"

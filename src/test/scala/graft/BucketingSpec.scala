@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.IndexFamily
+import graft.operators.IndexFamily.{Fleet, Tenant}
 import org.apache.spark.sql.functions._
 
 /** Bucketing evidence (PERF.md "100 TB extrapolation"): pre-bucketing both
@@ -25,7 +27,7 @@ class BucketingSpec extends SparkSuite {
       spark.sql(s"DROP TABLE IF EXISTS ndidx$s"))
     val index = graft.operators.Dedup.buildNearDupIndex(base)
     graft.operators.Dedup.saveNearDupIndex(index, "ndidx", buckets = 4)
-    val loaded = graft.operators.Dedup.loadNearDupIndex(spark, "ndidx")
+    val loaded = IndexFamily.load(spark, IndexFamily.NearDup, "ndidx", Fleet)
     try {
       // band params come from the meta table, and the persisted index
       // yields the same delta pairs as the in-memory one
@@ -137,10 +139,10 @@ class BucketingSpec extends SparkSuite {
       spark.sql(s"DROP TABLE IF EXISTS ndapp$s"))
     val index = Dedup.buildNearDupIndex(base)
     Dedup.saveNearDupIndex(index, "ndapp", buckets = 4)
-    Dedup.appendNearDupIndex(spark, "ndapp", shard1)
+    IndexFamily.appendPayload(spark, IndexFamily.NearDup, "ndapp", Fleet, shard1)
     val inMem = Dedup.upsertNearDupIndex(index, shard1)
     try {
-      val loaded = Dedup.loadNearDupIndex(spark, "ndapp")
+      val loaded = IndexFamily.load(spark, IndexFamily.NearDup, "ndapp", Fleet)
       // the appended tables hold exactly the in-memory upsert's rows
       def bandedSet(df: org.apache.spark.sql.DataFrame) =
         df.select("doc_id", "band", "bkey").collect()
@@ -181,7 +183,7 @@ class BucketingSpec extends SparkSuite {
           s"append broke the bucketed read:\n${before.take(1200)}")
         assert("Sort \\[".r.findAllIn(before).length == 2,
           s"expected both sides to sort before compaction:\n${before.take(1200)}")
-        Dedup.compactNearDupIndex(spark, "ndapp")
+        IndexFamily.compact(spark, IndexFamily.NearDup, "ndapp", Fleet)
         val after = probePlan()
         assert("(?<!Broadcast)Exchange".r.findAllIn(after).length == 1,
           s"compaction broke the bucketed read:\n${after.take(1200)}")
@@ -193,7 +195,7 @@ class BucketingSpec extends SparkSuite {
       }
       // and the data is unchanged by the rewrite
       assert(pairSet(Dedup.deltaNearDups(shard2,
-        Dedup.loadNearDupIndex(spark, "ndapp"))) == viaDisk)
+        IndexFamily.load(spark, IndexFamily.NearDup, "ndapp", Fleet))) == viaDisk)
     } finally Seq("_banded", "_shingles", "_meta").foreach(s =>
       spark.sql(s"DROP TABLE IF EXISTS ndapp$s"))
   }
@@ -202,28 +204,32 @@ class BucketingSpec extends SparkSuite {
     val dir = sf("sf0.001")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    assert(rows(graft.operators.Dedup.deltaNearDupsGateAppended(spark, dir)) ==
-      rows(graft.operators.Dedup.deltaNearDupsGate(spark, dir)))
-    assert(rows(graft.operators.Dedup.deltaSimhashGateAppended(spark, dir)) ==
-      rows(graft.operators.Dedup.deltaSimhashGate(spark, dir)))
-    assert(rows(graft.operators.Dedup.deltaEmbeddingGateAppended(spark, dir)) ==
-      rows(graft.operators.Dedup.deltaEmbeddingGate(spark, dir)))
+    assert(rows(graft.operators.Dedup.appendedGate(spark, dir, graft.operators.IndexFamily.NearDup)) ==
+      rows(graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.NearDup)))
+    assert(rows(graft.operators.Dedup.appendedGate(spark, dir, graft.operators.IndexFamily.SimHash)) ==
+      rows(graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.SimHash)))
+    assert(rows(graft.operators.Dedup.appendedGate(spark, dir, graft.operators.IndexFamily.Emb)) ==
+      rows(graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.Emb)))
   }
 
   test("d18 gate: appended+compacted index reads bucketed, no Exchange/Sort") {
-    assertIndexGatePlan(graft.operators.Dedup.deltaNearDupsGateAppended(spark, sf("sf0.001")))
+    assertIndexGatePlan(graft.operators.Dedup.appendedGate(spark, sf("sf0.001"),
+      graft.operators.IndexFamily.NearDup))
   }
 
   test("d13 gate: delta join reads the persisted index bucketed, no Exchange/Sort") {
-    assertIndexGatePlan(graft.operators.Dedup.deltaNearDupsGate(spark, sf("sf0.001")))
+    assertIndexGatePlan(graft.operators.Dedup.servedGate(spark, sf("sf0.001"),
+      graft.operators.IndexFamily.NearDup))
   }
 
   test("d15 gate: simhash delta reads the persisted index bucketed, no Exchange/Sort") {
-    assertIndexGatePlan(graft.operators.Dedup.deltaSimhashGate(spark, sf("sf0.001")))
+    assertIndexGatePlan(graft.operators.Dedup.servedGate(spark, sf("sf0.001"),
+      graft.operators.IndexFamily.SimHash))
   }
 
   test("d17 gate: embedding delta reads the persisted index bucketed, no Exchange/Sort") {
-    assertIndexGatePlan(graft.operators.Dedup.deltaEmbeddingGate(spark, sf("sf0.001")))
+    assertIndexGatePlan(graft.operators.Dedup.servedGate(spark, sf("sf0.001"),
+      graft.operators.IndexFamily.Emb))
   }
 
   test("s7b gate: exact re-rank reads the persisted vector store bucketed, no Exchange/Sort") {

@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.IndexFamily
+import graft.operators.IndexFamily.{Fleet, Tenant}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,33 +34,39 @@ class IndexRemoveSpec extends SparkSuite {
     ops.saveNearDupIndex(ops.buildNearDupIndex(base), "rmidx", buckets = 4)
     try {
       // baseline: both planted near-dups pair with the shard doc
-      val before = pairSet(ops.deltaNearDups(shard, ops.loadNearDupIndex(spark, "rmidx")))
+      val before = pairSet(ops.deltaNearDups(shard, IndexFamily.load(spark, IndexFamily.NearDup,
+          "rmidx", Fleet)))
       assert(before.contains((10L, 20L)) && before.contains((11L, 20L)))
 
       // 1. TOMBSTONE serving: removing 10 hides it immediately (no rewrite)
-      ops.removeFromNearDupIndex(spark, "rmidx", Seq(10L).toDF("doc_id"))
-      val afterRm = pairSet(ops.deltaNearDups(shard, ops.loadNearDupIndex(spark, "rmidx")))
+      IndexFamily.remove(spark, IndexFamily.NearDup, "rmidx", Seq(10L).toDF("doc_id"))
+      val afterRm = pairSet(ops.deltaNearDups(shard, IndexFamily.load(spark, IndexFamily.NearDup,
+          "rmidx", Fleet)))
       assert(!afterRm.exists(p => p._1 == 10L || p._2 == 10L), s"10 still paired: $afterRm")
       assert(afterRm.contains((11L, 20L)), "unrelated doc must survive the takedown")
 
       // 2. COMPACT = physical delete: the raw table no longer holds doc 10,
       // the tombstone list is gone, and serving is unchanged
-      ops.compactNearDupIndex(spark, "rmidx")
+      IndexFamily.compact(spark, IndexFamily.NearDup, "rmidx", Fleet)
       assert(!spark.catalog.tableExists("rmidx_tombstones"))
       assert(spark.table("rmidx_shingles").filter(col("doc_id") === 10L).isEmpty)
       assert(spark.table("rmidx_banded").filter(col("doc_id") === 10L).isEmpty)
-      val afterCompact = pairSet(ops.deltaNearDups(shard, ops.loadNearDupIndex(spark, "rmidx")))
+      val afterCompact = pairSet(ops.deltaNearDups(shard, IndexFamily.load(spark, IndexFamily.NearDup,
+          "rmidx", Fleet)))
       assert(afterCompact == afterRm)
 
       // 3. delete-then-append idempotence: tombstone 11, then re-append it
       // — the append lifts the tombstone and 11 is fully restored
-      ops.removeFromNearDupIndex(spark, "rmidx", Seq(11L).toDF("doc_id"))
-      assert(!pairSet(ops.deltaNearDups(shard, ops.loadNearDupIndex(spark, "rmidx")))
+      IndexFamily.remove(spark, IndexFamily.NearDup, "rmidx", Seq(11L).toDF("doc_id"))
+      assert(!pairSet(ops.deltaNearDups(shard, IndexFamily.load(spark, IndexFamily.NearDup,
+          "rmidx", Fleet)))
         .contains((11L, 20L)))
-      ops.appendNearDupIndex(spark, "rmidx", base.filter(col("doc_id") === 11L))
+      IndexFamily.appendPayload(spark, IndexFamily.NearDup,
+          "rmidx", Fleet, base.filter(col("doc_id") === 11L))
       assert(spark.table("rmidx_tombstones").isEmpty,
         "re-appending the only tombstoned id must clear the list")
-      val restored = pairSet(ops.deltaNearDups(shard, ops.loadNearDupIndex(spark, "rmidx")))
+      val restored = pairSet(ops.deltaNearDups(shard, IndexFamily.load(spark, IndexFamily.NearDup,
+          "rmidx", Fleet)))
       assert(restored.contains((11L, 20L)), s"11 not restored: $restored")
     } finally {
       Seq("_banded", "_shingles", "_meta", "_tombstones").foreach(s =>
@@ -79,22 +87,24 @@ class IndexRemoveSpec extends SparkSuite {
     val shard = Seq((20L, sig0 ^ 2L)).toDF("doc_id", "simhash")
     Seq("_banded", "_meta", "_tombstones").foreach(s =>
       spark.sql(s"DROP TABLE IF EXISTS rmsh$s"))
-    ops.saveSimHashIndex(ops.buildSimHashIndex(base), "rmsh", buckets = 4)
-    def pairs() = pairSet(ops.deltaSimhashPairs(shard, ops.loadSimHashIndex(spark, "rmsh")))
+    IndexFamily.save(spark, IndexFamily.SimHash, "rmsh", Fleet, base, buckets = 4)
+    def pairs() = pairSet(ops.deltaSimhashPairs(shard, IndexFamily.load(spark, IndexFamily.SimHash,
+        "rmsh", Fleet)))
     try {
       assert(pairs() == Set((10L, 20L), (11L, 20L)))
       // tombstone-served removal
-      ops.removeFromSimHashIndex(spark, "rmsh", Seq(10L).toDF("doc_id"))
+      IndexFamily.remove(spark, IndexFamily.SimHash, "rmsh", Seq(10L).toDF("doc_id"))
       assert(pairs() == Set((11L, 20L)), "tombstoned signature still pairing")
       // compact = physical delete + cleared tombstones
-      ops.compactSimHashIndex(spark, "rmsh")
+      IndexFamily.compact(spark, IndexFamily.SimHash, "rmsh", Fleet)
       assert(!spark.catalog.tableExists("rmsh_tombstones"))
       assert(spark.table("rmsh_banded").filter(col("doc_id") === 10L).isEmpty)
       assert(pairs() == Set((11L, 20L)))
       // delete-then-append: the re-added signature wins
-      ops.removeFromSimHashIndex(spark, "rmsh", Seq(11L).toDF("doc_id"))
+      IndexFamily.remove(spark, IndexFamily.SimHash, "rmsh", Seq(11L).toDF("doc_id"))
       assert(pairs().isEmpty)
-      ops.appendSimHashIndex(spark, "rmsh", base.filter(col("doc_id") === 11L))
+      IndexFamily.append(spark, IndexFamily.SimHash,
+          "rmsh", Fleet, base.filter(col("doc_id") === 11L))
       assert(spark.table("rmsh_tombstones").isEmpty,
         "re-appending the only tombstoned id must clear the list")
       assert(pairs() == Set((11L, 20L)), "re-appended signature not restored")
@@ -119,26 +129,27 @@ class IndexRemoveSpec extends SparkSuite {
     val shard = Seq(withNorm(20L, flat(1))).toDF("vec_id", "label", "v", "n")
     Seq("_banded", "_vectors", "_meta", "_tombstones").foreach(s =>
       spark.sql(s"DROP TABLE IF EXISTS rmemb$s"))
-    ops.saveEmbIndex(ops.buildEmbIndex(base), "rmemb", buckets = 4)
+    IndexFamily.save(spark, IndexFamily.Emb, "rmemb", Fleet, base, buckets = 4)
     def pairs() = pairSet(
-      ops.deltaEmbeddingPairs(shard, ops.loadEmbIndex(spark, "rmemb"), threshold = 0.8))
+      ops.deltaEmbeddingPairs(shard, IndexFamily.load(spark, IndexFamily.Emb,
+          "rmemb", Fleet), threshold = 0.8))
     try {
       assert(pairs() == Set((10L, 20L), (11L, 20L)))
       // tombstone-served removal (banded AND vectors filtered)
-      ops.removeFromEmbIndex(spark, "rmemb", Seq(10L).toDF("vec_id"))
+      IndexFamily.remove(spark, IndexFamily.Emb, "rmemb", Seq(10L).toDF("vec_id"))
       assert(pairs() == Set((11L, 20L)), "tombstoned vector still pairing")
       // compact = physical delete from BOTH tables + cleared tombstones
-      ops.compactEmbIndex(spark, "rmemb")
+      IndexFamily.compact(spark, IndexFamily.Emb, "rmemb", Fleet)
       assert(!spark.catalog.tableExists("rmemb_tombstones"))
       assert(spark.table("rmemb_banded").filter(col("vec_id") === 10L).isEmpty)
       assert(spark.table("rmemb_vectors").filter(col("vec_id") === 10L).isEmpty)
       assert(pairs() == Set((11L, 20L)))
       // delete-then-append (compact first: the vectors table is a
       // verification payload — the documented re-ingestion contract)
-      ops.removeFromEmbIndex(spark, "rmemb", Seq(11L).toDF("vec_id"))
+      IndexFamily.remove(spark, IndexFamily.Emb, "rmemb", Seq(11L).toDF("vec_id"))
       assert(pairs().isEmpty)
-      ops.compactEmbIndex(spark, "rmemb")
-      ops.appendEmbIndex(spark, "rmemb", base.filter(col("vec_id") === 11L))
+      IndexFamily.compact(spark, IndexFamily.Emb, "rmemb", Fleet)
+      IndexFamily.append(spark, IndexFamily.Emb, "rmemb", Fleet, base.filter(col("vec_id") === 11L))
       assert(pairs() == Set((11L, 20L)), "re-appended vector not restored")
     } finally {
       Seq("_banded", "_vectors", "_meta", "_tombstones").foreach(s =>
@@ -166,17 +177,18 @@ class IndexRemoveSpec extends SparkSuite {
     val shardSel = docs(Seq((20L, passage)))
     Seq("_fp", "_df", "_sets", "_meta", "_tombstones").foreach(s =>
       spark.sql(s"DROP TABLE IF EXISTS rmct$s"))
-    ops.saveContainIndex(ops.buildContainIndex(base), "rmct", buckets = 4)
+    IndexFamily.save(spark, IndexFamily.Contain,
+        "rmct", Fleet, ops.containmentSelection(base, 8, 4), buckets = 4)
     def pairs() = pairSet(ops.deltaContainment(shardSel,
-      ops.loadContainIndex(spark, "rmct"), dfCap = 2))
+      IndexFamily.load(spark, IndexFamily.Contain, "rmct", Fleet), dfCap = 2))
     try {
       assert(pairs().isEmpty, "df cap must suppress the df=3 digests")
       // tombstone-served removal: df counts subtract, the cap re-opens
-      ops.removeFromContainIndex(spark, "rmct", Seq(10L).toDF("doc_id"))
+      IndexFamily.remove(spark, IndexFamily.Contain, "rmct", Seq(10L).toDF("doc_id"))
       assert(pairs() == Set((11L, 20L)),
         "load-time df subtraction must re-admit the now-df=2 digests")
       // compact = physical delete + df REBUILT from surviving fingerprints
-      ops.compactContainIndex(spark, "rmct")
+      IndexFamily.compact(spark, IndexFamily.Contain, "rmct", Fleet)
       assert(!spark.catalog.tableExists("rmct_tombstones"))
       assert(spark.table("rmct_fp").filter(col("doc_id") === 10L).isEmpty)
       assert(spark.table("rmct_sets").filter(col("doc_id") === 10L).isEmpty)
@@ -185,11 +197,11 @@ class IndexRemoveSpec extends SparkSuite {
       assert(pairs() == Set((11L, 20L)))
       // delete-then-append (compact first — sets is a verification
       // payload, same contract as the embedding family)
-      ops.removeFromContainIndex(spark, "rmct", Seq(11L).toDF("doc_id"))
+      IndexFamily.remove(spark, IndexFamily.Contain, "rmct", Seq(11L).toDF("doc_id"))
       assert(pairs().isEmpty)
-      ops.compactContainIndex(spark, "rmct")
-      ops.appendContainIndex(spark, "rmct",
-        base.filter(col("doc_id") === 11L))
+      IndexFamily.compact(spark, IndexFamily.Contain, "rmct", Fleet)
+      IndexFamily.appendPayload(spark, IndexFamily.Contain,
+          "rmct", Fleet, base.filter(col("doc_id") === 11L))
       assert(pairs() == Set((11L, 20L)), "re-appended doc not restored")
     } finally {
       Seq("_fp", "_df", "_sets", "_meta", "_tombstones").foreach(s =>
@@ -363,9 +375,7 @@ class IndexRemoveSpec extends SparkSuite {
     val name = "tshc"
     val all = Seq(s"${name}_banded", s"${name}_banded__tcomp", s"${name}_tombstones")
     all.foreach(t => ops.dropTableAndLocation(spark, t))
-    ops.saveTenantBucketedTable(
-      ops.simhashBanded(sigs).withColumn("tenant", pmod(col("doc_id"), lit(2))),
-      s"${name}_banded", buckets = 4, Seq("b", "chunk"))
+    IndexFamily.save(spark, IndexFamily.SimHash, name, Tenant(0, 2), sigs, buckets = 4)
     def mtimes(tenant: Int): Map[String, Long] = {
       val d = new java.io.File(
         new org.apache.hadoop.fs.Path(
@@ -376,18 +386,17 @@ class IndexRemoveSpec extends SparkSuite {
         .map(f => f.getName -> f.lastModified()).toMap
     }
     def servedIds(tenant: Int): Set[Long] =
-      ops.loadTenantSimHashIndex(spark, name, tenant).banded
+      IndexFamily.load(spark, IndexFamily.SimHash, name, Tenant(tenant, 2)).banded
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     try {
       val t1Before = mtimes(1)
       assert(t1Before.nonEmpty)
       // tombstone tenant-0 docs 4,6 AND tenant-1 doc 5 (pending)
-      ops.removeFromSimHashIndex(spark, name, Seq(4L, 6L, 5L).toDF("doc_id"))
+      IndexFamily.remove(spark, IndexFamily.SimHash, name, Seq(4L, 6L, 5L).toDF("doc_id"))
       assert(servedIds(0) == (0L to 19L by 2).toSet -- Set(4L, 6L))
       assert(servedIds(1) == (1L to 19L by 2).toSet - 5L)
       // compact TENANT 0 only
-      ops.compactTenantSimHashIndex(spark, name, tenant = 0, nTenants = 2,
-        buckets = 4)
+      IndexFamily.compact(spark, IndexFamily.SimHash, name, Tenant(0, 2))
       // tenant 0: physically gone (served without any tombstone rows)
       spark.catalog.refreshTable(s"${name}_banded")
       assert(spark.table(s"${name}_banded").filter(col("tenant") === 0)
@@ -403,10 +412,9 @@ class IndexRemoveSpec extends SparkSuite {
       assert(servedIds(1) == (1L to 19L by 2).toSet - 5L)
       // emptying compaction: tombstone ALL remaining tenant-0 docs — the
       // partition directory itself must disappear
-      ops.removeFromSimHashIndex(spark, name,
-        ((0L to 19L by 2).filterNot(Set(4L, 6L))).toDF("doc_id"))
-      ops.compactTenantSimHashIndex(spark, name, tenant = 0, nTenants = 2,
-        buckets = 4)
+      IndexFamily.remove(spark, IndexFamily.SimHash,
+          name, ((0L to 19L by 2).filterNot(Set(4L, 6L))).toDF("doc_id"))
+      IndexFamily.compact(spark, IndexFamily.SimHash, name, Tenant(0, 2))
       val t0Dir = new java.io.File(
         new org.apache.hadoop.fs.Path(
           spark.conf.get("spark.sql.warehouse.dir"),
@@ -429,12 +437,7 @@ class IndexRemoveSpec extends SparkSuite {
     val all = Seq(s"${name}_banded", s"${name}_vectors",
       s"${name}_banded__tcomp", s"${name}_vectors__tcomp", s"${name}_tombstones")
     all.foreach(t => ops.dropTableAndLocation(spark, t))
-    def withTenant(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("tenant", pmod(col("vec_id"), lit(2)))
-    ops.saveTenantBucketedTable(withTenant(ops.embBandedOf(e, 4, 2)),
-      s"${name}_banded", buckets = 4, Seq("label", "band", "bucket"))
-    ops.saveTenantBucketedTable(withTenant(e.select("label", "vec_id", "v", "n")),
-      s"${name}_vectors", buckets = 4, Seq("vec_id"))
+    IndexFamily.save(spark, IndexFamily.Emb, name, Tenant(0, 2), e, buckets = 4)
     def mtimes(table: String, tenant: Int): Map[String, Long] = {
       val d = new java.io.File(
         new org.apache.hadoop.fs.Path(
@@ -445,7 +448,7 @@ class IndexRemoveSpec extends SparkSuite {
         .map(f => f.getName -> f.lastModified()).toMap
     }
     def servedIds(tenant: Int): Set[Long] = {
-      val idx = ops.loadTenantEmbIndex(spark, name, tenant)
+      val idx = IndexFamily.load(spark, IndexFamily.Emb, name, Tenant(tenant, 2))
       val fromVecs = idx.vectors.select("vec_id").distinct()
         .collect().map(_.getLong(0)).toSet
       val fromBanded = idx.banded.select("vec_id").distinct()
@@ -457,12 +460,11 @@ class IndexRemoveSpec extends SparkSuite {
       val t1Before = (mtimes(s"${name}_banded", 1), mtimes(s"${name}_vectors", 1))
       assert(t1Before._1.nonEmpty && t1Before._2.nonEmpty)
       // tombstone tenant-0 vecs 4,6 AND tenant-1 vec 5 (pending)
-      ops.removeFromEmbIndex(spark, name, Seq(4L, 6L, 5L).toDF("vec_id"))
+      IndexFamily.remove(spark, IndexFamily.Emb, name, Seq(4L, 6L, 5L).toDF("vec_id"))
       assert(servedIds(0) == (0L to 19L by 2).toSet -- Set(4L, 6L))
       assert(servedIds(1) == (1L to 19L by 2).toSet - 5L)
       // compact TENANT 0 only — both tables
-      ops.compactTenantEmbIndex(spark, name, tenant = 0, nTenants = 2,
-        buckets = 4)
+      IndexFamily.compact(spark, IndexFamily.Emb, name, Tenant(0, 2))
       Seq(s"${name}_banded", s"${name}_vectors").foreach { t =>
         spark.catalog.refreshTable(t)
         assert(spark.table(t).filter(col("tenant") === 0)
@@ -481,10 +483,9 @@ class IndexRemoveSpec extends SparkSuite {
         "tenant-1's pending tombstone was lost")
       assert(servedIds(1) == (1L to 19L by 2).toSet - 5L)
       // emptying compaction: both tenant-0 partition dirs must disappear
-      ops.removeFromEmbIndex(spark, name,
-        ((0L to 19L by 2).filterNot(Set(4L, 6L))).toDF("vec_id"))
-      ops.compactTenantEmbIndex(spark, name, tenant = 0, nTenants = 2,
-        buckets = 4)
+      IndexFamily.remove(spark, IndexFamily.Emb,
+          name, ((0L to 19L by 2).filterNot(Set(4L, 6L))).toDF("vec_id"))
+      IndexFamily.compact(spark, IndexFamily.Emb, name, Tenant(0, 2))
       Seq(s"${name}_banded", s"${name}_vectors").foreach { t =>
         val d = new java.io.File(
           new org.apache.hadoop.fs.Path(
@@ -510,7 +511,7 @@ class IndexRemoveSpec extends SparkSuite {
     val all = halves.map(h => s"${name}_$h") ++
       halves.map(h => s"${name}_${h}__tcomp") :+ s"${name}_tombstones"
     all.foreach(t => ops.dropTableAndLocation(spark, t))
-    ops.saveTenantContainTables(sel, name, nTenants = 2)
+    IndexFamily.save(spark, IndexFamily.Contain, name, Tenant(0, 2), sel)
     def mtimes(table: String, tenant: Int): Map[String, Long] = {
       val d = new java.io.File(
         new org.apache.hadoop.fs.Path(
@@ -521,7 +522,7 @@ class IndexRemoveSpec extends SparkSuite {
         .map(f => f.getName -> f.lastModified()).toMap
     }
     def servedIds(tenant: Int): Set[Long] = {
-      val idx = ops.loadTenantContainIndex(spark, name, tenant)
+      val idx = IndexFamily.load(spark, IndexFamily.Contain, name, Tenant(tenant, 2))
       val fromFp = idx.fp.select("doc_id").distinct()
         .collect().map(_.getLong(0)).toSet
       val fromSets = idx.sets.select("doc_id").distinct()
@@ -532,7 +533,7 @@ class IndexRemoveSpec extends SparkSuite {
     // the served df table must equal a from-scratch count over the
     // served fingerprint rows — the i7 subtraction / a2d rebuild contract
     def dfMatchesFp(tenant: Int): Unit = {
-      val idx = ops.loadTenantContainIndex(spark, name, tenant)
+      val idx = IndexFamily.load(spark, IndexFamily.Contain, name, Tenant(tenant, 2))
       val served = idx.dfTab.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val expect = idx.fp.groupBy(col("d")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -542,13 +543,12 @@ class IndexRemoveSpec extends SparkSuite {
       val t1Before = halves.map(h => mtimes(s"${name}_$h", 1))
       assert(t1Before.forall(_.nonEmpty))
       // tombstone tenant-0 docs 4,6 AND tenant-1 doc 5 (pending)
-      ops.removeFromContainIndex(spark, name, Seq(4L, 6L, 5L).toDF("doc_id"))
+      IndexFamily.remove(spark, IndexFamily.Contain, name, Seq(4L, 6L, 5L).toDF("doc_id"))
       assert(servedIds(0) == (0L to 19L by 2).toSet -- Set(4L, 6L))
       assert(servedIds(1) == (1L to 19L by 2).toSet - 5L)
       dfMatchesFp(0); dfMatchesFp(1)
       // compact TENANT 0 only — all three halves
-      ops.compactTenantContainIndex(spark, name, tenant = 0, nTenants = 2,
-        buckets = 8)
+      IndexFamily.compact(spark, IndexFamily.Contain, name, Tenant(0, 2))
       // tenant 0: physically gone from fp/sets; df partition holds the
       // rebuilt counts (one row per digest, no tombstone correction)
       Seq(s"${name}_fp", s"${name}_sets").foreach { t =>
@@ -578,10 +578,9 @@ class IndexRemoveSpec extends SparkSuite {
       assert(servedIds(1) == (1L to 19L by 2).toSet - 5L)
       dfMatchesFp(1)
       // emptying compaction: all three tenant-0 partition dirs disappear
-      ops.removeFromContainIndex(spark, name,
-        ((0L to 19L by 2).filterNot(Set(4L, 6L))).toDF("doc_id"))
-      ops.compactTenantContainIndex(spark, name, tenant = 0, nTenants = 2,
-        buckets = 8)
+      IndexFamily.remove(spark, IndexFamily.Contain,
+          name, ((0L to 19L by 2).filterNot(Set(4L, 6L))).toDF("doc_id"))
+      IndexFamily.compact(spark, IndexFamily.Contain, name, Tenant(0, 2))
       halves.foreach { h =>
         val d = new java.io.File(
           new org.apache.hadoop.fs.Path(
@@ -591,6 +590,90 @@ class IndexRemoveSpec extends SparkSuite {
       }
       assert(servedIds(1) == (1L to 19L by 2).toSet - 5L)
     } finally all.foreach(t => ops.dropTableAndLocation(spark, t))
+  }
+
+  test("every index family x scope: removal serves a rebuild, compaction keeps it (other tenant untouched), re-append restores the full build") {
+    import spark.implicits._
+    val ops = graft.operators.Dedup
+    // 20 ids per family; tenants by id parity; 4, 6 are tenant 0's and 9
+    // tenant 1's (at tenant-0 scope it stays pending throughout)
+    val docs = (0L until 20L).map(i => (i,
+        Seq(i % 4, i % 4 + 1, i % 4 + 2, i % 4 + 3).map(j => s"w$j").mkString(" ") + s" u$i",
+        "en")).toDF("doc_id", "text", "lang")
+    def vec(id: Long) = {
+      val v = Array.tabulate(64)(j => math.sin(id * 64 + j) + 1.0)
+      (id, (id % 2).toInt, v, math.sqrt(v.map(x => x * x).sum))
+    }
+    val inputs: Map[String, DataFrame] = Map(
+      "neardup" -> ops.shingleTableOf(docs),
+      "simhash" -> ops.simhash64Of(docs),
+      "emb" -> (0L until 20L).map(vec).toDF("vec_id", "label", "v", "n"),
+      "contain" -> (0L until 20L).map { id =>
+        val fps = Seq(s"g${id % 5}", s"h${id % 3}")
+        (id, fps, fps :+ s"u$id")
+      }.toDF("doc_id", "fps", "dall")).map { case (k, df) => k -> df.localCheckpoint() }
+    val removed = Seq(4L, 6L, 9L)
+    def rows(parts: Seq[DataFrame]): Seq[Seq[String]] = parts.map(df =>
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq)
+    def warehouse(t: String) = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), t).toUri.getPath
+    def mtimes(t: String): Map[String, Long] =
+      Option(new java.io.File(warehouse(t), "tenant=1").listFiles())
+        .getOrElse(Array.empty).map(f => f.getName -> f.lastModified()).toMap
+    def lifecycle[I](fam: IndexFamily[I], scope: IndexFamily.Scope): Unit = {
+      val input = inputs(fam.tag)
+      val name = s"lc_${fam.short}_${if (scope == Fleet) "f" else "t"}"
+      val tables = fam.tableSuffixes.map(name + _)
+      // the in-memory build over a set of ids, restricted to the scope
+      def build(ids: Seq[Long]): Seq[Seq[String]] = {
+        val in = input.filter(col(fam.idCol).isin(ids: _*) &&
+          IndexFamily.inScope(fam, scope))
+        val parts = fam.members.map(_.rows(in, fam.params.toMap))
+        rows(parts ++ fam.counts.map(c =>
+          parts(fam.members.indexWhere(_.suffix == c.of))
+            .groupBy(col(c.key)).agg(count(lit(1)).as("n"))))
+      }
+      def served() = rows(fam.parts(IndexFamily.load(spark, fam, name, scope)))
+      val all = 0L until 20L
+      val kept = build(all.filterNot(removed.contains))
+      try {
+        IndexFamily.save(spark, fam, name, scope, input, buckets = 2)
+        IndexFamily.remove(spark, fam, name, removed.toDF("doc_id"))
+        assert(served() == kept, s"$name: removal != rebuild")
+        val other = tables.map(t => t -> mtimes(t)).toMap
+        IndexFamily.compact(spark, fam, name, scope)
+        assert(served() == kept, s"$name: compaction changed the served rows")
+        if (scope != Fleet) tables.filterNot(_.endsWith("_meta"))
+          .filterNot(_.endsWith("_tombstones")).foreach { t =>
+            assert(other(t).nonEmpty && mtimes(t) == other(t),
+              s"$t: the other tenant's files moved")
+          }
+        IndexFamily.append(spark, fam, name, scope,
+          input.filter(col(fam.idCol).isin(removed: _*)))
+        assert(served() == build(all), s"$name: re-append != full build")
+      } finally tables.foreach { t =>
+        ops.dropTableAndLocation(spark, t)
+        ops.dropTenantCompactionTemps(spark, t, 2)
+      }
+    }
+    for (fam <- IndexFamily.all; scope <- Seq(Fleet, Tenant(0, 2)))
+      lifecycle(fam, scope)
+  }
+
+  test("remove tombstones the family's id column by name, else doc_id; a frame with neither fails") {
+    import spark.implicits._
+    val ts = "rmcol_tombstones"
+    def tombstoned() = spark.table(ts).as[Long].collect().toSet
+    graft.operators.Dedup.dropTableAndLocation(spark, ts)
+    try {
+      IndexFamily.remove(spark, IndexFamily.Emb, "rmcol", Seq((7, 2L)).toDF("label", "vec_id"))
+      assert(tombstoned() == Set(2L))
+      IndexFamily.remove(spark, IndexFamily.Emb, "rmcol", Seq((7, 3L)).toDF("label", "doc_id"))
+      assert(tombstoned() == Set(2L, 3L))
+      intercept[org.apache.spark.sql.AnalysisException](
+        IndexFamily.remove(spark, IndexFamily.Emb, "rmcol", Seq((7, 4L)).toDF("label", "id")))
+      assert(tombstoned() == Set(2L, 3L))
+    } finally graft.operators.Dedup.dropTableAndLocation(spark, ts)
   }
 
   test("d36 diff-driven sync exercises all three classes: removed gone, added pairs, changed pairs only under amended text") {
@@ -621,7 +704,7 @@ class IndexRemoveSpec extends SparkSuite {
     java.nio.file.Files.move(part,
       java.nio.file.Paths.get(s"$root/documents.parquet"))
     try {
-      val pairs = ops.diffSyncedDeltaNearDups(spark, root)
+      val pairs = ops.diffSyncedGate(spark, root, IndexFamily.NearDup)
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       // ADDED doc serves: its identical-text shard partner pairs
@@ -805,7 +888,7 @@ class IndexRemoveSpec extends SparkSuite {
         .toDF("doc_id", "text")).orderBy("doc_id").collect().map(_.getLong(1))
       assert(java.lang.Long.bitCount(sigs(0) ^ sigs(1)) > 3,
         "fixture invalid: amendment within hamming 3")
-      val pairs = pairSet(ops.diffSyncedDeltaSimhash(spark, root))
+      val pairs = pairSet(ops.diffSyncedGate(spark, root, IndexFamily.SimHash))
       assert(pairs.contains((2L, 18L)), s"added doc not indexed: $pairs")
       assert(pairs.contains((1L, 5L)), s"stable doc lost: $pairs")
       assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L),
@@ -838,7 +921,7 @@ class IndexRemoveSpec extends SparkSuite {
     writeFixtureTable(docs, root, "documents")
     writeFixtureTable(emb, root, "embeddings")
     try {
-      val pairs = pairSet(ops.diffSyncedDeltaEmbedding(spark, root))
+      val pairs = pairSet(ops.diffSyncedGate(spark, root, IndexFamily.Emb))
       assert(pairs.contains((2L, 18L)), s"added vector not indexed: $pairs")
       assert(pairs.contains((1L, 5L)), s"stable vector lost: $pairs")
       assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L),
@@ -963,7 +1046,12 @@ class IndexRemoveSpec extends SparkSuite {
     val root = java.nio.file.Files.createTempDirectory("d39fix").toString
     writeFixtureTable(docs, root, "documents")
     try {
-      val pairs = pairSet(ops.diffSyncedDeltaContainment(spark, root, minShared = 1))
+      val pairs = pairSet(ops.diffSyncedGate(spark, root,
+        // the one-span fixture docs share ONE fingerprint: the family's
+        // delta with minShared = 1 over the same synced index
+        IndexFamily.Contain.copy(delta = (sel, idx) =>
+          ops.deltaContainmentFromSelection(sel, idx, minShared = 1,
+            dfCap = 64, threshold = 0.9))))
       assert(pairs.contains((2L, 18L)), s"added doc not indexed: $pairs")
       assert(pairs.contains((1L, 5L)), s"stable doc lost: $pairs")
       assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L),
@@ -986,7 +1074,7 @@ class IndexRemoveSpec extends SparkSuite {
     val tmp = s"${banded}__tcomp_t0"
     val all = Seq(banded, tmp, s"${name}_tombstones")
     all.foreach(t => ops.dropTableAndLocation(spark, t))
-    ops.saveTenantSimHashTables(sigs, name, 2)
+    IndexFamily.save(spark, IndexFamily.SimHash, name, Tenant(0, 2), sigs)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val root = new org.apache.hadoop.fs.Path(wh, banded)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -998,7 +1086,7 @@ class IndexRemoveSpec extends SparkSuite {
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     }
     try {
-      ops.removeFromSimHashIndex(spark, name, Seq(4L, 6L).toDF("doc_id"))
+      IndexFamily.remove(spark, IndexFamily.SimHash, name, Seq(4L, 6L).toDF("doc_id"))
       // STAGE a mid-swap crash: the retained generation fully written to
       // the per-tenant temp, the old directory renamed to the marker,
       // and only ONE file moved in (crash mid-move)
@@ -1018,7 +1106,7 @@ class IndexRemoveSpec extends SparkSuite {
       // RE-RUN the compaction: recovery must FINISH the interrupted swap
       // (never recompute from the half-swapped live slice), then the
       // caller clears the tenant's tombstones as usual
-      ops.compactTenantSimHashIndex(spark, name, tenant = 0, nTenants = 2)
+      IndexFamily.compact(spark, IndexFamily.SimHash, name, Tenant(0, 2))
       assert(tenantIds(0) == (0L to 19L by 2).toSet -- Set(4L, 6L),
         "recovery lost or duplicated tenant-0 rows")
       assert(spark.table(banded).filter(col("tenant") === 0).count() == nRetained,
@@ -1033,8 +1121,8 @@ class IndexRemoveSpec extends SparkSuite {
       // the old partition is intact — the rewrite discards the temp and
       // redoes from live data
       ops.saveBucketedTable(retained.limit(3), tmp, 8, Seq("b", "chunk"))
-      ops.removeFromSimHashIndex(spark, name, Seq(8L).toDF("doc_id"))
-      ops.compactTenantSimHashIndex(spark, name, tenant = 0, nTenants = 2)
+      IndexFamily.remove(spark, IndexFamily.SimHash, name, Seq(8L).toDF("doc_id"))
+      IndexFamily.compact(spark, IndexFamily.SimHash, name, Tenant(0, 2))
       assert(tenantIds(0) == (0L to 19L by 2).toSet -- Set(4L, 6L, 8L),
         "pre-swap temp leaked into the rewrite")
       assert(tenantIds(1) == (1L to 19L by 2).toSet)

@@ -221,7 +221,7 @@ class PlanSpec extends SparkSuite {
     val dir = sf("sf0.001")
     // d13/d14: digest/band equi joins only — never a pairwise fallback
     for ((name, df) <- Seq(
-        "d13" -> graft.operators.Dedup.deltaNearDupsGate(spark, dir),
+        "d13" -> graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.NearDup),
         "d14" -> graft.operators.Dedup.spanScrub(spark, dir))) {
       val plan = executedPlan(df)
       assert(!plan.contains("CartesianProduct"), s"$name has a CartesianProduct")
@@ -250,7 +250,7 @@ class PlanSpec extends SparkSuite {
         "m4" -> graft.operators.Multimodal.imageNearDups(spark, dir),
         "m5" -> graft.operators.Multimodal.videoNearDups(spark, dir),
         "m6" -> graft.operators.Multimodal.audioNearDups(spark, dir),
-        "d17" -> graft.operators.Dedup.deltaEmbeddingGate(spark, dir))) {
+        "d17" -> graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.Emb))) {
       val plan = executedPlan(df)
       assert(!plan.contains("CartesianProduct"), s"$name has a CartesianProduct")
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name has a nested-loop join")
@@ -487,7 +487,7 @@ class PlanSpec extends SparkSuite {
     // list shuffled like a fact table would break the Exchange-free
     // index-read property the tombstone design preserves)
     val d22 = executedPlan(
-      graft.operators.Dedup.deltaNearDupsGateRemoved(spark, dir).orderBy("id_a", "id_b"))
+      graft.operators.Dedup.removedGate(spark, dir, graft.operators.IndexFamily.NearDup).orderBy("id_a", "id_b"))
     assert(d22.contains("BroadcastHashJoin") && d22.contains("LeftAnti"),
       s"d22 tombstone filter is not a broadcast anti-join:\n${d22.take(1500)}")
     val s13 = executedPlan(
@@ -550,12 +550,12 @@ class PlanSpec extends SparkSuite {
     // d25/d26: the new retraction families keep d22's shape — the
     // tombstone filter is a broadcast anti-join, nothing goes cartesian
     val d25 = executedPlan(graft.operators.Dedup
-      .deltaSimhashGateRemoved(spark, dir).orderBy("id_a", "id_b"))
+      .removedGate(spark, dir, graft.operators.IndexFamily.SimHash).orderBy("id_a", "id_b"))
     assert(d25.contains("LeftAnti"),
       s"d25 tombstone filter missing:\n${d25.take(1500)}")
     assert(!d25.contains("CartesianProduct"), "d25 went cartesian")
     val d26 = executedPlan(graft.operators.Dedup
-      .deltaEmbeddingGateRemoved(spark, dir).orderBy("id_a", "id_b"))
+      .removedGate(spark, dir, graft.operators.IndexFamily.Emb).orderBy("id_a", "id_b"))
     assert(d26.contains("LeftAnti"),
       s"d26 tombstone filter missing:\n${d26.take(1500)}")
     assert(!d26.contains("CartesianProduct"), "d26 went cartesian")
@@ -584,7 +584,8 @@ class PlanSpec extends SparkSuite {
     val d31 = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(out) {
-        graft.operators.Dedup.tenantDeltaNearDups(spark, dir)
+        graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.NearDup,
+          graft.operators.IndexFamily.Tenant(0, 2))
           .orderBy("id_a", "id_b").explain("formatted")
       }
       out.toString
@@ -600,7 +601,8 @@ class PlanSpec extends SparkSuite {
     val d49 = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(out) {
-        graft.operators.Dedup.tenantDiffSyncedNearDups(spark, dir)
+        graft.operators.Dedup.diffSyncedGate(spark, dir, graft.operators.IndexFamily.NearDup,
+          graft.operators.IndexFamily.Tenant(0, 2))
           .orderBy("id_a", "id_b").explain("formatted")
       }
       out.toString
@@ -671,7 +673,8 @@ class PlanSpec extends SparkSuite {
     val d33 = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(out) {
-        graft.operators.Dedup.tenantDeltaSimhash(spark, dir)
+        graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.SimHash,
+          graft.operators.IndexFamily.Tenant(0, 2))
           .orderBy("id_a", "id_b").explain("formatted")
       }
       out.toString
@@ -688,7 +691,8 @@ class PlanSpec extends SparkSuite {
     val d34 = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(out) {
-        graft.operators.Dedup.tenantDeltaEmbedding(spark, dir)
+        graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.Emb,
+          graft.operators.IndexFamily.Tenant(0, 2))
           .orderBy("id_a", "id_b").explain("formatted")
       }
       out.toString
@@ -704,7 +708,8 @@ class PlanSpec extends SparkSuite {
     val d35 = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(out) {
-        graft.operators.Dedup.tenantDeltaContainment(spark, dir)
+        graft.operators.Dedup.servedGate(spark, dir, graft.operators.IndexFamily.Contain,
+          graft.operators.IndexFamily.Tenant(0, 2))
           .orderBy("id_a", "id_b").explain("formatted")
       }
       out.toString
@@ -739,7 +744,8 @@ class PlanSpec extends SparkSuite {
     val d53 = {
       val out = new java.io.ByteArrayOutputStream()
       Console.withOut(out) {
-        graft.operators.Dedup.tenantDiffSyncedContainment(spark, dir)
+        graft.operators.Dedup.diffSyncedGate(spark, dir, graft.operators.IndexFamily.Contain,
+          graft.operators.IndexFamily.Tenant(0, 2))
           .orderBy("id_a", "id_b").explain("formatted")
       }
       out.toString

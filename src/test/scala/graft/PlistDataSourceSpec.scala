@@ -46,6 +46,23 @@ class PlistDataSourceSpec extends SparkSuite {
     val df = spark.read.format("plist").load(fixtureFile, fixtureFile)
     assert(df.rdd.getNumPartitions == 2)
     assert(df.count() == 4)
+    // each file is one user's library: the i-th path gets User_ID 1 + i
+    val perUser = df.groupBy("User_ID").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(perUser == Map(1 -> 2L, 2 -> 2L), s"User_IDs per file: $perUser")
+    // so the (User_ID, Track_ID) join never multiplies across users: each
+    // user's playlist stats equal the one-file read's
+    def stats(paths: String*) = graft.operators.ItdbOps.playlistStats(
+        spark.read.format("plist").load(paths: _*),
+        spark.read.format("plist").option("element", "playlist_tracks")
+          .load(paths: _*))
+      .collect().map(r => (r.getAs[Int]("User_ID"), r.getAs[Int]("Playlist_ID"),
+        r.getAs[Int]("Rating"), r.getAs[Long]("Count"))).toSet
+    val one = stats(fixtureFile)
+    val two = stats(fixtureFile, fixtureFile)
+    assert(two.filter(_._1 == 1) == one, s"user 1 counts: $two vs $one")
+    assert(two.filter(_._1 == 2).map(r => r.copy(_1 = 1)) == one,
+      s"user 2 counts: $two vs $one")
   }
 
   test("filter pushdown: predicate consumed by the scan, no post-scan Filter") {

@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.IndexFamily
+import graft.operators.IndexFamily.{Fleet, Tenant}
 import graft.functions.Exprs
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -395,14 +397,14 @@ class PropertiesSpec extends SparkSuite {
       ops.saveNearDupIndex(ops.buildNearDupIndex(corpus), name, buckets = 2)
       val removedIds = (members ++ others).map(_._1).filter(_ => rng.nextInt(3) == 0)
       if (removedIds.nonEmpty) {
-        ops.removeFromNearDupIndex(spark, name, removedIds.toDF("doc_id"))
-        if (trial % 2 == 0) ops.compactNearDupIndex(spark, name)
+        IndexFamily.remove(spark, IndexFamily.NearDup, name, removedIds.toDF("doc_id"))
+        if (trial % 2 == 0) IndexFamily.compact(spark, IndexFamily.NearDup, name, Fleet)
       }
       try {
         def pairs(idx: ops.NearDupIndex) =
           ops.deltaNearDups(shard, idx).select("id_a", "id_b", "jaccard")
             .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        val got = pairs(ops.loadNearDupIndex(spark, name))
+        val got = pairs(IndexFamily.load(spark, IndexFamily.NearDup, name, Fleet))
         val expected = pairs(ops.buildNearDupIndex(
           corpus.filter(!col("doc_id").isin(removedIds: _*))))
         assert(got == expected, s"trial $trial removed=$removedIds")

@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.IndexFamily
+import graft.operators.IndexFamily.{Fleet, Tenant}
 import graft.operators.Scalars
 import graft.streaming.EventsStream
 import org.apache.spark.sql.functions._
@@ -89,7 +91,7 @@ class StreamingSpec extends SparkSuite {
       def bandedSet(df: org.apache.spark.sql.DataFrame) =
         df.select("doc_id", "band", "bkey").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-      assert(bandedSet(graft.operators.Dedup.loadNearDupIndex(spark, "ndingest").banded) ==
+      assert(bandedSet(IndexFamily.load(spark, IndexFamily.NearDup, "ndingest", Fleet).banded) ==
         bandedSet(graft.operators.Dedup.buildNearDupIndex(
           base.unionByName(shardA).unionByName(shardB)).banded))
     } finally {
@@ -207,7 +209,7 @@ class StreamingSpec extends SparkSuite {
       val pairs = Dedup.deltaNearDups(
         Seq((90L, baseText.replace("base10 base11", "XX ZZ"), "en", "s", 1L))
           .toDF("doc_id", "text", "lang", "source", "n_chars"),
-        Dedup.loadNearDupIndex(spark, "ndtd"))
+        IndexFamily.load(spark, IndexFamily.NearDup, "ndtd", Fleet))
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L), s"removed doc paired: $pairs")
@@ -228,12 +230,13 @@ class StreamingSpec extends SparkSuite {
       // re-adds clean rows), then a NEW takedown request for 5: log-wide
       // dedup would swallow it forever; batch-scoped dedup must take 5
       // down again
-      Dedup.compactNearDupIndex(spark, "ndtd")
-      Dedup.appendNearDupIndex(spark, "ndtd",
-        corpus.filter(col("doc_id") === 5L))
+      IndexFamily.compact(spark, IndexFamily.NearDup, "ndtd", Fleet)
+      IndexFamily.appendPayload(spark, IndexFamily.NearDup,
+          "ndtd", Fleet, corpus.filter(col("doc_id") === 5L))
       val probe90 = Seq((90L, baseText.replace("base10 base11", "XX ZZ"), "en", "s", 1L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
-      def pairSet() = Dedup.deltaNearDups(probe90, Dedup.loadNearDupIndex(spark, "ndtd"))
+      def pairSet() = Dedup.deltaNearDups(probe90, IndexFamily.load(spark, IndexFamily.NearDup,
+          "ndtd", Fleet))
         .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pairSet().exists(p => p._1 == 5L || p._2 == 5L),
         "re-ingested doc must serve again before the new takedown")
@@ -267,7 +270,7 @@ class StreamingSpec extends SparkSuite {
     docs.groupBy(col("lang"))
       .agg(graft.plans.HllAgg.hllSketch(col("doc_id")).as("sk"))
       .write.saveAsTable(sk)
-    val targets = Takedown.Targets(nearDupIndex = Some("ndsil"),
+    val targets = Takedown.Targets(indexes = Seq(IndexFamily.NearDup -> "ndsil"),
       sketchCellsTable = Some(sk), documents = Some(docs))
     def cellMap() = { spark.catalog.refreshTable(sk)
       spark.table(sk).collect()
@@ -358,7 +361,7 @@ class StreamingSpec extends SparkSuite {
       val byId = streamed.map(s => s._1 -> s._2).toMap
       assert(byId(20L) == byId(10L) && byId(30L) == byId(10L))
       // the contaminated doc never entered the persisted index
-      assert(Dedup.loadNearDupIndex(spark, "ndscr").shingles
+      assert(IndexFamily.load(spark, IndexFamily.NearDup, "ndscr", Fleet).shingles
         .filter(col("doc_id") === 22L).isEmpty)
       assert(!streamed.exists(_._1 == 22L))
     } finally {
@@ -827,7 +830,8 @@ class StreamingSpec extends SparkSuite {
       .withColumn("n", expr(
         "sqrt(aggregate(v, cast(0 as double), (a, x) -> a + x * x))"))
     def targetsOf(docs: org.apache.spark.sql.DataFrame) =
-      ops.EstateSyncTargets(nearDup = Some((nd, docs)), labels = Some(lab),
+      ops.EstateSyncTargets(indexes = Seq((IndexFamily.NearDup, nd, docs)),
+        labels = Some(lab),
         sketchCells = Some((sk, docs)),
         annStore = Some((ann, vecsOf(docs))),
         annPart = Some((annp, vecsOf(docs))))
@@ -847,7 +851,7 @@ class StreamingSpec extends SparkSuite {
         .toMap
     def indexIds(): Set[Long] = {
       spark.catalog.refreshTable(s"${nd}_shingles")
-      ops.loadNearDupIndex(spark, nd).shingles
+      IndexFamily.load(spark, IndexFamily.NearDup, nd, Fleet).shingles
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     }
     // served k-NN as a value set: (probe_id, neighbor_id, cos, rn) —
@@ -883,7 +887,7 @@ class StreamingSpec extends SparkSuite {
       // set-based membership hides DUPLICATES (a stale tombstone-list
       // read lets a replayed re-append double-insert — round 16): the
       // shingle table must hold exactly one row per doc
-      val dups = ops.loadNearDupIndex(spark, nd).shingles
+      val dups = IndexFamily.load(spark, IndexFamily.NearDup, nd, Fleet).shingles
         .groupBy(col("doc_id")).count().filter(col("count") > 1).count()
       assert(dups == 0, s"$tag: $dups docs have duplicated shingle rows")
       spark.catalog.refreshTable(lab)
@@ -989,7 +993,7 @@ class StreamingSpec extends SparkSuite {
       ops.dropTenantCompactionTemps(spark, t, 2)
     }
     def targetsOf(docs: org.apache.spark.sql.DataFrame) =
-      ops.TenantEstateSyncTargets(nearDup = Some((nd, docs)),
+      ops.TenantEstateSyncTargets(indexes = Seq((IndexFamily.NearDup, nd, docs)),
         sketchCells = Some((sk, docs)))
     def sortedCols(df: org.apache.spark.sql.DataFrame) =
       df.select(df.columns.sorted.map(col): _*)
@@ -999,7 +1003,7 @@ class StreamingSpec extends SparkSuite {
     def assertSlice(tn: Int, gen: String, tag: String): Unit = {
       spark.catalog.refreshTable(s"${nd}_shingles")
       spark.catalog.refreshTable(s"${nd}_banded")
-      val got = sortedCols(ops.loadTenantNearDupIndex(spark, nd, tn).shingles)
+      val got = sortedCols(IndexFamily.load(spark, IndexFamily.NearDup, nd, Tenant(tn, 2)).shingles)
       val want = sortedCols(ops.shingleTableOf(
         docsOf(gen).filter(pmod(col("doc_id"), lit(2)) === tn)))
       val onlyGot = got.exceptAll(want).take(5)
@@ -1018,7 +1022,8 @@ class StreamingSpec extends SparkSuite {
       assert(cells == fresh, s"$tag: tenant-$tn cells != gen-$gen recompute")
     }
     try {
-      ops.saveTenantNearDupTables(ops.shingleTableOf(docsOf("a")), nd, 2)
+      IndexFamily.save(spark, IndexFamily.NearDup,
+          nd, Tenant(0, 2), ops.shingleTableOf(docsOf("a")))
       ops.saveTenantSketchCells(spark, sk, docsOf("a"), 2)
       publish("b", "a", "d1")
       graft.streaming.EventsStream.runTenantEstateSyncStream(spark, diffDir,
@@ -1083,11 +1088,11 @@ class StreamingSpec extends SparkSuite {
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     def targetsOf(docs: org.apache.spark.sql.DataFrame) = {
       batches.incrementAndGet()
-      ops.EstateSyncTargets(nearDup = Some((nd, docs)))
+      ops.EstateSyncTargets(indexes = Seq((IndexFamily.NearDup, nd, docs)))
     }
     def indexIds(): Set[Long] = {
       spark.catalog.refreshTable(s"${nd}_shingles")
-      ops.loadNearDupIndex(spark, nd).shingles
+      IndexFamily.load(spark, IndexFamily.NearDup, nd, Fleet).shingles
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     }
     try {
@@ -1720,10 +1725,11 @@ class StreamingSpec extends SparkSuite {
       // stage the crash: the banded append landed, the shingle append
       // (the old idempotence marker) did not
       val m = spark.table("rblcrash_meta").head()
-      Dedup.appendBucketedTable(
+      Dedup.saveBucketedTable(
         Dedup.bandedKeys(newSh, m.getAs[Int]("bands"),
           m.getAs[Int]("rows_per_band")),
-        "rblcrash_banded", m.getAs[Int]("buckets"), Seq("band", "bkey"))
+        "rblcrash_banded", m.getAs[Int]("buckets"), Seq("band", "bkey"),
+        append = true)
       // the redelivered batch re-runs the append — per-table anti-joins
       // must skip the landed banded rows and land the missing shingles
       Dedup.appendMinhashRebandState(spark, "rblcrash", newSh)

@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.IndexFamily
+import graft.operators.IndexFamily.{Fleet, Tenant}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,10 +47,11 @@ class TakedownSpec extends SparkSuite {
     val corpusPath = java.nio.file.Files.createTempDirectory("tds_corpus").toString + "/tree"
     allTables(nm, log).foreach(t => ops.dropTableAndLocation(spark, t))
     ops.saveNearDupIndex(ops.buildNearDupIndex(docs), nm("nd"), buckets = 4)
-    ops.saveSimHashIndex(ops.buildSimHashIndex(
-      docs.select(col("doc_id"), lit(0L).as("simhash"))), nm("sh"), buckets = 4)
-    ops.saveEmbIndex(ops.buildEmbIndex(e), nm("emb"), buckets = 4)
-    ops.saveContainIndex(ops.buildContainIndex(docs), nm("ct"), buckets = 4)
+    IndexFamily.save(spark, IndexFamily.SimHash, nm("sh"), Fleet, 
+      docs.select(col("doc_id"), lit(0L).as("simhash")), buckets = 4)
+    IndexFamily.save(spark, IndexFamily.Emb, nm("emb"), Fleet, e, buckets = 4)
+    IndexFamily.save(spark, IndexFamily.Contain,
+        nm("ct"), Fleet, ops.containmentSelection(docs, 8, 4), buckets = 4)
     sim.saveAnnIndex(spark, nm("ann"), e, buckets = 2)
     ops.saveLabelState(spark, nm("lab"), ops.labelStateOf(docs))
     docs.groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
@@ -58,8 +61,8 @@ class TakedownSpec extends SparkSuite {
       .write.saveAsTable(nm("sk"))
     graft.emit.CorpusWriter.write(docs, corpusPath)
     val targets = td.Targets(
-      nearDupIndex = Some(nm("nd")), simHashIndex = Some(nm("sh")),
-      embIndex = Some(nm("emb")), containIndex = Some(nm("ct")),
+      indexes = Seq(IndexFamily.NearDup -> nm("nd"), IndexFamily.SimHash -> nm("sh"),
+        IndexFamily.Emb -> nm("emb"), IndexFamily.Contain -> nm("ct")),
       annIndex = Some(nm("ann")), labelTable = Some(nm("lab")),
       docStatsTable = Some(nm("st")), sketchCellsTable = Some(nm("sk")),
       corpusPath = Some(corpusPath), documents = Some(docs))
@@ -81,10 +84,11 @@ class TakedownSpec extends SparkSuite {
       val retained = docs.filter(!col("doc_id").isin(removed: _*))
 
       // every id-keyed state serves exactly the retained ids
-      assert(idsIn(ops.loadNearDupIndex(spark, nm("nd")).shingles) == live)
-      assert(idsIn(ops.loadSimHashIndex(spark, nm("sh")).banded) == live)
-      assert(idsIn(ops.loadEmbIndex(spark, nm("emb")).vectors, "vec_id") == live)
-      assert(idsIn(ops.loadContainIndex(spark, nm("ct")).sets) == live)
+      assert(idsIn(IndexFamily.load(spark, IndexFamily.NearDup, nm("nd"), Fleet).shingles) == live)
+      assert(idsIn(IndexFamily.load(spark, IndexFamily.SimHash, nm("sh"), Fleet).banded) == live)
+      assert(idsIn(IndexFamily.load(spark, IndexFamily.Emb,
+          nm("emb"), Fleet).vectors, "vec_id") == live)
+      assert(idsIn(IndexFamily.load(spark, IndexFamily.Contain, nm("ct"), Fleet).sets) == live)
       assert(idsIn(sim.loadAnnIndex(spark, nm("ann")).vectors, "vec_id") == live)
       assert(idsIn(spark.read.parquet(corpusPath)) == live)
       // value-level: labels == one-shot recompute over corpus ∖ removed
@@ -119,7 +123,8 @@ class TakedownSpec extends SparkSuite {
 
       // a LATER batch with a fresh id goes through (batch-scoped dedup)
       assert(td(spark, Seq(7L).toDF("doc_id"), targets, log, batchId = 1L) == 1L)
-      assert(idsIn(ops.loadNearDupIndex(spark, nm("nd")).shingles) == live - 7L)
+      assert(idsIn(IndexFamily.load(spark, IndexFamily.NearDup,
+          nm("nd"), Fleet).shingles) == live - 7L)
       assert(idsIn(spark.read.parquet(corpusPath)) == live - 7L)
       spark.catalog.refreshTable(log)
       assert(idsIn(spark.table(log)) == Set(4L, 7L, 11L))
@@ -158,14 +163,14 @@ class TakedownSpec extends SparkSuite {
     val all = tables.flatMap(t => Seq(t, s"${t}__tcomp")) ++
       nm.values.map(n => s"${n}_tombstones") :+ log
     all.foreach(t => ops.dropTableAndLocation(spark, t))
-    ops.saveTenantNearDupTables(sh, nm("nd"), 2)
-    ops.saveTenantSimHashTables(sigs, nm("sh"), 2)
-    ops.saveTenantEmbTables(e, nm("emb"), 2)
-    ops.saveTenantContainTables(sel, nm("ct"), 2)
+    IndexFamily.save(spark, IndexFamily.NearDup, nm("nd"), Tenant(0, 2), sh)
+    IndexFamily.save(spark, IndexFamily.SimHash, nm("sh"), Tenant(0, 2), sigs)
+    IndexFamily.save(spark, IndexFamily.Emb, nm("emb"), Tenant(0, 2), e)
+    IndexFamily.save(spark, IndexFamily.Contain, nm("ct"), Tenant(0, 2), sel)
     graft.operators.Similarity.saveTenantAnnStore(spark, nm("ann"), e, 2)
-    val targets = td.TenantTargets(nearDupIndex = Some(nm("nd")),
-      simHashIndex = Some(nm("sh")), embIndex = Some(nm("emb")),
-      containIndex = Some(nm("ct")), tenantAnnStore = Some(nm("ann")))
+    val targets = td.TenantTargets(indexes = Seq(IndexFamily.NearDup -> nm("nd"),
+      IndexFamily.SimHash -> nm("sh"), IndexFamily.Emb -> nm("emb"),
+      IndexFamily.Contain -> nm("ct")), tenantAnnStore = Some(nm("ann")))
     // recursive: the s20 store nests label=… dirs under tenant=…
     def mtimes(table: String, tenant: Int): Map[String, Long] = {
       def walk(f: java.io.File, prefix: String): Seq[(String, Long)] =
@@ -181,11 +186,11 @@ class TakedownSpec extends SparkSuite {
         s"tenant=$tenant"), "").toMap
     }
     def served(tenant: Int): Seq[Set[Long]] = Seq(
-      ops.loadTenantNearDupIndex(spark, nm("nd"), tenant).shingles,
-      ops.loadTenantSimHashIndex(spark, nm("sh"), tenant).banded,
-      ops.loadTenantEmbIndex(spark, nm("emb"), tenant).vectors
+      IndexFamily.load(spark, IndexFamily.NearDup, nm("nd"), Tenant(tenant, 2)).shingles,
+      IndexFamily.load(spark, IndexFamily.SimHash, nm("sh"), Tenant(tenant, 2)).banded,
+      IndexFamily.load(spark, IndexFamily.Emb, nm("emb"), Tenant(tenant, 2)).vectors
         .withColumnRenamed("vec_id", "doc_id"),
-      ops.loadTenantContainIndex(spark, nm("ct"), tenant).sets,
+      IndexFamily.load(spark, IndexFamily.Contain, nm("ct"), Tenant(tenant, 2)).sets,
       graft.operators.Similarity.loadTenantAnnStore(spark, nm("ann"), tenant)
         .withColumnRenamed("vec_id", "doc_id")
     ).map(_.select("doc_id").distinct().collect().map(_.getLong(0)).toSet)
@@ -346,7 +351,7 @@ class TakedownSpec extends SparkSuite {
       .write.saveAsTable(nm("sk"))
     graft.emit.CorpusWriter.write(docs, corpusPath)
     val targets = td.Targets(
-      nearDupIndex = Some(nm("nd")), docStatsTable = Some(nm("st")),
+      indexes = Seq(IndexFamily.NearDup -> nm("nd")), docStatsTable = Some(nm("st")),
       sketchCellsTable = Some(nm("sk")), corpusPath = Some(corpusPath),
       documents = Some(docs))
     // two takedown request files → two micro-batches
@@ -358,7 +363,7 @@ class TakedownSpec extends SparkSuite {
       assert(logT == log)
       val retained = docs.filter(!col("doc_id").isin(2L, 5L, 8L))
       // every registered class equals its recompute over corpus ∖ removed
-      assert(ops.loadNearDupIndex(spark, nm("nd")).shingles
+      assert(IndexFamily.load(spark, IndexFamily.NearDup, nm("nd"), Fleet).shingles
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet ==
         (0L to 11L).toSet -- Set(2L, 5L, 8L))
       def statsMap() = spark.table(nm("st")).collect()
@@ -408,10 +413,10 @@ class TakedownSpec extends SparkSuite {
       nm.values.map(n => s"${n}_tombstones") :+ log
     val tdDir = java.nio.file.Files.createTempDirectory("tdts_reqs").toString
     all.foreach(t => ops.dropTableAndLocation(spark, t))
-    ops.saveTenantNearDupTables(sh, nm("nd"), 2)
-    ops.saveTenantContainTables(sel, nm("ct"), 2)
-    val targets = td.TenantTargets(nearDupIndex = Some(nm("nd")),
-      containIndex = Some(nm("ct")))
+    IndexFamily.save(spark, IndexFamily.NearDup, nm("nd"), Tenant(0, 2), sh)
+    IndexFamily.save(spark, IndexFamily.Contain, nm("ct"), Tenant(0, 2), sel)
+    val targets = td.TenantTargets(indexes = Seq(IndexFamily.NearDup -> nm("nd"),
+      IndexFamily.Contain -> nm("ct")))
     def mtimes(table: String, tenant: Int): Map[String, Long] = {
       val d = new java.io.File(
         new org.apache.hadoop.fs.Path(
@@ -422,8 +427,8 @@ class TakedownSpec extends SparkSuite {
         .map(f => f.getName -> f.lastModified()).toMap
     }
     def served(tenant: Int): Seq[Set[Long]] = Seq(
-      ops.loadTenantNearDupIndex(spark, nm("nd"), tenant).shingles,
-      ops.loadTenantContainIndex(spark, nm("ct"), tenant).sets
+      IndexFamily.load(spark, IndexFamily.NearDup, nm("nd"), Tenant(tenant, 2)).shingles,
+      IndexFamily.load(spark, IndexFamily.Contain, nm("ct"), Tenant(tenant, 2)).sets
     ).map(_.select("doc_id").distinct().collect().map(_.getLong(0)).toSet)
     // two request files → two micro-batches; 5 is tenant-1 (must drop)
     Seq(4L, 5L).toDF("doc_id").coalesce(1).write.mode("append").parquet(tdDir)

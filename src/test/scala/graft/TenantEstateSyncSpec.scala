@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.IndexFamily
+import graft.operators.IndexFamily.{Fleet, Tenant}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -111,10 +113,13 @@ class TenantEstateSyncSpec extends SparkSuite {
     }
     try {
       def buildAll(p: String, docs: DataFrame, e: DataFrame, sel: DataFrame): Unit = {
-        ops.saveTenantNearDupTables(ops.shingleTableOf(docs), s"tes_${p}_nd", 2)
-        ops.saveTenantSimHashTables(ops.simhash64Of(docs), s"tes_${p}_sh", 2)
-        ops.saveTenantEmbTables(e, s"tes_${p}_em", 2)
-        ops.saveTenantContainTables(sel, s"tes_${p}_ct", 2, w = 4, winnow = 2)
+        IndexFamily.save(spark, IndexFamily.NearDup,
+            s"tes_${p}_nd", Tenant(0, 2), ops.shingleTableOf(docs))
+        IndexFamily.save(spark, IndexFamily.SimHash,
+            s"tes_${p}_sh", Tenant(0, 2), ops.simhash64Of(docs))
+        IndexFamily.save(spark, IndexFamily.Emb, s"tes_${p}_em", Tenant(0, 2), e)
+        IndexFamily.save(spark, IndexFamily.Contain,
+            s"tes_${p}_ct", Tenant(0, 2), sel, params = Map("w" -> 4, "winnow" -> 2))
         sim.saveTenantAnnStore(spark, s"tes_${p}_an", e, 2)
         ops.saveTenantLabelState(spark, s"tes_${p}_lb", docs, 2)
         ops.saveTenantSketchCells(spark, s"tes_${p}_sk", docs, 2)
@@ -125,7 +130,7 @@ class TenantEstateSyncSpec extends SparkSuite {
 
       // a PENDING tenant-1 takedown planted before the sync: it must
       // survive (the sync's tenant-0 compaction may not clear it)
-      ops.removeFromNearDupIndex(spark, "tes_s_nd", Seq(9L).toDF("doc_id"))
+      IndexFamily.remove(spark, IndexFamily.NearDup, "tes_s_nd", Seq(9L).toDF("doc_id"))
 
       val pinned = Seq("tes_s_nd_banded", "tes_s_nd_shingles", "tes_s_sh_banded",
         "tes_s_em_banded", "tes_s_em_vectors", "tes_s_ct_fp", "tes_s_ct_df",
@@ -139,10 +144,10 @@ class TenantEstateSyncSpec extends SparkSuite {
       val lbRewritesBefore = rewrites("tes_s_lb")
       ops.syncTenantEstateWithDiff(spark, diff, 0, 2,
         ops.TenantEstateSyncTargets(
-          nearDup = Some(("tes_s_nd", genB)),
-          simHash = Some(("tes_s_sh", genB)),
-          emb = Some(("tes_s_em", eB)),
-          contain = Some(("tes_s_ct", genB)),
+          indexes = Seq((IndexFamily.NearDup, "tes_s_nd", genB),
+            (IndexFamily.SimHash, "tes_s_sh", genB),
+            (IndexFamily.Emb, "tes_s_em", eB),
+            (IndexFamily.Contain, "tes_s_ct", genB)),
           annStore = Some(("tes_s_an", eB)),
           labels = Some("tes_s_lb"),
           sketchCells = Some(("tes_s_sk", genB))))
@@ -164,17 +169,18 @@ class TenantEstateSyncSpec extends SparkSuite {
 
       // tenant 0 == fresh gen-B build; tenant 1 == fresh gen-A build
       def ndHalves(p: String, tn: Int) = {
-        val i = ops.loadTenantNearDupIndex(spark, s"tes_${p}_nd", tn)
+        val i = IndexFamily.load(spark, IndexFamily.NearDup, s"tes_${p}_nd", Tenant(tn, 2))
         Seq("nd banded" -> i.banded, "nd shingles" -> i.shingles)
       }
       def shHalves(p: String, tn: Int) =
-        Seq("sh banded" -> ops.loadTenantSimHashIndex(spark, s"tes_${p}_sh", tn).banded)
+        Seq("sh banded" -> IndexFamily.load(spark, IndexFamily.SimHash,
+            s"tes_${p}_sh", Tenant(tn, 2)).banded)
       def emHalves(p: String, tn: Int) = {
-        val i = ops.loadTenantEmbIndex(spark, s"tes_${p}_em", tn)
+        val i = IndexFamily.load(spark, IndexFamily.Emb, s"tes_${p}_em", Tenant(tn, 2))
         Seq("em banded" -> i.banded, "em vectors" -> i.vectors)
       }
       def ctHalves(p: String, tn: Int) = {
-        val i = ops.loadTenantContainIndex(spark, s"tes_${p}_ct", tn)
+        val i = IndexFamily.load(spark, IndexFamily.Contain, s"tes_${p}_ct", Tenant(tn, 2))
         Seq("ct fp" -> i.fp, "ct df" -> i.dfTab, "ct sets" -> i.sets)
       }
       def anHalves(p: String, tn: Int) =
@@ -218,10 +224,10 @@ class TenantEstateSyncSpec extends SparkSuite {
         when(col("status") === "added", "changed").otherwise(col("status")))
       ops.syncTenantEstateWithDiff(spark, replayDiff, 0, 2,
         ops.TenantEstateSyncTargets(
-          nearDup = Some(("tes_s_nd", genB)),
-          simHash = Some(("tes_s_sh", genB)),
-          emb = Some(("tes_s_em", eB)),
-          contain = Some(("tes_s_ct", genB)),
+          indexes = Seq((IndexFamily.NearDup, "tes_s_nd", genB),
+            (IndexFamily.SimHash, "tes_s_sh", genB),
+            (IndexFamily.Emb, "tes_s_em", eB),
+            (IndexFamily.Contain, "tes_s_ct", genB)),
           annStore = Some(("tes_s_an", eB)),
           labels = Some("tes_s_lb"),
           sketchCells = Some(("tes_s_sk", genB))))
@@ -242,11 +248,13 @@ class TenantEstateSyncSpec extends SparkSuite {
       "tes_noop_nd_tombstones")
     tables.foreach(t => ops.dropTableAndLocation(spark, t))
     try {
-      ops.saveTenantNearDupTables(ops.shingleTableOf(genA), "tes_noop_nd", 2)
+      IndexFamily.save(spark, IndexFamily.NearDup,
+          "tes_noop_nd", Tenant(0, 2), ops.shingleTableOf(genA))
       val before = (mtimes("tes_noop_nd_banded", 0), mtimes("tes_noop_nd_shingles", 0))
       // every diff row is tenant 1's — syncing tenant 0 must do nothing
       ops.syncTenantEstateWithDiff(spark, t1OnlyDiff, 0, 2,
-        ops.TenantEstateSyncTargets(nearDup = Some(("tes_noop_nd", genA))))
+        ops.TenantEstateSyncTargets(
+          indexes = Seq((IndexFamily.NearDup, "tes_noop_nd", genA))))
       assert((mtimes("tes_noop_nd_banded", 0), mtimes("tes_noop_nd_shingles", 0)) == before,
         "tenant-0 files rewrote on an empty tenant diff slice")
       assert(!spark.catalog.tableExists("tes_noop_nd_tombstones"),
@@ -271,14 +279,15 @@ class TenantEstateSyncSpec extends SparkSuite {
       // 4 buckets — if any sync/load/compact site still used the old
       // (3, 3, 8) constants, the synced slice could not equal a fresh
       // same-banding build (appended band keys would hash differently)
-      ops.saveTenantNearDupTables(ops.shingleTableOf(genA), "tes_meta_nd", 2,
-        bands = 2, rowsPerBand = 2, buckets = 4)
-      ops.saveTenantNearDupTables(ops.shingleTableOf(genB), "tes_meta_fb", 2,
-        bands = 2, rowsPerBand = 2, buckets = 4)
+      IndexFamily.save(spark, IndexFamily.NearDup,
+          "tes_meta_nd", Tenant(0, 2), ops.shingleTableOf(genA), buckets = 4, params = Map("bands" -> 2, "rows_per_band" -> 2))
+      IndexFamily.save(spark, IndexFamily.NearDup,
+          "tes_meta_fb", Tenant(0, 2), ops.shingleTableOf(genB), buckets = 4, params = Map("bands" -> 2, "rows_per_band" -> 2))
       ops.syncTenantEstateWithDiff(spark, diff, 0, 2,
-        ops.TenantEstateSyncTargets(nearDup = Some(("tes_meta_nd", genB))))
-      val synced = ops.loadTenantNearDupIndex(spark, "tes_meta_nd", 0)
-      val fresh = ops.loadTenantNearDupIndex(spark, "tes_meta_fb", 0)
+        ops.TenantEstateSyncTargets(
+          indexes = Seq((IndexFamily.NearDup, "tes_meta_nd", genB))))
+      val synced = IndexFamily.load(spark, IndexFamily.NearDup, "tes_meta_nd", Tenant(0, 2))
+      val fresh = IndexFamily.load(spark, IndexFamily.NearDup, "tes_meta_fb", Tenant(0, 2))
       assert(synced.bands == 2 && synced.rowsPerBand == 2,
         "loadTenantNearDupIndex ignored the saved meta banding")
       assertSameRows(synced.banded, fresh.banded,
@@ -295,7 +304,8 @@ class TenantEstateSyncSpec extends SparkSuite {
       // nTenants drift refuses outright instead of silently reassigning
       val ex = intercept[IllegalArgumentException] {
         ops.syncTenantEstateWithDiff(spark, diff, 0, 3,
-          ops.TenantEstateSyncTargets(nearDup = Some(("tes_meta_nd", genB))))
+          ops.TenantEstateSyncTargets(
+          indexes = Seq((IndexFamily.NearDup, "tes_meta_nd", genB))))
       }
       assert(ex.getMessage.contains("n_tenants"),
         s"unexpected refusal message: ${ex.getMessage}")
