@@ -56,8 +56,39 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
 
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table's parquet scan under the schema of its first data file's
+    * footer, resolved on the driver (Spark's own conversion, under the
+    * session conf — [[footerSchema]]): `spark.read.parquet` would run a
+    * schema-inference job per read to get the same schema. A path with
+    * no data file of its own (an empty or partitioned directory) keeps
+    * Spark's inference.
+    */
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = s"$dir/$name.parquet"
+    footerSchema(spark, p).fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
+  }
+
+  /** The schema Spark infers for the parquet file or flat directory `p`,
+    * read from its first data file's footer (by name; files starting
+    * with `_` or `.` are not data, as in Spark's listing). None when `p`
+    * is missing, has a subdirectory or has no data file.
+    */
+  private[graft] def footerSchema(spark: SparkSession,
+      p: String): Option[org.apache.spark.sql.types.StructType] = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = if (fs.exists(path)) Some(fs.getFileStatus(path)) else None
+    val first = st.filter(_.isFile).orElse(st.flatMap { _ =>
+      val children = fs.listStatus(path)
+      if (children.exists(_.isDirectory)) None
+      else children.filterNot { c =>
+        val n = c.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }.sortBy(_.getPath.getName).headOption
+    })
+    first.flatMap(org.apache.spark.sql.execution.datasources.parquet
+      .graftbridge.ParquetBridge.footerSchema(spark, _))
+  }
 
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")

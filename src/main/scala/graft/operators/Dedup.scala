@@ -181,10 +181,21 @@ object Dedup {
     // the d11 simhash bands)
     // banded keys materialize once (the self-join's census + both sides
     // would otherwise each re-run the k-MinHash pass — see the delta path)
-    val candidates = blockedPairCandidates(
-      bandedKeys(withSh, bands, rowsPerBand).localCheckpoint(),
-      Seq("band", "bkey"), Nil, hotBlockRows, salts = 16)
+    val (banded, nBanded) = countedCheckpoint(bandedKeys(withSh, bands, rowsPerBand))
+    val candidates = blockedPairCandidates(banded, Seq("band", "bkey"), Nil,
+      hotBlockRows, salts = 16, maxRows = nBanded)
     verifyJaccard(withSh, candidates, threshold)
+  }
+
+  /** `df` locally checkpointed, with its row count: ONE job fills the
+    * checkpoint and counts it, where `localCheckpoint()` followed by an
+    * `isEmpty` or `count` probe runs two. The count is exact, so it also
+    * bounds every block of a blocked self-join over the frame
+    * ([[blockedPairCandidates]]' `maxRows`).
+    */
+  private[graft] def countedCheckpoint(df: DataFrame): (DataFrame, Long) = {
+    val cp = df.localCheckpoint(eager = false)
+    (cp, cp.queryExecution.toRdd.count())
   }
 
   /** Candidate pairs from a blocked self-join, with a block-size census
@@ -197,11 +208,14 @@ object Dedup {
     * ordered, distinct. Blocks are whole (entirely hot or cold), so the
     * two paths partition the pair space exactly. AQE's skew split cannot
     * divide the build side of one hash bucket, so the salt is
-    * load-bearing (Library.saltedJoin's rationale).
+    * load-bearing (Library.saltedJoin's rationale). `maxRows`, when the
+    * caller knows it, is an upper bound on `rows`' count: no block can
+    * exceed it, so at `maxRows <= hotBlockRows` the plain join is planned
+    * without probing the census.
     */
   private def blockedPairCandidates(rows: DataFrame, keys: Seq[String],
       carry: Seq[String], hotBlockRows: Long, salts: Int,
-      idCol: String = "doc_id"): DataFrame = {
+      idCol: String = "doc_id", maxRows: Long = Long.MaxValue): DataFrame = {
     // The census has one row per DISTINCT block — bounded for simhash
     // (≤ 4·65536 chunk values) but ~O(corpus) on the minhash band and
     // ngram endpoint paths, where most documents own unique keys. Only
@@ -228,8 +242,10 @@ object Dedup {
     // Output-identical by construction: with zero hot blocks every row is
     // cold, the hot branch is empty, and union(coldCand, ∅) == coldCand.
     // The probe re-runs per pass, so the guard stays data-adaptive — a
-    // corpus that grows a hot block flips back to the salted plan.
-    val pairs = if (hotSizes.isEmpty) {
+    // corpus that grows a hot block flips back to the salted plan. A
+    // counted input at or under the threshold cannot hold a hot block,
+    // so it skips the probe's job.
+    val pairs = if (maxRows <= hotBlockRows || hotSizes.isEmpty) {
       side(rows, "a").join(side(rows, "b"), keys)
     } else {
       val tagged = rows.join(broadcast(hotSizes), keys, "left")
@@ -1325,16 +1341,21 @@ object Dedup {
     */
   def syncEstateWithDiff(spark: SparkSession, diff: DataFrame,
       targets: EstateSyncTargets): Unit = {
-    val gone = diff.filter(col("status").isin("removed", "changed"))
-      .select(col("doc_id")).localCheckpoint()
-    val came = diff.filter(col("status").isin("added", "changed"))
-      .select(col("doc_id")).localCheckpoint()
+    val (gone, nGone) = countedCheckpoint(
+      diff.filter(col("status").isin("removed", "changed")).select(col("doc_id")))
+    val (came, nCame) = countedCheckpoint(
+      diff.filter(col("status").isin("added", "changed")).select(col("doc_id")))
+    // an empty phase is skipped (the tenant sync's hasGone/hasCame): an
+    // empty tombstone batch would still compact — rewrite — every member
     targets.indexes.foreach { case (fam, t, payload) =>
-      IndexFamily.remove(spark, fam, t, gone)
-      val m = IndexFamily.meta(spark, t)
-      IndexFamily.compact(spark, fam, t, IndexFamily.Fleet, Some(m))
-      IndexFamily.appendPayload(spark, fam, t, IndexFamily.Fleet,
-        IndexFamily.restrict(fam, payload, came), Some(m))
+      lazy val m = IndexFamily.meta(spark, t)
+      if (nGone > 0) {
+        IndexFamily.remove(spark, fam, t, gone)
+        IndexFamily.compact(spark, fam, t, IndexFamily.Fleet, Some(m))
+      }
+      if (nCame > 0)
+        IndexFamily.appendPayload(spark, fam, t, IndexFamily.Fleet,
+          IndexFamily.restrict(fam, payload, came), Some(m))
     }
     // the vector STORE follows the same diff the text/vector indexes do
     // — takedown already reached it (td1/td2); now a corpus generation
@@ -1756,10 +1777,10 @@ object Dedup {
       tenant: Int, nTenants: Int,
       targets: TenantEstateSyncTargets): Unit = {
     def inTenant = pmod(col("doc_id"), lit(nTenants)) === tenant
-    val gone = diff.filter(col("status").isin("removed", "changed"))
-      .select(col("doc_id")).filter(inTenant).localCheckpoint()
-    val came = diff.filter(col("status").isin("added", "changed"))
-      .select(col("doc_id")).filter(inTenant).localCheckpoint()
+    val (gone, nGone) = countedCheckpoint(diff.filter(col("status")
+      .isin("removed", "changed")).select(col("doc_id")).filter(inTenant))
+    val (came, nCame) = countedCheckpoint(diff.filter(col("status")
+      .isin("added", "changed")).select(col("doc_id")).filter(inTenant))
     // validate every deployed index family's meta BEFORE anything else —
     // a tenant-count mismatch must refuse AT ENTRY (even on an empty
     // diff slice: a misconfigured caller gets the signal on its first
@@ -1773,8 +1794,8 @@ object Dedup {
     // skip the remove+compact (resp. append) phase outright when the
     // tenant's diff slice has nothing for it: an empty tombstone batch
     // would still trigger a full tenant-partition rewrite
-    val hasGone = !gone.isEmpty
-    val hasCame = !came.isEmpty
+    val hasGone = nGone > 0
+    val hasCame = nCame > 0
     if (!hasGone && !hasCame) return
     val goneVec = gone.select(col("doc_id").as("vec_id"))
     val cameVec = came.select(col("doc_id").as("vec_id"))
@@ -4223,14 +4244,18 @@ object Dedup {
   private[graft] def exactJaccardPairsOfSh(withSh: DataFrame,
       threshold: Double, hotBlockRows: Long): DataFrame = {
     // materialized once per pass: postings feed the df census, the
-    // prefix ranking, and the candidate join (the PERF.md §1 trap)
+    // prefix ranking, and the candidate join (the PERF.md §1 trap). The
+    // sets checkpoint is lazy: the postings count computes — and so
+    // fills — it in the same job
     val sets = withSh
       .select(col("doc_id"), array_distinct(col("sh")).as("dsh"))
       .filter(col("dsh").isNotNull && size(col("dsh")) > 0)
       .withColumn("l", size(col("dsh")))
-      .localCheckpoint()
-    val postings = sets.select(col("doc_id"), col("l"),
-      explode(col("dsh")).as("key")).localCheckpoint()
+      .localCheckpoint(eager = false)
+    // the postings count bounds every prefix block (the prefix rows are
+    // a subset of the postings)
+    val (postings, nPostings) = countedCheckpoint(sets.select(col("doc_id"),
+      col("l"), explode(col("dsh")).as("key")))
     val dfTab = postings.groupBy(col("key")).agg(count(lit(1)).as("kdf"))
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("kdf"), col("key"))
     val prefix = postings.join(dfTab, Seq("key"))
@@ -4239,7 +4264,7 @@ object Dedup {
         col("l") - ceil(lit(threshold - 1e-4) * col("l")) + 1)
       .select(col("doc_id"), col("key"))
     val cand = blockedPairCandidates(prefix, Seq("key"), Nil,
-      hotBlockRows, salts = 16)
+      hotBlockRows, salts = 16, maxRows = nPostings)
     // PPJoin's LENGTH FILTER before the wide verify (also exact:
     // J ≥ t ⇒ min(l) ≥ t·max(l), same rounding slack): the narrow
     // length join kills most coincidental prefix collisions so the
@@ -4286,26 +4311,33 @@ object Dedup {
     * left joins onto the tenant spine keep a row per tenant even when a
     * tenant's slice has no exact pairs (recall 1.0 — the d24 empty-set
     * convention, and the alerting shape: silence must not look like
-    * health).
+    * health). The exact side is read ONCE: a left join to the distinct
+    * approx keys marks each exact row caught or not, and one grouped
+    * count takes both `n_exact` and the caught count (the semi-join's
+    * count, since the distinct keys match an exact row at most once).
     */
   private[graft] def tenantRecallRows(spark: SparkSession, nTenants: Int,
       exact: DataFrame, approx: DataFrame, metric: String = "recall",
       joinKeys: Seq[String] = Seq("id_a", "id_b"),
       caughtName: String = "n_caught"): DataFrame = {
     import spark.implicits._
-    val caught = exact.join(approx, joinKeys, "left_semi")
+    val hits = approx.select(joinKeys.map(col): _*).distinct()
+      .withColumn("__hit", lit(true))
+    val counts = exact.join(hits, joinKeys, "left_outer")
+      .groupBy(col("tenant"))
+      .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as(caughtName))
+    // the rollup has at most nTenants rows: broadcast it onto the spine
+    // and sort the one coalesced partition — no spine shuffle, and no
+    // range-partitioning sample job for a global sort of nTenants rows
     (0L until nTenants.toLong).toDF("tenant")
-      .join(exact.groupBy(col("tenant")).agg(count(lit(1)).as("n_exact")),
-        Seq("tenant"), "left_outer")
-      .join(caught.groupBy(col("tenant")).agg(count(lit(1)).as(caughtName)),
-        Seq("tenant"), "left_outer")
+      .join(broadcast(counts), Seq("tenant"), "left_outer")
       .select(col("tenant"),
         coalesce(col("n_exact"), lit(0L)).as("n_exact"),
         coalesce(col(caughtName), lit(0L)).as(caughtName),
         when(coalesce(col("n_exact"), lit(0L)) === 0, lit(1.0))
           .otherwise(round(coalesce(col(caughtName), lit(0L)).cast("double") /
             col("n_exact"), 4)).as(metric))
-      .orderBy("tenant")
+      .coalesce(1).sortWithinPartitions("tenant")
   }
 
   /** Tag a fleet exact-pair frame with its tenant and drop cross-tenant

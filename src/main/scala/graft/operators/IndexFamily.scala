@@ -269,10 +269,11 @@ object IndexFamily {
 
   /** The served index: every member minus the tombstoned ids (the count
     * member summed and tombstone-subtracted), one tenant's partitions at
-    * tenant scope.
+    * tenant scope. `saved` is the index's meta when the caller already
+    * read it (as in [[appendPayload]]).
     */
   def load[I](spark: SparkSession, fam: IndexFamily[I], name: String,
-      scope: Scope): I = {
+      scope: Scope, saved: Option[Meta] = None): I = {
     val ts = Dedup.tombstoneTable(spark, s"${name}_tombstones")
     def raw(sfx: String) = scope match {
       case Fleet => spark.table(s"$name$sfx")
@@ -292,7 +293,7 @@ object IndexFamily {
           .filter(col("n") > 0)
       }
     }
-    lazy val m = meta(spark, name)
+    lazy val m = saved.getOrElse(meta(spark, name))
     fam.index(served ++ counted, () => m)
   }
 

@@ -1469,35 +1469,44 @@ object Similarity {
     * arrays: argmax over k scores 2·v·c_j − ‖c_j‖² (= argmin Euclidean),
     * first occurrence on ties — `array_position` mirrors DuckDB's
     * `list_position` exactly.
+    *
+    * Each score is ONE dot product of (v ++ [−1]) with the array literal
+    * (2·c_j ++ [‖c_j‖²]). Doubling is exact in binary floating point, so
+    * every partial sum is exactly twice the plain v·c_j sum and the last
+    * term subtracts ‖c_j‖²: the score is bit-identical to
+    * 2·(v·c_j) − ‖c_j‖². No scalar of the model is a separate literal, so
+    * nothing folds into a Java constant: the generated code is the same
+    * for every model of the same k, and the compiled class is reused.
     */
   private[graft] def assignExpr(model: Array[(Int, Array[Double])]): Column = {
+    val vAug = concat(col("v"), typedLit(Array(-1.0)))
     val scores = array(model.map { case (_, c) =>
-      val litC = array(c.toIndexedSeq.map(lit): _*)
       // ‖c‖² as a driver-side left fold — the same sequential IEEE order
       // as dotProduct/list_dot_product over identical rounded values
       val c2 = c.foldLeft(0.0)((acc, x) => acc + x * x)
-      lit(2.0) * dotProduct(col("v"), litC) - lit(c2)
+      dotProduct(vAug, typedLit(c.map(2.0 * _) :+ c2))
     }.toIndexedSeq: _*)
     (array_position(scores, array_max(scores)) - 1).cast("int")
   }
 
-  /** One Lloyd round: assignment pass + 64-sum-column mean, rounded in
-    * the DATAFRAME (round(sum/n, 4) + 0.0 — the exact s3 arithmetic) so
-    * the collected literals are the values the oracle recomputes. A
-    * cluster losing all members would silently freeze search recall, so
-    * it throws instead (deterministic data ⇒ deterministic failure).
+  /** One Lloyd round: assignment pass + per-(cluster, coordinate) mean,
+    * rounded in the DATAFRAME (round(sum/n, 4) + 0.0 — the exact s3
+    * arithmetic) so the collected literals are the values the oracle
+    * recomputes. The coordinates are exploded and summed by ONE
+    * aggregate keyed on (cl, i), whose generated code does not grow with
+    * the dimension. A cluster losing all members would silently freeze
+    * search recall, so it throws instead (deterministic data ⇒
+    * deterministic failure).
     */
   private def lloydUpdate(e: DataFrame, model: Array[(Int, Array[Double])],
       kClusters: Int): Array[(Int, Array[Double])] = {
-    val dim = model.head._2.length
-    val sumCols = (0 until dim).map(i => sum(element_at(col("v"), i + 1)).as(s"s$i"))
     val updated = e.withColumn("cl", assignExpr(model))
-      .groupBy(col("cl"))
-      .agg(count(lit(1)).as("n"), sumCols: _*)
-      .select(col("cl"), array((0 until dim).map(i =>
-        round(col(s"s$i") / col("n"), 4) + lit(0.0)): _*).as("c"))
+      .select(col("cl"), posexplode(col("v")).as(Seq("i", "x")))
+      .groupBy(col("cl"), col("i"))
+      .agg((round(sum(col("x")) / count(lit(1)), 4) + lit(0.0)).as("m"))
       .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .groupBy(_.getInt(0)).toArray
+      .map { case (cl, rows) => cl -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)) }
       .sortBy(_._1)
     if (updated.length != kClusters)
       throw new IllegalStateException(

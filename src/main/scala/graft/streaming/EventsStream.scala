@@ -360,17 +360,17 @@ object EventsStream {
       // tables mutate under it: the anti-join reads _shingles, and
       // appending to a table that appears in the write's own lineage
       // is both racy and rejected by the writer
-      val fresh = batch
+      val (fresh, nFresh) = Dedup.countedCheckpoint(batch
         .join(spark.table(s"${indexName}_shingles").select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      if (!fresh.isEmpty) {
-        Dedup.deltaNearDups(fresh,
-            IndexFamily.load(spark, IndexFamily.NearDup, indexName, IndexFamily.Fleet),
-            threshold)
+          Seq("doc_id"), "left_anti"))
+      if (nFresh > 0) {
+        // one meta read serves the load's banding and the append
+        val m = IndexFamily.meta(spark, indexName)
+        Dedup.deltaNearDups(fresh, IndexFamily.load(spark, IndexFamily.NearDup,
+            indexName, IndexFamily.Fleet, Some(m)), threshold)
           .write.mode("append").saveAsTable(s"${name}_pairs")
         IndexFamily.appendPayload(spark, IndexFamily.NearDup, indexName,
-          IndexFamily.Fleet, fresh)
+          IndexFamily.Fleet, fresh, Some(m))
         // a RE-INGESTED doc must also drop out of the cumulative
         // takedown log, or every later sketch-cell rebuild of its lang
         // permanently excludes it (the per-index tombstones clear on
@@ -442,33 +442,33 @@ object EventsStream {
         spark.table(s"${indexName}_shingles").select("doc_id")
           .unionByName(spark.table(quarantineTable).select("doc_id"))
       else spark.table(s"${indexName}_shingles").select("doc_id")
-      val arrived = batch
-        .join(alreadyIn, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+      val (arrived, nArrived) = Dedup.countedCheckpoint(batch
+        .join(alreadyIn, Seq("doc_id"), "left_anti"))
       // DECONTAMINATION AT INGEST (the d10b screen as a curation
       // stage): gram-hash the arriving docs map-side against the
       // frozen eval bloom, verify suspects exactly, quarantine
       // contaminated docs — they never enter the pair search, the
       // label state, or the index
-      val fresh = screen match {
-        case None => arrived
+      val (fresh, nFresh) = screen match {
+        case None => (arrived, nArrived)
         case Some(st) =>
-          val contaminated = Dedup.screenContamination(arrived,
-            st.bloom, st.grams).localCheckpoint()
-          if (!contaminated.isEmpty) {
+          val (contaminated, nContaminated) = Dedup.countedCheckpoint(
+            Dedup.screenContamination(arrived, st.bloom, st.grams))
+          if (nContaminated > 0) {
             contaminated.withColumn("batch_id", lit(batchId))
               .write.mode("append").saveAsTable(quarantineTable)
-            arrived.join(contaminated.select("doc_id"),
-              Seq("doc_id"), "left_anti").localCheckpoint()
-          } else arrived
+            Dedup.countedCheckpoint(arrived.join(
+              contaminated.select("doc_id"), Seq("doc_id"), "left_anti"))
+          } else (arrived, nArrived)
       }
-      if (!fresh.isEmpty) {
+      if (nFresh > 0) {
         // freeze the prior state: the generation swap below drops the
         // table this batch's merge reads
         val labels = spark.table(s"${name}_labels").localCheckpoint()
-        val delta = Dedup.deltaNearDups(fresh,
-          IndexFamily.load(spark, IndexFamily.NearDup, indexName, IndexFamily.Fleet),
-          threshold)
+        // one meta read serves the load's banding and the append
+        val m = IndexFamily.meta(spark, indexName)
+        val delta = Dedup.deltaNearDups(fresh, IndexFamily.load(spark,
+          IndexFamily.NearDup, indexName, IndexFamily.Fleet, Some(m)), threshold)
         val newDocs = fresh.select(col("doc_id"),
           length(coalesce(col("text"), lit(""))).as("qlen"))
         val changed = Dedup.mergeLabelState(spark, labels, delta, newDocs)
@@ -489,7 +489,7 @@ object EventsStream {
             .write.mode("append").saveAsTable(logTable)
         Dedup.applyLabelUpdates(spark, s"${name}_labels", changed)
         IndexFamily.appendPayload(spark, IndexFamily.NearDup, indexName,
-          IndexFamily.Fleet, fresh)
+          IndexFamily.Fleet, fresh, Some(m))
         // re-ingested docs drop out of the cumulative takedown log
         // (see runIngestNearDup — the log-reading sketch rebuild is
         // the one consumer the per-index tombstone lift doesn't cover)
@@ -709,11 +709,10 @@ object EventsStream {
       target: Double): Unit = {
     import graft.operators.Dedup
     spark.catalog.refreshTable(s"${name}_shingles")
-    val fresh = slice
+    val (fresh, nFresh) = Dedup.countedCheckpoint(slice
       .join(spark.table(s"${name}_shingles").select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    if (!fresh.isEmpty) {
+        Seq("doc_id"), "left_anti"))
+    if (nFresh > 0) {
       Dedup.appendMinhashRebandState(spark, name,
         Dedup.shingleTableOf(fresh).localCheckpoint())
       spark.catalog.refreshTable(s"${name}_shingles")
@@ -743,11 +742,10 @@ object EventsStream {
       threshold: Double): Unit = {
     import graft.operators.Dedup
     spark.catalog.refreshTable(s"${name}_docs")
-    val fresh = slice
+    val (fresh, nFresh) = Dedup.countedCheckpoint(slice
       .join(spark.table(s"${name}_docs").select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    if (!fresh.isEmpty) {
+        Seq("doc_id"), "left_anti"))
+    if (nFresh > 0) {
       Dedup.appendWinnowRetuneState(spark, name, fresh)
       spark.catalog.refreshTable(s"${name}_docs")
       val audit = boundedAudit(
@@ -773,11 +771,10 @@ object EventsStream {
       target: Double): Unit = {
     import graft.operators.Dedup
     spark.catalog.refreshTable(s"${name}_banded")
-    val fresh = slice
+    val (fresh, nFresh) = Dedup.countedCheckpoint(slice
       .join(spark.table(s"${name}_banded").select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    if (!fresh.isEmpty) {
+        Seq("doc_id"), "left_anti"))
+    if (nFresh > 0) {
       Dedup.appendSimhashRebandState(spark, name, fresh)
       val audit = boundedAudit(
         Dedup.retainedSimhashSigs(spark, name).filter(auditFilter))
@@ -801,11 +798,10 @@ object EventsStream {
       nProbes: Int, k: Int): Unit = {
     import graft.operators.Similarity
     spark.catalog.refreshTable(s"${name}_vecs")
-    val fresh = slice
+    val (fresh, nFresh) = graft.operators.Dedup.countedCheckpoint(slice
       .join(spark.table(s"${name}_vecs").select("vec_id"),
-        Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    if (!fresh.isEmpty) {
+        Seq("vec_id"), "left_anti"))
+    if (nFresh > 0) {
       Similarity.appendAnnRebucketState(spark, name, fresh)
       spark.catalog.refreshTable(s"${name}_vecs")
       val audit = boundedAudit(
@@ -830,11 +826,10 @@ object EventsStream {
       target: Double): Unit = {
     import graft.operators.Dedup
     spark.catalog.refreshTable(s"${name}_vecs")
-    val fresh = slice
+    val (fresh, nFresh) = Dedup.countedCheckpoint(slice
       .join(spark.table(s"${name}_vecs").select("vec_id"),
-        Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    if (!fresh.isEmpty) {
+        Seq("vec_id"), "left_anti"))
+    if (nFresh > 0) {
       Dedup.appendSrpRebandState(spark, name, fresh)
       spark.catalog.refreshTable(s"${name}_vecs")
       val audit = boundedAudit(
@@ -1293,11 +1288,10 @@ object EventsStream {
       // the previous batch appended — read the grown table, not a
       // cached relation
       spark.catalog.refreshTable(s"${indexName}_vectors")
-      val fresh = preparedVecsOf(batch)
-        .join(spark.table(s"${indexName}_vectors").select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        .localCheckpoint()
-      if (!fresh.isEmpty) {
+      val (fresh, nFresh) = graft.operators.Dedup.countedCheckpoint(
+        preparedVecsOf(batch).join(spark.table(s"${indexName}_vectors").select("vec_id"),
+          Seq("vec_id"), "left_anti"))
+      if (nFresh > 0) {
         Similarity.appendAnnIndex(spark, indexName, fresh)
         // the re-ingest hook for the vector estate (doc_id == vec_id
         // in the takedown log's id space)
@@ -1336,11 +1330,10 @@ object EventsStream {
     import graft.operators.{Dedup, Similarity}
     drain(shardStream(spark, embeddingSchema, shardDir)) { (batch, _) =>
       spark.catalog.refreshTable(s"${indexName}_vectors")
-      val fresh = preparedVecsOf(batch)
-        .join(spark.table(s"${indexName}_vectors").select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        .localCheckpoint()
-      if (!fresh.isEmpty) {
+      val (fresh, nFresh) = Dedup.countedCheckpoint(
+        preparedVecsOf(batch).join(spark.table(s"${indexName}_vectors").select("vec_id"),
+          Seq("vec_id"), "left_anti"))
+      if (nFresh > 0) {
         Similarity.appendAnnIndex(spark, indexName, fresh)
         spark.catalog.refreshTable(s"${indexName}_vectors")
         val index = Similarity.loadAnnIndex(spark, indexName)

@@ -79,6 +79,19 @@ class EventsEncodingSpec extends SparkSuite {
     df.select(cols: _*).collect().toSeq.sortBy(_.toString)
   }
 
+  test("Tables.read: the footer schema equals Spark's inferred schema (ten sf0.01 tables, three ts encodings, a written directory)") {
+    val written = Files.createTempDirectory("footer_schema").toString + "/t.parquet"
+    spark.range(5).withColumn("s", col("id").cast("string")).repartition(2)
+      .write.parquet(written)
+    val paths = Tables.all.map(t => s"${sf("sf0.01")}/$t.parquet") ++
+      dirs.values.map(d => s"$d/events.parquet") :+ written
+    for (p <- paths) {
+      val inferred = spark.read.parquet(p).schema
+      assert(Tables.footerSchema(spark, p).contains(inferred),
+        s"$p: footer schema ${Tables.footerSchema(spark, p)} != inferred $inferred")
+    }
+  }
+
   test("batch Tables.events: identical micro-exact timestamps over all three encodings") {
     val expected = fixtureUs.map(r => (r._1, r._2)).sortBy(_._1)
     for ((enc, dir) <- dirs) {

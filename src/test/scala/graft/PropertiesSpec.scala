@@ -113,6 +113,106 @@ class PropertiesSpec extends SparkSuite {
     }
   }
 
+  test("property: one-pass tenant census == the two-branch count on random exact/approx frames") {
+    // the former formula: n_exact and n_caught from two grouped branches
+    // (the exact side, and its semi-join to approx) joined onto the spine
+    def twoBranch(nTenants: Int, exact: org.apache.spark.sql.DataFrame,
+        approx: org.apache.spark.sql.DataFrame) = {
+      val caught = exact.join(approx, Seq("id_a", "id_b"), "left_semi")
+      (0L until nTenants.toLong).toDF("tenant")
+        .join(exact.groupBy("tenant").agg(count(lit(1)).as("n_exact")), Seq("tenant"), "left_outer")
+        .join(caught.groupBy("tenant").agg(count(lit(1)).as("n_caught")), Seq("tenant"), "left_outer")
+        .select(col("tenant"), coalesce(col("n_exact"), lit(0L)).as("n_exact"),
+          coalesce(col("n_caught"), lit(0L)).as("n_caught"),
+          when(coalesce(col("n_exact"), lit(0L)) === 0, lit(1.0))
+            .otherwise(round(coalesce(col("n_caught"), lit(0L)).cast("double") /
+              col("n_exact"), 4)).as("recall"))
+        .orderBy("tenant")
+    }
+    val rng = new scala.util.Random(13)
+    for (trial <- 1 to 4) {
+      val nTenants = 2 + rng.nextInt(3)
+      // tenant nTenants - 1 never gets an exact pair; trial 1 has none at all
+      val nExact = if (trial == 1) 0 else 10 + rng.nextInt(30)
+      val exactRows = Seq.fill(nExact)((rng.nextInt(nTenants - 1).toLong,
+        rng.nextInt(12).toLong, 12L + rng.nextInt(12)))
+      // approx: a random subset of the exact pairs (some twice) plus misses
+      val approxRows = exactRows.filter(_ => rng.nextBoolean()).flatMap(r =>
+        Seq.fill(1 + rng.nextInt(2))((r._2, r._3))) ++
+        Seq.fill(5)((100L + rng.nextInt(5), 200L + rng.nextInt(5)))
+      val exact = exactRows.toDF("tenant", "id_a", "id_b")
+      val approx = approxRows.toDF("id_a", "id_b")
+      val got = graft.operators.Dedup.tenantRecallRows(spark, nTenants, exact, approx)
+        .collect().map(_.toSeq).toSeq
+      val want = twoBranch(nTenants, exact, approx).collect().map(_.toSeq).toSeq
+      assert(got == want, s"trial $trial: one-pass $got != two-branch $want")
+      assert(got.length == nTenants && got.last(1) == 0L && got.last(3) == 1.0)
+    }
+  }
+
+  test("property: model-independent k-means assignment == the literal-inlined form") {
+    import graft.functions.Exprs.dotProduct
+    // the former form: one inlined literal array and one inlined ‖c‖²
+    // constant per centroid
+    def inlined(model: Array[(Int, Array[Double])]) = {
+      val scores = array(model.map { case (_, c) =>
+        val c2 = c.foldLeft(0.0)((acc, x) => acc + x * x)
+        lit(2.0) * dotProduct(col("v"), array(c.toIndexedSeq.map(lit): _*)) - lit(c2)
+      }.toIndexedSeq: _*)
+      (array_position(scores, array_max(scores)) - 1).cast("int")
+    }
+    val rng = new scala.util.Random(17)
+    def r4(x: Double) = math.round(x * 1e4) / 1e4
+    for (trial <- 1 to 5) {
+      val dim = 4 + rng.nextInt(13)
+      val k = 2 + rng.nextInt(5)
+      val cents = Array.fill(k)(Array.fill(dim)(r4(rng.nextGaussian())))
+      // a duplicated centroid makes exact score ties (first one wins)
+      cents(k - 1) = cents(0)
+      val model = cents.zipWithIndex.map { case (c, i) => i -> c }
+      val vecs = (0 until 200).map(i => (i.toLong, Array.fill(dim)(rng.nextGaussian() * 2)))
+        .toDF("vec_id", "v")
+      val bad = vecs.withColumn("got", graft.operators.Similarity.assignExpr(model))
+        .withColumn("want", inlined(model))
+        .filter(not(col("got") <=> col("want")))
+      assert(bad.count() == 0, s"trial $trial: ${bad.take(3).mkString("; ")}")
+    }
+  }
+
+  test("property: countedCheckpoint counts exactly, in one job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val rng = new scala.util.Random(19)
+      for (trial <- 1 to 4) {
+        val n = if (trial == 1) 0 else rng.nextInt(500)
+        // shuffle-free, so the plan's own work is one job (under AQE a
+        // shuffle adds a map-stage job to any action)
+        val df = spark.range(0, n, 1, 3).toDF().filter(col("id") % 3 =!= 1)
+        val group = s"counted-$trial"
+        sc.setJobGroup(group, group)
+        val (cp, got) = try graft.operators.Dedup.countedCheckpoint(df)
+          finally sc.clearJobGroup()
+        assert(got == df.count(), s"trial $trial")
+        assert(cp.collect().length == got, s"trial $trial: checkpoint rows")
+        // the listener bus is asynchronous: wait for the first job, then
+        // give a second job time to show up
+        val deadline = System.currentTimeMillis() + 10000
+        while (!jobs.contains(group) && System.currentTimeMillis() < deadline)
+          Thread.sleep(20)
+        Thread.sleep(300)
+        val nJobs = jobs.toArray.count(_ == group)
+        assert(nJobs == 1, s"trial $trial: $nJobs jobs to count the checkpoint")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("property: spacesaving overestimate/containment on random skewed streams") {
     // random streams over a small alphabet with random capacities: every
     // kept item overestimates by at most n/cap, and every item with true

@@ -314,4 +314,52 @@ class TenantEstateSyncSpec extends SparkSuite {
       ops.dropTenantCompactionTemps(spark, t, 2)
     }
   }
+
+  test("fleet estate sync: an added-only diff skips remove+compact — member files and meta untouched — and still equals the recompute") {
+    import spark.implicits._
+    val genA = docsOf("a").localCheckpoint()
+    val added = docsOf("b").filter(col("doc_id") >= 20L).localCheckpoint()
+    val diff = Seq((20L, "added", "en"), (21L, "added", "en"))
+      .toDF("doc_id", "status", "lang")
+    val names = Seq("tes_add_s", "tes_add_f")
+    val tables = names.flatMap(n => Seq(s"${n}_banded", s"${n}_shingles",
+      s"${n}_meta", s"${n}_tombstones", s"${n}_banded__compact",
+      s"${n}_shingles__compact"))
+    tables.foreach(t => ops.dropTableAndLocation(spark, t))
+    // every file under a table's location with its mtime
+    def files(table: String): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+        else Seq(f)
+      walk(new java.io.File(new org.apache.hadoop.fs.Path(
+          spark.conf.get("spark.sql.warehouse.dir"), table).toUri.getPath))
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getPath -> f.lastModified()).toMap
+    }
+    try {
+      IndexFamily.save(spark, IndexFamily.NearDup, "tes_add_s", Fleet,
+        ops.shingleTableOf(genA))
+      IndexFamily.save(spark, IndexFamily.NearDup, "tes_add_f", Fleet,
+        ops.shingleTableOf(genA.unionByName(added)))
+      val members = Seq("tes_add_s_banded", "tes_add_s_shingles")
+      val before = (members :+ "tes_add_s_meta").map(t => t -> files(t)).toMap
+      assert(before.values.forall(_.nonEmpty), "fixture wrote no files")
+      ops.syncEstateWithDiff(spark, diff, ops.EstateSyncTargets(
+        indexes = Seq((IndexFamily.NearDup, "tes_add_s", docsOf("b")))))
+      // the append adds bucket files; no existing file is rewritten
+      members.foreach { t =>
+        val after = files(t)
+        assert(before(t).forall { case (f, m) => after.get(f).contains(m) },
+          s"$t: an existing member file was rewritten or dropped")
+        assert(after.size > before(t).size, s"$t: the added rows were not appended")
+      }
+      assert(files("tes_add_s_meta") == before("tes_add_s_meta"),
+        "the meta table was rewritten")
+      val synced = IndexFamily.load(spark, IndexFamily.NearDup, "tes_add_s", Fleet)
+      val fresh = IndexFamily.load(spark, IndexFamily.NearDup, "tes_add_f", Fleet)
+      assertSameRows(synced.banded, fresh.banded, "added-only synced banded vs recompute")
+      assertSameRows(synced.shingles, fresh.shingles,
+        "added-only synced shingles vs recompute")
+    } finally tables.foreach(t => ops.dropTableAndLocation(spark, t))
+  }
 }
