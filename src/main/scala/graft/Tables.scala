@@ -69,25 +69,27 @@ object Tables {
   }
 
   /** The schema Spark infers for the parquet file or flat directory `p`,
-    * read from its first data file's footer (by name; files starting
-    * with `_` or `.` are not data, as in Spark's listing). None when `p`
-    * is missing, has a subdirectory or has no data file.
+    * read from one footer by Spark's non-merging rule
+    * (`ParquetUtils.inferSchema`): the first data file by name, where
+    * names starting with `_` or `.` are not data. None, so Spark infers,
+    * when `p` is missing or has a subdirectory or no data file, when it
+    * holds a `_metadata`/`_common_metadata` summary (which that rule
+    * reads first), or when the session merges parquet schemas.
     */
   private[graft] def footerSchema(spark: SparkSession,
       p: String): Option[org.apache.spark.sql.types.StructType] = {
     val path = new org.apache.hadoop.fs.Path(p)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = if (fs.exists(path)) Some(fs.getFileStatus(path)) else None
-    val first = st.filter(_.isFile).orElse(st.flatMap { _ =>
-      val children = fs.listStatus(path)
-      if (children.exists(_.isDirectory)) None
-      else children.filterNot { c =>
-        val n = c.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }.sortBy(_.getPath.getName).headOption
-    })
-    first.flatMap(org.apache.spark.sql.execution.datasources.parquet
-      .graftbridge.ParquetBridge.footerSchema(spark, _))
+    val files = if (fs.exists(path)) fs.listStatus(path).toSeq else Nil
+    val names = files.map(_.getPath.getName)
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        files.exists(_.isDirectory) ||
+        names.exists(n => n == "_metadata" || n == "_common_metadata")) None
+    else files.filterNot { f =>
+      val n = f.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.sortBy(_.getPath.getName).headOption.flatMap(org.apache.spark.sql.execution
+      .datasources.parquet.graftbridge.ParquetBridge.footerSchema(spark, _))
   }
 
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",

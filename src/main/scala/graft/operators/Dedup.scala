@@ -180,11 +180,18 @@ object Dedup {
     // that bucket's m² candidate grid (same failure mode and remedy as
     // the d11 simhash bands)
     // banded keys materialize once (the self-join's census + both sides
-    // would otherwise each re-run the k-MinHash pass — see the delta path)
-    val (banded, nBanded) = countedCheckpoint(bandedKeys(withSh, bands, rowsPerBand))
+    // would otherwise each re-run the k-MinHash pass — see the delta path).
+    // They sign the distinct shingle sets (a MinHash is a min over the
+    // set, so duplicates never change it), checkpointed lazily: the
+    // banded count fills both in one job, and the verify's two endpoint
+    // joins then broadcast one checkpointed frame, the second reusing the
+    // first's exchange
+    val sets = withSh.select(col("doc_id"), array_distinct(col("sh")).as("sh"))
+      .localCheckpoint(eager = false)
+    val (banded, nBanded) = countedCheckpoint(bandedKeys(sets, bands, rowsPerBand))
     val candidates = blockedPairCandidates(banded, Seq("band", "bkey"), Nil,
       hotBlockRows, salts = 16, maxRows = nBanded)
-    verifyJaccard(withSh, candidates, threshold)
+    verifyJaccard(sets, candidates, threshold)
   }
 
   /** `df` locally checkpointed, with its row count: ONE job fills the
@@ -1346,13 +1353,16 @@ object Dedup {
     val (came, nCame) = countedCheckpoint(
       diff.filter(col("status").isin("added", "changed")).select(col("doc_id")))
     // an empty phase is skipped (the tenant sync's hasGone/hasCame): an
-    // empty tombstone batch would still compact — rewrite — every member
+    // empty tombstone batch would still compact — rewrite — every member.
+    // Pending tombstones (a takedown only tombstones) still compact
+    // before any append: the append lifts a re-added id's tombstone, and
+    // its OLD rows must be physically gone by then
     targets.indexes.foreach { case (fam, t, payload) =>
       lazy val m = IndexFamily.meta(spark, t)
-      if (nGone > 0) {
-        IndexFamily.remove(spark, fam, t, gone)
+      if (nGone > 0) IndexFamily.remove(spark, fam, t, gone)
+      if (nGone > 0 || (nCame > 0 &&
+          tombstoneTable(spark, s"${t}_tombstones").isDefined))
         IndexFamily.compact(spark, fam, t, IndexFamily.Fleet, Some(m))
-      }
       if (nCame > 0)
         IndexFamily.appendPayload(spark, fam, t, IndexFamily.Fleet,
           IndexFamily.restrict(fam, payload, came), Some(m))
@@ -1800,20 +1810,21 @@ object Dedup {
     val goneVec = gone.select(col("doc_id").as("vec_id"))
     val cameVec = came.select(col("doc_id").as("vec_id"))
     val scope = IndexFamily.Tenant(tenant, nTenants)
+    // pending tombstones (a takedown run without compaction) land before
+    // an append, as in the fleet sync: the append lifts a re-added id's
+    // tombstone, and its OLD rows must be physically gone by then
+    def compacts(t: String) = hasGone ||
+      tombstoneTable(spark, s"${t}_tombstones").isDefined
     targets.indexes.foreach { case (fam, t, payload) =>
-      if (hasGone) {
-        IndexFamily.remove(spark, fam, t, gone)
-        IndexFamily.compact(spark, fam, t, scope, Some(metas(t)))
-      }
+      if (hasGone) IndexFamily.remove(spark, fam, t, gone)
+      if (compacts(t)) IndexFamily.compact(spark, fam, t, scope, Some(metas(t)))
       if (hasCame)
         IndexFamily.appendPayload(spark, fam, t, scope,
           IndexFamily.restrict(fam, payload, came), Some(metas(t)))
     }
     targets.annStore.foreach { case (t, vecs) =>
-      if (hasGone) {
-        Similarity.removeFromPartitionedAnnStore(spark, t, goneVec)
-        Similarity.compactTenantAnnStore(spark, t, tenant, nTenants)
-      }
+      if (hasGone) Similarity.removeFromPartitionedAnnStore(spark, t, goneVec)
+      if (compacts(t)) Similarity.compactTenantAnnStore(spark, t, tenant, nTenants)
       if (hasCame)
         Similarity.appendTenantAnnStore(spark, t,
           vecs.join(cameVec, Seq("vec_id"), "left_semi"), tenant)
@@ -2373,13 +2384,15 @@ object Dedup {
     */
   private def verifyJaccard(withSh: DataFrame, candidates: DataFrame,
       threshold: Double, carry: Seq[String] = Nil): DataFrame = {
-    val shingleSets = withSh
-      .select(col("doc_id"), array_distinct(col("sh")).as("sh"))
-    val withA = candidates.join(shingleSets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-    val withB = withA.join(shingleSets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-    withB
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))))
+    // both endpoint joins read ONE shingle-set frame under its own column
+    // names, so their broadcasts plan identically and the second reuses
+    // the first's exchange
+    val sets = withSh.select(col("doc_id"), array_distinct(col("sh")).as("sh"))
+    candidates
+      .join(sets.as("sa"), col("id_a") === col("sa.doc_id"))
+      .join(sets.as("sb"), col("id_b") === col("sb.doc_id"))
+      .withColumn("inter", size(array_intersect(col("sa.sh"), col("sb.sh"))))
+      .withColumn("uni", size(array_union(col("sa.sh"), col("sb.sh"))))
       .withColumn("jaccard", round(col("inter").cast("double") / col("uni"), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a") +: col("id_b") +: (carry.map(col) :+ col("jaccard")): _*)
@@ -3414,7 +3427,7 @@ object Dedup {
         val inSlice = TextAnalysis.splitBucket(col("doc_id")) < sampleBuckets
         val exact = exactJaccardPairs(spark, dir, threshold, hotBlockRows, inSlice)
         val caught = exact.join(
-          minhashLshPairs(spark, dir).select(col("id_a"), col("id_b")),
+          slicedLshPairs(spark, dir, sampleBuckets).select(col("id_a"), col("id_b")),
           Seq("id_a", "id_b"), "left_semi")
         recallRow(exact, caught)
       }
@@ -3509,14 +3522,32 @@ object Dedup {
     // once over the slice; tenancy is a per-doc function of the id, so
     // filtering its pair set to same-tenant pairs equals the union of
     // per-tenant audit runs — exactly, because PPJoin is exact under any
-    // total order (including the fleet slice's df order)
-    val exact = sameTenantPairs(
-      exactJaccardPairs(spark, dir, threshold, hotBlockRows,
-        TextAnalysis.splitBucket(col("doc_id")) < sampleBuckets),
-      nTenants)
-    tenantRecallRows(spark, nTenants, exact,
-      minhashLshPairs(spark, dir).select(col("id_a"), col("id_b")))
+    // total order (including the fleet slice's df order). The exact and
+    // LSH sides share only the shingle table (registered first), so
+    // their counted checkpoints and plans build on two driver threads
+    persistedShingleTable(spark, dir)
+    val (exact, approx) = inParallel(
+      sameTenantPairs(
+        exactJaccardPairs(spark, dir, threshold, hotBlockRows,
+          TextAnalysis.splitBucket(col("doc_id")) < sampleBuckets),
+        nTenants),
+      slicedLshPairs(spark, dir, sampleBuckets).select(col("id_a"), col("id_b")))
+    tenantRecallRows(spark, nTenants, exact, approx)
   }
+
+  /** The MinHash-LSH tier's verified pairs with both endpoints in the
+    * md5 slice `splitBucket < sampleBuckets` — all that a sampled audit
+    * can match, since its exact side lies inside the slice. Banding is
+    * per document and verification per pair, so the tier run over the
+    * slice alone emits exactly the full tier's pairs restricted to it,
+    * at slice cost; the whole corpus (256 buckets) is the session-shared
+    * [[minhashLshPairs]] table.
+    */
+  private[graft] def slicedLshPairs(spark: SparkSession, dir: String,
+      sampleBuckets: Int): DataFrame =
+    if (sampleBuckets >= 256) minhashLshPairs(spark, dir)
+    else lshPairsFrom(persistedShingleTable(spark, dir)
+      .filter(TextAnalysis.splitBucket(col("doc_id")) < sampleBuckets), 3, 3, 0.8)
 
   /** D58 — the d56 census for the SIMHASH family (round-17 verdict
     * ask #1: a per-tenant gauge for every family with tenant-scoped
@@ -4765,6 +4796,23 @@ object Dedup {
       finally pool.shutdown()
       ()
     }
+
+  /** `a` and `b` evaluated at the same time, `b` on a second driver
+    * thread: two independent driver-bound steps (DataFrame construction
+    * and the jobs that fill their checkpoints) that would otherwise run
+    * one after the other. Same safety argument as [[parForeachTenant]];
+    * neither step may open a [[graft.Scratch.scoped]] scope.
+    */
+  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val fb = Future(b)(ExecutionContext.fromExecutorService(pool))
+      val ra = a
+      (ra, Await.result(fb, Duration.Inf))
+    } finally pool.shutdown()
+  }
 
   /** The BATCHED form of running [[simhashRebandLifecycle]] once per
     * tenant (the round-19 `weak`: `(0 until nTenants).map` over

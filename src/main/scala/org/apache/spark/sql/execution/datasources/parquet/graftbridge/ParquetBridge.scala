@@ -1,8 +1,11 @@
 package org.apache.spark.sql.execution.datasources.parquet.graftbridge
 
 import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 import org.apache.spark.sql.types.StructType
 
 /** Access shim for Spark's parquet footer-to-schema conversion, which
@@ -16,9 +19,11 @@ import org.apache.spark.sql.types.StructType
   */
 object ParquetBridge {
   def footerSchema(spark: SparkSession, file: FileStatus): Option[StructType] = {
-    val footers = ParquetFileFormat.readParquetFootersInParallel(
-      spark.sessionState.newHadoopConf(), Seq(file), ignoreCorruptFiles = false)
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
     // a file source's data schema is nullable whatever the footer says
-    ParquetFileFormat.readSchema(footers, spark).map(_.asNullable)
+    ParquetFileFormat.readSchema(Seq(new Footer(file.getPath, meta)), spark)
+      .map(_.asNullable)
   }
 }

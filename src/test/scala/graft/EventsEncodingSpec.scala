@@ -90,6 +90,11 @@ class EventsEncodingSpec extends SparkSuite {
       assert(Tables.footerSchema(spark, p).contains(inferred),
         s"$p: footer schema ${Tables.footerSchema(spark, p)} != inferred $inferred")
     }
+    // a summary file is what Spark's rule reads first: leave it to Spark
+    val part = new java.io.File(written).listFiles().filter(_.getName.startsWith("part-")).head
+    Files.copy(part.toPath, Paths.get(written, "_common_metadata"))
+    assert(Tables.footerSchema(spark, written).isEmpty,
+      "a directory with a _common_metadata summary got a footer schema")
   }
 
   test("batch Tables.events: identical micro-exact timestamps over all three encodings") {

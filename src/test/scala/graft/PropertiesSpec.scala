@@ -113,6 +113,35 @@ class PropertiesSpec extends SparkSuite {
     }
   }
 
+  test("property: the LSH tier run over an md5 slice == the full tier's pairs inside the slice") {
+    // random near-duplicate corpora (templates with a few words swapped):
+    // a sampled audit computes the tier over its slice alone, which must
+    // emit exactly the full tier's pairs with both endpoints in the slice
+    val rng = new scala.util.Random(11)
+    var nPairs = 0
+    for (trial <- 1 to 2) {
+      val templates = (0 until 4).map(t => (1 to 20).map(i => s"w${t}_$i").toArray)
+      val docs = (0L until 60L).map { i =>
+        val words = templates(rng.nextInt(templates.size)).clone()
+        (0 until rng.nextInt(3)).foreach(_ => words(rng.nextInt(words.length)) = s"x${rng.nextInt(9)}")
+        (i, words.mkString(" "), "en", "s", 1L)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_slice$trial").toString
+      docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      for (sb <- Seq(64, 128, 256)) {
+        def in(c: String) = graft.operators.TextAnalysis.splitBucket(col(c)) < sb
+        val full = rows(graft.operators.Dedup.minhashLshPairs(spark, dir)
+          .filter(in("id_a") && in("id_b")))
+        assert(rows(graft.operators.Dedup.slicedLshPairs(spark, dir, sb)) == full,
+          s"trial $trial, $sb buckets: sliced tier != full tier inside the slice")
+        nPairs += full.size
+      }
+    }
+    assert(nPairs > 0, "no pair inside any slice: the property went vacuous")
+  }
+
   test("property: one-pass tenant census == the two-branch count on random exact/approx frames") {
     // the former formula: n_exact and n_caught from two grouped branches
     // (the exact side, and its semi-join to approx) joined onto the spine

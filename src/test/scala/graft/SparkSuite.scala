@@ -13,9 +13,6 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    // Spark's default codegen cache (100 classes) is smaller than one
-    // suite's working set, so every repeated plan would compile again
-    .config("spark.sql.codegen.cache.maxEntries", "2000")
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/$name"

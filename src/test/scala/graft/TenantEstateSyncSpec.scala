@@ -362,4 +362,51 @@ class TenantEstateSyncSpec extends SparkSuite {
         "added-only synced shingles vs recompute")
     } finally tables.foreach(t => ops.dropTableAndLocation(spark, t))
   }
+
+  test("estate sync: an added-only diff re-adding a taken-down doc serves only its new rows, fleet and tenant scope") {
+    import spark.implicits._
+    val genA = docsOf("a").localCheckpoint()
+    // doc 10 (tenant 0) is taken down without compaction, then comes
+    // back with its gen-B text in a diff that has only an 'added' row
+    val readded = docsOf("b").filter(col("doc_id") === 10L).localCheckpoint()
+    val recompute = genA.filter(col("doc_id") =!= 10L).unionByName(readded)
+    val diff = Seq((10L, "added", "xx")).toDF("doc_id", "status", "lang")
+    val ids = Seq(10L).toDF("doc_id")
+    val names = Seq("tes_re_s", "tes_re_f", "tes_re_ts", "tes_re_tf")
+    val tables = names.flatMap(n => Seq(s"${n}_banded", s"${n}_shingles",
+      s"${n}_meta", s"${n}_tombstones", s"${n}_banded__compact",
+      s"${n}_shingles__compact")) ++ Seq("tes_re_log", "tes_re_tlog")
+    tables.foreach(t => ops.dropTableAndLocation(spark, t))
+    try {
+      IndexFamily.save(spark, IndexFamily.NearDup, "tes_re_s", Fleet,
+        ops.shingleTableOf(genA))
+      IndexFamily.save(spark, IndexFamily.NearDup, "tes_re_f", Fleet,
+        ops.shingleTableOf(recompute))
+      graft.operators.Takedown.apply(spark, ids, graft.operators.Takedown.Targets(
+        indexes = Seq((IndexFamily.NearDup, "tes_re_s"))), logTable = "tes_re_log")
+      ops.syncEstateWithDiff(spark, diff, ops.EstateSyncTargets(
+        indexes = Seq((IndexFamily.NearDup, "tes_re_s", docsOf("b")))))
+      val synced = IndexFamily.load(spark, IndexFamily.NearDup, "tes_re_s", Fleet)
+      val fresh = IndexFamily.load(spark, IndexFamily.NearDup, "tes_re_f", Fleet)
+      assertSameRows(synced.banded, fresh.banded, "fleet re-added banded vs recompute")
+      assertSameRows(synced.shingles, fresh.shingles, "fleet re-added shingles vs recompute")
+
+      val scope = Tenant(0, 2)
+      IndexFamily.save(spark, IndexFamily.NearDup, "tes_re_ts", scope,
+        ops.shingleTableOf(genA))
+      IndexFamily.save(spark, IndexFamily.NearDup, "tes_re_tf", scope,
+        ops.shingleTableOf(recompute))
+      graft.operators.Takedown.applyTenant(spark, ids, 0, 2,
+        graft.operators.Takedown.TenantTargets(
+          indexes = Seq((IndexFamily.NearDup, "tes_re_ts")), compact = false),
+        logTable = "tes_re_tlog")
+      ops.syncTenantEstateWithDiff(spark, diff, 0, 2, ops.TenantEstateSyncTargets(
+        indexes = Seq((IndexFamily.NearDup, "tes_re_ts", docsOf("b")))))
+      val tSynced = IndexFamily.load(spark, IndexFamily.NearDup, "tes_re_ts", scope)
+      val tFresh = IndexFamily.load(spark, IndexFamily.NearDup, "tes_re_tf", scope)
+      assertSameRows(tSynced.banded, tFresh.banded, "tenant re-added banded vs recompute")
+      assertSameRows(tSynced.shingles, tFresh.shingles,
+        "tenant re-added shingles vs recompute")
+    } finally tables.foreach(t => ops.dropTableAndLocation(spark, t))
+  }
 }
